@@ -237,6 +237,15 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _int_or_raw(value: str) -> int | str:
+    """A conf value as an int, or the raw string when it is not one
+    (some runtimes set e.g. shuffle partitions to "auto")."""
+    try:
+        return int(value)
+    except ValueError:
+        return value
+
+
 def _cpu_steal_total() -> tuple[int, int]:
     """(steal, total) jiffies from /proc/stat's aggregate cpu line.
 
@@ -691,7 +700,7 @@ def main() -> int:
         # honored without spelunking stage widths in the log tail.
         "master": spark.sparkContext.master,
         "parallelism": spark.sparkContext.defaultParallelism,
-        "shuffle_partitions": int(
+        "shuffle_partitions": _int_or_raw(
             spark.conf.get("spark.sql.shuffle.partitions")
         ),
     }

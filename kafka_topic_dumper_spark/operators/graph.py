@@ -863,7 +863,10 @@ def pagerank_dangling_oracle_sql(
     The base relations are ``MATERIALIZED`` CTEs: each of the
     ``iters`` unrolled steps references edges/deg/sinks/nn, and
     letting DuckDB inline them re-opens the parquet per reference —
-    10 sweeps × 4 scans trips the process fd limit."""
+    10 sweeps × 4 scans trips the process fd limit. Each ``r{i}`` is
+    materialized too: it reads ``r{i-1}`` twice (rank flow and
+    dangling mass), so an inlined chain doubles in size per sweep and
+    runs DuckDB out of memory."""
     teleport = PR_SCALE * (100 - damping_pct) // 100
     steps = [
         f"""r0 AS (
@@ -872,7 +875,7 @@ def pagerank_dangling_oracle_sql(
     ]
     for i in range(1, iters + 1):
         steps.append(
-            f"""r{i} AS (
+            f"""r{i} AS MATERIALIZED (
             SELECT n.node,
                    CAST({teleport} + ({damping_pct} *
                         (coalesce(s.s, 0) + dm.dm // nn.n)) // 100

@@ -18,8 +18,8 @@ real decoder behind the stub requires Pillow, but ``import PIL`` fails,
 the container has no network egress (``curl`` → "Could not resolve
 host"), and the environment policy forbids pip/apt installs — so the
 deterministic fake stays. A deployment with Pillow swaps the body of
-``_decode_batch`` only; every schema/partitioning/batching contract
-around it is exercised by the oracle-gated stub rows.
+:func:`decode_metadata`'s kernel only; every schema/partitioning/
+batching contract around it is exercised by the oracle-gated stub rows.
 
 Round-6 update: the UNCOMPRESSED path no longer needs that blocker —
 ``synth_raw_images`` / ``resize_raw_images`` below decode and
@@ -52,31 +52,98 @@ no meaningful "tiny subset" an encoder we also control could target
 without the result being H.264 in name only. The AVI walk already
 exercises the container/frame plumbing a real decoder would plug
 into.
+
+The Arrow boundary of the real codecs is two envelopes:
+:func:`_encode_docs` (``doc_id -> payload bytes``, every ``synth_*``)
+and :func:`_decode_payloads` (``payload bytes -> 0..n rows``, every
+real decoder, with the shared NULL/truncation contract). Both ship this
+package to the workers (``session.ensure_shipped``), so the codecs are
+ordinary module-level functions, pickled by reference — the workers
+import them even when the driver did not start in the repo root.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_topic_dumper_spark.functions.parallelism import spread_input
+from kafka_topic_dumper_spark.session import ensure_shipped
 from kafka_topic_dumper_spark.sources.tables import load_table
 
 
-def _ensure_arrow_batch(df: DataFrame, rows: int = 100000) -> None:
-    """Historical hook, now a no-op: the 100k Arrow batch size lives in
-    the session factory (session.py) where it belongs. The previous
-    runtime override ("only when the conf reads the stock 10000") was
-    indistinguishable from a session that EXPLICITLY set 10000 —
-    precisely the multi-MB-payload case that wants small batches — and
-    silently inflated its per-batch memory ~10x session-wide
-    (code-review r6). External sessions now simply run these operators
-    at whatever batch size they configured; only throughput, never
-    correctness, depends on it."""
+def _encode_docs(docs: DataFrame, encode_one: Callable[[int], bytes]) -> DataFrame:
+    """docs → (doc_id, payload binary) with ``payload = encode_one(doc_id)``.
+    The input is spread across the cores first: the from-scratch
+    encoders are the expensive half of every codec row, and a
+    single-split scan would run them on one core."""
+    ensure_shipped(docs.sparkSession)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [encode_one(int(d)) for d in pdf["doc_id"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return spread_input(docs.select("doc_id")).mapInPandas(
+        run, schema="doc_id long, payload binary"
+    )
+
+
+def _decode_payloads(
+    payloads: DataFrame,
+    kind: str,
+    decode_one: Callable[[bytes], list[tuple]],
+    schema: str,
+) -> DataFrame:
+    """(doc_id, payload) → ``schema`` rows: ``decode_one(payload)``
+    returns the 0..n rows of one payload without their doc_id (a 1→N
+    flat-map for the frame decoders). One failure contract for every
+    real decoder: a NULL payload raises
+    ``ValueError("NULL <kind> payload ...")`` rather than dropping the
+    row — silent drops hide upstream bugs from the differential — and a
+    truncated stream that trips an ``IndexError``/``struct.error``
+    resurfaces as the SAME loud ``ValueError("truncated <kind> stream
+    ...")`` the explicit checks raise. ``schema`` is a flat DDL string;
+    int fields take the int64 frames as they are (Arrow's safe cast)."""
+    ensure_shipped(payloads.sparkSession)
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                if payload is None:
+                    raise ValueError(f"NULL {kind} payload (doc_id={doc_id})")
+                try:
+                    decoded = decode_one(bytes(payload))
+                except (IndexError, struct.error) as exc:
+                    raise ValueError(
+                        f"truncated {kind} stream (doc_id={doc_id}): {exc}"
+                    ) from exc
+                rows.extend((doc_id, *row) for row in decoded)
+            yield pd.DataFrame(rows, columns=columns)
+
+    return payloads.mapInPandas(run, schema=schema)
+
+
+def _raster_dims(d: int) -> tuple[int, int]:
+    """(w, h) of doc ``d``'s synthetic raster: 8–16 × 8–14, mostly
+    non-multiples of 8."""
+    return 8 + d % 9, 8 + d % 7
+
+
+def _ramp(start: int, n: int) -> np.ndarray:
+    """The arithmetic test raster: byte i = (start + i) % 256, so an
+    SQL oracle reconstructs any pixel without parsing binary."""
+    return ((start + np.arange(n, dtype=np.int64)) % 256).astype(np.uint8)
 
 
 def binary_payloads(docs: DataFrame, spread: bool = False) -> DataFrame:
@@ -133,21 +200,18 @@ def decode_metadata(payloads: DataFrame) -> DataFrame:
     (doc_id, payload) through the (stub) decoder — 0..n output rows per
     input allowed, pandas-vectorized per batch, no driver collect.
 
-    The worker function is deliberately self-contained (no references
-    to this module's globals) so cloudpickle ships it BY VALUE — the
-    engine package does not need to be importable on executors for
-    this path.
+    The kernel is a closure over pandas only — no function of this
+    package — so cloudpickle ships it whole and this path needs no
+    package shipping; a real decoder that calls package code goes
+    through :func:`_decode_payloads`, which ships the package.
 
     Arrow batch size: the default 10k rows/batch makes per-batch Python
     overhead dominate for cheap decoders (~9× slower at sf0.1); the
     engine's session factory sets 100k (session.py), and externally
     created sessions run at whatever they configured.
     """
-    _ensure_arrow_batch(payloads)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
         # STUB DECODER. A real deployment replaces this body with e.g.
         # PIL/imageio/librosa (not installed in this container). The
         # fake is deterministic arithmetic on payload length so the
@@ -166,7 +230,7 @@ def decode_metadata(payloads: DataFrame) -> DataFrame:
             # the row, never len(None)-crash the whole Arrow stage
             pdf = pdf[pdf["payload"].notna()]
             n = pdf["payload"].map(len)
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "width": (n % 640 + 16).astype("int32"),
@@ -198,11 +262,8 @@ def sample_frames(payloads: DataFrame, stride_ms: int = 1000) -> DataFrame:
     happens inside mapInPandas per batch, so no driver involvement and
     downstream operators see an ordinary DataFrame they can
     repartition/aggregate."""
-    _ensure_arrow_batch(payloads)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
         # STUB DECODER (deterministic): "duration" is derived from the
         # payload length; a real deployment replaces this with an
         # av/ffmpeg probe + frame grab. Kept arithmetic so the oracle
@@ -218,10 +279,10 @@ def sample_frames(payloads: DataFrame, stride_ms: int = 1000) -> DataFrame:
                     idxs.append(i)
                     offs.append(i * stride_ms)
                     sizes.append(length // k)
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "doc_id": doc_ids,
-                    "frame_idx": _pd.array(idxs, dtype="int32"),
+                    "frame_idx": pd.array(idxs, dtype="int32"),
                     "frame_offset_ms": offs,
                     "frame_bytes": sizes,
                 }
@@ -247,20 +308,17 @@ def resize_images(payloads: DataFrame, target: int = 224) -> DataFrame:
     deterministic fake derives output dims/size from input length so
     the oracle can replicate). Emits the post-resize metadata a
     training pipeline partitions on."""
-    _ensure_arrow_batch(payloads)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
         for pdf in batches:
             pdf = pdf[pdf["payload"].notna()]
             n = pdf["payload"].map(len)
             in_w = (n % 640 + 16).astype("int64")
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "out_width": _pd.array([target] * len(pdf), dtype="int32"),
-                    "out_height": _pd.array([target] * len(pdf), dtype="int32"),
+                    "out_width": pd.array([target] * len(pdf), dtype="int32"),
+                    "out_height": pd.array([target] * len(pdf), dtype="int32"),
                     "resized_bytes": (n * target // in_w).astype("int64"),
                     "scale_pct": (target * 100.0 / in_w).round(4),
                 }
@@ -283,11 +341,8 @@ def extract_features(payloads: DataFrame) -> DataFrame:
     (deterministic byte-statistics stand in for a real encoder). The
     output array<double> column is exactly what the similarity/dedup
     operators consume downstream."""
-    _ensure_arrow_batch(payloads)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
         for pdf in batches:
             pdf = pdf[pdf["payload"].notna()]
             feats = []
@@ -304,7 +359,7 @@ def extract_features(payloads: DataFrame) -> DataFrame:
                         float(sum(1 for x in b if 48 <= x <= 57)),
                     ]
                 )
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
 
     return payloads.mapInPandas(run, schema=_FEATURE_SCHEMA)
 
@@ -360,6 +415,27 @@ def phash_neardup(docs: DataFrame, max_hamming: int = 4) -> DataFrame:
 _PHASH_SCHEMA = "doc_id long, phash long, n_ones int"
 
 
+def _phash_rows(buf: bytes) -> list[tuple]:
+    w, h, c = struct.unpack_from("<iii", buf, 0)
+    px = np.frombuffer(buf, dtype=np.uint8, offset=12).astype(np.int64)
+    if px.size != w * h * c:
+        raise ValueError("truncated RAW payload")
+    img = px.reshape(h, w, c)
+    lum = img.sum(axis=2) // c  # integer mean luminance
+    ys = (np.arange(8) * h) // 8
+    xs = (np.arange(8) * w) // 8
+    small = lum[np.ix_(ys, xs)] - 128
+    coef = (_DCT_M @ small @ _DCT_M.T + (1 << 25)) >> 26
+    ac = coef.reshape(64)[1:]
+    med = int(np.sort(ac)[31])
+    bits = ac > med
+    phash = 0
+    for k in range(63):
+        if bits[k]:
+            phash |= 1 << k
+    return [(phash, int(bits.sum()))]
+
+
 def phash_dct(payloads: DataFrame) -> DataFrame:
     """REAL DCT perceptual hash over self-describing RAW payloads:
     bit k of the 63-bit hash is 1 iff AC coefficient k (row-major,
@@ -368,57 +444,7 @@ def phash_dct(payloads: DataFrame) -> DataFrame:
     and literal-replayable (functions/trained_oracles.py). Pure Arrow
     map stage — no shuffle; at scale the hash column is the
     precomputed artifact the banded hamming index is built from."""
-    _ensure_arrow_batch(payloads)
-    dct_rows = _JPEG_DCT_M
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        M = np.array(dct_rows, dtype=np.int64)
-
-        def one(buf: bytes) -> tuple:
-            w, h, c = struct.unpack_from("<iii", buf, 0)
-            px = np.frombuffer(buf, dtype=np.uint8, offset=12).astype(
-                np.int64
-            )
-            if px.size != w * h * c:
-                raise ValueError("truncated RAW payload")
-            img = px.reshape(h, w, c)
-            lum = img.sum(axis=2) // c  # integer mean luminance
-            ys = (np.arange(8) * h) // 8
-            xs = (np.arange(8) * w) // 8
-            small = lum[np.ix_(ys, xs)] - 128
-            coef = (M @ small @ M.T + (1 << 25)) >> 26
-            ac = coef.reshape(64)[1:]
-            med = int(np.sort(ac)[31])
-            bits = ac > med
-            phash = 0
-            for k in range(63):
-                if bits[k]:
-                    phash |= 1 << k
-            return phash, int(bits.sum())
-
-        for pdf in batches:
-            doc_ids, hashes, ones = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    raise ValueError(f"NULL RAW payload (doc_id={doc_id})")
-                ph, n1 = one(bytes(payload))
-                doc_ids.append(doc_id)
-                hashes.append(ph)
-                ones.append(n1)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "phash": _pd.array(hashes, dtype="int64"),
-                    "n_ones": _pd.array(ones, dtype="int32"),
-                }
-            )
-
-    return payloads.mapInPandas(run, schema=_PHASH_SCHEMA)
+    return _decode_payloads(payloads, "RAW", _phash_rows, _PHASH_SCHEMA)
 
 
 def phash_dct_neardup(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
@@ -455,6 +481,11 @@ _RAW_RESIZE_SCHEMA = T.StructType(
 )
 
 
+def _raw_payload(d: int) -> bytes:
+    w, h = _raster_dims(d)
+    return struct.pack("<iii", w, h, 3) + _ramp(d, w * h * 3).tobytes()
+
+
 def synth_raw_images(docs: DataFrame) -> DataFrame:
     """Deterministic RAW test images: w = 8 + doc_id % 9,
     h = 8 + doc_id % 7, c = 3, pixel[i] = (doc_id + i) % 256 over the
@@ -462,28 +493,7 @@ def synth_raw_images(docs: DataFrame) -> DataFrame:
     reconstruct any pixel without parsing binary. Emitted as the
     self-describing RAW payload (header + buffer) via an Arrow
     flat-map, exactly how a real raw-capture table would store it."""
-    _ensure_arrow_batch(docs)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                w = 8 + int(doc_id) % 9
-                h = 8 + int(doc_id) % 7
-                c = 3
-                idx = np.arange(w * h * c, dtype=np.int64)
-                px = ((int(doc_id) + idx) % 256).astype(np.uint8)
-                payloads.append(struct.pack("<iii", w, h, c) + px.tobytes())
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return spread_input(docs.select("doc_id")).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+    return _encode_docs(docs, _raw_payload)
 
 
 def resize_raw_images(
@@ -500,14 +510,8 @@ def resize_raw_images(
     Scale shape: pure Arrow map stage, payload-proportional, no
     shuffle; the real-deployment variant returns the resized payload
     column itself (computed here too, summed for the oracle)."""
-    _ensure_arrow_batch(payloads)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
         for pdf in batches:
             pdf = pdf[pdf["payload"].notna()]
             doc_ids, sums = [], []
@@ -521,11 +525,11 @@ def resize_raw_images(
                 resized = img[sy[:, None], sx[None, :], :]
                 doc_ids.append(doc_id)
                 sums.append(int(resized.astype(np.int64).sum()))
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "doc_id": doc_ids,
-                    "out_w": _pd.array([out_w] * len(doc_ids), dtype="int32"),
-                    "out_h": _pd.array([out_h] * len(doc_ids), dtype="int32"),
+                    "out_w": pd.array([out_w] * len(doc_ids), dtype="int32"),
+                    "out_h": pd.array([out_h] * len(doc_ids), dtype="int32"),
                     "pixel_sum": sums,
                 }
             )
@@ -533,15 +537,66 @@ def resize_raw_images(
     return payloads.mapInPandas(run, schema=_RAW_RESIZE_SCHEMA)
 
 
-_PNG_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("pixel_sum", T.LongType()),
-    ]
+# --- PNG — real lossless codec, stdlib only -------------------------------
+
+_PNG_DECODE_SCHEMA = (
+    "doc_id long, width int, height int, n_channels int, pixel_sum long"
 )
+
+
+def _png_chunk(tag: bytes, data: bytes) -> bytes:
+    return (
+        struct.pack(">I", len(data))
+        + tag
+        + data
+        + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
+    )
+
+
+def _png_filter(px: bytes, w: int, h: int, bpp: int) -> bytes:
+    """All h scanlines filtered in ONE vectorized pass (r18): PNG
+    filtering predicts from the RAW row/prev bytes only — no
+    sequential dependence — so the whole image's a/b/c predictor
+    planes are shift-by-one views and every filter type, Paeth
+    included, is a branch-free expression. The per-row filter id keeps
+    the spec-exercising f = y % 5 cycle via np.choose over a per-row
+    selector. int16 is exact for every intermediate
+    (a+b-c ∈ [-255, 510]); the trailing & 0xFF reproduces the old byte
+    loop bit-for-bit."""
+    stride = w * bpp
+    img = np.frombuffer(px, dtype=np.uint8).reshape(h, stride).astype(np.int16)
+    a = np.zeros_like(img)
+    a[:, bpp:] = img[:, :-bpp]  # raw left neighbor
+    b = np.zeros_like(img)
+    b[1:] = img[:-1]  # raw up neighbor
+    c = np.zeros_like(img)
+    c[1:, bpp:] = img[:-1, :-bpp]  # raw up-left neighbor
+    p = a + b - c
+    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
+    paeth = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
+    f_of_row = (np.arange(h) % 5)[:, None]
+    pred = np.choose(
+        np.broadcast_to(f_of_row, img.shape),
+        [np.zeros_like(img), a, b, (a + b) // 2, paeth],
+    )
+    filtered = ((img - pred) & 0xFF).astype(np.uint8)
+    # interleave the per-row filter-type byte
+    lines = np.empty((h, stride + 1), dtype=np.uint8)
+    lines[:, 0] = (np.arange(h) % 5).astype(np.uint8)
+    lines[:, 1:] = filtered
+    return lines.tobytes()
+
+
+def _png_payload(d: int) -> bytes:
+    w, h = _raster_dims(d)
+    px = _ramp(d, w * h * 3).tobytes()
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(_png_filter(px, w, h, 3)))
+        + _png_chunk(b"IEND", b"")
+    )
 
 
 def synth_png_images(docs: DataFrame) -> DataFrame:
@@ -553,82 +608,84 @@ def synth_png_images(docs: DataFrame) -> DataFrame:
     CRC-32 per chunk. Scanline filters CYCLE through all five types
     (f = y % 5: None/Sub/Up/Average/Paeth) so the decoder's entire
     unfilter surface is exercised, not just the trivial branch."""
-    _ensure_arrow_batch(docs)
+    return _encode_docs(docs, _png_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
 
-        import numpy as np
-        import pandas as _pd
-
-        def chunk(tag: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data))
-                + tag
-                + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
+def _png_rows(buf: bytes) -> list[tuple]:
+    if buf[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError("not a PNG stream")
+    pos, w = 8, None
+    idat = b""
+    while pos < len(buf):
+        (ln,) = struct.unpack(">I", buf[pos : pos + 4])
+        tag = buf[pos + 4 : pos + 8]
+        data = buf[pos + 8 : pos + 8 + ln]
+        (crc,) = struct.unpack(">I", buf[pos + 8 + ln : pos + 12 + ln])
+        if zlib.crc32(tag + data) & 0xFFFFFFFF != crc:
+            raise ValueError(f"CRC mismatch in {tag!r} chunk")
+        if tag == b"IHDR":
+            w, h, depth, ctype, comp, filt, ilace = struct.unpack(
+                ">IIBBBBB", data
             )
-
-        def filt_image(px: bytes, w: int, h: int, bpp: int) -> bytes:
-            """All h scanlines filtered in ONE vectorized pass (r18):
-            PNG filtering predicts from the RAW row/prev bytes only —
-            no sequential dependence — so the whole image's a/b/c
-            predictor planes are shift-by-one views and every filter
-            type, Paeth included, is a branch-free expression. The
-            per-row filter id keeps the spec-exercising f = y % 5
-            cycle via np.choose over a per-row selector. int16 is
-            exact for every intermediate (a+b-c ∈ [-255, 510]); the
-            trailing & 0xFF reproduces the old byte loop bit-for-bit.
-            """
-            stride = w * bpp
-            img = (
-                np.frombuffer(px, dtype=np.uint8)
-                .reshape(h, stride)
-                .astype(np.int16)
-            )
-            a = np.zeros_like(img)
-            a[:, bpp:] = img[:, :-bpp]  # raw left neighbor
-            b = np.zeros_like(img)
-            b[1:] = img[:-1]  # raw up neighbor
-            c = np.zeros_like(img)
-            c[1:, bpp:] = img[:-1, :-bpp]  # raw up-left neighbor
-            p = a + b - c
-            pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-            paeth = np.where(
-                (pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c)
-            )
-            f_of_row = (np.arange(h) % 5)[:, None]
-            pred = np.choose(
-                np.broadcast_to(f_of_row, img.shape),
-                [np.zeros_like(img), a, b, (a + b) // 2, paeth],
-            )
-            filtered = ((img - pred) & 0xFF).astype(np.uint8)
-            # interleave the per-row filter-type byte
-            lines = np.empty((h, stride + 1), dtype=np.uint8)
-            lines[:, 0] = (np.arange(h) % 5).astype(np.uint8)
-            lines[:, 1:] = filtered
-            return lines.tobytes()
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                w = 8 + int(doc_id) % 9
-                h = 8 + int(doc_id) % 7
-                idx = np.arange(w * h * 3, dtype=np.int64)
-                px = ((int(doc_id) + idx) % 256).astype(np.uint8).tobytes()
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(filt_image(px, w, h, 3)))
-                    + chunk(b"IEND", b"")
+            if depth != 8 or ctype not in (0, 2) or ilace != 0:
+                raise ValueError(
+                    "unsupported PNG subset: need 8-bit"
+                    f" grey/truecolor non-interlaced, got depth={depth}"
+                    f" color_type={ctype} interlace={ilace}"
                 )
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return spread_input(docs.select("doc_id")).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+            nch = 3 if ctype == 2 else 1
+        elif tag == b"IDAT":
+            idat += data
+        elif tag == b"IEND":
+            break
+        pos += 12 + ln
+    if w is None:
+        raise ValueError("no IHDR chunk")
+    raw = zlib.decompress(idat)
+    stride = w * nch
+    if len(raw) != h * (stride + 1):
+        raise ValueError("IDAT length does not match dimensions")
+    # r18 unfilter: None/Up/Sub rows vectorize — None is a copy, Up is
+    # a uint8 wraparound add (mod-256 == the old & 0xFF byte loop), Sub
+    # is a per-channel running mod-256 prefix sum (one int64 cumsum).
+    # Only Average and Paeth truly depend on the just-decoded
+    # cur[i-nch] and keep the scalar loop (prev handed over as bytes —
+    # CPython byte indexing beats numpy scalar boxing there).
+    rawa = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride + 1)
+    out = np.empty((h, stride), dtype=np.uint8)
+    prev = np.zeros(stride, dtype=np.uint8)
+    for y in range(h):
+        f = raw[y * (stride + 1)]
+        line = rawa[y, 1:]
+        if f == 0:
+            cur = line.copy()
+        elif f == 2:
+            cur = line + prev  # uint8 wraps mod 256
+        elif f == 1:
+            cur = (
+                np.cumsum(line.astype(np.int64).reshape(-1, nch), axis=0) & 0xFF
+            ).astype(np.uint8).reshape(stride)
+        elif f in (3, 4):
+            line_b = line.tobytes()
+            prev_b = prev.tobytes()
+            cur_b = bytearray(stride)
+            for i in range(stride):
+                a = cur_b[i - nch] if i >= nch else 0
+                b = prev_b[i]
+                c = prev_b[i - nch] if i >= nch else 0
+                if f == 3:
+                    pred = (a + b) // 2
+                else:
+                    p = a + b - c
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                cur_b[i] = (line_b[i] + pred) & 0xFF
+            cur = np.frombuffer(bytes(cur_b), dtype=np.uint8)
+        else:
+            raise ValueError(f"bad filter type {f}")
+        out[y] = cur
+        prev = cur
+    return [(w, h, nch, int(out.astype(np.int64).sum()))]
 
 
 def decode_png_images(payloads: DataFrame) -> DataFrame:
@@ -646,141 +703,36 @@ def decode_png_images(payloads: DataFrame) -> DataFrame:
     payload-proportional, no shuffle; the per-byte unfilter loop is
     Python (fine for the metadata-sized test rasters — a production
     deployment swaps in a C codec behind the same kernel contract)."""
-    _ensure_arrow_batch(payloads)
+    return _decode_payloads(payloads, "PNG", _png_rows, _PNG_DECODE_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
 
-        import numpy as np
-        import pandas as _pd
+# --- WAV (RIFF/WAVE PCM) — real audio container, stdlib only --------------
 
-        def decode(buf: bytes):
-            if buf[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("not a PNG stream")
-            pos, w = 8, None
-            idat = b""
-            while pos < len(buf):
-                (ln,) = struct.unpack(">I", buf[pos : pos + 4])
-                tag = buf[pos + 4 : pos + 8]
-                data = buf[pos + 8 : pos + 8 + ln]
-                (crc,) = struct.unpack(
-                    ">I", buf[pos + 8 + ln : pos + 12 + ln]
-                )
-                if zlib.crc32(tag + data) & 0xFFFFFFFF != crc:
-                    raise ValueError(f"CRC mismatch in {tag!r} chunk")
-                if tag == b"IHDR":
-                    w, h, depth, ctype, comp, filt, ilace = struct.unpack(
-                        ">IIBBBBB", data
-                    )
-                    if depth != 8 or ctype not in (0, 2) or ilace != 0:
-                        raise ValueError(
-                            "unsupported PNG subset: need 8-bit"
-                            f" grey/truecolor non-interlaced, got depth={depth}"
-                            f" color_type={ctype} interlace={ilace}"
-                        )
-                    nch = 3 if ctype == 2 else 1
-                elif tag == b"IDAT":
-                    idat += data
-                elif tag == b"IEND":
-                    break
-                pos += 12 + ln
-            if w is None:
-                raise ValueError("no IHDR chunk")
-            raw = zlib.decompress(idat)
-            stride = w * nch
-            if len(raw) != h * (stride + 1):
-                raise ValueError("IDAT length does not match dimensions")
-            # r18 unfilter: None/Up/Sub rows vectorize — None is a
-            # copy, Up is a uint8 wraparound add (mod-256 == the old
-            # & 0xFF byte loop), Sub is a per-channel running mod-256
-            # prefix sum (one int64 cumsum). Only Average and Paeth
-            # truly depend on the just-decoded cur[i-nch] and keep the
-            # scalar loop (prev handed over as bytes — CPython byte
-            # indexing beats numpy scalar boxing there).
-            rawa = np.frombuffer(raw, dtype=np.uint8).reshape(
-                h, stride + 1
-            )
-            out = np.empty((h, stride), dtype=np.uint8)
-            prev = np.zeros(stride, dtype=np.uint8)
-            for y in range(h):
-                f = raw[y * (stride + 1)]
-                line = rawa[y, 1:]
-                if f == 0:
-                    cur = line.copy()
-                elif f == 2:
-                    cur = line + prev  # uint8 wraps mod 256
-                elif f == 1:
-                    cur = (
-                        np.cumsum(
-                            line.astype(np.int64).reshape(-1, nch), axis=0
-                        )
-                        & 0xFF
-                    ).astype(np.uint8).reshape(stride)
-                elif f in (3, 4):
-                    line_b = line.tobytes()
-                    prev_b = prev.tobytes()
-                    cur_b = bytearray(stride)
-                    for i in range(stride):
-                        a = cur_b[i - nch] if i >= nch else 0
-                        b = prev_b[i]
-                        c = prev_b[i - nch] if i >= nch else 0
-                        if f == 3:
-                            pred = (a + b) // 2
-                        else:
-                            p = a + b - c
-                            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                            pred = (
-                                a
-                                if (pa <= pb and pa <= pc)
-                                else (b if pb <= pc else c)
-                            )
-                        cur_b[i] = (line_b[i] + pred) & 0xFF
-                    cur = np.frombuffer(bytes(cur_b), dtype=np.uint8)
-                else:
-                    raise ValueError(f"bad filter type {f}")
-                out[y] = cur
-                prev = cur
-            return w, h, nch, out.reshape(h, w, nch)
-
-        for pdf in batches:
-            doc_ids, ws, hs, cs, sums = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                # uniform NULL contract across the four real decoders
-                # (ADVICE r7): raise loudly rather than drop the row —
-                # silent drops hide upstream bugs from the differential
-                if payload is None:
-                    raise ValueError(f"NULL PNG payload (doc_id={doc_id})")
-                try:
-                    w, h, nch, img = decode(bytes(payload))
-                except (IndexError, struct.error) as exc:
-                    # truncated input must surface as the SAME loud
-                    # ValueError the explicit checks use (ADVICE r7)
-                    raise ValueError(
-                        f"truncated PNG stream (doc_id={doc_id}): {exc}"
-                    ) from exc
-                doc_ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                cs.append(nch)
-                sums.append(int(img.astype(np.int64).sum()))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "width": _pd.array(ws, dtype="int32"),
-                    "height": _pd.array(hs, dtype="int32"),
-                    "n_channels": _pd.array(cs, dtype="int32"),
-                    "pixel_sum": sums,
-                }
-            )
-
-    return payloads.mapInPandas(run, schema=_PNG_DECODE_SCHEMA)
-
+_WAV_RATE = 8000
 
 _WAV_FEATURE_SCHEMA = (
     "doc_id long, sample_rate long, n_samples long, duration_ms long,"
     " peak_abs long, sum_abs long, zero_crossings long, sum_abs_ds2 long"
 )
+
+
+def _wav_payload(d: int) -> bytes:
+    n = 800 + d % 5 * 80
+    i = np.arange(n, dtype=np.int64)
+    s = ((d * 31 + i * 17) % 65536 - 32768).astype(np.int16)
+    pcm = s.tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
+    return (
+        b"RIFF"
+        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(pcm))
+        + b"WAVE"
+        + b"fmt "
+        + struct.pack("<I", len(fmt))
+        + fmt
+        + b"data"
+        + struct.pack("<I", len(pcm))
+        + pcm
+    )
 
 
 def synth_wav_audio(docs: DataFrame) -> DataFrame:
@@ -791,44 +743,52 @@ def synth_wav_audio(docs: DataFrame) -> DataFrame:
     oracle reconstructs any sample without parsing binary — wrapped in
     a spec-conformant RIFF/WAVE stream (fmt chunk: PCM, 1 channel,
     16-bit; then the data chunk) with nothing but stdlib ``struct``."""
-    _ensure_arrow_batch(docs)
+    return _encode_docs(docs, _wav_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
 
-        import numpy as np
-        import pandas as _pd
+def _wav_chunks(buf: bytes) -> Iterator[tuple[bytes, bytes]]:
+    """(tag, body) of each top-level RIFF/WAVE chunk, lazily — a
+    caller's check on one chunk runs before the walk reads the next.
+    Bad magics and truncated chunks raise."""
+    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE stream")
+    pos = 12
+    while pos + 8 <= len(buf):
+        tag = buf[pos : pos + 4]
+        (size,) = struct.unpack_from("<I", buf, pos + 4)
+        body = buf[pos + 8 : pos + 8 + size]
+        if len(body) != size:
+            raise ValueError(f"truncated {tag!r} chunk")
+        yield tag, body
+        pos += 8 + size + (size & 1)  # RIFF chunks pad to even
 
-        rate = 8000
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                n = 800 + int(doc_id) % 5 * 80
-                i = np.arange(n, dtype=np.int64)
-                s = ((int(doc_id) * 31 + i * 17) % 65536 - 32768).astype(
-                    np.int16
-                )
-                pcm = s.tobytes()
-                fmt = struct.pack(
-                    "<HHIIHH", 1, 1, rate, rate * 2, 2, 16
-                )
-                payload = (
-                    b"RIFF"
-                    + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(pcm))
-                    + b"WAVE"
-                    + b"fmt "
-                    + struct.pack("<I", len(fmt))
-                    + fmt
-                    + b"data"
-                    + struct.pack("<I", len(pcm))
-                    + pcm
-                )
-                payloads.append(payload)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return spread_input(docs.select("doc_id")).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+def _wav_feature_rows(buf: bytes) -> list[tuple]:
+    rate, pcm = None, None
+    for tag, body in _wav_chunks(buf):
+        if tag == b"fmt ":
+            fmt_code, channels, rate = struct.unpack_from("<HHI", body, 0)
+            (bits,) = struct.unpack_from("<H", body, 14)
+            if fmt_code != 1 or bits != 16 or channels != 1:
+                raise ValueError("unsupported WAV subset")
+        elif tag == b"data":
+            pcm = body
+    if rate is None or pcm is None:
+        raise ValueError("missing fmt or data chunk")
+    s = np.frombuffer(pcm, dtype="<i2").astype(np.int64)
+    a = np.abs(s)
+    neg = s < 0
+    return [
+        (
+            rate,
+            len(s),
+            len(s) * 1000 // rate,
+            int(a.max(initial=0)),
+            int(a.sum()),
+            int(np.count_nonzero(neg[1:] != neg[:-1])),
+            int(a[::2].sum()),
+        )
+    ]
 
 
 def wav_features(payloads: DataFrame) -> DataFrame:
@@ -840,83 +800,27 @@ def wav_features(payloads: DataFrame) -> DataFrame:
     (int16 abs would overflow at −32768 — the classic DSP footgun the
     widening sidesteps). All outputs are integers, so the differential
     against the synthesis formula's SQL replay is bit-exact."""
-    _ensure_arrow_batch(payloads)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        def parse(buf: bytes):
-            if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE stream")
-            pos, rate, bits, channels, pcm = 12, None, None, None, None
-            while pos + 8 <= len(buf):
-                tag = buf[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", buf, pos + 4)
-                body = buf[pos + 8 : pos + 8 + size]
-                if len(body) != size:
-                    raise ValueError(f"truncated {tag!r} chunk")
-                if tag == b"fmt ":
-                    fmt_code, channels, rate = struct.unpack_from(
-                        "<HHI", body, 0
-                    )
-                    (bits,) = struct.unpack_from("<H", body, 14)
-                    if fmt_code != 1 or bits != 16 or channels != 1:
-                        raise ValueError("unsupported WAV subset")
-                elif tag == b"data":
-                    pcm = body
-                pos += 8 + size + (size & 1)  # RIFF chunks pad to even
-            if rate is None or pcm is None:
-                raise ValueError("missing fmt or data chunk")
-            s = np.frombuffer(pcm, dtype="<i2").astype(np.int64)
-            a = np.abs(s)
-            neg = s < 0
-            return (
-                rate,
-                len(s),
-                len(s) * 1000 // rate,
-                int(a.max(initial=0)),
-                int(a.sum()),
-                int(np.count_nonzero(neg[1:] != neg[:-1])),
-                int(a[::2].sum()),
-            )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                if b is None:
-                    raise ValueError(f"NULL WAV payload (doc_id={doc_id})")
-                try:
-                    rows.append(parse(bytes(b)))
-                except (IndexError, struct.error) as exc:
-                    raise ValueError(
-                        f"truncated WAV stream (doc_id={doc_id}): {exc}"
-                    ) from exc
-            out = _pd.DataFrame(
-                rows,
-                columns=[
-                    "sample_rate",
-                    "n_samples",
-                    "duration_ms",
-                    "peak_abs",
-                    "sum_abs",
-                    "zero_crossings",
-                    "sum_abs_ds2",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return payloads.mapInPandas(run, schema=_WAV_FEATURE_SCHEMA)
-
-
+    return _decode_payloads(payloads, "WAV", _wav_feature_rows, _WAV_FEATURE_SCHEMA)
 
 
 _WAV_SPECTRAL_SCHEMA = "doc_id long, dc long, " + ", ".join(
     f"band{u} long" for u in range(8)
 )
+
+
+def _wav_spectral_rows(buf: bytes) -> list[tuple]:
+    pcm = None
+    for tag, body in _wav_chunks(buf):
+        if tag == b"data":
+            pcm = body
+    if pcm is None:
+        raise ValueError("missing data chunk")
+    s = np.frombuffer(pcm, dtype="<i2").astype(np.int64)
+    frame = np.zeros(64, dtype=np.int64)
+    frame[: min(64, s.size)] = s[:64]
+    C = (_DCT_M @ frame.reshape(8, 8) @ _DCT_M.T + (1 << 25)) >> 26
+    bands = np.abs(C).sum(axis=1)
+    return [(int(C[0, 0]), *(int(x) for x in bands))]
 
 
 def wav_spectral(payloads: DataFrame) -> DataFrame:
@@ -929,206 +833,168 @@ def wav_spectral(payloads: DataFrame) -> DataFrame:
     oracle is the independent integer replay in
     functions/trained_oracles.py (the JPEG/pHash pattern). Pure Arrow
     map stage — no shuffle."""
-    _ensure_arrow_batch(payloads)
-    dct_rows = _JPEG_DCT_M
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        M = np.array(dct_rows, dtype=np.int64)
-
-        def parse_pcm(buf: bytes):
-            if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE stream")
-            pos, pcm = 12, None
-            while pos + 8 <= len(buf):
-                tag = buf[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", buf, pos + 4)
-                body = buf[pos + 8 : pos + 8 + size]
-                if len(body) != size:
-                    raise ValueError(f"truncated {tag!r} chunk")
-                if tag == b"data":
-                    pcm = body
-                pos += 8 + size + (size & 1)
-            if pcm is None:
-                raise ValueError("missing data chunk")
-            return np.frombuffer(pcm, dtype="<i2").astype(np.int64)
-
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                if b is None:
-                    raise ValueError(f"NULL WAV payload (doc_id={doc_id})")
-                try:
-                    s = parse_pcm(bytes(b))
-                except (IndexError, struct.error) as exc:
-                    raise ValueError(
-                        f"truncated WAV stream (doc_id={doc_id}): {exc}"
-                    ) from exc
-                frame = np.zeros(64, dtype=np.int64)
-                frame[: min(64, s.size)] = s[:64]
-                C = (M @ frame.reshape(8, 8) @ M.T + (1 << 25)) >> 26
-                bands = np.abs(C).sum(axis=1)
-                rows.append(
-                    (int(doc_id), int(C[0, 0]), *(int(x) for x in bands))
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "dc"] + [f"band{u}" for u in range(8)],
-            )
-
-    return payloads.mapInPandas(run, schema=_WAV_SPECTRAL_SCHEMA)
+    return _decode_payloads(
+        payloads, "WAV", _wav_spectral_rows, _WAV_SPECTRAL_SCHEMA
+    )
 
 
 # --- GIF (LZW) — real lossless codec, stdlib only ------------------------
+#
+# ``lzw_encode``/``lzw_decode`` are the unit-test surface too: the tests
+# round-trip streams large enough to exercise width growth, the 4096
+# reset, and the KwKwK case.
 
-def _build_lzw():
-    """Construct the GIF-variant LZW codec pair as NESTED functions:
-    their non-importable qualname forces cloudpickle to serialize them
-    BY VALUE into any mapInPandas closure that captures them, so the
-    GIF kernels work on executors that cannot import this package
-    (the /tmp-driver harness case the verify recipe simulates — a
-    module-level def here pickles by reference and raised
-    ModuleNotFoundError on workers; caught by that exact recipe).
-    The module-level ``lzw_encode``/``lzw_decode`` aliases below keep
-    the unit-test surface, which round-trips streams large enough to
-    exercise width growth, the 4096 reset, and the KwKwK case."""
 
-    def lzw_encode(data: bytes, min_code: int = 8) -> bytes:
-        clear, end = 1 << min_code, (1 << min_code) + 1
-        out = bytearray()
-        buf = nbits = 0
+def lzw_encode(data: bytes, min_code: int = 8) -> bytes:
+    clear, end = 1 << min_code, (1 << min_code) + 1
+    out = bytearray()
+    buf = nbits = 0
 
-        def emit(code: int, width: int) -> None:
-            nonlocal buf, nbits
-            buf |= code << nbits
-            nbits += width
-            while nbits >= 8:
-                out.append(buf & 0xFF)
-                buf >>= 8
-                nbits -= 8
-
-        def fresh() -> dict:
-            return {bytes([i]): i for i in range(1 << min_code)}
-
-        table = fresh()
-        next_code = end + 1
-        width = min_code + 1
-        emit(clear, width)
-        w = b""
-        for ch in data:
-            wc = w + bytes([ch])
-            if wc in table:
-                w = wc
-                continue
-            emit(table[w], width)
-            if next_code < 4096:
-                table[wc] = next_code
-                next_code += 1
-                if next_code == (1 << width) and width < 12:
-                    width += 1
-            else:
-                emit(clear, width)
-                table = fresh()
-                next_code = end + 1
-                width = min_code + 1
-            w = bytes([ch])
-        if w:
-            emit(table[w], width)
-            # Mirror the decoder's bookkeeping for the FINAL data code
-            # before emitting END: the decoder appends one table entry
-            # on receiving it and (early-compensated) bumps the code
-            # width when the table reaches 2^width - 1, so END must be
-            # emitted at that SAME bumped width — otherwise a stream
-            # whose final append lands exactly on the boundary makes
-            # the decoder read END at width+1 and, if the bitstream
-            # also ends byte-aligned, raise "truncated LZW stream" on
-            # valid encoder output (ADVICE r7, fuzz-confirmed).
-            if next_code < 4096:
-                next_code += 1
-                if next_code == (1 << width) and width < 12:
-                    width += 1
-        emit(end, width)
-        if nbits:
+    def emit(code: int, width: int) -> None:
+        nonlocal buf, nbits
+        buf |= code << nbits
+        nbits += width
+        while nbits >= 8:
             out.append(buf & 0xFF)
-        return bytes(out)
+            buf >>= 8
+            nbits -= 8
+
+    def fresh() -> dict:
+        return {bytes([i]): i for i in range(1 << min_code)}
+
+    table = fresh()
+    next_code = end + 1
+    width = min_code + 1
+    emit(clear, width)
+    w = b""
+    for ch in data:
+        wc = w + bytes([ch])
+        if wc in table:
+            w = wc
+            continue
+        emit(table[w], width)
+        if next_code < 4096:
+            table[wc] = next_code
+            next_code += 1
+            if next_code == (1 << width) and width < 12:
+                width += 1
+        else:
+            emit(clear, width)
+            table = fresh()
+            next_code = end + 1
+            width = min_code + 1
+        w = bytes([ch])
+    if w:
+        emit(table[w], width)
+        # Mirror the decoder's bookkeeping for the FINAL data code
+        # before emitting END: the decoder appends one table entry
+        # on receiving it and (early-compensated) bumps the code
+        # width when the table reaches 2^width - 1, so END must be
+        # emitted at that SAME bumped width — otherwise a stream
+        # whose final append lands exactly on the boundary makes
+        # the decoder read END at width+1 and, if the bitstream
+        # also ends byte-aligned, raise "truncated LZW stream" on
+        # valid encoder output (ADVICE r7, fuzz-confirmed).
+        if next_code < 4096:
+            next_code += 1
+            if next_code == (1 << width) and width < 12:
+                width += 1
+    emit(end, width)
+    if nbits:
+        out.append(buf & 0xFF)
+    return bytes(out)
 
 
-    def lzw_decode(data: bytes, min_code: int = 8) -> bytes:
-        clear, end = 1 << min_code, (1 << min_code) + 1
-        nbytes = len(data)
-        # LSB-first accumulator bit reader (r18): one shift/mask per
-        # code instead of a per-bit loop; returns None on exactly the
-        # same fewer-than-width-bits-remain condition as before.
-        buf = nb = bytepos = 0
+def lzw_decode(data: bytes, min_code: int = 8) -> bytes:
+    clear, end = 1 << min_code, (1 << min_code) + 1
+    nbytes = len(data)
+    # LSB-first accumulator bit reader (r18): one shift/mask per
+    # code instead of a per-bit loop; returns None on exactly the
+    # same fewer-than-width-bits-remain condition as before.
+    buf = nb = bytepos = 0
 
-        def read(width: int) -> int | None:
-            nonlocal buf, nb, bytepos
-            while nb < width and bytepos < nbytes:
-                buf |= data[bytepos] << nb
-                bytepos += 1
-                nb += 8
-            if nb < width:
-                return None
-            v = buf & ((1 << width) - 1)
-            buf >>= width
-            nb -= width
-            return v
+    def read(width: int) -> int | None:
+        nonlocal buf, nb, bytepos
+        while nb < width and bytepos < nbytes:
+            buf |= data[bytepos] << nb
+            bytepos += 1
+            nb += 8
+        if nb < width:
+            return None
+        v = buf & ((1 << width) - 1)
+        buf >>= width
+        nb -= width
+        return v
 
-        def fresh() -> list:
-            return [bytes([i]) for i in range(1 << min_code)] + [b"", b""]
+    def fresh() -> list:
+        return [bytes([i]) for i in range(1 << min_code)] + [b"", b""]
 
-        table = fresh()
-        width = min_code + 1
-        out = bytearray()
-        prev: bytes | None = None
-        while True:
-            code = read(width)
-            if code is None:
-                # the encoder ALWAYS terminates with END; running out
-                # of bits first means the stream was cut — reject
-                # loudly like every other parser here, instead of
-                # returning silently truncated data (code-review r7)
-                raise ValueError("truncated LZW stream: no END code")
-            if code == end:
-                break
-            if code == clear:
-                table = fresh()
-                width = min_code + 1
-                prev = None
-                continue
-            if prev is None:
+    table = fresh()
+    width = min_code + 1
+    out = bytearray()
+    prev: bytes | None = None
+    while True:
+        code = read(width)
+        if code is None:
+            # the encoder ALWAYS terminates with END; running out
+            # of bits first means the stream was cut — reject
+            # loudly like every other parser here, instead of
+            # returning silently truncated data (code-review r7)
+            raise ValueError("truncated LZW stream: no END code")
+        if code == end:
+            break
+        if code == clear:
+            table = fresh()
+            width = min_code + 1
+            prev = None
+            continue
+        if prev is None:
+            entry = table[code]
+        else:
+            if code < len(table):
                 entry = table[code]
+            elif code == len(table):
+                entry = prev + prev[:1]  # KwKwK
             else:
-                if code < len(table):
-                    entry = table[code]
-                elif code == len(table):
-                    entry = prev + prev[:1]  # KwKwK
-                else:
-                    raise ValueError(f"corrupt LZW stream: code {code}")
-                if len(table) < 4096:
-                    table.append(prev + entry[:1])
-                    # one-behind compensation: the decoder's table trails
-                    # the encoder's by exactly one entry at read time (the
-                    # encoder adds E_k right after emitting c_k; the
-                    # decoder reconstructs E_k only upon receiving
-                    # c_{k+1}), so the width bump the encoder applied after
-                    # filling index (1<<width)-1 must fire here one entry
-                    # EARLY to read c_{k+1} at the encoder's width
-                    if len(table) + 1 == (1 << width) and width < 12:
-                        width += 1
-            out += entry
-            prev = entry
-        return bytes(out)
+                raise ValueError(f"corrupt LZW stream: code {code}")
+            if len(table) < 4096:
+                table.append(prev + entry[:1])
+                # one-behind compensation: the decoder's table trails
+                # the encoder's by exactly one entry at read time (the
+                # encoder adds E_k right after emitting c_k; the
+                # decoder reconstructs E_k only upon receiving
+                # c_{k+1}), so the width bump the encoder applied after
+                # filling index (1<<width)-1 must fire here one entry
+                # EARLY to read c_{k+1} at the encoder's width
+                if len(table) + 1 == (1 << width) and width < 12:
+                    width += 1
+        out += entry
+        prev = entry
+    return bytes(out)
 
 
-    return lzw_encode, lzw_decode
+_GIF_PALETTE = b"".join(bytes([j, j, j]) for j in range(256))
 
 
-lzw_encode, lzw_decode = _build_lzw()
+def _gif_payload(d: int) -> bytes:
+    w, h = _raster_dims(d)
+    lzw = lzw_encode(_ramp(d, w * h).tobytes())
+    blocks = b"".join(
+        bytes([len(lzw[i : i + 255])]) + lzw[i : i + 255]
+        for i in range(0, len(lzw), 255)
+    )
+    return (
+        b"GIF87a"
+        + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)
+        + _GIF_PALETTE
+        + b"\x2C"
+        + struct.pack("<HHHH", 0, 0, w, h)
+        + b"\x00"
+        + bytes([8])
+        + blocks
+        + b"\x00"
+        + b"\x3B"
+    )
 
 
 def synth_gif_images(docs: DataFrame) -> DataFrame:
@@ -1138,50 +1004,59 @@ def synth_gif_images(docs: DataFrame) -> DataFrame:
     color table, LZW-compressed through :func:`lzw_encode` and wrapped
     in a spec-conformant GIF stream (logical screen descriptor, image
     descriptor, 255-byte data sub-blocks, trailer)."""
-    _ensure_arrow_batch(docs)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        palette = b"".join(bytes([j, j, j]) for j in range(256))
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                w = 8 + int(doc_id) % 9
-                h = 8 + int(doc_id) % 7
-                idx = np.arange(w * h, dtype=np.int64)
-                px = ((int(doc_id) + idx) % 256).astype(np.uint8).tobytes()
-                lzw = lzw_encode(px)
-                blocks = b"".join(
-                    bytes([len(lzw[i : i + 255])]) + lzw[i : i + 255]
-                    for i in range(0, len(lzw), 255)
-                )
-                payloads.append(
-                    b"GIF87a"
-                    + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)
-                    + palette
-                    + b"\x2C"
-                    + struct.pack("<HHHH", 0, 0, w, h)
-                    + b"\x00"
-                    + bytes([8])
-                    + blocks
-                    + b"\x00"
-                    + b"\x3B"
-                )
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return spread_input(docs.select("doc_id")).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+    return _encode_docs(docs, _gif_payload)
 
 
 _GIF_DECODE_SCHEMA = (
     "doc_id long, width int, height int, n_pixels long,"
     " index_sum long, rgb_sum long"
 )
+
+
+def _gif_rows(buf: bytes) -> list[tuple]:
+    if buf[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF stream")
+    w, h, packed, _bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
+    pos = 13
+    palette = None
+    if packed & 0x80:
+        size = 3 * (2 << (packed & 0x07))
+        palette = buf[pos : pos + size]
+        pos += size
+    while True:
+        marker = buf[pos]
+        pos += 1
+        if marker == 0x21:  # extension: label + sub-blocks
+            pos += 1
+            while buf[pos]:
+                pos += 1 + buf[pos]
+            pos += 1
+        elif marker == 0x2C:
+            break
+        else:
+            raise ValueError(f"unexpected GIF block 0x{marker:02x}")
+    _l, _t, iw, ih, ipacked = struct.unpack_from("<HHHHB", buf, pos)
+    pos += 9
+    if ipacked & 0x80:
+        size = 3 * (2 << (ipacked & 0x07))
+        palette = buf[pos : pos + size]
+        pos += size
+    if palette is None:
+        raise ValueError("GIF stream without a color table")
+    min_code = buf[pos]
+    pos += 1
+    lzw = bytearray()
+    while buf[pos]:
+        n = buf[pos]
+        lzw += buf[pos + 1 : pos + 1 + n]
+        pos += 1 + n
+    idx = np.frombuffer(lzw_decode(bytes(lzw), min_code), dtype=np.uint8).astype(
+        np.int64
+    )
+    if len(idx) != iw * ih:
+        raise ValueError(f"decoded {len(idx)} pixels for {iw}x{ih} raster")
+    pal = np.frombuffer(palette, dtype=np.uint8).astype(np.int64).reshape(-1, 3)
+    return [(int(iw), int(ih), int(len(idx)), int(idx.sum()), int(pal[idx].sum()))]
 
 
 def decode_gif_images(payloads: DataFrame) -> DataFrame:
@@ -1191,95 +1066,71 @@ def decode_gif_images(payloads: DataFrame) -> DataFrame:
     integrity check — features are the palette-index sum and the
     palette-RESOLVED RGB sum (so a wrong color table, not just wrong
     indices, breaks the differential)."""
-    _ensure_arrow_batch(payloads)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        def decode(buf: bytes):
-            if buf[:6] not in (b"GIF87a", b"GIF89a"):
-                raise ValueError("not a GIF stream")
-            w, h, packed, _bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
-            pos = 13
-            palette = None
-            if packed & 0x80:
-                size = 3 * (2 << (packed & 0x07))
-                palette = buf[pos : pos + size]
-                pos += size
-            while True:
-                marker = buf[pos]
-                pos += 1
-                if marker == 0x21:  # extension: label + sub-blocks
-                    pos += 1
-                    while buf[pos]:
-                        pos += 1 + buf[pos]
-                    pos += 1
-                elif marker == 0x2C:
-                    break
-                else:
-                    raise ValueError(f"unexpected GIF block 0x{marker:02x}")
-            _l, _t, iw, ih, ipacked = struct.unpack_from("<HHHHB", buf, pos)
-            pos += 9
-            if ipacked & 0x80:
-                size = 3 * (2 << (ipacked & 0x07))
-                palette = buf[pos : pos + size]
-                pos += size
-            if palette is None:
-                raise ValueError("GIF stream without a color table")
-            min_code = buf[pos]
-            pos += 1
-            lzw = bytearray()
-            while buf[pos]:
-                n = buf[pos]
-                lzw += buf[pos + 1 : pos + 1 + n]
-                pos += 1 + n
-            idx = np.frombuffer(
-                lzw_decode(bytes(lzw), min_code), dtype=np.uint8
-            ).astype(np.int64)
-            if len(idx) != iw * ih:
-                raise ValueError(
-                    f"decoded {len(idx)} pixels for {iw}x{ih} raster"
-                )
-            pal = np.frombuffer(palette, dtype=np.uint8).astype(
-                np.int64
-            ).reshape(-1, 3)
-            return (
-                int(iw),
-                int(ih),
-                int(len(idx)),
-                int(idx.sum()),
-                int(pal[idx].sum()),
-            )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                if b is None:
-                    raise ValueError(f"NULL GIF payload (doc_id={doc_id})")
-                try:
-                    rows.append(decode(bytes(b)))
-                except (IndexError, struct.error) as exc:
-                    raise ValueError(
-                        f"truncated GIF stream (doc_id={doc_id}): {exc}"
-                    ) from exc
-            out = _pd.DataFrame(
-                rows,
-                columns=["width", "height", "n_pixels", "index_sum", "rgb_sum"],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            out["width"] = out["width"].astype("int32")
-            out["height"] = out["height"].astype("int32")
-            yield out
-
-    return payloads.mapInPandas(run, schema=_GIF_DECODE_SCHEMA)
-
-
+    return _decode_payloads(payloads, "GIF", _gif_rows, _GIF_DECODE_SCHEMA)
 
 
 # --- AVI (RIFF container) — real frame walk, stdlib only ------------------
+
+
+def _riff_chunk(tag: bytes, body: bytes) -> bytes:
+    return tag + struct.pack("<I", len(body)) + body + (
+        b"\x00" if len(body) & 1 else b""
+    )
+
+
+def _riff_list(kind: bytes, body: bytes) -> bytes:
+    return b"LIST" + struct.pack("<I", 4 + len(body)) + kind + body
+
+
+def _avi_walk(buf: bytes, frame_tag: bytes) -> tuple:
+    """Walk a RIFF('AVI ') tree (LIST bodies recursed, even-padding
+    honored) → (µs per frame from avih, the 'vids' stream handler
+    fourcc or None, the bodies of every ``frame_tag`` chunk in file
+    order). Truncated chunks and a missing avih raise."""
+    if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
+        raise ValueError("not a RIFF/AVI stream")
+    us_per_frame = None
+    handler = None
+    frames = []
+
+    def scan(lo: int, hi: int) -> None:
+        nonlocal us_per_frame, handler
+        p = lo
+        while p + 8 <= hi:
+            tag = buf[p : p + 4]
+            (size,) = struct.unpack_from("<I", buf, p + 4)
+            body_lo, body_hi = p + 8, p + 8 + size
+            if body_hi > hi:
+                raise ValueError(f"truncated {tag!r} chunk")
+            if tag == b"LIST":
+                scan(body_lo + 4, body_hi)
+            elif tag == b"avih":
+                (us_per_frame,) = struct.unpack_from("<I", buf, body_lo)
+            elif tag == b"strh":
+                if buf[body_lo : body_lo + 4] == b"vids":
+                    handler = buf[body_lo + 4 : body_lo + 8]
+            elif tag == frame_tag:
+                frames.append(buf[body_lo:body_hi])
+            p = body_hi + (size & 1)
+
+    scan(12, len(buf))
+    if us_per_frame is None:
+        raise ValueError("missing avih header")
+    return us_per_frame, handler, frames
+
+
+def _avi_payload(d: int) -> bytes:
+    w, h = _raster_dims(d)
+    k = d % 5 + 1
+    frames = b"".join(
+        _riff_chunk(b"00db", _ramp(d + 7 * f, w * h * 3).tobytes())
+        for f in range(k)
+    )
+    avih = struct.pack("<14I", 40000, 0, 0, 0, k, 0, 1, 0, w, h, 0, 0, 0, 0)
+    hdrl = _riff_list(b"hdrl", _riff_chunk(b"avih", avih))
+    body = b"AVI " + hdrl + _riff_list(b"movi", frames)
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
 
 def synth_avi_video(docs: DataFrame) -> DataFrame:
     """Deterministic REAL AVI containers: RIFF('AVI ') with a
@@ -1289,51 +1140,26 @@ def synth_avi_video(docs: DataFrame) -> DataFrame:
     arithmetic RAW raster pixel[i] = (doc_id + 7·frame + i) %% 256 at
     w = 8 + doc_id %% 9, h = 8 + doc_id %% 7, RGB. Frames with odd
     byte counts exercise RIFF's even-padding rule on the walk side."""
-    _ensure_arrow_batch(docs)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            return tag + struct.pack("<I", len(body)) + body + (
-                b"\x00" if len(body) & 1 else b""
-            )
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = 8 + d % 9
-                h = 8 + d % 7
-                k = d % 5 + 1
-                frames = b""
-                for f in range(k):
-                    idx = np.arange(w * h * 3, dtype=np.int64)
-                    px = ((d + 7 * f + idx) % 256).astype(np.uint8)
-                    frames += chunk(b"00db", px.tobytes())
-                avih = struct.pack(
-                    "<14I", 40000, 0, 0, 0, k, 0, 1, 0, w, h, 0, 0, 0, 0
-                )
-                hdrl = b"LIST" + struct.pack(
-                    "<I", 4 + len(chunk(b"avih", avih))
-                ) + b"hdrl" + chunk(b"avih", avih)
-                movi = b"LIST" + struct.pack("<I", 4 + len(frames)) + b"movi" + frames
-                body = b"AVI " + hdrl + movi
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return spread_input(docs.select("doc_id")).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+    return _encode_docs(docs, _avi_payload)
 
 
 _AVI_FRAME_SCHEMA = (
     "doc_id long, frame_idx int, frame_offset_ms long,"
     " frame_bytes long, pixel_sum long"
 )
+
+
+def _avi_frame_rows(buf: bytes) -> list[tuple]:
+    us_per_frame, _handler, frames = _avi_walk(buf, b"00db")
+    return [
+        (
+            i,
+            i * us_per_frame // 1000,
+            len(frame),
+            int(np.frombuffer(frame, dtype=np.uint8).astype(np.int64).sum()),
+        )
+        for i, frame in enumerate(frames)
+    ]
 
 
 def sample_avi_frames(payloads: DataFrame) -> DataFrame:
@@ -1344,77 +1170,7 @@ def sample_avi_frames(payloads: DataFrame) -> DataFrame:
     row per '00db' frame chunk in the movi list with its integer pixel
     sum. A 1→N Arrow-batched flat-map; the frame payload itself never
     leaves the kernel."""
-    _ensure_arrow_batch(payloads)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        def walk(buf: bytes):
-            if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
-                raise ValueError("not a RIFF/AVI stream")
-            us_per_frame = None
-            frames = []
-            pos = 12
-
-            def scan(lo: int, hi: int) -> None:
-                nonlocal us_per_frame
-                p = lo
-                while p + 8 <= hi:
-                    tag = buf[p : p + 4]
-                    (size,) = struct.unpack_from("<I", buf, p + 4)
-                    body_lo, body_hi = p + 8, p + 8 + size
-                    if body_hi > hi:
-                        raise ValueError(f"truncated {tag!r} chunk")
-                    if tag == b"LIST":
-                        scan(body_lo + 4, body_hi)
-                    elif tag == b"avih":
-                        (us_per_frame,) = struct.unpack_from("<I", buf, body_lo)
-                    elif tag == b"00db":
-                        frames.append(buf[body_lo:body_hi])
-                    p = body_hi + (size & 1)
-
-            scan(pos, len(buf))
-            if us_per_frame is None:
-                raise ValueError("missing avih header")
-            out = []
-            for i, frame in enumerate(frames):
-                px = np.frombuffer(frame, dtype=np.uint8).astype(np.int64)
-                out.append(
-                    (i, i * us_per_frame // 1000, len(frame), int(px.sum()))
-                )
-            return out
-
-        for pdf in batches:
-            doc_ids, idxs, offs, sizes, sums = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    raise ValueError(f"NULL AVI payload (doc_id={doc_id})")
-                try:
-                    frame_rows = walk(bytes(payload))
-                except (IndexError, struct.error) as exc:
-                    raise ValueError(
-                        f"truncated AVI stream (doc_id={doc_id}): {exc}"
-                    ) from exc
-                for i, off, nbytes, psum in frame_rows:
-                    doc_ids.append(doc_id)
-                    idxs.append(i)
-                    offs.append(off)
-                    sizes.append(nbytes)
-                    sums.append(psum)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "frame_idx": _pd.array(idxs, dtype="int32"),
-                    "frame_offset_ms": _pd.array(offs, dtype="int64"),
-                    "frame_bytes": _pd.array(sizes, dtype="int64"),
-                    "pixel_sum": _pd.array(sums, dtype="int64"),
-                }
-            )
-
-    return payloads.mapInPandas(run, schema=_AVI_FRAME_SCHEMA)
+    return _decode_payloads(payloads, "AVI", _avi_frame_rows, _AVI_FRAME_SCHEMA)
 
 
 # --- JPEG (baseline sequential, greyscale) — real lossy codec -------------
@@ -1486,396 +1242,370 @@ _JPEG_AC_VALS = tuple(
     )
 )
 
+# The DCT basis as an int64 matrix — shared by the JPEG codec, the
+# pHash and the spectral audio kernel.
+_DCT_M = np.array(_JPEG_DCT_M, dtype=np.int64)
 
-def _build_jpeg():
-    """Construct the baseline-JPEG codec pair as NESTED functions so
-    cloudpickle ships them BY VALUE into mapInPandas closures (the
-    same worker-import remedy as :func:`_build_lzw`); module-level
-    aliases keep the unit-test surface."""
 
-    DCT_M = _JPEG_DCT_M
-    QT = _JPEG_QTABLE
-    ZIG = _JPEG_ZIGZAG
-    DC_BITS, DC_VALS = _JPEG_DC_BITS, _JPEG_DC_VALS
-    AC_BITS, AC_VALS = _JPEG_AC_BITS, _JPEG_AC_VALS
+def _canonical_codes(bits, vals) -> dict:
+    """(BITS, HUFFVAL) -> {symbol: (code, length)} per the spec's
+    canonical assignment."""
+    out = {}
+    code = 0
+    k = 0
+    for length in range(1, 17):
+        for _ in range(bits[length - 1]):
+            out[vals[k]] = (code, length)
+            code += 1
+            k += 1
+        code <<= 1
+    return out
 
-    def _canonical_codes(bits, vals):
-        """(BITS, HUFFVAL) -> {symbol: (code, length)} per the spec's
-        canonical assignment."""
-        out = {}
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                out[vals[k]] = (code, length)
-                code += 1
-                k += 1
-            code <<= 1
-        return out
 
-    def _category(v: int) -> int:
-        return abs(v).bit_length()
+def _category(v: int) -> int:
+    return abs(v).bit_length()
 
-    # r18 optimization (guide §4.2 — per-task work): the encoder's code
-    # tables, DCT/quant matrices, and every header byte not depending
-    # on (h, w) are spec constants — built once per (de)serialized
-    # closure instead of once (or twice) per image.
-    import struct as _struct
 
-    import numpy as _np
+def _seg(marker: int, body: bytes) -> bytes:
+    return struct.pack(">HH", marker, len(body) + 2) + body
 
-    _ENC_DC_CODE = _canonical_codes(DC_BITS, DC_VALS)
-    _ENC_AC_CODE = _canonical_codes(AC_BITS, AC_VALS)
-    _ENC_M = _np.array(DCT_M, dtype=_np.int64)
-    _ENC_Q = _np.array(QT, dtype=_np.int64).reshape(8, 8)
-    _ENC_ZIG = list(ZIG)
 
-    def _seg(marker: int, body: bytes) -> bytes:
-        return _struct.pack(">HH", marker, len(body) + 2) + body
+# The encoder's code tables, quant matrix, and every header byte not
+# depending on (h, w) are spec constants — built once at import, not
+# once (or twice) per image.
+_ENC_DC_CODE = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+_ENC_AC_CODE = _canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+_ENC_Q = np.array(_JPEG_QTABLE, dtype=np.int64).reshape(8, 8)
+_ENC_ZIG = list(_JPEG_ZIGZAG)
+_ENC_HDR_PRE = b"\xff\xd8" + _seg(
+    0xFFDB, b"\x00" + bytes(_JPEG_QTABLE[_JPEG_ZIGZAG[k]] for k in range(64))
+)
+_ENC_HDR_POST = (
+    _seg(0xFFC4, b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS))
+    + _seg(0xFFC4, b"\x10" + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS))
+    + _seg(0xFFDA, b"\x01\x01\x00\x00\x3f\x00")
+)
 
-    _ENC_HDR_PRE = b"\xff\xd8" + _seg(
-        0xFFDB, b"\x00" + bytes(QT[ZIG[k]] for k in range(64))
+
+@functools.lru_cache(maxsize=64)
+def _huff_lut(table: bytes) -> tuple[list, list]:
+    """16-bit lookahead LUT for table-driven Huffman DECODE of one DHT
+    table (its raw bytes: class/id, the 16 BITS counts, HUFFVAL).
+    Cached by those bytes, so identical streams share tables and the
+    canonical rebuild + 65k-entry fill runs once per distinct table
+    per worker, not once per image — the profile showed the per-image
+    rebuild at ~17% and the bit-at-a-time decode loop at ~53% of
+    decode time. Every 16-bit window maps to (symbol, code length);
+    length 0 marks "no code is a prefix of this window". Canonical
+    JPEG codes are prefix-free, so first-match == unique match and the
+    LUT is exact — decoded symbols (and therefore every output byte)
+    are identical to the bit-at-a-time loop's."""
+    codes = _canonical_codes(table[1:17], table[17:])
+    sym = np.zeros(1 << 16, dtype=np.int16)
+    ln = np.zeros(1 << 16, dtype=np.int16)
+    for s, (code, length) in codes.items():
+        lo = code << (16 - length)
+        hi = (code + 1) << (16 - length)
+        sym[lo:hi] = s
+        ln[lo:hi] = length
+    return sym.tolist(), ln.tolist()
+
+
+def jpeg_encode_gray(px) -> bytes:
+    """8-bit greyscale raster (h, w) uint8 ndarray -> baseline
+    sequential JPEG bytes (single component, no subsampling, no
+    restart markers). Edge blocks are padded by edge replication."""
+    h, w = px.shape
+    if not (0 < w < 65536 and 0 < h < 65536):
+        raise ValueError(f"bad raster dims {w}x{h}")
+    H8, W8 = -(-h // 8) * 8, -(-w // 8) * 8
+    # edge replication via clamped index vectors — identical values
+    # to np.pad(mode="edge"), without its per-call overhead (the
+    # profile showed np.pad at ~20% of encode for these tiny
+    # rasters)
+    img = px.astype(np.int64)
+    if H8 != h or W8 != w:
+        img = img[
+            np.minimum(np.arange(H8), h - 1)[:, None],
+            np.minimum(np.arange(W8), w - 1),
+        ]
+    blocks = (
+        img.reshape(H8 // 8, 8, W8 // 8, 8)
+        .transpose(0, 2, 1, 3)
+        .reshape(-1, 8, 8)
+        - 128
     )
-    _ENC_HDR_POST = (
-        _seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
-        + _seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS))
-        + _seg(0xFFDA, b"\x01\x01\x00\x00\x3f\x00")
-    )
+    M = _DCT_M
+    F = np.einsum("ux,nxy,vy->nuv", M, blocks, M)
+    F = (F + (1 << 25)) >> 26
+    Q = _ENC_Q
+    # sign-aware round-half-up on |F| — replayed verbatim by the
+    # oracle, floor-div on non-negative operands only
+    q = np.sign(F) * ((np.abs(F) * 2 + Q) // (2 * Q))
+    zq = q.reshape(-1, 64)[:, _ENC_ZIG]
 
-    # 16-bit lookahead LUTs for table-driven Huffman DECODE, cached by
-    # the raw DHT table bytes (identical streams share tables, so the
-    # canonical rebuild + 65k-entry fill runs once per distinct table
-    # per task, not once per image — the profile showed the per-image
-    # rebuild at ~17% and the bit-at-a-time decode loop at ~53% of
-    # decode time). Every 16-bit window maps to (symbol, code length);
-    # length 0 marks "no code is a prefix of this window". Canonical
-    # JPEG codes are prefix-free, so first-match == unique match and
-    # the LUT is exact — decoded symbols (and therefore every output
-    # byte) are identical to the bit-at-a-time loop's.
-    _huff_lut_cache: dict = {}
+    dc_code = _ENC_DC_CODE
+    ac_code = _ENC_AC_CODE
+    out = bytearray()
+    acc = nacc = 0
 
-    def _huff_lut(key: bytes, bits, vals):
-        lut = _huff_lut_cache.get(key)
-        if lut is None:
-            import numpy as np
+    def put(code: int, length: int) -> None:
+        nonlocal acc, nacc
+        acc = (acc << length) | code
+        nacc += length
+        while nacc >= 8:
+            byte = (acc >> (nacc - 8)) & 0xFF
+            out.append(byte)
+            if byte == 0xFF:
+                out.append(0x00)  # byte stuffing
+            nacc -= 8
+        acc &= (1 << nacc) - 1
 
-            codes = _canonical_codes(bits, vals)
-            sym = np.zeros(1 << 16, dtype=np.int16)
-            ln = np.zeros(1 << 16, dtype=np.int16)
-            for s, (code, length) in codes.items():
-                lo = code << (16 - length)
-                hi = (code + 1) << (16 - length)
-                sym[lo:hi] = s
-                ln[lo:hi] = length
-            lut = (sym.tolist(), ln.tolist())
-            _huff_lut_cache[key] = lut
-        return lut
+    def put_val(v: int, cat: int) -> None:
+        if cat:
+            put(v if v >= 0 else v + (1 << cat) - 1, cat)
 
-    def jpeg_encode_gray(px) -> bytes:
-        """8-bit greyscale raster (h, w) uint8 ndarray -> baseline
-        sequential JPEG bytes (single component, no subsampling, no
-        restart markers). Edge blocks are padded by edge replication."""
-        import struct
-
-        import numpy as np
-
-        h, w = px.shape
-        if not (0 < w < 65536 and 0 < h < 65536):
-            raise ValueError(f"bad raster dims {w}x{h}")
-        H8, W8 = -(-h // 8) * 8, -(-w // 8) * 8
-        # edge replication via clamped index vectors — identical values
-        # to np.pad(mode="edge"), without its per-call overhead (the
-        # profile showed np.pad at ~20% of encode for these tiny
-        # rasters)
-        img = px.astype(np.int64)
-        if H8 != h or W8 != w:
-            img = img[
-                np.minimum(np.arange(H8), h - 1)[:, None],
-                np.minimum(np.arange(W8), w - 1),
-            ]
-        blocks = (
-            img.reshape(H8 // 8, 8, W8 // 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(-1, 8, 8)
-            - 128
-        )
-        M = _ENC_M
-        F = np.einsum("ux,nxy,vy->nuv", M, blocks, M)
-        F = (F + (1 << 25)) >> 26
-        Q = _ENC_Q
-        # sign-aware round-half-up on |F| — replayed verbatim by the
-        # oracle, floor-div on non-negative operands only
-        q = np.sign(F) * ((np.abs(F) * 2 + Q) // (2 * Q))
-        zq = q.reshape(-1, 64)[:, _ENC_ZIG]
-
-        dc_code = _ENC_DC_CODE
-        ac_code = _ENC_AC_CODE
-        out = bytearray()
-        acc = nacc = 0
-
-        def put(code: int, length: int) -> None:
-            nonlocal acc, nacc
-            acc = (acc << length) | code
-            nacc += length
-            while nacc >= 8:
-                byte = (acc >> (nacc - 8)) & 0xFF
-                out.append(byte)
-                if byte == 0xFF:
-                    out.append(0x00)  # byte stuffing
-                nacc -= 8
-            acc &= (1 << nacc) - 1
-
-        def put_val(v: int, cat: int) -> None:
-            if cat:
-                put(v if v >= 0 else v + (1 << cat) - 1, cat)
-
-        pred = 0
-        for blk in zq.tolist():
-            diff = blk[0] - pred
-            pred = blk[0]
-            cat = _category(diff)
-            c, ln = dc_code[cat]
-            put(c, ln)
-            put_val(diff, cat)
-            run = 0
-            last_nz = 63
-            while last_nz > 0 and not blk[last_nz]:
-                last_nz -= 1
-            for k in range(1, last_nz + 1):
-                v = blk[k]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    c, ln = ac_code[0xF0]  # ZRL
-                    put(c, ln)
-                    run -= 16
-                cat = _category(v)
-                c, ln = ac_code[(run << 4) | cat]
-                put(c, ln)
-                put_val(v, cat)
-                run = 0
-            if last_nz < 63:
-                c, ln = ac_code[0x00]  # EOB
-                put(c, ln)
-        if nacc:
-            put((1 << (8 - nacc)) - 1, 8 - nacc)  # pad with 1s
-
-        return (
-            _ENC_HDR_PRE
-            + _seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
-            + _ENC_HDR_POST
-            + bytes(out)
-            + b"\xff\xd9"
-        )
-
-    def jpeg_decode_gray(buf: bytes):
-        """Baseline JPEG bytes -> (width, height, uint8 raster). Loud
-        ValueError on anything outside the supported subset (baseline
-        sequential, single 8-bit greyscale component, no subsampling,
-        no restart intervals) and on truncated/corrupt streams."""
-        import struct
-
-        import numpy as np
-
-        if buf[:2] != b"\xff\xd8":
-            raise ValueError("not a JPEG stream (missing SOI)")
-        pos = 2
-        qtables: dict[int, list[int]] = {}
-        htables: dict[tuple[int, int], dict] = {}
-        w = h = None
-        comp_q = comp_dc = comp_ac = None
-        data_at = None
-        while data_at is None:
-            if pos + 4 > len(buf):
-                raise ValueError("truncated JPEG stream: no SOS")
-            if buf[pos] != 0xFF:
-                raise ValueError(f"bad marker alignment at {pos}")
-            marker = (buf[pos] << 8) | buf[pos + 1]
-            (ln,) = struct.unpack_from(">H", buf, pos + 2)
-            body = buf[pos + 4 : pos + 2 + ln]
-            if len(body) != ln - 2:
-                raise ValueError(f"truncated segment 0x{marker:04x}")
-            if marker == 0xFFDB:  # DQT (possibly several tables)
-                p = 0
-                while p < len(body):
-                    pq, tq = body[p] >> 4, body[p] & 0x0F
-                    if pq != 0:
-                        raise ValueError("unsupported 16-bit quant table")
-                    t = list(body[p + 1 : p + 65])
-                    if len(t) != 64:
-                        raise ValueError("truncated DQT body")
-                    inv = [0] * 64
-                    for k in range(64):
-                        inv[ZIG[k]] = t[k]
-                    qtables[tq] = inv
-                    p += 65
-            elif marker == 0xFFC4:  # DHT (possibly several tables)
-                p = 0
-                while p < len(body):
-                    tc, th = body[p] >> 4, body[p] & 0x0F
-                    bits = list(body[p + 1 : p + 17])
-                    if len(bits) != 16:
-                        raise ValueError("truncated DHT body")
-                    n = sum(bits)
-                    vals = list(body[p + 17 : p + 17 + n])
-                    if len(vals) != n:
-                        raise ValueError("truncated DHT values")
-                    htables[(tc, th)] = _huff_lut(
-                        bytes(body[p : p + 17 + n]), bits, vals
-                    )
-                    p += 17 + n
-            elif marker == 0xFFC0:  # SOF0 baseline
-                prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-                if prec != 8 or ncomp != 1:
-                    raise ValueError(
-                        "unsupported JPEG subset: need 8-bit single-"
-                        f"component baseline, got prec={prec} ncomp={ncomp}"
-                    )
-                cid, hv, comp_q = body[6], body[7], body[8]
-                if hv != 0x11:
-                    raise ValueError("unsupported JPEG subsampling")
-            elif marker in (0xFFC1, 0xFFC2, 0xFFC3, 0xFFC5, 0xFFC6,
-                            0xFFC7, 0xFFC9, 0xFFCA, 0xFFCB, 0xFFCD,
-                            0xFFCE, 0xFFCF):
-                raise ValueError(
-                    f"unsupported JPEG frame type 0x{marker:04x}"
-                    " (baseline sequential only)"
-                )
-            elif marker == 0xFFDD:
-                raise ValueError("unsupported JPEG restart interval")
-            elif marker == 0xFFDA:  # SOS
-                if body[0] != 1:
-                    raise ValueError("unsupported multi-component scan")
-                comp_dc, comp_ac = body[2] >> 4, body[2] & 0x0F
-                data_at = pos + 2 + ln
-            # APPn / COM / anything else with a length: skip
-            pos += 2 + ln
-        if w is None or comp_q not in qtables:
-            raise ValueError("missing SOF0 or quant table before SOS")
-        dc_tab = htables.get((0, comp_dc))
-        ac_tab = htables.get((1, comp_ac))
-        if dc_tab is None or ac_tab is None:
-            raise ValueError("missing Huffman tables before SOS")
-
-        # unstuff the entropy segment up to EOI
-        ent = bytearray()
-        p = data_at
-        while True:
-            if p >= len(buf):
-                raise ValueError("truncated JPEG stream: no EOI")
-            b = buf[p]
-            if b != 0xFF:
-                ent.append(b)
-                p += 1
+    pred = 0
+    for blk in zq.tolist():
+        diff = blk[0] - pred
+        pred = blk[0]
+        cat = _category(diff)
+        c, ln = dc_code[cat]
+        put(c, ln)
+        put_val(diff, cat)
+        run = 0
+        last_nz = 63
+        while last_nz > 0 and not blk[last_nz]:
+            last_nz -= 1
+        for k in range(1, last_nz + 1):
+            v = blk[k]
+            if v == 0:
+                run += 1
                 continue
-            if p + 1 >= len(buf):
-                raise ValueError("truncated JPEG stream: dangling 0xFF")
-            nxt = buf[p + 1]
-            if nxt == 0x00:
-                ent.append(0xFF)
-                p += 2
-            elif nxt == 0xD9:  # EOI
-                break
-            else:
+            while run > 15:
+                c, ln = ac_code[0xF0]  # ZRL
+                put(c, ln)
+                run -= 16
+            cat = _category(v)
+            c, ln = ac_code[(run << 4) | cat]
+            put(c, ln)
+            put_val(v, cat)
+            run = 0
+        if last_nz < 63:
+            c, ln = ac_code[0x00]  # EOB
+            put(c, ln)
+    if nacc:
+        put((1 << (8 - nacc)) - 1, 8 - nacc)  # pad with 1s
+
+    return (
+        _ENC_HDR_PRE
+        + _seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
+        + _ENC_HDR_POST
+        + bytes(out)
+        + b"\xff\xd9"
+    )
+
+
+def jpeg_decode_gray(buf: bytes):
+    """Baseline JPEG bytes -> (width, height, uint8 raster). Loud
+    ValueError on anything outside the supported subset (baseline
+    sequential, single 8-bit greyscale component, no subsampling,
+    no restart intervals) and on truncated/corrupt streams."""
+    if buf[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG stream (missing SOI)")
+    pos = 2
+    qtables: dict[int, list[int]] = {}
+    htables: dict[tuple[int, int], tuple] = {}
+    w = h = None
+    comp_q = comp_dc = comp_ac = None
+    data_at = None
+    while data_at is None:
+        if pos + 4 > len(buf):
+            raise ValueError("truncated JPEG stream: no SOS")
+        if buf[pos] != 0xFF:
+            raise ValueError(f"bad marker alignment at {pos}")
+        marker = (buf[pos] << 8) | buf[pos + 1]
+        (ln,) = struct.unpack_from(">H", buf, pos + 2)
+        body = buf[pos + 4 : pos + 2 + ln]
+        if len(body) != ln - 2:
+            raise ValueError(f"truncated segment 0x{marker:04x}")
+        if marker == 0xFFDB:  # DQT (possibly several tables)
+            p = 0
+            while p < len(body):
+                pq, tq = body[p] >> 4, body[p] & 0x0F
+                if pq != 0:
+                    raise ValueError("unsupported 16-bit quant table")
+                t = list(body[p + 1 : p + 65])
+                if len(t) != 64:
+                    raise ValueError("truncated DQT body")
+                inv = [0] * 64
+                for k in range(64):
+                    inv[_JPEG_ZIGZAG[k]] = t[k]
+                qtables[tq] = inv
+                p += 65
+        elif marker == 0xFFC4:  # DHT (possibly several tables)
+            p = 0
+            while p < len(body):
+                tc, th = body[p] >> 4, body[p] & 0x0F
+                bits = body[p + 1 : p + 17]
+                if len(bits) != 16:
+                    raise ValueError("truncated DHT body")
+                n = sum(bits)
+                if len(body) < p + 17 + n:
+                    raise ValueError("truncated DHT values")
+                htables[(tc, th)] = _huff_lut(bytes(body[p : p + 17 + n]))
+                p += 17 + n
+        elif marker == 0xFFC0:  # SOF0 baseline
+            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
+            if prec != 8 or ncomp != 1:
                 raise ValueError(
-                    f"unexpected marker 0xff{nxt:02x} in entropy stream"
+                    "unsupported JPEG subset: need 8-bit single-"
+                    f"component baseline, got prec={prec} ncomp={ncomp}"
                 )
+            cid, hv, comp_q = body[6], body[7], body[8]
+            if hv != 0x11:
+                raise ValueError("unsupported JPEG subsampling")
+        elif marker in (0xFFC1, 0xFFC2, 0xFFC3, 0xFFC5, 0xFFC6,
+                        0xFFC7, 0xFFC9, 0xFFCA, 0xFFCB, 0xFFCD,
+                        0xFFCE, 0xFFCF):
+            raise ValueError(
+                f"unsupported JPEG frame type 0x{marker:04x}"
+                " (baseline sequential only)"
+            )
+        elif marker == 0xFFDD:
+            raise ValueError("unsupported JPEG restart interval")
+        elif marker == 0xFFDA:  # SOS
+            if body[0] != 1:
+                raise ValueError("unsupported multi-component scan")
+            comp_dc, comp_ac = body[2] >> 4, body[2] & 0x0F
+            data_at = pos + 2 + ln
+        # APPn / COM / anything else with a length: skip
+        pos += 2 + ln
+    if w is None or comp_q not in qtables:
+        raise ValueError("missing SOF0 or quant table before SOS")
+    dc_tab = htables.get((0, comp_dc))
+    ac_tab = htables.get((1, comp_ac))
+    if dc_tab is None or ac_tab is None:
+        raise ValueError("missing Huffman tables before SOS")
 
-        # Accumulator bit reader + LUT symbol decode (r18): `acc` holds
-        # the next `accn` unconsumed bits; a symbol is one 16-bit peek
-        # and one table index instead of up to 16 per-bit loop rounds.
-        # Error semantics replicate the bit-at-a-time loop exactly: a
-        # code that would complete past the last bit raises the same
-        # "truncated" error the per-bit read raised, a full 16-bit
-        # window matching no code raises the same "invalid" error, and
-        # for any valid stream the decoded symbols are identical
-        # (canonical codes are prefix-free — first match is the match).
-        nent = len(ent)
-        acc = accn = bytepos = 0
+    # unstuff the entropy segment up to EOI
+    ent = bytearray()
+    p = data_at
+    while True:
+        if p >= len(buf):
+            raise ValueError("truncated JPEG stream: no EOI")
+        b = buf[p]
+        if b != 0xFF:
+            ent.append(b)
+            p += 1
+            continue
+        if p + 1 >= len(buf):
+            raise ValueError("truncated JPEG stream: dangling 0xFF")
+        nxt = buf[p + 1]
+        if nxt == 0x00:
+            ent.append(0xFF)
+            p += 2
+        elif nxt == 0xD9:  # EOI
+            break
+        else:
+            raise ValueError(
+                f"unexpected marker 0xff{nxt:02x} in entropy stream"
+            )
 
-        def read_bits(n: int) -> int:
-            nonlocal acc, accn, bytepos
-            if n == 0:
-                return 0
-            while accn < n and bytepos < nent:
-                acc = (acc << 8) | ent[bytepos]
-                bytepos += 1
-                accn += 8
-            if accn < n:
-                raise ValueError("truncated JPEG entropy stream")
-            accn -= n
-            v = acc >> accn
-            acc &= (1 << accn) - 1
-            return v
+    # Accumulator bit reader + LUT symbol decode (r18): `acc` holds
+    # the next `accn` unconsumed bits; a symbol is one 16-bit peek
+    # and one table index instead of up to 16 per-bit loop rounds.
+    # Error semantics replicate the bit-at-a-time loop exactly: a
+    # code that would complete past the last bit raises the same
+    # "truncated" error the per-bit read raised, a full 16-bit
+    # window matching no code raises the same "invalid" error, and
+    # for any valid stream the decoded symbols are identical
+    # (canonical codes are prefix-free — first match is the match).
+    nent = len(ent)
+    acc = accn = bytepos = 0
 
-        def huff(tab) -> int:
-            nonlocal acc, accn, bytepos
-            while accn < 16 and bytepos < nent:
-                acc = (acc << 8) | ent[bytepos]
-                bytepos += 1
-                accn += 8
+    def read_bits(n: int) -> int:
+        nonlocal acc, accn, bytepos
+        if n == 0:
+            return 0
+        while accn < n and bytepos < nent:
+            acc = (acc << 8) | ent[bytepos]
+            bytepos += 1
+            accn += 8
+        if accn < n:
+            raise ValueError("truncated JPEG entropy stream")
+        accn -= n
+        v = acc >> accn
+        acc &= (1 << accn) - 1
+        return v
+
+    def huff(tab) -> int:
+        nonlocal acc, accn, bytepos
+        while accn < 16 and bytepos < nent:
+            acc = (acc << 8) | ent[bytepos]
+            bytepos += 1
+            accn += 8
+        if accn >= 16:
+            win = (acc >> (accn - 16)) & 0xFFFF
+        else:
+            win = (acc << (16 - accn)) & 0xFFFF
+        length = tab[1][win]
+        if length == 0:
             if accn >= 16:
-                win = (acc >> (accn - 16)) & 0xFFFF
-            else:
-                win = (acc << (16 - accn)) & 0xFFFF
-            length = tab[1][win]
-            if length == 0:
-                if accn >= 16:
-                    raise ValueError("invalid Huffman code in entropy stream")
-                raise ValueError("truncated JPEG entropy stream")
-            if length > accn:
-                raise ValueError("truncated JPEG entropy stream")
-            accn -= length
-            acc &= (1 << accn) - 1
-            return tab[0][win]
+                raise ValueError("invalid Huffman code in entropy stream")
+            raise ValueError("truncated JPEG entropy stream")
+        if length > accn:
+            raise ValueError("truncated JPEG entropy stream")
+        accn -= length
+        acc &= (1 << accn) - 1
+        return tab[0][win]
 
-        def extend(v: int, cat: int) -> int:
-            if cat == 0:
-                return 0
-            return v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
+    def extend(v: int, cat: int) -> int:
+        if cat == 0:
+            return 0
+        return v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
 
-        bw, bh = -(-w // 8), -(-h // 8)
-        nblk = bw * bh
-        zq = np.zeros((nblk, 64), dtype=np.int64)
-        pred = 0
-        for n in range(nblk):
-            cat = huff(dc_tab)
-            pred += extend(read_bits(cat), cat)
-            zq[n, 0] = pred
-            k = 1
-            while k < 64:
-                rs = huff(ac_tab)
-                if rs == 0x00:  # EOB
-                    break
-                if rs == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                run, cat = rs >> 4, rs & 0x0F
-                k += run
-                if k > 63:
-                    raise ValueError("AC run overflows block")
-                zq[n, k] = extend(read_bits(cat), cat)
-                k += 1
+    bw, bh = -(-w // 8), -(-h // 8)
+    nblk = bw * bh
+    zq = np.zeros((nblk, 64), dtype=np.int64)
+    pred = 0
+    for n in range(nblk):
+        cat = huff(dc_tab)
+        pred += extend(read_bits(cat), cat)
+        zq[n, 0] = pred
+        k = 1
+        while k < 64:
+            rs = huff(ac_tab)
+            if rs == 0x00:  # EOB
+                break
+            if rs == 0xF0:  # ZRL
+                k += 16
+                continue
+            run, cat = rs >> 4, rs & 0x0F
+            k += run
+            if k > 63:
+                raise ValueError("AC run overflows block")
+            zq[n, k] = extend(read_bits(cat), cat)
+            k += 1
 
-        coef = np.zeros((nblk, 64), dtype=np.int64)
-        coef[:, list(ZIG)] = zq
-        Q = np.array(qtables[comp_q], dtype=np.int64).reshape(8, 8)
-        C = coef.reshape(-1, 8, 8) * Q
-        M = np.array(DCT_M, dtype=np.int64)
-        P = (np.einsum("ux,nuv,vy->nxy", M, C, M) + (1 << 25)) >> 26
-        P = np.clip(P + 128, 0, 255).astype(np.uint8)
-        img = (
-            P.reshape(bh, bw, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(bh * 8, bw * 8)[:h, :w]
-        )
-        return w, h, img
-
-    return jpeg_encode_gray, jpeg_decode_gray
+    coef = np.zeros((nblk, 64), dtype=np.int64)
+    coef[:, _ENC_ZIG] = zq
+    Q = np.array(qtables[comp_q], dtype=np.int64).reshape(8, 8)
+    C = coef.reshape(-1, 8, 8) * Q
+    M = _DCT_M
+    P = (np.einsum("ux,nuv,vy->nxy", M, C, M) + (1 << 25)) >> 26
+    P = np.clip(P + 128, 0, 255).astype(np.uint8)
+    img = (
+        P.reshape(bh, bw, 8, 8)
+        .transpose(0, 2, 1, 3)
+        .reshape(bh * 8, bw * 8)[:h, :w]
+    )
+    return w, h, img
 
 
-jpeg_encode_gray, jpeg_decode_gray = _build_jpeg()
+def _jpeg_payload(d: int) -> bytes:
+    w, h = _raster_dims(d)
+    return jpeg_encode_gray(_ramp(d, w * h).reshape(h, w))
 
 
 def synth_jpeg_images(docs: DataFrame) -> DataFrame:
@@ -1885,31 +1615,17 @@ def synth_jpeg_images(docs: DataFrame) -> DataFrame:
     exercise edge-block padding), pushed through the from-scratch
     integer-DCT encoder. The 255→0 wraps give the entropy coder real
     high-frequency content."""
-    _ensure_arrow_batch(docs)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = 8 + d % 9
-                h = 8 + d % 7
-                idx = np.arange(w * h, dtype=np.int64)
-                px = ((d + idx) % 256).astype(np.uint8).reshape(h, w)
-                payloads.append(jpeg_encode_gray(px))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return spread_input(docs.select("doc_id")).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+    return _encode_docs(docs, _jpeg_payload)
 
 
 _JPEG_DECODE_SCHEMA = (
     "doc_id long, width int, height int, n_pixels long, pixel_sum long"
 )
+
+
+def _jpeg_rows(buf: bytes) -> list[tuple]:
+    w, h, img = jpeg_decode_gray(buf)
+    return [(w, h, w * h, int(img.astype(np.int64).sum()))]
 
 
 def decode_jpeg_images(payloads: DataFrame) -> DataFrame:
@@ -1922,41 +1638,7 @@ def decode_jpeg_images(payloads: DataFrame) -> DataFrame:
     no shuffle; the per-symbol Huffman loop is Python (same honest
     contract-pricing note as the GIF LZW row — a deployment swaps a
     native codec behind the same kernel signature)."""
-    _ensure_arrow_batch(payloads)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        for pdf in batches:
-            doc_ids, ws, hs, npx, sums = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    raise ValueError(f"NULL JPEG payload (doc_id={doc_id})")
-                try:
-                    w, h, img = jpeg_decode_gray(bytes(payload))
-                except (IndexError, struct.error) as exc:
-                    raise ValueError(
-                        f"truncated JPEG stream (doc_id={doc_id}): {exc}"
-                    ) from exc
-                doc_ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                npx.append(w * h)
-                sums.append(int(img.astype(np.int64).sum()))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "width": _pd.array(ws, dtype="int32"),
-                    "height": _pd.array(hs, dtype="int32"),
-                    "n_pixels": _pd.array(npx, dtype="int64"),
-                    "pixel_sum": _pd.array(sums, dtype="int64"),
-                }
-            )
-
-    return payloads.mapInPandas(run, schema=_JPEG_DECODE_SCHEMA)
+    return _decode_payloads(payloads, "JPEG", _jpeg_rows, _JPEG_DECODE_SCHEMA)
 
 
 # --- Motion-JPEG video (AVI container × baseline JPEG codec) ---------------
@@ -1979,6 +1661,33 @@ def decode_jpeg_images(payloads: DataFrame) -> DataFrame:
 _MJPEG_US_PER_FRAME = 33333
 
 
+def _mjpeg_payload(d: int) -> bytes:
+    w, h = _raster_dims(d)
+    k = d % 3 + 1
+    frames = b"".join(
+        _riff_chunk(
+            b"00dc", jpeg_encode_gray(_ramp(d + 11 * f, w * h).reshape(h, w))
+        )
+        for f in range(k)
+    )
+    avih = struct.pack(
+        "<14I", _MJPEG_US_PER_FRAME, 0, 0, 0, k, 0, 1, 0, w, h, 0, 0, 0, 0
+    )
+    # AVISTREAMHEADER: fccType, fccHandler, then 9 dwords
+    # (flags/prio/lang/initialframes, scale/rate = the frame clock as a
+    # rational, start, length) — enough structure for the walker to
+    # verify the codec fourcc.
+    strh = b"vids" + b"MJPG" + struct.pack(
+        "<9I", 0, 0, 0, _MJPEG_US_PER_FRAME, 1_000_000, 0, k, 0, 0
+    )
+    hdrl = _riff_list(
+        b"hdrl",
+        _riff_chunk(b"avih", avih) + _riff_list(b"strl", _riff_chunk(b"strh", strh)),
+    )
+    body = b"AVI " + hdrl + _riff_list(b"movi", frames)
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
 def synth_mjpeg_video(docs: DataFrame) -> DataFrame:
     """Deterministic REAL Motion-JPEG AVI containers: RIFF('AVI ')
     with a LIST('hdrl') holding the avih main header AND a
@@ -1989,65 +1698,26 @@ def synth_mjpeg_video(docs: DataFrame) -> DataFrame:
     p[i] = (doc_id + 11·frame + i) %% 256 at w = 8 + doc_id %% 9,
     h = 8 + doc_id %% 7 encoded by the from-scratch integer-DCT
     encoder."""
-    _ensure_arrow_batch(docs)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            return tag + struct.pack("<I", len(body)) + body + (
-                b"\x00" if len(body) & 1 else b""
-            )
-
-        def lst(kind: bytes, body: bytes) -> bytes:
-            return b"LIST" + struct.pack("<I", 4 + len(body)) + kind + body
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = 8 + d % 9
-                h = 8 + d % 7
-                k = d % 3 + 1
-                frames = b""
-                for f in range(k):
-                    idx = np.arange(w * h, dtype=np.int64)
-                    px = ((d + 11 * f + idx) % 256).astype(np.uint8)
-                    frames += chunk(
-                        b"00dc", jpeg_encode_gray(px.reshape(h, w))
-                    )
-                avih = struct.pack(
-                    "<14I", _MJPEG_US_PER_FRAME, 0, 0, 0, k, 0, 1, 0,
-                    w, h, 0, 0, 0, 0,
-                )
-                # AVISTREAMHEADER: fccType, fccHandler, then 9 dwords
-                # (flags/prio/lang/initialframes, scale/rate = the
-                # frame clock as a rational, start, length) — enough
-                # structure for the walker to verify the codec fourcc.
-                strh = b"vids" + b"MJPG" + struct.pack(
-                    "<9I", 0, 0, 0, _MJPEG_US_PER_FRAME, 1_000_000,
-                    0, k, 0, 0,
-                )
-                hdrl = lst(
-                    b"hdrl",
-                    chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh)),
-                )
-                body = b"AVI " + hdrl + lst(b"movi", frames)
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return spread_input(docs.select("doc_id")).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+    return _encode_docs(docs, _mjpeg_payload)
 
 
 _MJPEG_DECODE_SCHEMA = (
     "doc_id long, frame_idx int, frame_offset_ms long,"
     " width int, height int, pixel_sum long"
 )
+
+
+def _mjpeg_frame_rows(buf: bytes) -> list[tuple]:
+    us_per_frame, handler, frames = _avi_walk(buf, b"00dc")
+    if handler != b"MJPG":
+        raise ValueError(f"unsupported video codec {handler!r} (MJPG only)")
+    rows = []
+    for i, frame in enumerate(frames):
+        w, h, img = jpeg_decode_gray(frame)
+        rows.append(
+            (i, i * us_per_frame // 1000, w, h, int(img.astype(np.int64).sum()))
+        )
+    return rows
 
 
 def decode_mjpeg_frames(payloads: DataFrame) -> DataFrame:
@@ -2060,83 +1730,9 @@ def decode_mjpeg_frames(payloads: DataFrame) -> DataFrame:
     Scale shape: pure map stage, payload-proportional, no shuffle —
     same contract-pricing note as the JPEG/GIF rows (a deployment
     swaps a native codec behind the same kernel signature)."""
-    _ensure_arrow_batch(payloads)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-        import pandas as _pd
-
-        def walk(buf: bytes):
-            if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
-                raise ValueError("not a RIFF/AVI stream")
-            us_per_frame = None
-            handler = None
-            frames = []
-
-            def scan(lo: int, hi: int) -> None:
-                nonlocal us_per_frame, handler
-                p = lo
-                while p + 8 <= hi:
-                    tag = buf[p : p + 4]
-                    (size,) = struct.unpack_from("<I", buf, p + 4)
-                    body_lo, body_hi = p + 8, p + 8 + size
-                    if body_hi > hi:
-                        raise ValueError(f"truncated {tag!r} chunk")
-                    if tag == b"LIST":
-                        scan(body_lo + 4, body_hi)
-                    elif tag == b"avih":
-                        (us_per_frame,) = struct.unpack_from(
-                            "<I", buf, body_lo
-                        )
-                    elif tag == b"strh":
-                        if buf[body_lo : body_lo + 4] == b"vids":
-                            handler = buf[body_lo + 4 : body_lo + 8]
-                    elif tag == b"00dc":
-                        frames.append(buf[body_lo:body_hi])
-                    p = body_hi + (size & 1)
-
-            scan(12, len(buf))
-            if us_per_frame is None:
-                raise ValueError("missing avih header")
-            if handler != b"MJPG":
-                raise ValueError(
-                    f"unsupported video codec {handler!r} (MJPG only)"
-                )
-            return us_per_frame, frames
-
-        for pdf in batches:
-            doc_ids, idxs, offs, ws, hs, sums = [], [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    raise ValueError(f"NULL MJPEG payload (doc_id={doc_id})")
-                try:
-                    us_per_frame, frames = walk(bytes(payload))
-                    decoded = [jpeg_decode_gray(fr) for fr in frames]
-                except (IndexError, struct.error) as exc:
-                    raise ValueError(
-                        f"truncated MJPEG stream (doc_id={doc_id}): {exc}"
-                    ) from exc
-                for i, (w, h, img) in enumerate(decoded):
-                    doc_ids.append(doc_id)
-                    idxs.append(i)
-                    offs.append(i * us_per_frame // 1000)
-                    ws.append(w)
-                    hs.append(h)
-                    sums.append(int(img.astype(np.int64).sum()))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "frame_idx": _pd.array(idxs, dtype="int32"),
-                    "frame_offset_ms": _pd.array(offs, dtype="int64"),
-                    "width": _pd.array(ws, dtype="int32"),
-                    "height": _pd.array(hs, dtype="int32"),
-                    "pixel_sum": _pd.array(sums, dtype="int64"),
-                }
-            )
-
-    return payloads.mapInPandas(run, schema=_MJPEG_DECODE_SCHEMA)
+    return _decode_payloads(
+        payloads, "MJPEG", _mjpeg_frame_rows, _MJPEG_DECODE_SCHEMA
+    )
 
 
 def register(reg) -> None:

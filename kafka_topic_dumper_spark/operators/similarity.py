@@ -825,7 +825,8 @@ def ivf_topk(
     the source instead of re-assigning.
     """
     base = _as_double_vec(emb, "vec_id", "v")
-    ranks = cell_ranks_udf(*(codebook or ivf_codebook(emb, n_centroids)))
+    cb = codebook or ivf_codebook(emb, n_centroids)
+    ranks = cell_ranks_udf(*cb)
     # Corpus-side assignment runs through a NONDETERMINISTIC instance
     # of the (pure) kernel (r19, guide §4.4 — the §14 lsh_banded
     # pattern): joining ``assigned`` on "cell" makes Catalyst infer
@@ -835,9 +836,12 @@ def ivf_topk(
     # inferred Filter between them. The mark forbids the duplication
     # (one evaluation; the inferred filter stays above), and the
     # query-side legs below filter BEFORE calling the kernel, so no
-    # consumer needs a filter pushed past it.
+    # consumer needs a filter pushed past it. ``asNondeterministic``
+    # marks the UDF object in place, so the corpus leg gets its own
+    # instance and the probe leg's ``ranks`` stays deterministic.
     assigned = base.withColumn(
-        "cells", ranks.asNondeterministic()(F.col("v"), F.col("v_nrm"))
+        "cells",
+        cell_ranks_udf(*cb).asNondeterministic()(F.col("v"), F.col("v_nrm")),
     ).select("vec_id", "v", "v_nrm", F.col("cells")[0].alias("cell"))
     qbase = base.filter(F.col("vec_id").isin(query_ids))
     probes = qbase.withColumn(
@@ -1106,14 +1110,17 @@ def ivfpq_topk(
     encode kernel's input, not the plan shape. NULL embeddings are
     excluded up front — see :func:`pq_topk`."""
     base = _as_double_vec(emb.filter(F.col("embedding").isNotNull()), "vec_id", "v")
-    ranks = cell_ranks_udf(*ivf_codebook(emb, n_centroids))
+    cells_cb = ivf_codebook(emb, n_centroids)
+    ranks = cell_ranks_udf(*cells_cb)
     cb = pq_codebook(emb, m, ksub)
     # Nondeterministic instance on the corpus leg + pre-filtered probe
     # leg — same §4.4 inferred-isnotnull(cell) duplication fix as
     # ivf_topk above (this join exhibited the identical two-
-    # ArrowEvalPython[_ranks] corpus plan).
+    # ArrowEvalPython[_ranks] corpus plan), with the same separate
+    # instance so the probe leg stays deterministic.
     codes = base.withColumn(
-        "cells", ranks.asNondeterministic()(F.col("v"), F.col("v_nrm"))
+        "cells",
+        cell_ranks_udf(*cells_cb).asNondeterministic()(F.col("v"), F.col("v_nrm")),
     ).select(
         "vec_id",
         "v_nrm",
@@ -1201,13 +1208,16 @@ def rp_project(emb: DataFrame, id_alias: str, col_prefix: str = "p") -> DataFram
     whole-stage codegen, bought back with a 94 kB plan per query —
     the wrong trade for a sketch whose consumers are plan-heavy).
 
-    Value-identical at every step: the products ``s·x`` equal the
-    fold's ``sign_i·emb[i]`` exactly (IEEE multiplication of the same
-    operands; both orders commute bit-exactly), and the accumulation
-    is the same left-associated ``0.0 + p0 + p1 + …`` sequence, so
-    every score is bit-equal to the chain/fold forms — verified
-    elementwise on the real embeddings and through the unchanged
-    DuckDB chain-SQL oracle. One projection map stage; no shuffle,
+    Value-identical for 64-dim embeddings (the schema's width): the
+    products ``s·x`` equal the fold's ``sign_i·emb[i]`` exactly (IEEE
+    multiplication of the same operands; both orders commute
+    bit-exactly), and the accumulation is the same left-associated
+    ``0.0 + p0 + p1 + …`` sequence, so every score is bit-equal to the
+    chain/fold forms — verified elementwise on the real embeddings and
+    through the unchanged DuckDB chain-SQL oracle. The forms differ on
+    LONGER inputs: ``zip_with`` null-pads the 64-entry sign array, so
+    one extra dimension makes the projection NULL, where the fold
+    ignored dimensions past 64. One projection map stage; no shuffle,
     no Python."""
     cols = [F.col("vec_id").alias(id_alias)]
     for j, plane in enumerate(_rp_planes()):
@@ -1610,11 +1620,6 @@ def pca_project(emb: DataFrame, n_components: int = 2) -> DataFrame:
     (the BPE/k-means/JPEG pattern) — deterministic because every
     float op downstream of the exact integer Gram is the same
     correctly-rounded sequence in kernel and replay."""
-    from kafka_topic_dumper_spark.operators.multimodal import (
-        _ensure_arrow_batch,
-    )
-
-    _ensure_arrow_batch(emb)
     quant = emb.select(
         "vec_id",
         F.transform(

@@ -16,17 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from kafka_topic_dumper_spark.plans.offsets import DumpPlan
 
 KAFKA_FORMAT = "kafka"
-# Spark's Kafka source fixed schema — richer than the reference's
-# (key, value) tuple (kafka_client.py:172): metadata survives.
-SOURCE_COLUMNS = (
-    "key",
-    "value",
-    "topic",
-    "partition",
-    "offset",
-    "timestamp",
-    "timestampType",
-)
 
 
 def kafka_available(spark: SparkSession) -> bool:

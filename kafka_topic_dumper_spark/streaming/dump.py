@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 
 from kafka_topic_dumper_spark.plans.offsets import DumpPlan
 
-DATA_PREFIX = "kafka-topic-dumper-data"  # reference kafka_client.py:48
+# reference parity: the dumper always writes gzip (kafka_client.py:181)
+COMPRESSION = "gzip"
 
 
 def make_dump_id(prefix: str | None = None, now: datetime | None = None) -> str:
@@ -77,7 +78,6 @@ def dump_batch(
     output_root: str,
     dump_id: str,
     max_records_per_file: int = 100,
-    compression: str = "gzip",
 ) -> str:
     """Write (key, value) records as chunked Parquet under
     ``<root>/dump_id=<id>/``.
@@ -85,14 +85,14 @@ def dump_batch(
     B1 parity: ``maxRecordsPerFile`` bounds rows per file like the
     reference's max_package_size (main.py:47-49) but per-task — 1000
     executors chunk concurrently; the reference chunks serially in the
-    driver. Compression gzip = reference parity (kafka_client.py:181).
+    driver. Compression is always :data:`COMPRESSION`.
     """
     path = dump_dir(output_root, dump_id)
     (
         records.select("key", "value")
         .write.mode("error")
         .option("maxRecordsPerFile", max_records_per_file)
-        .option("compression", compression)
+        .option("compression", COMPRESSION)
         .parquet(path)
     )
     return path
@@ -103,7 +103,6 @@ def dump_stream(
     output_root: str,
     checkpoint_dir: str,
     max_records_per_file: int = 100,
-    compression: str = "gzip",
     available_now: bool = True,
     dump_id: str | None = None,
 ):
@@ -130,7 +129,7 @@ def dump_stream(
         .option("path", path)
         .option("checkpointLocation", checkpoint_dir)
         .option("maxRecordsPerFile", max_records_per_file)
-        .option("compression", compression)
+        .option("compression", COMPRESSION)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

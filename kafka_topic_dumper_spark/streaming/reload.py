@@ -125,7 +125,6 @@ def reload_dump(
     topic_name: str,
     current_end_offsets: dict[int, int],
     sink,
-    state_root: str | None = None,
     ordered: bool = False,
     sink_id: str = "",
 ) -> dict:
@@ -140,7 +139,7 @@ def reload_dump(
     group offsets, kafka_client.py:360-370; Spark consumers use the
     offsets manifest instead, SURVEY §2.6 B3).
     """
-    state_root = state_root or os.path.join(output_root, "_state")
+    state_root = os.path.join(output_root, "_state")
     transformer_id = transformer.get_id()
 
     latest = state_mod.read_latest_state(spark, state_root)

@@ -16,11 +16,19 @@ def spark():
     yield s
 
 
+# The oracles run under a fixed DuckDB budget, so a plan that blows up
+# fails on every host instead of only on hosts with less RAM.
+DUCK_MEMORY_LIMIT = "4GB"
+DUCK_THREADS = 4
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb
 
-    con = duckdb.connect()
+    con = duckdb.connect(
+        config={"memory_limit": DUCK_MEMORY_LIMIT, "threads": DUCK_THREADS}
+    )
     for name in (
         "region nation customer supplier part orders lineitem events documents embeddings"
     ).split():

@@ -149,3 +149,6 @@ def test_bench_run_recording_helpers():
     # cold column = first run per row, never the min
     assert mod._cold_column(mod.RUN_TIMES) == {"rowa": 1.235, "rowb": 2.0}
     mod.RUN_TIMES.clear()
+    # the summary's shuffle-partitions field survives non-int confs
+    assert mod._int_or_raw("32") == 32
+    assert mod._int_or_raw("auto") == "auto"

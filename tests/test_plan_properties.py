@@ -448,3 +448,31 @@ def test_stub_payload_rows_never_pay_a_spread_shuffle(spark, query):
     assert count_in(plan, "RoundRobinPartitioning") == 0
     assert count_in(plan, "Exchange") == 0
     assert "MapInPandas" in plan
+
+
+def _python_udfs(node, out: list) -> list:
+    """(name, udfDeterministic) of every PythonUDF in a plan's JSON."""
+    if isinstance(node, dict):
+        if str(node.get("class", "")).endswith(".PythonUDF"):
+            out.append((node["name"], node["udfDeterministic"]))
+        for v in node.values():
+            _python_udfs(v, out)
+    elif isinstance(node, list):
+        for v in node:
+            _python_udfs(v, out)
+    return out
+
+
+@pytest.mark.parametrize("query", ["similarity_topk_ivf", "similarity_topk_ivfpq"])
+def test_ivf_probe_leg_ranks_udf_stays_deterministic(spark, query):
+    # Only the corpus leg's centroid ranking is marked nondeterministic
+    # (it stops Catalyst from evaluating the kernel twice). The probe
+    # leg gets its own UDF instance: asNondeterministic() marks a UDF
+    # object in place, and a shared instance made both legs
+    # nondeterministic.
+    import json
+
+    df = registry.QUERIES[query](spark, SF)
+    plan = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
+    ranks = sorted(det for name, det in _python_udfs(plan, []) if name == "_ranks")
+    assert ranks == [False, True]

@@ -13,7 +13,7 @@ import math
 import pytest
 
 from kafka_topic_dumper_spark import registry
-from tests.conftest import SF_CORRECTNESS
+from tests.conftest import DUCK_MEMORY_LIMIT, DUCK_THREADS, SF_CORRECTNESS
 
 RESOLVED_ORACLES = registry.resolve_oracles(SF_CORRECTNESS)
 ORACLE_NAMES = sorted(RESOLVED_ORACLES)
@@ -49,6 +49,20 @@ def test_query_matches_oracle(spark, duck, name):
     s, d = _rows(spark_rows), _rows(duck_rows)
     mismatches = [(a, b) for a, b in zip(s, d) if a != b]
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
+
+
+def test_oracles_run_under_a_pinned_duckdb_budget(duck):
+    """Host RAM must never decide whether an oracle passes: every
+    oracle runs under the fixture's fixed memory limit and threads."""
+    import duckdb
+
+    pinned = duckdb.connect(config={"memory_limit": DUCK_MEMORY_LIMIT})
+    want = pinned.sql("SELECT current_setting('memory_limit')").fetchone()[0]
+    pinned.close()
+    got = duck.sql(
+        "SELECT current_setting('memory_limit'), current_setting('threads')"
+    ).fetchone()
+    assert got == (want, DUCK_THREADS)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)

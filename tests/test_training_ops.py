@@ -724,25 +724,26 @@ def test_lzw_end_of_stream_width_boundary():
 
 
 def test_decoder_null_and_truncation_contract(spark):
-    """All four real decoders share ONE failure contract (ADVICE r7):
+    """All eight real decoders share ONE failure contract:
     a NULL payload raises ValueError('NULL ...'), and a hard-truncated
     stream raises ValueError('truncated ...') — never a raw TypeError,
     IndexError, or struct.error leaking out of the kernel."""
     import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
 
     from kafka_topic_dumper_spark.operators import multimodal as mm
 
-    kernels = {
-        "PNG": (mm.synth_png_images, mm.decode_png_images),
-        "WAV": (mm.synth_wav_audio, mm.wav_features),
-        "GIF": (mm.synth_gif_images, mm.decode_gif_images),
-        "AVI": (mm.synth_avi_video, mm.sample_avi_frames),
-        "JPEG": (mm.synth_jpeg_images, mm.decode_jpeg_images),
-        "MJPEG": (mm.synth_mjpeg_video, mm.decode_mjpeg_frames),
-    }
+    kernels = [
+        ("PNG", mm.synth_png_images, mm.decode_png_images),
+        ("WAV", mm.synth_wav_audio, mm.wav_features),
+        ("WAV", mm.synth_wav_audio, mm.wav_spectral),
+        ("GIF", mm.synth_gif_images, mm.decode_gif_images),
+        ("AVI", mm.synth_avi_video, mm.sample_avi_frames),
+        ("JPEG", mm.synth_jpeg_images, mm.decode_jpeg_images),
+        ("MJPEG", mm.synth_mjpeg_video, mm.decode_mjpeg_frames),
+        ("RAW", mm.synth_raw_images, mm.phash_dct),
+    ]
     docs = spark.createDataFrame([(5,)], "doc_id long")
-    for name, (synth, decode) in kernels.items():
+    for name, synth, decode in kernels:
         [row] = synth(docs).collect()
         payload = bytes(row.payload)
 
