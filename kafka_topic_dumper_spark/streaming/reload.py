@@ -38,24 +38,35 @@ from kafka_topic_dumper_spark.transform import apply_transformer
 log = logging.getLogger(__name__)
 
 
+# What a finished write leaves in its dump_id=<id>/ directory: the
+# batch committer's _SUCCESS marker, or a streaming file sink's log. A
+# dump whose job failed leaves an empty directory with neither.
+COMMIT_MARKERS = ("_SUCCESS", "_spark_metadata")
+
+
 def find_latest_dump_id(spark: SparkSession, output_root: str) -> str:
-    """A1 catalog discovery: latest dump = max dump_id (lexicographic =
-    chronological, kafka_client.py:259-278). Uses the Hadoop FileSystem
+    """A1 catalog discovery: latest dump = max committed dump_id
+    (lexicographic = chronological, kafka_client.py:259-278). Only
+    directories holding a :data:`COMMIT_MARKERS` entry count, so a
+    failed dump never becomes "latest". Uses the Hadoop FileSystem
     API through the JVM so the same code lists file://, hdfs:// and
     s3a:// — a driver-side metadata call, never a data scan."""
     jvm = spark._jvm  # noqa: SLF001
     conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    path = jvm.org.apache.hadoop.fs.Path(output_root)
+    Path = jvm.org.apache.hadoop.fs.Path
+    path = Path(output_root)
     fs = path.getFileSystem(conf)
     if not fs.exists(path):
         raise FileNotFoundError(f"dump root {output_root!r} does not exist")
     dump_ids = [
         st.getPath().getName().split("=", 1)[1]
         for st in fs.listStatus(path)
-        if st.isDirectory() and st.getPath().getName().startswith("dump_id=")
+        if st.isDirectory()
+        and st.getPath().getName().startswith("dump_id=")
+        and any(fs.exists(Path(st.getPath(), m)) for m in COMMIT_MARKERS)
     ]
     if not dump_ids:
-        raise FileNotFoundError(f"no dumps under {output_root!r}")
+        raise FileNotFoundError(f"no committed dumps under {output_root!r}")
     # reference parity: plain lexicographic max (kafka_client.py:275).
     # That invariant assumes timestamp-shaped ids; a custom --prefix id
     # sorts ABOVE every digit-leading timestamp and shadows newer dumps

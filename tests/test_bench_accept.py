@@ -11,24 +11,16 @@ a bench).
 
 from __future__ import annotations
 
-import importlib.util
-import os
 import types
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from tests.bench_modules import load
 
 
 @pytest.fixture()
 def accept():
-    spec = importlib.util.spec_from_file_location(
-        "bench_accept_under_test",
-        os.path.join(REPO, "tools", "bench_accept.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    return load("bench_accept")
 
 
 def _stub_runs(accept, monkeypatch, returncodes: list[int]):

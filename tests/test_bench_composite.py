@@ -1,14 +1,12 @@
 """tools/bench_composite.py invariants — the steal-verified composite
 acceptance fallback (r17).
 
-The composite tool hardcodes a window → rows mapping that mirrors
-bench.py main()'s timing order (which rows run between which
-checkpoints). If bench.py gains a suite or moves a row and the mapping
-drifts, the composite could silently source a row from the WRONG
-window's quietness evidence — these tests keep the two in lockstep,
-using BENCH_ACCEPTED.json (the committed steal-annotated attempt-7
-blob) as the schema fixture and synthetic attempts for the gating
-logic.
+The composite tool sources each row from the quietness evidence of the
+window bench.py timed it in; both read the windows from bench.SUITES.
+These tests check that table against BENCH_ACCEPTED.json (the
+committed steal-annotated attempt-7 blob, used as the schema fixture)
+and drive the gating logic with synthetic attempts on a patched
+two-window table.
 
 Pure-JSON tests — no SparkSession.
 """
@@ -16,35 +14,19 @@ Pure-JSON tests — no SparkSession.
 from __future__ import annotations
 
 import copy
-import importlib.util
 import json
 import os
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from tests.bench_modules import REPO, load
 
-
-def _load_module(name: str, path: str):
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+bench = load("bench")
 
 
 @pytest.fixture(scope="module")
 def composite():
-    return _load_module(
-        "bench_composite_under_test",
-        os.path.join(REPO, "tools", "bench_composite.py"),
-    )
-
-
-@pytest.fixture(scope="module")
-def bench_mod():
-    return _load_module(
-        "bench_for_composite_test", os.path.join(REPO, "bench.py")
-    )
+    return load("bench_composite")
 
 
 @pytest.fixture(scope="module")
@@ -59,41 +41,47 @@ def pins_doc():
         return json.load(f)
 
 
-def test_windows_partition_every_timed_row(composite, accepted):
-    """The window mapping must cover every row the reading timed,
-    exactly once — a row in two windows would double-source, a row in
-    none would always be 'uncovered'."""
-    window_rows = composite._window_rows(accepted)
-    all_rows = composite._all_timings(accepted)
+def _window_rows() -> dict[str, list[str]]:
+    return {tag: [r.name for s in suites for r in s.rows]
+            for tag, (_, suites) in bench.windows().items()}
+
+
+def test_windows_partition_every_timed_row(accepted):
+    """The windows must cover every row the reading timed, exactly
+    once — a row in two windows would double-source, a row in none
+    would always be 'uncovered'."""
+    all_rows = bench.load_timings(accepted)
     seen: list[str] = []
-    for rows in window_rows.values():
+    for rows in _window_rows().values():
         seen.extend(rows)
     assert sorted(seen) == sorted(set(seen)), "row mapped to two windows"
     assert set(seen) == set(all_rows), (
-        "window mapping out of lockstep with the timed rows: "
+        "windows out of lockstep with the timed rows: "
         f"unmapped={sorted(set(all_rows) - set(seen))} "
         f"phantom={sorted(set(seen) - set(all_rows))}"
     )
 
 
-def test_windows_match_bench_suite_lists(composite, accepted, bench_mod):
-    """Drift guard against bench.py itself: the benched-row universe
-    (HEADLINE* + EXTRA_ROWS) equals the mapped rows."""
-    bench_rows = set(bench_mod.HEADLINE) | set(bench_mod.EXTRA_ROWS)
-    for n in range(2, 10):
-        bench_rows |= set(getattr(bench_mod, f"HEADLINE_V{n}"))
-    mapped = {r for rows in composite._window_rows(accepted).values()
-              for r in rows}
-    assert mapped == bench_rows
+def test_windows_match_bench_suite_lists(composite, accepted, pins_doc,
+                                         tmp_path):
+    """The composite of a clean reading sources exactly the rows of
+    bench.SUITES, each from the window SUITES times it in."""
+    p = tmp_path / "accepted.json"
+    p.write_text(json.dumps(accepted))
+    res = composite.build_composite([str(p)], pins_doc)
+    assert set(res["composite"]) == set(bench.ROWS)
+    assert res["window_sources"] == {t: ["accepted.json"]
+                                     for t in bench.windows()}
 
 
-def test_every_window_has_an_opener_chain(composite):
-    """WINDOW_OPENERS must chain PRE -> ... -> TAIL with no orphan
-    opener tags (an opener that is neither PRE nor a window would make
+def test_every_window_has_an_opener_chain():
+    """The windows must chain PRE -> ... -> TAIL with no orphan opener
+    tags (an opener that is neither PRE nor a window would make
     opener_ok permanently False and silently exclude its rows)."""
-    openers = set(composite.WINDOW_OPENERS.values())
-    tags = set(composite.WINDOW_OPENERS)
-    assert openers - tags == {"PRE"}
+    windows = bench.windows()
+    openers = {opener for opener, _ in windows.values()}
+    assert openers - set(windows) == {bench.PRE}
+    assert list(windows)[-1] == bench.TAIL
 
 
 def _mini_pins(rows: dict[str, float]) -> dict:
@@ -128,17 +116,13 @@ def _mini_detail(q1: float = 0.4, steal: float = 0.1) -> dict:
 
 
 def _patch_mini_windows(composite, monkeypatch):
-    """Restrict the window topology to the synthetic two-window shape."""
-    monkeypatch.setattr(composite, "WINDOW_OPENERS", {
-        "after_headline": "PRE",
-        "after_v2": "after_headline",
-        "TAIL": "after_v2",
-    })
-    monkeypatch.setattr(composite, "_window_rows", lambda detail: {
-        "after_headline": ["a"],
-        "after_v2": ["b"],
-        "TAIL": ["dump_pipeline"],
-    })
+    """Restrict the suite table to the synthetic two-window shape."""
+    Row, Suite = bench.Row, bench.Suite
+    monkeypatch.setattr(bench, "SUITES", (
+        Suite("after_headline", "queries", (Row("a"),)),
+        Suite("after_v2", "queries_v2", (Row("b"),)),
+        Suite("TAIL", "queries", (Row("dump_pipeline", bench.SINGLE),)),
+    ))
 
 
 def test_dirty_window_rows_are_never_sourced(composite, monkeypatch):
@@ -272,7 +256,7 @@ def test_write_blob_passes_accepted_window_invariant(
     _patch_mini_windows(composite, monkeypatch)
     pins = _mini_pins({"a": 1.0, "b": 2.0, "dump_pipeline": 0.5})
     (tmp_path / "BENCH_PINS.json").write_text(json.dumps(pins))
-    monkeypatch.setattr(composite, "REPO", str(tmp_path))
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
     paths = _two_attempt_fixture(composite, str(tmp_path))
     rc = composite.main(["bench_composite.py", "--write"] + paths)
     assert rc == 0, capsys.readouterr().out
@@ -280,12 +264,7 @@ def test_write_blob_passes_accepted_window_invariant(
     assert blob["composite_sources"]["b"] == "att1.json"
     assert blob["suite_checkpoints"]["after_v2"]["steal_pct"] == 0.2
     assert "steal_pct_run" in blob
-    windows = composite._quiet_windows(blob, pins)
-    bad = {
-        t: w for t, w in windows.items()
-        if (w["steal"] is None or w["steal"] >= composite.STEAL_HI
-            or not w["closer_ok"] or not w["opener_ok"])
-    }
+    bad = composite.contaminated(bench.quiet_windows(blob, pins))
     assert not bad, f"written composite blob has contaminated windows: {bad}"
     # sampling-bias documentation must travel with the blob
     assert "biased slightly low" in blob["accepted_note"]
@@ -299,10 +278,5 @@ def test_accepted_windows_not_contaminated(composite, accepted, pins_doc):
     are allowed for a STRICT-gate acceptance (attempt 7 carried four
     such windows with zero trips); only composite SOURCING demands
     STEAL_LO."""
-    windows = composite._quiet_windows(accepted, pins_doc)
-    bad = {
-        t: w for t, w in windows.items()
-        if (w["steal"] is None or w["steal"] >= composite.STEAL_HI
-            or not w["closer_ok"] or not w["opener_ok"])
-    }
+    bad = composite.contaminated(bench.quiet_windows(accepted, pins_doc))
     assert not bad, f"accepted reading has contaminated windows: {bad}"

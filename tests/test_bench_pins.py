@@ -20,11 +20,12 @@ Pure-JSON tests — no SparkSession.
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from tests.bench_modules import REPO, load
+
+bench = load("bench")
 
 
 def _load_pins() -> dict:
@@ -33,22 +34,8 @@ def _load_pins() -> dict:
 
 
 def _bench_row_names() -> set[str]:
-    """Every query name bench.py times, from its own suite lists."""
-    spec = importlib.util.spec_from_file_location(
-        "bench_for_pins_test", os.path.join(REPO, "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)  # imports only; main() is not called
-    names: set[str] = set()
-    for attr in dir(mod):
-        if attr == "HEADLINE" or attr.startswith("HEADLINE_V"):
-            names |= set(getattr(mod, attr))
-    # rows bench.py times via dedicated functions outside the
-    # HEADLINE_* lists — declared by bench.py itself (EXTRA_ROWS) and
-    # cross-checked against main()'s actual timings at bench runtime,
-    # so this test and bench.py cannot silently drift (r14 advice)
-    names |= set(mod.EXTRA_ROWS)
-    return names
+    """Every query name bench.py times: the rows of its SUITES table."""
+    return {r.name for s in bench.SUITES for r in s.rows}
 
 
 def test_every_benched_row_has_a_pin():
@@ -116,12 +103,8 @@ def test_compare_tool_runs_clean_on_accepted_reading():
     host) and is report-only — compare it with
     ``python tools/bench_compare.py BENCH_DETAIL.json`` when triaging.
     """
-    spec = importlib.util.spec_from_file_location(
-        "bench_compare_for_test", os.path.join(REPO, "tools", "bench_compare.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    timings = mod.load_timings(os.path.join(REPO, "BENCH_ACCEPTED.json"))
+    with open(os.path.join(REPO, "BENCH_ACCEPTED.json")) as f:
+        timings = bench.load_timings(json.load(f))
     assert len(timings) == len(_load_pins()["pins"])
     pins = _load_pins()["pins"]
     trips = [n for n, s in timings.items() if s / pins[n]["pin"] > 1.5]
@@ -132,23 +115,27 @@ def test_bench_run_recording_helpers():
     """r19 (r18 verdict items 2-3): bench.py records every timed
     repetition per row (query_runs) and derives a cold first-run
     column next to the reported warm min-of-N. Pure-helper test —
-    the recording path is the same _record_run call every timing
-    loop routes through."""
-    spec = importlib.util.spec_from_file_location(
-        "bench_for_runs_test", os.path.join(REPO, "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    mod.RUN_TIMES.clear()
-    assert mod._record_run("rowa", 1.2345678) == 1.2345678
-    mod._record_run("rowa", 0.5)
-    mod._record_run("rowb", 2.0)
+    the recording path is the same _record_run call main() routes
+    every timed repetition through."""
+    bench.RUN_TIMES.clear()
+    assert bench._record_run("rowa", 1.2345678) == 1.2345678
+    bench._record_run("rowa", 0.5)
+    bench._record_run("rowb", 2.0)
     # run order preserved, rounded to ms like every reported number
-    assert mod.RUN_TIMES == {"rowa": [1.235, 0.5], "rowb": [2.0]}
+    assert bench.RUN_TIMES == {"rowa": [1.235, 0.5], "rowb": [2.0]}
     # cold column = first run per row, never the min
-    assert mod._cold_column(mod.RUN_TIMES) == {"rowa": 1.235, "rowb": 2.0}
-    mod.RUN_TIMES.clear()
+    assert bench._cold_column(bench.RUN_TIMES) == {"rowa": 1.235, "rowb": 2.0}
+    bench.RUN_TIMES.clear()
     # the summary's shuffle-partitions field survives non-int confs
-    assert mod._int_or_raw("32") == 32
-    assert mod._int_or_raw("auto") == "auto"
+    assert bench._int_or_raw("32") == 32
+    assert bench._int_or_raw("auto") == "auto"
+
+
+def test_value_cold_sums_the_headline_first_runs():
+    """The one-line JSON's value_cold is the fresh-run regime next to
+    the warm min-of-N value: the sum of the "queries" rows' FIRST runs,
+    not their mins, and no other suite's rows."""
+    run_times = {"q1": [2.0, 0.5, 0.4], "dump_pipeline": [1.25],
+                 "v2_row": [9.0, 1.0]}
+    queries = {"q1": 0.4, "dump_pipeline": 1.25}
+    assert bench._cold_total(queries, run_times) == 3.25

@@ -113,6 +113,49 @@ def test_find_latest_dump_id(spark, archive, tmp_path):
         reload_mod.find_latest_dump_id(spark, str(tmp_path / "nope"))
 
 
+def test_failed_dump_never_becomes_latest(spark, archive, tmp_path):
+    """Discovery accepts only committed dumps: a batch dump whose job
+    failed leaves an empty dump_id=<id>/ directory that must not shadow
+    the committed one, and a streaming dump written with a dump_id
+    (no _SUCCESS, a _spark_metadata log instead) still counts."""
+    out = str(tmp_path / "dumps")
+    beginning, end = _offsets(spark, archive)
+    records = dump_mod.apply_plan(
+        spark.read.parquet(archive), plan_tail_dump("test", beginning, end, 30)
+    )
+    dump_mod.dump_batch(records, out, "20260101000000")
+
+    @F.udf("binary")
+    def fail(v):
+        raise RuntimeError("injected dump failure")
+
+    with pytest.raises(Exception, match="injected dump failure"):
+        dump_mod.dump_batch(
+            records.withColumn("value", fail("value")), out, "20990101000000"
+        )
+    assert os.path.isdir(os.path.join(out, "dump_id=20990101000000"))
+    assert reload_mod.find_latest_dump_id(spark, out) == "20260101000000"
+
+    src = str(tmp_path / "incoming")
+    records.write.parquet(src)
+    q = dump_mod.dump_stream(
+        spark.readStream.schema("key binary, value binary").parquet(src),
+        out,
+        str(tmp_path / "ckpt"),
+        dump_id="20270101000000",
+    )
+    q.awaitTermination(120)
+    assert not os.path.exists(os.path.join(out, "dump_id=20270101000000", "_SUCCESS"))
+    latest = reload_mod.find_latest_dump_id(spark, out)
+    assert latest == "20270101000000"
+    assert reload_mod.read_dump(spark, out, latest).count() == 30
+
+    only_failed = tmp_path / "only_failed"
+    os.makedirs(only_failed / "dump_id=20990101000000")
+    with pytest.raises(FileNotFoundError, match="no committed dumps"):
+        reload_mod.find_latest_dump_id(spark, str(only_failed))
+
+
 def test_transformer_flatmap_semantics(spark):
     df = spark.createDataFrame(
         [Row(key=b"a", value=b"1"), Row(key=None, value=b"2")],

@@ -31,15 +31,15 @@ written by hand, in the same commit as the refreshed blob.
 
 from __future__ import annotations
 
-import json
 import os
 import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "tools"))
+sys.path[:0] = [REPO, os.path.join(REPO, "tools")]
 
+import bench  # noqa: E402
 import bench_compare  # noqa: E402
 
 IDLE_LOAD1 = 0.30
@@ -63,18 +63,10 @@ def _load() -> tuple[float, float]:
 
 def _steal_probe(window_s: float = STEAL_PROBE_S) -> float:
     """%% of CPU time stolen by the hypervisor over a short window
-    (/proc/stat field 8 — the same integral bench.py annotates its
-    suite windows with)."""
-
-    def snap() -> tuple[int, int]:
-        vals = [int(x) for x in open("/proc/stat").readline().split()[1:]]
-        return vals[7], sum(vals)
-
-    s0, t0 = snap()
+    (the same integral bench.py annotates its suite windows with)."""
+    mark = bench.steal_mark()
     time.sleep(window_s)
-    s1, t1 = snap()
-    dt = t1 - t0
-    return round(100.0 * (s1 - s0) / dt, 2) if dt > 0 else 0.0
+    return bench.steal_pct(mark, bench.steal_mark())
 
 
 def wait_for_idle() -> bool:
@@ -114,7 +106,7 @@ def main(argv: list[str]) -> int:
     max_attempts = int(argv[1]) if len(argv) > 1 else 5
     detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
     accepted_path = os.path.join(REPO, "BENCH_ACCEPTED.json")
-    pins_doc = json.load(open(os.path.join(REPO, "BENCH_PINS.json")))
+    pins_doc = bench.load_pins()
 
     attempt = 0
     never_idle_skips = 0
@@ -210,14 +202,7 @@ def main(argv: list[str]) -> int:
                 "loaded-host reading overwrites BENCH_DETAIL.json, "
                 "never this file."
             )
-            # atomic swap — an interruption mid-write must not leave
-            # the accepted blob (which the test suite asserts against)
-            # truncated (ADVICE r16)
-            tmp_path = accepted_path + ".tmp"
-            with open(tmp_path, "w") as fh:
-                json.dump(blob, fh, indent=1, sort_keys=True)
-                fh.write("\n")
-            os.replace(tmp_path, accepted_path)
+            bench.write_json(accepted_path, blob)
             print(f"accepted: wrote {accepted_path}", flush=True)
             return 0
         time.sleep(COOLDOWN_S)

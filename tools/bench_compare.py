@@ -10,8 +10,7 @@ Usage::
 overwritten each round; the default), ``BENCH_ACCEPTED.json`` (the
 builder's accepted quiet reading — the blob the test suite asserts
 no-trips on), or a driver ``BENCH_r{N}.json``. Per-query timings are
-taken from every top-level key starting with ``queries`` whose value
-is a ``{name: sec}`` dict.
+taken from the recording keys of ``bench.SUITES`` (``bench.load_timings``).
 
 Pins come from ``BENCH_PINS.json`` — the authoritative latest-accepted
 pin per row. This script exists because the per-round compare was
@@ -42,37 +41,20 @@ import statistics
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
+from bench import PRE, TAIL  # noqa: E402
 
 
-def load_timings(path: str) -> dict[str, float]:
-    with open(path) as f:
-        doc = json.load(f)
-    # driver BENCH_r{N}.json wraps the bench stdout line under "parsed"
-    # (headline-only "queries" — the per-suite dicts stay in
-    # BENCH_DETAIL.json per bench.py's stdout-size cap)
-    if "parsed" in doc and isinstance(doc["parsed"], dict):
+def _read(path: str) -> dict:
+    """A bench reading; a per-round BENCH_r{N}.json wraps the stdout line
+    under "parsed" (headline-only "queries")."""
+    with open(path) as fh:
+        doc = json.load(fh)
+    if isinstance(doc.get("parsed"), dict):
         doc = doc["parsed"]
-    timings: dict[str, float] = {}
-    for key, val in doc.items():
-        if key.startswith("queries") and isinstance(val, dict):
-            for name, sec in val.items():
-                if isinstance(sec, (int, float)):
-                    if name in timings:
-                        # a row appearing under two suite keys would let
-                        # last-wins silently mask a pin mismatch
-                        print(f"WARNING: row {name!r} appears in more "
-                              f"than one queries* suite in {path}; "
-                              f"keeping the last value", file=sys.stderr)
-                    timings[name] = float(sec)
-    if not timings:
-        raise SystemExit(
-            f"no per-query timings found in {path} — no 'queries*' dict "
-            f"keys. Is this an unparsed driver bench file (raw stdout "
-            f"under 'output', like BENCH_r07/r09)? Point this tool at "
-            f"BENCH_DETAIL.json / BENCH_ACCEPTED.json or a parsed "
-            f"BENCH_r{{N}}.json instead."
-        )
-    return timings
+    return doc
 
 
 def evaluate(bench_path: str, pins_doc: dict) -> dict:
@@ -84,7 +66,16 @@ def evaluate(bench_path: str, pins_doc: dict) -> dict:
     tripwire = float(pins_doc["tripwire"])
     band_low = float(pins_doc["band_low"])
 
-    timings = load_timings(bench_path)
+    raw_doc = _read(bench_path)
+    timings = bench.load_timings(raw_doc)
+    if not timings:
+        raise SystemExit(
+            f"no per-query timings found in {bench_path} — no 'queries*' "
+            f"dict keys. Is this an unparsed per-round bench file (raw stdout "
+            f"under 'output', like BENCH_r07/r09)? Point this tool at "
+            f"BENCH_DETAIL.json / BENCH_ACCEPTED.json or a parsed "
+            f"BENCH_r{{N}}.json instead."
+        )
     rows = []
     unpinned = []
     for name, sec in timings.items():
@@ -96,29 +87,14 @@ def evaluate(bench_path: str, pins_doc: dict) -> dict:
     trips = [r for r in rows if r[0] > tripwire]
     band = [r for r in rows if band_low <= r[0] <= tripwire]
 
-    with open(bench_path) as f:
-        raw_doc = json.load(f)
-    # driver BENCH_r{N}.json wraps the bench stdout line under "parsed";
-    # unwrap it the same way load_timings does so the bracketing
-    # controls / suite checkpoints are found and the acceptance gate is
-    # not silently skipped for such files (ADVICE r16).
-    if "parsed" in raw_doc and isinstance(raw_doc["parsed"], dict):
-        raw_doc = raw_doc["parsed"]
-    ckpt_hi = float(pins_doc.get("checkpoint_q1_quiet_hi", 0.60))
-    early_hi = pins_doc.get("checkpoint_early_quiet_hi", {})
-    pre_hi = float(pins_doc.get("control_q1_pre_quiet_hi", 0.90))
-    _, post_hi = pins_doc.get("control_q1_quiet", [0.42, 0.48])
     checkpoints = raw_doc.get("suite_checkpoints") or {}
-    flagged = [
-        tag for tag, cp in checkpoints.items()
-        if cp["q1"] > float(early_hi.get(tag, ckpt_hi))
-    ]
+    flagged = [tag for tag in checkpoints
+               if not bench.probe_quiet(raw_doc, pins_doc, tag)]
     pre = raw_doc.get("control_q1_pre")
     post = raw_doc.get("control_q1_post")
-    brackets_ok = (
-        pre is not None and post is not None and bool(checkpoints)
-        and pre <= pre_hi and post <= post_hi
-    )
+    brackets_ok = (bool(checkpoints)
+                   and bench.probe_quiet(raw_doc, pins_doc, PRE)
+                   and bench.probe_quiet(raw_doc, pins_doc, TAIL))
     return {
         "rows": rows,
         "unpinned": unpinned,
@@ -130,10 +106,6 @@ def evaluate(bench_path: str, pins_doc: dict) -> dict:
         "flagged": flagged,
         "pre": pre,
         "post": post,
-        "pre_hi": pre_hi,
-        "post_hi": post_hi,
-        "ckpt_hi": ckpt_hi,
-        "early_hi": early_hi,
         "acceptable": brackets_ok and not flagged and not trips,
         "raw_doc": raw_doc,
     }
@@ -141,7 +113,7 @@ def evaluate(bench_path: str, pins_doc: dict) -> dict:
 
 def main(argv: list[str]) -> int:
     bench_path = argv[1] if len(argv) > 1 else os.path.join(REPO, "BENCH_DETAIL.json")
-    pins_doc = json.load(open(os.path.join(REPO, "BENCH_PINS.json")))
+    pins_doc = bench.load_pins()
     pins = pins_doc["pins"]
 
     ev = evaluate(bench_path, pins_doc)
@@ -169,7 +141,7 @@ def main(argv: list[str]) -> int:
     flagged = ev["flagged"]
     if ev["checkpoints"]:
         for tag, cp in ev["checkpoints"].items():
-            hi = float(ev["early_hi"].get(tag, ev["ckpt_hi"]))
+            hi = bench.quiet_ceiling(pins_doc, tag)
             mark = f"  <-- LOADED (> {hi})" if cp["q1"] > hi else ""
             # steal_pct (r17): external-contention integral over the
             # suite window — the mechanical spike attribution the
@@ -191,10 +163,11 @@ def main(argv: list[str]) -> int:
     # zero trips.
     pre, post = ev["pre"], ev["post"]
     if pre is not None and post is not None and ev["checkpoints"]:
-        pre_ok, post_ok = pre <= ev["pre_hi"], post <= ev["post_hi"]
-        print(f"acceptance gate: pre {pre} (<= {ev['pre_hi']}: "
-              f"{'ok' if pre_ok else 'FAIL'})  post {post} (<= {ev['post_hi']}: "
-              f"{'ok' if post_ok else 'FAIL'})  flagged checkpoints "
+        pre_hi = bench.quiet_ceiling(pins_doc, PRE)
+        post_hi = bench.quiet_ceiling(pins_doc, TAIL)
+        print(f"acceptance gate: pre {pre} (<= {pre_hi}: "
+              f"{'ok' if pre <= pre_hi else 'FAIL'})  post {post} (<= {post_hi}: "
+              f"{'ok' if post <= post_hi else 'FAIL'})  flagged checkpoints "
               f"{len(flagged)}  trips {len(trips)} -> "
               f"{'ACCEPTABLE' if ev['acceptable'] else 'NOT ACCEPTABLE'}")
     if unpinned:

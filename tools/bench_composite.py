@@ -22,7 +22,7 @@ windows (<= 0.4%%) read a median 1.002x vs pins. A row timed in a
 steal-clean, checkpoint-quiet window is a quiet reading of that row,
 regardless of what happened to other windows of the same run.
 
-Composite rule, per row (window mapping mirrors bench.py's main()):
+Composite rule, per row (windows and their rows come from bench.SUITES):
 
 - a row QUALIFIES in an attempt iff its bounding window had
   steal_pct <= STEAL_LO (0.5%%), its closing checkpoint q1 probe was
@@ -73,6 +73,10 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
+from bench import TAIL  # noqa: E402
 
 STEAL_LO = 0.5  # % — sourcing bar; r17 calibration: clean windows read <= 0.4
 # Observed contamination floor: every r17 trip sat in a window with
@@ -81,97 +85,19 @@ STEAL_LO = 0.5  # % — sourcing bar; r17 calibration: clean windows read <= 0.4
 # STEAL_HI is the level at which a window is positively contaminated.
 STEAL_HI = 1.5
 
-# window -> (queries-dict key in the detail blob, row-list source).
-# Mirrors bench.py main()'s timing order: HEADLINE rows are bounded by
-# the pre-control and after_headline; prod + realvocab run between
-# after_headline and after_realvocab; the prefix-stored pair before
-# after_editdist; each HEADLINE_Vn suite before its after_vN; the two
-# stored builds before after_stored_builds; dump_pipeline runs after
-# the last checkpoint (steal_pct_tail) and is closed by post-control.
-WINDOW_OPENERS = {
-    "after_headline": "PRE",
-    "after_realvocab": "after_headline",
-    "after_editdist": "after_realvocab",
-    "after_v2": "after_editdist",
-    "after_v3": "after_v2",
-    "after_v4": "after_v3",
-    "after_v5": "after_v4",
-    "after_v6": "after_v5",
-    "after_v7": "after_v6",
-    "after_v8": "after_v7",
-    "after_v9": "after_v8",
-    "after_stored_builds": "after_v9",
-    "TAIL": "after_stored_builds",
-}
+
+def _clean(w: dict) -> bool:
+    """A window rows may be sourced from: steal-clean, both probes quiet."""
+    return (w["steal"] is not None and w["steal"] <= STEAL_LO
+            and w["opener_ok"] and w["closer_ok"])
 
 
-def _window_rows(detail: dict) -> dict[str, list[str]]:
-    # The two index stored-build rows are RECORDED in queries_v3
-    # (bench.py: `timings_v3.update(time_stored_builds())`) but TIMED
-    # between after_v9 and after_stored_builds — window attribution
-    # must follow the timing, not the recording dict.
-    stored_builds = ["similarity_topk_lsh_stored_build",
-                     "similarity_topk_ivf_stored_build"]
-    rows = {
-        "after_headline": [n for n in detail["queries"]
-                           if n != "dump_pipeline"],
-        "after_realvocab": ["dedup_minhash_lsh_prod",
-                            "dedup_editdist_join_realvocab"],
-        "after_editdist": ["dedup_editdist_prefix_stored",
-                           "dedup_editdist_prefix_stored_build"],
-        "after_stored_builds": stored_builds,
-        "TAIL": ["dump_pipeline"],
-    }
-    for tag in ("v2", "v3", "v4", "v5", "v6", "v7", "v8", "v9"):
-        rows[f"after_{tag}"] = [n for n in detail[f"queries_{tag}"]
-                                if n not in stored_builds]
-    return rows
-
-
-def _all_timings(detail: dict) -> dict[str, float]:
-    out = dict(detail["queries"])
-    for key, val in detail.items():
-        if key.startswith("queries_") and isinstance(val, dict):
-            out.update(val)
-    return out
-
-
-def _ckpt_ceiling(pins_doc: dict, tag: str) -> float:
-    early = pins_doc.get("checkpoint_early_quiet_hi", {})
-    return float(early.get(tag, pins_doc.get("checkpoint_q1_quiet_hi", 0.60)))
-
-
-def _quiet_windows(detail: dict, pins_doc: dict) -> dict[str, dict]:
-    """tag -> {steal, closer_ok, opener_ok, clean} for one attempt."""
-    cps = detail.get("suite_checkpoints") or {}
-    pre_hi = float(pins_doc.get("control_q1_pre_quiet_hi", 0.90))
-    _, post_hi = pins_doc.get("control_q1_quiet", [0.42, 0.48])
-    out: dict[str, dict] = {}
-    for tag, opener in WINDOW_OPENERS.items():
-        if tag == "TAIL":
-            steal = detail.get("steal_pct_tail")
-            closer_ok = (detail.get("control_q1_post") is not None
-                         and detail["control_q1_post"] <= post_hi)
-        else:
-            cp = cps.get(tag)
-            steal = None if cp is None else cp.get("steal_pct")
-            closer_ok = (cp is not None
-                         and cp["q1"] <= _ckpt_ceiling(pins_doc, tag))
-        if opener == "PRE":
-            opener_ok = (detail.get("control_q1_pre") is not None
-                         and detail["control_q1_pre"] <= pre_hi)
-        else:
-            ocp = cps.get(opener)
-            opener_ok = (ocp is not None
-                         and ocp["q1"] <= _ckpt_ceiling(pins_doc, opener))
-        out[tag] = {
-            "steal": steal,
-            "closer_ok": closer_ok,
-            "opener_ok": opener_ok,
-            "clean": (steal is not None and steal <= STEAL_LO
-                      and closer_ok and opener_ok),
-        }
-    return out
+def contaminated(windows: dict[str, dict]) -> dict[str, dict]:
+    """The windows failing the accepted-blob invariant: steal at the
+    contamination floor (or unrecorded), or a loaded bounding probe."""
+    return {t: w for t, w in windows.items()
+            if (w["steal"] is None or w["steal"] >= STEAL_HI
+                or not w["closer_ok"] or not w["opener_ok"])}
 
 
 def build_composite(paths: list[str], pins_doc: dict) -> dict:
@@ -182,17 +108,17 @@ def build_composite(paths: list[str], pins_doc: dict) -> dict:
             raise SystemExit(f"{p}: no steal accounting — every composite "
                              f"source must be a bench.py r17+ reading")
         attempts.append((os.path.basename(p), d,
-                         _quiet_windows(d, pins_doc), _all_timings(d)))
+                         bench.quiet_windows(d, pins_doc),
+                         bench.load_timings(d)))
 
-    window_rows = _window_rows(attempts[0][1])
     composite: dict[str, float] = {}
     provenance: dict[str, str] = {}
     uncovered: dict[str, list] = {}
     window_sources: dict[str, set] = {}
-    for tag, rows in window_rows.items():
+    for tag, (_, suites) in bench.windows().items():
         clean_attempts = [(name, t) for name, d, w, t in attempts
-                          if w[tag]["clean"]]
-        for row in rows:
+                          if _clean(w[tag])]
+        for row in (r.name for s in suites for r in s.rows):
             # collect candidates BEFORE min(): a row can be absent from
             # a clean attempt's timings (truncated/partially-schema'd
             # archive) — that is "uncovered", not a ValueError
@@ -221,8 +147,7 @@ def build_composite(paths: list[str], pins_doc: dict) -> dict:
         "provenance": provenance,
         "uncovered": uncovered,
         "residual_trips": sorted(residual_trips, reverse=True),
-        "attempts": [(name, {t: w[t] for t in WINDOW_OPENERS})
-                     for name, d, w, t in attempts],
+        "attempts": [(name, w) for name, d, w, t in attempts],
         "first_detail": attempts[0][1],
         "window_sources": {t: sorted(s) for t, s in window_sources.items()},
         "details_by_name": {name: d for name, d, w, t in attempts},
@@ -247,7 +172,7 @@ def synthesize_window_meta(result: dict) -> dict:
 
     checkpoints: dict[str, dict] = {}
     for tag in sources:
-        if tag == "TAIL":
+        if tag == TAIL:
             continue
         cps = [d["suite_checkpoints"][tag] for d in docs(tag)]
         checkpoints[tag] = {
@@ -260,12 +185,12 @@ def synthesize_window_meta(result: dict) -> dict:
     if docs("after_headline"):
         overrides["control_q1_pre"] = max(
             d["control_q1_pre"] for d in docs("after_headline"))
-    if docs("TAIL"):
+    if docs(TAIL):
         overrides["control_q1_post"] = max(
-            d["control_q1_post"] for d in docs("TAIL"))
+            d["control_q1_post"] for d in docs(TAIL))
         overrides["control_q1"] = overrides["control_q1_post"]
         overrides["steal_pct_tail"] = max(
-            d["steal_pct_tail"] for d in docs("TAIL"))
+            d["steal_pct_tail"] for d in docs(TAIL))
     all_sources = {n for names in sources.values() for n in names}
     overrides["steal_pct_run"] = max(
         details[n]["steal_pct_run"] for n in all_sources)
@@ -277,17 +202,18 @@ def main(argv: list[str]) -> int:
     paths = [a for a in argv[1:] if a != "--write"]
     if not paths:
         raise SystemExit(__doc__)
-    pins_doc = json.load(open(os.path.join(REPO, "BENCH_PINS.json")))
+    pins_doc = bench.load_pins()
     result = build_composite(paths, pins_doc)
 
     print(f"composite sources: {len(result['attempts'])} attempts")
     for name, windows in result["attempts"]:
-        clean = [t for t, w in windows.items() if w["clean"]]
-        dirty = {t: w["steal"] for t, w in windows.items() if not w["clean"]}
+        clean = [t for t, w in windows.items() if _clean(w)]
+        dirty = {t: w["steal"] for t, w in windows.items() if not _clean(w)}
         print(f"  {name}: {len(clean)}/{len(windows)} windows clean; "
               f"dirty: {dirty}")
+    keys = bench.rows_by_key()
     headline = {n: s for n, s in result["composite"].items()
-                if n in result["first_detail"]["queries"]}
+                if n in keys["queries"]}
     print(f"rows composed: {len(result['composite'])}  "
           f"headline sum: {round(sum(headline.values()), 3)}")
     if result["uncovered"]:
@@ -310,16 +236,11 @@ def main(argv: list[str]) -> int:
         import time as _time
 
         blob = dict(result["first_detail"])
-        blob["queries"] = headline
-        blob["value"] = round(sum(headline.values()), 3)
-        per_suite = {k: v for k, v in blob.items()
-                     if k.startswith("queries_") and isinstance(v, dict)}
-        for key, qd in per_suite.items():
-            blob[key] = {n: result["composite"][n] for n in qd}
-            blob["value_" + key[len("queries_"):]] = round(
-                sum(blob[key].values()), 3)
-        for row in ("dump_pipeline",):
-            blob["queries"][row] = result["composite"][row]
+        for key, rows in keys.items():
+            blob[key] = {n: result["composite"][n] for n in rows}
+            if key != "queries":
+                blob["value_" + key[len("queries_"):]] = round(
+                    sum(blob[key].values()), 3)
         blob["value"] = round(sum(blob["queries"].values()), 3)
         blob["composite_sources"] = result["provenance"]
         # per-window metadata must describe the windows the rows were
@@ -352,22 +273,13 @@ def main(argv: list[str]) -> int:
         # the suite asserts (test_accepted_windows_not_contaminated)
         # BEFORE the atomic replace — a blob that would turn the tree
         # red must never land (ADVICE r17)
-        blob_windows = _quiet_windows(blob, pins_doc)
-        contaminated = {
-            t: w for t, w in blob_windows.items()
-            if (w["steal"] is None or w["steal"] >= STEAL_HI
-                or not w["closer_ok"] or not w["opener_ok"])
-        }
-        if contaminated:
+        bad = contaminated(bench.quiet_windows(blob, pins_doc))
+        if bad:
             print(f"--write refused: synthesized blob fails the "
-                  f"accepted-window invariant: {contaminated}")
+                  f"accepted-window invariant: {bad}")
             return 1
-        accepted_path = os.path.join(REPO, "BENCH_ACCEPTED.json")
-        tmp = accepted_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(blob, fh, indent=1, sort_keys=True)
-            fh.write("\n")
-        os.replace(tmp, accepted_path)
+        accepted_path = os.path.join(bench.REPO, "BENCH_ACCEPTED.json")
+        bench.write_json(accepted_path, blob)
         print(f"wrote {accepted_path}")
     return 0 if ok else 1
 

@@ -14,13 +14,14 @@ for several row classes, and the standalone number is the comparable
 one. Re-pin only if the standalone reading is ALSO elevated (then run
 the old-code worktree experiment to split regression from host drift).
 
-This tool reproduces bench.py's measurement mechanics exactly — same
-session confs (``session.get_session``), same sf dir, same JVM +
-Python-worker warm-up on sf0.001, same ``operator_caches`` scoping,
-same noop-sink force, same min-of-N — and brackets the timed rows with
-the q1 host-quietness control. It prints the 1-/5-/15-min load
-averages first: per the r14 finding, a settled 1-min average can mask
-a still-draining host that the 5-min average (and an inflated
+ROW is any row in ``bench.SUITES``. The reading uses bench.py's own
+mechanics: its session confs (``session.get_session``), sf dir,
+warm-up (``bench.warm_up``) and timing loop (``bench.time_row``, so
+each row keeps its protocol: the untimed warm call, the fresh output
+directory, the single run), and brackets the timed rows with the q1
+host-quietness control. It prints the 1-/5-/15-min load averages
+first: per the r14 finding, a settled 1-min average can mask a
+still-draining host that the 5-min average (and an inflated
 post-control) catches, so readings taken with an elevated 5-min load
 should be discarded, not recorded.
 
@@ -33,62 +34,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from kafka_topic_dumper_spark import registry  # noqa: E402
-from kafka_topic_dumper_spark.functions.caching import operator_caches  # noqa: E402
+import bench  # noqa: E402
 from kafka_topic_dumper_spark.session import get_session  # noqa: E402
-from kafka_topic_dumper_spark.sources.tables import load_table  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-WARM_SF = "/root/testdata/sf0.001"
-
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _warm_up(spark) -> None:
-    """bench.py's warm-up: codegen/parquet/shuffle machinery + the
-    Python worker pool, on sf0.001 so no timed result is precomputed."""
-    from pyspark.sql import functions as F
-
-    li = load_table(spark, WARM_SF, "lineitem")
-    orders = load_table(spark, WARM_SF, "orders")
-    _force(
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(F.sum("l_quantity"), F.count("*"))
-    )
-    _force(
-        load_table(spark, WARM_SF, "documents")
-        .select(F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"))
-        .groupBy("tok")
-        .count()
-    )
-    from kafka_topic_dumper_spark.operators import multimodal
-
-    _force(
-        multimodal.decode_metadata(
-            multimodal.binary_payloads(load_table(spark, WARM_SF, "documents"))
-        )
-    )
-
-
-def _min_of_n(spark, name: str) -> float:
-    fn = registry.QUERIES[name]
-    best = None
-    with operator_caches():
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            _force(fn(spark, SF_DIR))
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-    return round(best, 3)
 
 
 def main(argv: list[str]) -> int:
@@ -96,12 +47,11 @@ def main(argv: list[str]) -> int:
     if not names:
         print(__doc__)
         return 2
-    unknown = [n for n in names if n not in registry.QUERIES]
+    unknown = [n for n in names if n not in bench.ROWS]
     if unknown:
-        raise SystemExit(f"not in registry.QUERIES: {unknown}")
-    for d, what in ((SF_DIR, "SPARK_GRAFT_SF_DIR"), (WARM_SF, "warm-up")):
-        if not os.path.isdir(d):
-            raise SystemExit(f"{what} dir not found: {d}")
+        raise SystemExit(f"not a benched row (bench.SUITES): {unknown}")
+    if not os.path.isdir(bench.SF_DIR):
+        raise SystemExit(f"SPARK_GRAFT_SF_DIR dir not found: {bench.SF_DIR}")
 
     try:
         load1, load5, load15 = open("/proc/loadavg").read().split()[:3]
@@ -114,38 +64,25 @@ def main(argv: list[str]) -> int:
     print(f"loadavg 1/5/15-min: {load1} {load5} {load15}  "
           f"(elevated 5-min => discard the reading)", file=sys.stderr)
 
-    pins_path = os.path.join(REPO, "BENCH_PINS.json")
-    if not os.path.exists(pins_path):
-        raise SystemExit(f"BENCH_PINS.json not found at {pins_path}")
-    pins = json.load(open(pins_path))["pins"]
+    pins = bench.load_pins()["pins"]
     spark = get_session("kafka_topic_dumper_spark-standalone")
-    _warm_up(spark)
+    bench.warm_up(spark)
 
     # steal accounting (r17, same instrument as bench.py): the
     # external-contention integral over the timed window — a reading
     # with quiet q1 brackets AND near-zero steal is certified quiet
     # against both in-guest load and hypervisor contention
-    import importlib.util as _ilu
-
-    _spec = _ilu.spec_from_file_location("_bench",
-                                         os.path.join(REPO, "bench.py"))
-    _bench = _ilu.module_from_spec(_spec)
-    _spec.loader.exec_module(_bench)
-    steal0 = _bench._cpu_steal_total()
-
-    pre = _min_of_n(spark, "q1_pricing_summary")
-    rows = {n: _min_of_n(spark, n) for n in names}
-    post = _min_of_n(spark, "q1_pricing_summary")
-
-    steal1 = _bench._cpu_steal_total()
-    dt_total = steal1[1] - steal0[1]
-    steal_pct = (round(100.0 * (steal1[0] - steal0[0]) / dt_total, 2)
-                 if dt_total > 0 else 0.0)
+    mark = bench.steal_mark()
+    pre = bench.time_control(spark)
+    rows = {n: round(min(bench.time_row(spark, bench.ROWS[n])), 3)
+            for n in names}
+    post = bench.time_control(spark)
+    steal_pct = bench.steal_pct(mark, bench.steal_mark())
 
     out = {
         "metric": "standalone_bracketed_min_of_n",
-        "n_runs": N_RUNS,
-        "sf_dir": SF_DIR,
+        "n_runs": bench.N_RUNS,
+        "sf_dir": bench.SF_DIR,
         "loadavg": [float(load1), float(load5), float(load15)],
         "control_q1_pre": pre,
         "control_q1_post": post,
