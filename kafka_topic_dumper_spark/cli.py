@@ -169,6 +169,11 @@ def _archive_offsets(records) -> tuple[dict[int, int], dict[int, int]]:
     return {r["partition"]: r["b"] for r in rows}, {r["partition"]: r["e"] for r in rows}
 
 
+class _NoOffsets(LookupError):
+    """The reload's topic has no records in the archive, so no end
+    offsets to snapshot."""
+
+
 def main(argv: list[str] | None = None) -> int:
     logging.basicConfig(level=logging.INFO, format="%(asctime)s %(levelname)s %(message)s")
     opts = parse_args(argv)
@@ -446,20 +451,27 @@ def main(argv: list[str] | None = None) -> int:
     # reload
     transformer = load_transformer(opts.transformer)
     dump_id = opts.prefix or reload_mod.find_latest_dump_id(spark, opts.output)
+    # End offsets are snapshotted only on a cold reload, inside
+    # reload_dump and before anything is produced (kafka_client.py:378);
+    # a hot skip never reads the archive or asks the broker.
     if opts.records_parquet:
-        archive = spark.read.parquet(opts.records_parquet)
-        _, end = _archive_offsets(archive.filter(F.col("topic") == opts.topic))
-        if not end:
-            # reference parity: "Can not find offsets" is fatal
-            # (kafka_client.py:301 always snapshots REAL end offsets) —
-            # a state record with empty offsets would leave a later
-            # hot-reload skip with nothing to seek consumers to
-            log.error("can not find offsets for topic %r in archive", opts.topic)
-            return 2
+
+        def end_offsets():
+            archive = spark.read.parquet(opts.records_parquet)
+            _, end = _archive_offsets(archive.filter(F.col("topic") == opts.topic))
+            if not end:
+                # reference parity: "Can not find offsets" is fatal
+                # (kafka_client.py:301 always snapshots REAL end
+                # offsets) — a state record with empty offsets would
+                # leave a later hot-reload skip with nothing to seek
+                # consumers to
+                raise _NoOffsets(opts.topic)
+            return end
     elif opts.bootstrap_servers:
         from kafka_topic_dumper_spark.streaming.group_offsets import fetch_end_offsets
 
-        end = fetch_end_offsets(opts.bootstrap_servers, opts.topic)
+        def end_offsets():
+            return fetch_end_offsets(opts.bootstrap_servers, opts.topic)
     else:
         # no archive and no broker to snapshot offsets from: refuse
         # rather than write an unusable state record (reference
@@ -494,16 +506,20 @@ def main(argv: list[str] | None = None) -> int:
             dump_id, opts.topic, sink_id, transformer.get_id(),
         )
         return 0
-    result = reload_mod.reload_dump(
-        spark,
-        opts.output,
-        dump_id,
-        transformer,
-        opts.topic,
-        end,
-        sink,
-        sink_id=sink_id,
-    )
+    try:
+        result = reload_mod.reload_dump(
+            spark,
+            opts.output,
+            dump_id,
+            transformer,
+            opts.topic,
+            end_offsets,
+            sink,
+            sink_id=sink_id,
+        )
+    except _NoOffsets:
+        log.error("can not find offsets for topic %r in archive", opts.topic)
+        return 2
     log.info("reload result: %s", result["action"])
     if opts.group:
         # pairing with --bootstrap-servers was validated up front

@@ -24,6 +24,17 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 _SHIPPED_SESSIONS: set[int] = set()
 
 
+def hadoop_fs(spark: SparkSession, uri: str):
+    """``(FileSystem, Path)`` for ``uri`` through the JVM's Hadoop API,
+    so the same driver-side metadata call lists, reads and renames on
+    file://, hdfs:// and s3a:// alike — and starts no Spark job. An
+    unknown scheme raises here (Py4JJavaError). Build child paths as
+    ``path.suffix("/" + name)``: resolving the Path class again over
+    py4j costs several gateway round trips."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(uri)  # noqa: SLF001
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path  # noqa: SLF001
+
+
 def ensure_shipped(spark: SparkSession) -> None:
     """Make this package importable on Python workers.
 

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_topic_dumper_spark.session import hadoop_fs
+
 CORRUPT_COL = "_corrupt_record"
 
 DOCUMENTS_SCHEMA = T.StructType(
@@ -174,10 +176,7 @@ def read_quarantine(spark: SparkSession, out_root: str) -> DataFrame:
     file://, hdfs:// and s3a:// roots all work — an os.path check
     would silently report an empty audit trail for every URI root
     (review r6)."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    qpath = jvm.org.apache.hadoop.fs.Path(out_root.rstrip("/") + "/quarantine")
-    fs = qpath.getFileSystem(conf)
+    fs, qpath = hadoop_fs(spark, out_root.rstrip("/") + "/quarantine")
     if not fs.exists(qpath):
         return spark.createDataFrame([], "raw_line string")
     return spark.read.parquet(out_root.rstrip("/") + "/quarantine")

@@ -32,9 +32,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_topic_dumper_spark.plans.offsets import DumpPlan
+from kafka_topic_dumper_spark.session import hadoop_fs
 
 # reference parity: the dumper always writes gzip (kafka_client.py:181)
 COMPRESSION = "gzip"
+
+# What a finished write leaves in its dump_id=<id>/ directory: the
+# batch committer's _SUCCESS marker, or a streaming file sink's log. A
+# dump whose job failed leaves a directory with neither.
+COMMIT_MARKERS = ("_SUCCESS", "_spark_metadata")
 
 
 def make_dump_id(prefix: str | None = None, now: datetime | None = None) -> str:
@@ -48,6 +54,14 @@ def make_dump_id(prefix: str | None = None, now: datetime | None = None) -> str:
 
 def dump_dir(output_root: str, dump_id: str) -> str:
     return os.path.join(output_root, f"dump_id={dump_id}")
+
+
+def is_committed(fs, path) -> bool:
+    """Whether the dump directory ``path`` (a Hadoop Path on ``fs``, see
+    :func:`~kafka_topic_dumper_spark.session.hadoop_fs`) holds a
+    :data:`COMMIT_MARKERS` entry — the one test that decides both what
+    discovery may call "latest" and what a retried dump may overwrite."""
+    return any(fs.exists(path.suffix(f"/{m}")) for m in COMMIT_MARKERS)
 
 
 def apply_plan(records: DataFrame, plan: DumpPlan) -> DataFrame:
@@ -86,8 +100,16 @@ def dump_batch(
     reference's max_package_size (main.py:47-49) but per-task — 1000
     executors chunk concurrently; the reference chunks serially in the
     driver. Compression is always :data:`COMPRESSION`.
+
+    Retry: a directory left by a failed dump of the same id (no commit
+    marker) is deleted first, so the retry writes afresh; a committed
+    dump id still fails with ``PATH_ALREADY_EXISTS``. One writer per
+    dump id is assumed, as with any retry.
     """
     path = dump_dir(output_root, dump_id)
+    fs, target = hadoop_fs(records.sparkSession, path)
+    if fs.exists(target) and not is_committed(fs, target):
+        fs.delete(target, True)
     (
         records.select("key", "value")
         .write.mode("error")

@@ -27,35 +27,27 @@ from __future__ import annotations
 
 import logging
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_topic_dumper_spark.session import hadoop_fs
 from kafka_topic_dumper_spark.streaming import state as state_mod
-from kafka_topic_dumper_spark.streaming.dump import dump_dir
+from kafka_topic_dumper_spark.streaming.dump import dump_dir, is_committed
 from kafka_topic_dumper_spark.transform import apply_transformer
 
 log = logging.getLogger(__name__)
 
 
-# What a finished write leaves in its dump_id=<id>/ directory: the
-# batch committer's _SUCCESS marker, or a streaming file sink's log. A
-# dump whose job failed leaves an empty directory with neither.
-COMMIT_MARKERS = ("_SUCCESS", "_spark_metadata")
-
-
 def find_latest_dump_id(spark: SparkSession, output_root: str) -> str:
     """A1 catalog discovery: latest dump = max committed dump_id
     (lexicographic = chronological, kafka_client.py:259-278). Only
-    directories holding a :data:`COMMIT_MARKERS` entry count, so a
+    directories that :func:`.dump.is_committed` accepts count, so a
     failed dump never becomes "latest". Uses the Hadoop FileSystem
     API through the JVM so the same code lists file://, hdfs:// and
     s3a:// — a driver-side metadata call, never a data scan."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    Path = jvm.org.apache.hadoop.fs.Path
-    path = Path(output_root)
-    fs = path.getFileSystem(conf)
+    fs, path = hadoop_fs(spark, output_root)
     if not fs.exists(path):
         raise FileNotFoundError(f"dump root {output_root!r} does not exist")
     dump_ids = [
@@ -63,7 +55,7 @@ def find_latest_dump_id(spark: SparkSession, output_root: str) -> str:
         for st in fs.listStatus(path)
         if st.isDirectory()
         and st.getPath().getName().startswith("dump_id=")
-        and any(fs.exists(Path(st.getPath(), m)) for m in COMMIT_MARKERS)
+        and is_committed(fs, st.getPath())
     ]
     if not dump_ids:
         raise FileNotFoundError(f"no committed dumps under {output_root!r}")
@@ -134,7 +126,7 @@ def reload_dump(
     dump_id: str,
     transformer,
     topic_name: str,
-    current_end_offsets: dict[int, int],
+    current_end_offsets: Callable[[], dict[int, int]],
     sink,
     ordered: bool = False,
     sink_id: str = "",
@@ -142,13 +134,24 @@ def reload_dump(
     """Run the reload. ``sink`` is a callable ``(DataFrame) -> None``
     that produces the transformed (key, value) rows — Kafka in
     production (sources.kafka.write_kafka), a Parquet/collect sink in
-    tests. Returns a summary dict (action taken + state record).
+    tests. ``current_end_offsets`` is a zero-argument callable that
+    snapshots the topic's end offsets. Returns a summary dict (action
+    taken + state record).
 
     Hot path first: when the latest state record matches, only the
-    summary is returned and nothing is read or produced — the caller
-    seeks its consumers to ``state['offsets']`` (the reference resets
-    group offsets, kafka_client.py:360-370; Spark consumers use the
-    offsets manifest instead, SURVEY §2.6 B3).
+    summary is returned — nothing is read or produced, the offsets
+    callable is never called, and the manifest read is driver-side
+    metadata work that starts no Spark job (the reference's hot reload
+    is likewise a metadata-only query, kafka_client.py:412-416). The
+    caller seeks its consumers to ``state['offsets']`` (the reference
+    resets group offsets, kafka_client.py:360-370; Spark consumers use
+    the offsets manifest instead, SURVEY §2.6 B3).
+
+    Cold path: snapshot the end offsets (once), replay through the
+    sink, then write the state record. A crash between the sink and
+    the state write leaves the manifest unchanged, so the next reload
+    is a cold one again and re-delivers every row: at-least-once, as
+    in the reference (kafka_client.py:395-404).
     """
     state_root = os.path.join(output_root, "_state")
     transformer_id = transformer.get_id()
@@ -162,7 +165,7 @@ def reload_dump(
     # Snapshot end offsets BEFORE producing (kafka_client.py:378):
     # a subsequent hot reload must seek past what this replay writes.
     new_state = state_mod.gen_state(
-        dump_id, topic_name, current_end_offsets, transformer_id,
+        dump_id, topic_name, current_end_offsets(), transformer_id,
         sink_id=sink_id,
     )
     # dump_date is unix SECONDS (reference parity, kafka_client.py:

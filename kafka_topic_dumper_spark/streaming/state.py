@@ -11,20 +11,30 @@ Reference behavior being re-expressed (SURVEY §2 S8/K4/P3/A2/B3):
 - hot-reload predicate: state exists ∧ topic ∧ dump_id ∧ transformer_id
   all match (kafka_client.py:349-358) ⇒ skip all data movement.
 
-Here the manifest is a JSON-lines directory next to the dump data
-(works on file:// and s3a:// alike); ``offsets`` is declared
-``MapType(StringType, LongType)`` — fixing the reference's int→str key
-asymmetry (kafka_client.py:310,366) by always using string keys on
-disk and int keys in memory (plans.offsets.offsets_from_json).
+Here the manifest is a JSON-lines directory next to the dump data,
+kept with driver-side Hadoop FileSystem calls (file://, hdfs:// and
+s3a:// alike) and no Spark job: like Structured Streaming's file-sink
+log (SIGMOD'18), each record is written to a hidden temp file and
+published by a rename (atomic on HDFS and local disks; on S3A a copy of
+one whole object), so a reader never sees half a record.
+``offsets`` is declared ``MapType(StringType, LongType)`` — fixing the
+reference's int→str key asymmetry (kafka_client.py:310,366) by always
+using string keys on disk and int keys in memory
+(plans.offsets.offsets_from_json). :data:`STATE_SCHEMA` is the on-disk
+contract: ``spark.read.schema(STATE_SCHEMA).json(root)`` reads the
+manifest too, and files Spark's JSON writer left there read back here.
 """
 
 from __future__ import annotations
 
+import json
 import time
+import uuid
 
-from pyspark.sql import Row, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+
+from kafka_topic_dumper_spark.session import hadoop_fs
 
 STATE_SCHEMA = T.StructType(
     [
@@ -66,17 +76,50 @@ def gen_state(
 
 
 def save_state(spark: SparkSession, state_root: str, state: dict) -> None:
-    """Append one state record to the manifest (JSON lines). The write
-    is a single-row job — the Spark analogue of the reference's
-    blocking single produce (kafka_client.py:321-327)."""
-    df = spark.createDataFrame([Row(**state)], schema=STATE_SCHEMA)
-    df.coalesce(1).write.mode("append").json(state_root)
+    """Append one state record to the manifest: one JSON line in a
+    hidden ``.part-<dump_date>-<uuid>.json``, then renamed to its
+    visible name — the analogue of the reference's blocking single
+    produce (kafka_client.py:321-327). Readers skip hidden names, so a
+    crash before the rename leaves the manifest unchanged. A failed
+    rename raises."""
+    fs, root = hadoop_fs(spark, state_root)
+    name = f"part-{int(state['dump_date']):020d}-{uuid.uuid4().hex}.json"
+    tmp, final = root.suffix(f"/.{name}"), root.suffix(f"/{name}")
+    record = {f.name: state.get(f.name) for f in STATE_SCHEMA.fields}
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(json.dumps(record).encode() + b"\n"))
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not publish state record {tmp} as {final}")
+
+
+def _parse_line(line: str, source) -> dict:
+    """One manifest line as a record with every STATE_SCHEMA field
+    (an absent nullable field reads as None, as Spark's reader gives
+    it). A line that is not a whole record raises ValueError naming
+    its file: a corrupt manifest must stop the reload, not read as
+    "no state" and trigger a duplicate replay."""
+    try:
+        rec = json.loads(line)
+        out = {f.name: rec.get(f.name) for f in STATE_SCHEMA.fields}
+        if any(out[f.name] is None for f in STATE_SCHEMA.fields if not f.nullable):
+            raise ValueError("missing a required field")
+        out["offsets"] = {str(p): int(o) for p, o in out["offsets"].items()}
+        out["dump_date"] = int(out["dump_date"])
+    except (ValueError, TypeError, AttributeError) as exc:
+        raise ValueError(f"corrupt state record in {source}: {line!r}") from exc
+    return out
 
 
 def read_latest_state(spark: SparkSession, state_root: str) -> dict | None:
     """Latest state record: argmax by (dump_date, dump_id) — reference
     A2 (kafka_client.py:343-344) with a deterministic tie-break the
-    reference lacks. Returns None when no manifest exists yet.
+    reference lacks. Returns None when no manifest exists yet. Lists
+    and reads the manifest's files on the driver; names starting with
+    ``_`` or ``.`` (``_SUCCESS``, checksums, unpublished temp files)
+    are skipped, as Spark's own reader skips them.
 
     ``sink_id`` / ``transformer_id`` close the CONCURRENT-writer tie:
     reload_dump advances a superseding record's dump_date strictly
@@ -84,38 +127,44 @@ def read_latest_state(spark: SparkSession, state_root: str) -> dict | None:
     reloads, but two writers that read the same latest both bump to
     latest+1 and re-tie on (dump_date, dump_id). Those records can
     only differ in sink/transformer identity, so ordering on them
-    keeps the argmax deterministic (which record "wins" under true
-    concurrency is inherently arbitrary — the guarantee here is that
-    every reader picks the SAME one, so the hot-skip predicate is
-    stable). Last-write-wins semantics proper still assume one writer
-    per manifest at a time, as with the reference's state topic."""
-    try:
-        df = spark.read.schema(STATE_SCHEMA).json(state_root)
-        df.schema  # force analysis so a missing path surfaces here
-    except Exception as exc:
-        # ONLY the no-manifest-yet case maps to None. A transient
-        # storage/credential error must propagate: swallowing it made
-        # state_matches() return False and the caller re-produce the
-        # whole dump — the duplicate delivery the manifest exists to
-        # prevent (code-review r6).
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise
-    rows = (
-        df.orderBy(
-            F.col("dump_date").desc(),
-            F.col("dump_id").desc(),
-            F.col("sink_id").desc_nulls_last(),
-            F.col("transformer_id").desc_nulls_last(),
-        )
-        .limit(1)
-        .collect()
-    )
-    if not rows:
+    (descending, nulls last) keeps the argmax deterministic (which
+    record "wins" under true concurrency is inherently arbitrary — the
+    guarantee here is that every reader picks the SAME one, so the
+    hot-skip predicate is stable). Last-write-wins semantics proper
+    still assume one writer per manifest at a time, as with the
+    reference's state topic."""
+    fs, root = hadoop_fs(spark, state_root)
+    # ONLY the no-manifest-yet case maps to None. A transient
+    # storage/credential error must propagate: swallowing it made
+    # state_matches() return False and the caller re-produce the
+    # whole dump — the duplicate delivery the manifest exists to
+    # prevent (code-review r6).
+    if not fs.exists(root):
         return None
-    rec = rows[0].asDict(recursive=True)
-    return rec
+    records = []
+    for st in fs.listStatus(root):
+        path = st.getPath()
+        if path.getName().startswith(("_", ".")) or not st.isFile():
+            continue
+        stream = fs.open(path)
+        try:
+            text = stream.readAllBytes().decode()
+        finally:
+            stream.close()
+        records += [_parse_line(line, path) for line in text.splitlines() if line.strip()]
+    if not records:
+        return None
+
+    def rank(r: dict) -> tuple:
+        return (
+            r["dump_date"],
+            r["dump_id"],
+            r["sink_id"] is not None,
+            r["sink_id"] or "",
+            r["transformer_id"],
+        )
+
+    return max(records, key=rank)
 
 
 def state_matches(

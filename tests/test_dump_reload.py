@@ -11,11 +11,13 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_topic_dumper_spark.plans.offsets import plan_tail_dump
+from kafka_topic_dumper_spark.session import hadoop_fs
 from kafka_topic_dumper_spark.streaming import dump as dump_mod
 from kafka_topic_dumper_spark.streaming import reload as reload_mod
 from kafka_topic_dumper_spark.streaming import state as state_mod
@@ -185,7 +187,7 @@ def test_reload_cold_then_hot(spark, archive, tmp_path):
 
     # cold reload: data moves, state written AFTER produce
     r1 = reload_mod.reload_dump(
-        spark, out, "20260813000001", transformer, "test", end, sink
+        spark, out, "20260813000001", transformer, "test", lambda: end, sink
     )
     assert r1["action"] == "reloaded"
     assert spark.read.parquet(sink_path).count() == 120  # Explode: 60 → 120
@@ -193,14 +195,14 @@ def test_reload_cold_then_hot(spark, archive, tmp_path):
 
     # hot reload: matching state ⇒ NO data movement (P3 predicate)
     r2 = reload_mod.reload_dump(
-        spark, out, "20260813000001", transformer, "test", end, sink
+        spark, out, "20260813000001", transformer, "test", lambda: end, sink
     )
     assert r2["action"] == "hot_reload_skip"
     assert spark.read.parquet(sink_path).count() == 120  # unchanged
 
     # different transformer ⇒ cache miss ⇒ reload again
     r3 = reload_mod.reload_dump(
-        spark, out, "20260813000001", Identity(), "test", end, sink
+        spark, out, "20260813000001", Identity(), "test", lambda: end, sink
     )
     assert r3["action"] == "reloaded"
     assert spark.read.parquet(sink_path).count() == 180  # +60 identity rows
@@ -243,7 +245,7 @@ def test_ordered_replay_preserves_file_order(spark, archive, tmp_path):
         "20260813000002",
         Identity(),
         "test",
-        end,
+        lambda: end,
         sink,
         ordered=True,
     )
@@ -359,7 +361,7 @@ def test_pipeline_output_feeds_dedup_operators(spark, archive, tmp_path):
         "20260813000003",
         load_transformer("tests.plugin_transformers:Explode"),
         "test",
-        end,
+        lambda: end,
         sink,
     )
     replayed = spark.read.parquet(sink_path)
@@ -397,13 +399,13 @@ def test_reload_sink_identity_breaks_hot_skip(spark, archive, tmp_path):
         return sink
 
     r1 = reload_mod.reload_dump(
-        spark, out, "20260814000001", Identity(), "test", end,
+        spark, out, "20260814000001", Identity(), "test", lambda: end,
         mk_sink(sink_a), sink_id=f"parquet:{sink_a}",
     )
     assert r1["action"] == "reloaded"
     # same dump, same transformer, DIFFERENT sink: must reload
     r2 = reload_mod.reload_dump(
-        spark, out, "20260814000001", Identity(), "test", end,
+        spark, out, "20260814000001", Identity(), "test", lambda: end,
         mk_sink(sink_b), sink_id=f"parquet:{sink_b}",
     )
     assert r2["action"] == "reloaded"
@@ -415,7 +417,7 @@ def test_reload_sink_identity_breaks_hot_skip(spark, archive, tmp_path):
     )
     # same sink again: hot skip
     r3 = reload_mod.reload_dump(
-        spark, out, "20260814000001", Identity(), "test", end,
+        spark, out, "20260814000001", Identity(), "test", lambda: end,
         mk_sink(sink_b), sink_id=f"parquet:{sink_b}",
     )
     assert r3["action"] == "hot_reload_skip"
@@ -450,11 +452,11 @@ def test_same_second_reloads_keep_latest_deterministic(
         return sink
 
     r1 = reload_mod.reload_dump(
-        spark, out, "20260814000002", Identity(), "test", end,
+        spark, out, "20260814000002", Identity(), "test", lambda: end,
         mk_sink(sink_a), sink_id=f"parquet:{sink_a}",
     )
     r2 = reload_mod.reload_dump(
-        spark, out, "20260814000002", Identity(), "test", end,
+        spark, out, "20260814000002", Identity(), "test", lambda: end,
         mk_sink(sink_b), sink_id=f"parquet:{sink_b}",
     )
     assert (r1["action"], r2["action"]) == ("reloaded", "reloaded")
@@ -467,7 +469,7 @@ def test_same_second_reloads_keep_latest_deterministic(
     latest = state_mod.read_latest_state(spark, state_root)
     assert latest["sink_id"] == f"parquet:{sink_b}"
     r3 = reload_mod.reload_dump(
-        spark, out, "20260814000002", Identity(), "test", end,
+        spark, out, "20260814000002", Identity(), "test", lambda: end,
         mk_sink(sink_b), sink_id=f"parquet:{sink_b}",
     )
     assert r3["action"] == "hot_reload_skip"
@@ -499,6 +501,266 @@ def test_concurrent_writer_tie_breaks_on_sink_id(spark, tmp_path):
 def test_read_latest_state_propagates_non_missing_errors(spark, tmp_path):
     """Only 'no manifest yet' maps to None; a malformed state_root that
     raises something else must propagate, not masquerade as a cold
-    start and trigger duplicate replay."""
+    start and trigger duplicate replay. A corrupt manifest line is an
+    error naming its file, not an all-null record."""
     missing = str(tmp_path / "never_written")
     assert state_mod.read_latest_state(spark, missing) is None
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        state_mod.read_latest_state(spark, "nosuchfs://bucket/_state")
+
+    root = tmp_path / "corrupt"
+    state_mod.save_state(
+        spark, str(root), state_mod.gen_state("d1", "test", {0: 5}, "Identity")
+    )
+    (root / "part-bad.json").write_text('{"dump_id": "d2", "offsets": \n')
+    with pytest.raises(ValueError, match="part-bad.json"):
+        state_mod.read_latest_state(spark, str(root))
+    # a record that parses as JSON but lacks a required field is as bad
+    (root / "part-bad.json").write_text('{"dump_id": "d2"}\n')
+    with pytest.raises(ValueError, match="part-bad.json"):
+        state_mod.read_latest_state(spark, str(root))
+
+
+def _dump_tail(spark, archive, out, dump_id, n=40):
+    """A committed dump of the archive's tail-n and its end offsets."""
+    beginning, end = _offsets(spark, archive)
+    records = dump_mod.apply_plan(
+        spark.read.parquet(archive), plan_tail_dump("test", beginning, end, n)
+    )
+    dump_mod.dump_batch(records, out, dump_id, max_records_per_file=20)
+    return end
+
+
+def _parquet_sink(path):
+    def sink(df):
+        df.write.mode("append").parquet(path)
+
+    return sink
+
+
+def test_failed_dump_id_can_be_retried(spark, archive, tmp_path):
+    """A batch dump whose job fails leaves an uncommitted dump_id=<id>/;
+    retrying the SAME id must succeed and become latest, while a
+    re-dump over a committed id still refuses to overwrite it."""
+    out = str(tmp_path / "dumps")
+    beginning, end = _offsets(spark, archive)
+    records = dump_mod.apply_plan(
+        spark.read.parquet(archive), plan_tail_dump("test", beginning, end, 30)
+    )
+    dump_mod.dump_batch(records, out, "20260101000000")
+
+    @F.udf("binary")
+    def fail(v):
+        raise RuntimeError("injected dump failure")
+
+    with pytest.raises(Exception, match="injected dump failure"):
+        dump_mod.dump_batch(
+            records.withColumn("value", fail("value")), out, "20990101000000"
+        )
+    failed = os.path.join(out, "dump_id=20990101000000")
+    assert os.path.isdir(failed) and not dump_mod.is_committed(*hadoop_fs(spark, failed))
+
+    dump_mod.dump_batch(records, out, "20990101000000")
+    assert dump_mod.is_committed(*hadoop_fs(spark, failed))
+    assert reload_mod.find_latest_dump_id(spark, out) == "20990101000000"
+    assert reload_mod.read_dump(spark, out, "20990101000000").count() == 30
+
+    with pytest.raises(Exception, match="PATH_ALREADY_EXISTS"):
+        dump_mod.dump_batch(records, out, "20990101000000")
+    assert reload_mod.read_dump(spark, out, "20990101000000").count() == 30
+
+
+def test_crash_between_sink_and_state_write_redelivers(
+    spark, archive, tmp_path, monkeypatch
+):
+    """The defined outcome of a crash after the sink has produced but
+    before the state record is published: the reload raises, the sink
+    keeps the rows, the manifest is unchanged, and the next reload is a
+    cold one that re-delivers (at-least-once, as in the reference).
+    The crashed write's hidden temp file — here holding half a record —
+    is never read."""
+    out = str(tmp_path / "dumps")
+    sink_path = str(tmp_path / "produced")
+    state_root = os.path.join(out, "_state")
+    end = _dump_tail(spark, archive, out, "20260815000001")
+    sink_id = f"parquet:{sink_path}"
+    reload_mod.reload_dump(
+        spark, out, "20260815000001", Identity(), "test", lambda: end,
+        _parquet_sink(sink_path), sink_id=sink_id,
+    )
+    rows = spark.read.parquet(sink_path).count()
+    before = state_mod.read_latest_state(spark, state_root)
+
+    def crashed_write(spark, root, state):
+        # the temp file was begun, the process died before the rename
+        with open(os.path.join(root, ".part-crashed.json"), "w") as f:
+            f.write('{"dump_id": "20260815000002", "topic_na')
+        raise OSError("injected crash before the state write")
+
+    # a new transformer misses the hot skip, so this reload runs cold
+    explode = load_transformer("tests.plugin_transformers:Explode")
+    monkeypatch.setattr(state_mod, "save_state", crashed_write)
+    with pytest.raises(OSError, match="injected crash"):
+        reload_mod.reload_dump(
+            spark, out, "20260815000001", explode, "test", lambda: end,
+            _parquet_sink(sink_path), sink_id=sink_id,
+        )
+    monkeypatch.undo()
+    assert spark.read.parquet(sink_path).count() == rows * 3  # +2 per row
+    assert state_mod.read_latest_state(spark, state_root) == before
+
+    retry = reload_mod.reload_dump(
+        spark, out, "20260815000001", explode, "test", lambda: end,
+        _parquet_sink(sink_path), sink_id=sink_id,
+    )
+    assert retry["action"] == "reloaded"  # re-delivery, not a hot skip
+    assert spark.read.parquet(sink_path).count() == rows * 5
+    assert state_mod.read_latest_state(spark, state_root) == retry["state"]
+
+
+def test_cold_reload_snapshots_offsets_once_after_state_check(
+    spark, archive, tmp_path, monkeypatch
+):
+    """The end-offsets callable runs exactly once on a cold reload,
+    after the state check and before the sink; a hot skip never
+    calls it."""
+    out = str(tmp_path / "dumps")
+    end = _dump_tail(spark, archive, out, "20260815000003")
+    calls = []
+    read_state = state_mod.read_latest_state
+    monkeypatch.setattr(
+        state_mod, "read_latest_state",
+        lambda *a: calls.append("state") or read_state(*a),
+    )
+
+    def offsets():
+        calls.append("offsets")
+        return end
+
+    def sink(df):
+        calls.append("sink")
+        df.write.format("noop").mode("overwrite").save()
+
+    cold = reload_mod.reload_dump(
+        spark, out, "20260815000003", Identity(), "test", offsets, sink
+    )
+    assert cold["action"] == "reloaded"
+    assert calls == ["state", "offsets", "sink"]
+    calls.clear()
+    hot = reload_mod.reload_dump(
+        spark, out, "20260815000003", Identity(), "test", offsets, sink
+    )
+    assert hot["action"] == "hot_reload_skip"
+    assert calls == ["state"]
+
+
+def test_manifest_compatible_with_spark_json_writer(spark, tmp_path):
+    """STATE_SCHEMA is the on-disk contract. A manifest written through
+    Spark's JSON writer (coalesce(1).write.json, with _SUCCESS and one
+    record from before sink_id existed) yields the same latest record
+    through the driver-side reader as through a Spark query, and
+    records from save_state read back through spark.read.json."""
+    old_schema = T.StructType(
+        [f for f in state_mod.STATE_SCHEMA.fields if f.name != "sink_id"]
+    )
+    records = [
+        state_mod.gen_state("d1", "test", {0: 5}, "Identity", dump_date=100,
+                            sink_id="parquet:/a"),
+        state_mod.gen_state("d2", "test", {0: 9, 1: 3}, "Explode", dump_date=300,
+                            sink_id="parquet:/b"),
+        state_mod.gen_state("d2", "test", {0: 9, 1: 4}, "Identity", dump_date=300,
+                            sink_id="parquet:/b"),
+    ]
+    pre_sink = {k: v for k, v in records[0].items() if k != "sink_id"}
+    pre_sink.update(dump_id="d2", dump_date=300, transformer_id="Zeta")
+    root = str(tmp_path / "spark_written")
+    for rows, schema in ((records, state_mod.STATE_SCHEMA), ([pre_sink], old_schema)):
+        spark.createDataFrame(rows, schema=schema).coalesce(1).write.mode(
+            "append"
+        ).json(root)
+    assert os.path.exists(os.path.join(root, "_SUCCESS"))
+
+    def spark_latest(path):
+        row = (
+            spark.read.schema(state_mod.STATE_SCHEMA).json(path)
+            .orderBy(
+                F.col("dump_date").desc(),
+                F.col("dump_id").desc(),
+                F.col("sink_id").desc_nulls_last(),
+                F.col("transformer_id").desc_nulls_last(),
+            )
+            .first()
+        )
+        return row.asDict(recursive=True)
+
+    latest = state_mod.read_latest_state(spark, root)
+    assert latest == spark_latest(root)
+    # the sink_id tie is broken before the transformer; the pre-sink_id
+    # record (null sink) loses it despite its larger transformer id
+    assert (latest["transformer_id"], latest["offsets"]) == ("Identity", {"0": 9, "1": 4})
+
+    # records from save_state, in a directory shared with Spark's files
+    for rec in records:
+        state_mod.save_state(spark, root, {**rec, "dump_date": rec["dump_date"] + 1})
+    latest = state_mod.read_latest_state(spark, root)
+    assert latest == spark_latest(root)
+    assert latest["dump_date"] == 301
+
+    # and Spark's reader gives back exactly what save_state wrote
+    fresh = str(tmp_path / "driver_written")
+    for rec in records:
+        state_mod.save_state(spark, fresh, rec)
+    back = spark.read.schema(state_mod.STATE_SCHEMA).json(fresh).collect()
+
+    def order(r):
+        return (r["dump_date"], r["transformer_id"])
+
+    assert sorted((r.asDict(recursive=True) for r in back), key=order) == sorted(
+        records, key=order
+    )
+
+
+def test_cli_hot_skip_runs_no_spark_job(spark, tmp_path):
+    """A hot-skip CLI reload is metadata-only: no archive scan, no
+    manifest job — the job group it runs under stays empty, while the
+    cold reload before it does start jobs. A hot skip no longer needs
+    the archive at all; a cold reload of a topic the archive lacks
+    still exits 2 before producing anything."""
+    from kafka_topic_dumper_spark import cli
+
+    archive = str(tmp_path / "archive.parquet")
+    dumps = str(tmp_path / "dumps")
+    sink = str(tmp_path / "produced")
+    base = ["--records-parquet", archive, "-t", "test", "--output", dumps]
+    assert cli.main(["generate", *base[:4], "-n", "120", "--partitions", "3"]) == 0
+    assert cli.main(["dump", *base, "-n", "60", "-p", "20260816000001"]) == 0
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_under(group, argv):
+        sc.setJobGroup(group, f"cli {group}")
+        try:
+            assert cli.main(argv) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return tracker.getJobIdsForGroup(group)
+
+    reload_args = ["reload", *base, "--reload-output", sink]
+    assert jobs_under("cold", reload_args)
+    assert jobs_under("hot", reload_args) == []
+    assert spark.read.parquet(sink).count() == 60
+
+    gone = ["reload", "--records-parquet", str(tmp_path / "no_archive"),
+            "-t", "test", "--output", dumps, "--reload-output", sink]
+    assert cli.main(gone) == 0
+    assert spark.read.parquet(sink).count() == 60
+
+    state_root = os.path.join(dumps, "_state")
+    before = state_mod.read_latest_state(spark, state_root)
+    other = ["reload", *base[:2], "-t", "nosuch", "--output", dumps,
+             "--reload-output", sink]
+    assert cli.main(other) == 2
+    assert spark.read.parquet(sink).count() == 60
+    assert state_mod.read_latest_state(spark, state_root) == before
