@@ -196,9 +196,11 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     spark = get_session("kafka-topic-dumper-spark-cli")
-    # the reload transformer (even Identity) is a module-level class
-    # cloudpickled BY REFERENCE — workers must be able to import the
-    # package even when the driver wasn't launched from the repo root
+    # a row-path reload plug-in (one without transform_frame; Identity
+    # has one and runs on the JVM) ships to Python workers, and its
+    # base class transform.Transformer is cloudpickled BY REFERENCE —
+    # workers must be able to import the package even when the driver
+    # wasn't launched from the repo root
     from kafka_topic_dumper_spark.session import ensure_shipped
 
     ensure_shipped(spark)

@@ -9,11 +9,14 @@ kafka_client.py:406-424):
   (topic, dump_id, transformer_id), skip ALL data movement.
 
 Spark-first shape: ``spark.read.parquet(dump_dir)`` (no download step —
-tasks read the store directly) → ``apply_transformer`` (Arrow-batched
-flat-map) → Kafka sink, bracketed by the state manifest exactly like
-the reference: the state's offsets are snapshotted BEFORE producing
-(kafka_client.py:378) and the record is written only AFTER the produce
-succeeds (kafka_client.py:404).
+tasks read the store directly) → ``apply_transformer`` → Kafka sink,
+bracketed by the state manifest exactly like the reference: the
+state's offsets are snapshotted BEFORE producing (kafka_client.py:378)
+and the record is written only AFTER the produce succeeds
+(kafka_client.py:404). The default Identity transformer plans as a
+projection, so the default replay (batch or stream) is scan → project
+→ sink and forks no Python worker; other plug-ins run as an
+Arrow-batched flat-map (see ``transform.apply_transformer``).
 
 Ordering note (SURVEY §7 risk 2): the reference replays strictly
 file-ordered through one producer. A distributed produce cannot keep a
@@ -101,8 +104,8 @@ def reload_stream(
     checkpoint. Unlike the batch path (and the reference, which is
     at-least-once, kafka_client.py:395-400), a crashed or re-run replay
     resumes from the checkpoint and never re-produces rows already
-    sunk — exactly-once replay. The transformer runs as the same
-    Arrow-batched flat-map; in production the sink is Kafka
+    sunk — exactly-once replay. The transformer is applied exactly as
+    in the batch path; in production the sink is Kafka
     (writeStream.format('kafka')), here a file sink for the
     broker-less environment. Returns the started StreamingQuery.
     """

@@ -6,28 +6,41 @@ kafka_client.py:199-205) is a ``module:Class`` whose instance exposes
 semantics, applied at kafka_client.py:395-398) and ``get_id() -> str``
 (the idempotency cache key stored in the dump state).
 
-This engine keeps the same plug-in API but executes it as an
-Arrow-batched ``mapInPandas`` flat-map: the transformer sees one
-pandas row at a time (``transform(row) -> iterable of (key, value)``)
-while Spark moves data in vectorized batches. Plug-in modules are
-registered with cloudpickle *by value*, so executors never need the
-plug-in installed — the closure ships the code.
+This engine keeps the same plug-in API and runs it in one of two
+ways:
+
+- a plug-in that defines ``transform_frame(records) -> DataFrame`` is
+  applied to the whole ``(key, value)`` frame on the driver, so its
+  work stays in the plan Catalyst sees. ``Identity`` returns the frame
+  itself, so the default reload is scan → project → sink, with no
+  Python worker;
+- every other plug-in runs as an Arrow-batched ``mapInPandas``
+  flat-map: the transformer sees one pandas row at a time
+  (``transform(row) -> iterable of (key, value)``) while Spark moves
+  data in vectorized batches. Plug-in modules are registered with
+  cloudpickle *by value*, so executors never need the plug-in
+  installed — the closure ships the code.
 """
 
 from __future__ import annotations
 
 import importlib
 import sys
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
 class Transformer:
     """Protocol (duck-typed; subclassing optional): yield 0..n
-    ``(key: bytes|None, value: bytes|None)`` tuples per input row."""
+    ``(key: bytes|None, value: bytes|None)`` tuples per input row.
+
+    A plug-in may also define ``transform_frame(records: DataFrame) ->
+    DataFrame``: it receives the ``(key binary, value binary)`` frame
+    and returns the transformed frame with the same two columns. It is
+    used instead of ``transform`` (see :func:`apply_transformer`), so
+    the plug-in's work stays on the JVM."""
 
     def transform(self, row) -> Iterable[tuple[bytes | None, bytes | None]]:
         raise NotImplementedError
@@ -42,6 +55,9 @@ class Identity(Transformer):
 
     def transform(self, row):
         yield (row.key, row.value)
+
+    def transform_frame(self, records: DataFrame) -> DataFrame:
+        return records
 
     def get_id(self) -> str:
         return "Identity"
@@ -79,18 +95,62 @@ TRANSFORM_OUTPUT_SCHEMA = T.StructType(
 )
 
 
+def _defining_class(cls: type, name: str) -> type | None:
+    return next((c for c in cls.__mro__ if name in vars(c)), None)
+
+
+def _columns(schema: T.StructType) -> list[tuple[str, T.DataType]]:
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def _frame_hook(transformer):
+    """``transformer.transform_frame``, or None when the row adapter
+    must run. The frame path is taken only when the class supplying
+    ``transform_frame`` is (a subclass of) the class supplying
+    ``transform``: a subclass of Identity that overrides only
+    ``transform`` must not have its transform skipped."""
+    cls = type(transformer)
+    frame_cls = _defining_class(cls, "transform_frame")
+    if frame_cls is None:
+        return None
+    row_cls = _defining_class(cls, "transform")
+    if row_cls is not None and not issubclass(frame_cls, row_cls):
+        return None
+    return transformer.transform_frame
+
+
 def apply_transformer(records: DataFrame, transformer) -> DataFrame:
     """Flat-map ``records`` (must have binary ``key``/``value``
     columns) through the transformer — the Spark form of the
     reference's per-row produce loop (kafka_client.py:395-398).
 
-    mapInPandas gives vectorized Arrow transfer; inside each batch the
-    transformer keeps its 1→0..n row-at-a-time contract, so reference
-    plug-ins port by changing only their row accessors. The transformer
-    instance is captured in the closure by value.
+    A plug-in with ``transform_frame`` (see :func:`_frame_hook`) is
+    applied to the ``(key, value)`` frame; its output must be exactly
+    ``key binary, value binary`` (nullability aside), checked here at
+    plan time, before any sink runs. Otherwise mapInPandas gives
+    vectorized Arrow transfer; inside each batch the transformer keeps
+    its 1→0..n row-at-a-time contract, so reference plug-ins port by
+    changing only their row accessors. The transformer instance is
+    captured in the closure by value.
     """
+    records = records.select("key", "value")
+    frame_hook = _frame_hook(transformer)
+    if frame_hook is not None:
+        out = frame_hook(records)
+        if not isinstance(out, DataFrame):
+            got = type(out).__name__
+        elif _columns(out.schema) != _columns(TRANSFORM_OUTPUT_SCHEMA):
+            got = out.schema.simpleString()
+        else:
+            return out
+        raise ValueError(
+            f"transformer {transformer.get_id()!r}: transform_frame must return "
+            f"a DataFrame of key binary, value binary; got {got}"
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
+        import pandas as pd
+
         for pdf in batches:
             keys, values = [], []
             for row in pdf.itertuples(index=False):
@@ -99,6 +159,4 @@ def apply_transformer(records: DataFrame, transformer) -> DataFrame:
                     values.append(out[1])
             yield pd.DataFrame({"key": keys, "value": values}, dtype=object)
 
-    return records.select("key", "value").mapInPandas(
-        run, schema=TRANSFORM_OUTPUT_SCHEMA
-    )
+    return records.mapInPandas(run, schema=TRANSFORM_OUTPUT_SCHEMA)

@@ -1,10 +1,11 @@
 """Test transformer plug-ins (FIXTURES.md §1.3): Identity is the
-engine default; Explode tests 1→k flat-map semantics; Drop tests 1→0.
-Loaded via the ``module:Class`` plug-in API."""
+engine default; Explode tests 1→k flat-map semantics; Drop tests 1→0;
+SuffixedIdentity tests that a transform-only subclass of Identity keeps
+the row path. Loaded via the ``module:Class`` plug-in API."""
 
 from __future__ import annotations
 
-from kafka_topic_dumper_spark.transform import Transformer
+from kafka_topic_dumper_spark.transform import Identity, Transformer
 
 
 class Explode(Transformer):
@@ -28,3 +29,15 @@ class Drop(Transformer):
 
     def get_id(self) -> str:
         return "Drop"
+
+
+class SuffixedIdentity(Identity):
+    """Subclasses Identity and overrides only ``transform`` (value
+    suffixed): the inherited ``transform_frame`` must not be used, or
+    the suffix would be silently skipped."""
+
+    def transform(self, row):
+        yield (row.key, (row.value or b"") + b"-sfx")
+
+    def get_id(self) -> str:
+        return "SuffixedIdentity"

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import glob
 import os
+import subprocess
+import sys
 
 import pyarrow.parquet as pq
 import pytest
@@ -21,7 +23,12 @@ from kafka_topic_dumper_spark.session import hadoop_fs
 from kafka_topic_dumper_spark.streaming import dump as dump_mod
 from kafka_topic_dumper_spark.streaming import reload as reload_mod
 from kafka_topic_dumper_spark.streaming import state as state_mod
-from kafka_topic_dumper_spark.transform import Identity, apply_transformer, load_transformer
+from kafka_topic_dumper_spark.transform import (
+    Identity,
+    Transformer,
+    apply_transformer,
+    load_transformer,
+)
 
 ARCHIVE_SCHEMA = T.StructType(
     [
@@ -327,6 +334,140 @@ def test_reload_stream_exactly_once(spark, archive, tmp_path):
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(sink).count() == 120
+
+
+PYTHON_NODES = ("MapInPandas", "MapInArrow", "PythonUDF", "BatchEvalPython", "ArrowEvalPython")
+
+
+def _dump_60(spark, archive, out, dump_id):
+    beginning, end = _offsets(spark, archive)
+    plan = plan_tail_dump("test", beginning, end, 60)
+    records = dump_mod.apply_plan(spark.read.parquet(archive), plan)
+    dump_mod.dump_batch(records, out, dump_id, max_records_per_file=20)
+    return end
+
+
+def test_identity_reload_plans_no_python_node(spark, archive, tmp_path):
+    """Identity's transform_frame makes the default reload a projection:
+    the frame the batch sink receives and the streaming query's
+    executed plan hold no Python node, so no Python worker is forked.
+    A row-path plug-in (Explode) still plans through mapInPandas."""
+    out = str(tmp_path / "dumps")
+    end = _dump_60(spark, archive, out, "20260817000001")
+
+    def plans(transformer):
+        name = transformer.get_id()
+        sunk = []
+
+        def sink(df):
+            sunk.append((df._jdf.queryExecution().executedPlan().toString(), df.count()))
+
+        reload_mod.reload_dump(
+            spark, out, "20260817000001", transformer, "test", lambda: end, sink
+        )
+        stream_sink = str(tmp_path / f"sink-{name}")
+        q = reload_mod.reload_stream(
+            spark, out, "20260817000001", transformer, str(tmp_path / f"ckpt-{name}"), stream_sink
+        )
+        q.awaitTermination(120)
+        stream_plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+        [(batch_plan, batch_rows)] = sunk
+        return batch_plan, stream_plan, batch_rows, spark.read.parquet(stream_sink).count()
+
+    batch_plan, stream_plan, batch_rows, stream_rows = plans(Identity())
+    for plan in (batch_plan, stream_plan):
+        assert "FileScan parquet" in plan
+        assert not [n for n in PYTHON_NODES if n in plan], plan
+    assert (batch_rows, stream_rows) == (60, 60)
+
+    explode = load_transformer("tests.plugin_transformers:Explode")
+    batch_plan, stream_plan, batch_rows, stream_rows = plans(explode)
+    assert "MapInPandas" in batch_plan and "MapInPandas" in stream_plan
+    assert (batch_rows, stream_rows) == (120, 120)
+
+
+def test_transform_only_subclass_of_identity_keeps_row_path(spark, archive, tmp_path):
+    """A plug-in that subclasses Identity and overrides only transform
+    inherits Identity's transform_frame; using it would silently skip
+    the override. The reload must emit the transformed rows."""
+    out = str(tmp_path / "dumps")
+    end = _dump_60(spark, archive, out, "20260817000002")
+    collected = []
+
+    def sink(df):
+        collected.extend(r.value for r in df.collect())
+
+    reload_mod.reload_dump(
+        spark, out, "20260817000002",
+        load_transformer("tests.plugin_transformers:SuffixedIdentity"),
+        "test", lambda: end, sink,
+    )
+    dumped = [r.value for r in reload_mod.read_dump(spark, out, "20260817000002").collect()]
+    assert len(dumped) == 60
+    assert sorted(collected) == sorted(v + b"-sfx" for v in dumped)
+
+
+class _FrameOnly(Transformer):
+    """A frame-path plug-in whose output is chosen by the test."""
+
+    def __init__(self, frame_fn):
+        self.frame_fn = frame_fn
+
+    def transform_frame(self, records):
+        return self.frame_fn(records)
+
+    def get_id(self) -> str:
+        return "FrameOnly"
+
+
+@pytest.mark.parametrize(
+    "frame_fn",
+    [
+        lambda df: df.select(F.col("key").cast("string").alias("key"), "value"),
+        lambda df: df.select("value"),
+        lambda df: df.select("value", "key"),
+        lambda df: df.withColumnRenamed("value", "payload"),
+        lambda df: df.withColumn("extra", F.lit(1)),
+        lambda df: None,
+    ],
+    ids=["key-string", "missing-key", "reordered", "renamed", "extra-column", "not-a-frame"],
+)
+def test_transform_frame_output_is_checked_at_plan_time(spark, archive, tmp_path, frame_fn):
+    """transform_frame must return exactly key binary, value binary: any
+    other output raises ValueError naming the plug-in before the sink
+    runs, and the manifest stays untouched."""
+    out = str(tmp_path / "dumps")
+    end = _dump_60(spark, archive, out, "20260817000003")
+    sunk = []
+    with pytest.raises(ValueError, match="'FrameOnly'"):
+        reload_mod.reload_dump(
+            spark, out, "20260817000003", _FrameOnly(frame_fn), "test", lambda: end, sunk.append
+        )
+    assert sunk == []
+    assert state_mod.read_latest_state(spark, os.path.join(out, "_state")) is None
+
+
+def test_transform_frame_output_ignores_nullability(spark):
+    df = spark.createDataFrame([(b"k", b"v"), (None, b"w")], "key binary, value binary")
+    non_null_key = _FrameOnly(
+        lambda d: d.select(F.coalesce("key", F.lit(b"")).alias("key"), "value")
+    )
+    assert sorted(apply_transformer(df, non_null_key).collect()) == [(b"", b"w"), (b"k", b"v")]
+
+
+def test_cli_path_imports_no_pandas():
+    """pandas is imported only by the row adapter, on first use: a
+    fresh CLI process (dump, or an Identity reload) never pays for it."""
+    code = (
+        "import sys, kafka_topic_dumper_spark.cli, kafka_topic_dumper_spark.streaming.reload, "
+        "kafka_topic_dumper_spark.transform; print('pandas' in sys.modules)"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, timeout=120
+    )
+    assert done.returncode == 0, done.stderr
+    assert done.stdout.strip() == "False"
 
 
 def test_load_transformer_rejects_bad_spec():
