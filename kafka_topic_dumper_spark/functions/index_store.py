@@ -31,7 +31,7 @@ from __future__ import annotations
 import functools
 import operator
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_topic_dumper_spark.operators.similarity import N_LSH_TABLES
@@ -86,6 +86,7 @@ def cosine_topk_lsh_stored(
         _as_double_vec,
         lsh_banded,
         pair_dot_udf,
+        per_query_topk,
     )
 
     spark = emb.sparkSession
@@ -135,12 +136,7 @@ def cosine_topk_lsh_stored(
             "cos", pair_dot_udf()(F.col("va"), F.col("vb")) / (F.col("va_nrm") * F.col("vb_nrm"))
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return per_query_topk(pairs, F.col("cos").desc(), "neighbor_id", k)
 
 
 def write_ivf_index(assigned: DataFrame, path: str) -> None:
@@ -182,6 +178,7 @@ def ivf_topk_stored(
         cell_ranks_udf,
         ivf_codebook,
         pair_dot_udf,
+        per_query_topk,
     )
 
     spark = emb.sparkSession
@@ -218,12 +215,7 @@ def ivf_topk_stored(
             pair_dot_udf()(F.col("qv"), F.col("v")) / (F.col("q_nrm") * F.col("v_nrm")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
+    return per_query_topk(cand, F.col("cos").desc(), "vec_id", k)
 
 
 def write_pq_index(codes: DataFrame, path: str) -> None:
@@ -264,6 +256,7 @@ def pq_topk_stored(
       no Python, no shuffle until the per-query top-k window."""
     from kafka_topic_dumper_spark.operators.similarity import (
         adc_table_rows,
+        per_query_topk,
         pq_codebook,
     )
 
@@ -288,8 +281,7 @@ def pq_topk_stored(
     score = F.expr(
         f"aggregate(sequence(0, {m - 1}), 0D, (acc, j) -> acc + t[j * {ksub} + codes[j]])"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("vec_id"))
-    return (
+    scored = (
         spark.read.parquet(index_path)
         .select("vec_id", "codes")
         # NULL-embedding rows carry NULL codes in the store; drop them
@@ -299,10 +291,8 @@ def pq_topk_stored(
         .crossJoin(F.broadcast(tdf))
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("score", score)
-        .withColumn("rank", F.row_number().over(w).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
     )
+    return per_query_topk(scored, F.col("score").asc(), "vec_id", k)
 
 
 def write_ivfpq_index(assigned_codes: DataFrame, path: str) -> None:
@@ -339,6 +329,7 @@ def ivfpq_topk_stored(
         adc_table_rows,
         cell_ranks_udf,
         ivf_codebook,
+        per_query_topk,
         pq_codebook,
     )
 
@@ -375,18 +366,15 @@ def ivfpq_topk_stored(
     ip = F.expr(
         f"aggregate(sequence(0, {m - 1}), 0D, (acc, j) -> acc + t[j * {ksub} + codes[j]])"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id"))
-    return (
+    scored = (
         spark.read.parquet(index_path)
         .filter(F.col("cell").isin(probe_cells))
         .join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(F.broadcast(tdf), "query_id")
         .withColumn("score", ip / (F.col("q_nrm") * F.col("v_nrm")))
-        .withColumn("rank", F.row_number().over(w).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
     )
+    return per_query_topk(scored, F.col("score").desc(), "vec_id", k)
 
 
 def write_editdist_prefix_index(prefix: DataFrame, path: str) -> None:

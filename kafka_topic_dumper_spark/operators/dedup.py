@@ -1255,41 +1255,11 @@ def simhash_near_pairs(
 
 # --- embedding cosine near-dup ---------------------------------------------
 
-_DOT = "aggregate(zip_with(va, vb, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-
 # 4 tables × 8 bits = 256 buckets/table: candidate volume ~n²/128 vs
 # all-pairs n²/2, and the per-table bucket count is the knob that grows
 # with the corpus (nbits ≈ log2(n/target_bucket_size) at 100 TB).
 NEARDUP_LSH_TABLES = 4
 NEARDUP_LSH_BITS = 8
-
-
-def embedding_neardup_topk(emb: DataFrame, k: int = 50) -> DataFrame:
-    """Top-k most-similar embedding pairs by cosine — brute-force
-    all-pairs BNL join. NOT a declared query: this is the exact-recall
-    baseline the LSH path's recall regression test compares against
-    (tests/test_ann_recall.py); at any real scale use
-    :func:`embedding_neardup_lsh`."""
-    v = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(x AS DOUBLE))"
-        ).alias("v"),
-    ).withColumn(
-        "nrm",
-        F.sqrt(F.expr("aggregate(transform(v, x -> x * x), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")),
-    )
-    a = v.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    b = v.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    pairs = (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos", F.expr(_DOT) / (F.col("na") * F.col("nb")))
-    )
-    return (
-        pairs.orderBy(F.col("cos").desc(), "vec_a", "vec_b")
-        .limit(k)
-        .select("vec_a", "vec_b")
-    )
 
 
 def embedding_neardup_lsh(
@@ -1378,7 +1348,7 @@ def semantic_dedup(
 
     - cell assignment is ONE map stage (:func:`similarity.ivf_assign`'s
       Arrow kernel, bit-identical to the oracle's argmax) — the
-      codebook is metadata-sized and ships by value;
+      codebook is metadata-sized and travels inside the UDF;
     - the pairwise stage is an equi-join on ``cell`` — a hash
       shuffle-join keyed on the cell id, NEVER a crossJoin. Its cost is
       O(Σ|cell|²), which is the intrinsic SemDeDup cost; production

@@ -9,12 +9,16 @@
   probe touches ~1/2^nbits of the table), queries probe only their own
   bucket. Recall < 1 by construction → rows-only correctness check.
 
-Dot products for cosine ranking are JVM-side ``zip_with``/``aggregate``
-lambda expressions in DOUBLE. The one deliberate exception to the
-no-Python rule is the LSH signature kernel (``lsh_signatures_udf``):
-an Arrow-batched vectorized pandas_udf, because the equivalent pure
-expression blows Janino's 64 KB method limit and drags the whole stage
-into interpreted fallback — see its docstring.
+:func:`dot` is the JVM ``zip_with``/``aggregate`` spec of the cosine
+dot product. Four numpy kernels run in Python, behind one Arrow
+envelope (:func:`_vector_udf`, which owns the NULL contract and ships
+the package): the dot product (:func:`pair_dot_udf`), the LSH
+signatures (:func:`lsh_signatures_udf`, whose pure-expression form
+overflows Janino's 64 KB method limit), the IVF centroid ranking
+(:func:`cell_ranks_udf`) and the PQ encoder (:func:`pq_codes_udf`).
+Each keeps the fold order of its DuckDB oracle, so results are
+bit-identical. The PCA projection's two ``mapInPandas`` passes are
+the other Python stages.
 
 Cache lifetime: the LSH index is persist()ed because it feeds multiple
 consumers within one query; the cached partitions live until the
@@ -24,10 +28,15 @@ session drops them, so long-lived sessions running many queries should
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_topic_dumper_spark.functions import trained_oracles
+from kafka_topic_dumper_spark.session import ensure_shipped
 from kafka_topic_dumper_spark.sources.tables import load_table
 
 
@@ -41,87 +50,74 @@ def dot(a: Column, b: Column) -> Column:
     higher-order functions are CodegenFallback, i.e. interpreted
     expression-tree eval PER ROW — fine for probe-sized inputs, a real
     tax on corpus-wide scoring passes, so the hot paths use
-    :func:`pair_dot_udf` / :func:`self_dot_udf` (bit-identical fold,
-    pinned by tests/test_ann_recall.py's parity test) and this stays
-    as the executable spec."""
+    :func:`pair_dot_udf` (bit-identical fold, pinned by
+    tests/test_ann_recall.py's parity test) and this stays as the
+    executable spec."""
     return _dsum(F.zip_with(a, b, lambda x, y: x * y))
 
 
+def _float64(col: pd.Series) -> np.ndarray:
+    """A batch column as float64: an array column stacks to an
+    ``(m, dim)`` matrix, a scalar column (a norm) is an ``(m,)``
+    vector. float32 → float64 is exact."""
+    if col.dtype == object:
+        return np.stack(col.to_numpy()).astype(np.float64)
+    return col.to_numpy(dtype=np.float64)
+
+
+def _vector_udf(kernel: Callable[..., np.ndarray], return_type: str, *params):
+    """The one Arrow boundary of the vector kernels: a new pandas UDF,
+    named after ``kernel``, that returns ``kernel(*inputs, *params)``
+    for the rows whose input columns are all non-NULL, and NULL for
+    the others — the NULL a HOF fold yields for a NULL input (np.stack
+    over a None would raise instead).
+
+    Inputs reach ``kernel`` through :func:`_float64`; it returns one
+    value (``(m,)``) or one array (``(m, w)``) per valid row. A batch
+    with no NULL keeps a scalar result as a float64 Series. The
+    kernels are module-level functions, which cloudpickle ships by
+    reference, so the package is shipped first. Each call builds a new
+    UDF object, because ``asNondeterministic()`` marks one in place."""
+    ensure_shipped(SparkSession.active())
+
+    def run(*cols):
+        mask = np.logical_and.reduce([c.notna().to_numpy() for c in cols])
+        rows = np.flatnonzero(mask)
+        out = np.full(len(mask), None, dtype=object)
+        if not len(rows):
+            return pd.Series(out)
+        if len(rows) < len(mask):
+            cols = [c[mask] for c in cols]
+        res = kernel(*(_float64(c) for c in cols), *params)
+        if res.ndim == 1 and len(rows) == len(mask):
+            return pd.Series(res)
+        if res.ndim == 1:
+            out[rows] = res
+        else:
+            for r, row in zip(rows, res):
+                out[r] = row
+        return pd.Series(out)
+
+    run.__name__ = kernel.__name__
+    return F.pandas_udf(run, return_type)
+
+
+def _dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise ``A·B``: ``acc += A[:,j] * B[:,j]`` sequentially over
+    j from 0.0 — per row the exact IEEE op sequence of :func:`dot`
+    (products exact, additions left-associated), so the results are
+    bit-identical to the HOF fold and to the DuckDB oracle's chain."""
+    acc = np.zeros(A.shape[0], dtype=np.float64)
+    for j in range(A.shape[1]):
+        acc += A[:, j] * B[:, j]
+    return acc
+
+
 def pair_dot_udf():
-    """Arrow-batched dot product over two vector columns — the
-    vectorized twin of :func:`dot`. Per Arrow batch: stack both sides
-    to (n, dim) float64 and accumulate ``acc += A[:,j] * B[:,j]``
-    sequentially over j — per element the EXACT IEEE op sequence of
-    the ``aggregate(zip_with(a, b, *), 0.0, +)`` fold (products exact,
-    additions left-associated from 0.0), so results are bit-identical
-    to the HOF form and to the DuckDB oracle's equivalent chain.
-    Accepts float32 or float64 element types (upcast is exact). The
-    closure captures nothing module-level, so cloudpickle ships it by
-    value and executors don't need this package installed."""
-
-    @F.pandas_udf("double")
-    def _dot(a, b):
-        import numpy as np
-        import pandas as _pd
-
-        n = len(a)
-        if not n:
-            return _pd.Series([], dtype="float64")
-        # NULL-mask like lsh_signatures_udf: np.stack over a None
-        # raises, and the HOF fold this kernel replaces yields NULL
-        # for a NULL input — preserve that (ADVICE r5). The all-valid
-        # batch (the hot path) skips the object-dtype detour entirely.
-        mask = (a.notna() & b.notna()).to_numpy()
-        if mask.all():
-            A = np.stack(a.to_numpy()).astype(np.float64)
-            B = np.stack(b.to_numpy()).astype(np.float64)
-            acc = np.zeros(n, dtype=np.float64)
-            for j in range(A.shape[1]):
-                acc += A[:, j] * B[:, j]
-            return _pd.Series(acc)
-        out = np.empty(n, dtype=object)
-        if mask.any():
-            A = np.stack(a[mask].to_numpy()).astype(np.float64)
-            B = np.stack(b[mask].to_numpy()).astype(np.float64)
-            acc = np.zeros(A.shape[0], dtype=np.float64)
-            for j in range(A.shape[1]):
-                acc += A[:, j] * B[:, j]
-            out[np.nonzero(mask)[0]] = acc
-        return _pd.Series(out)
-
-    return _dot
-
-
-def self_dot_udf():
-    """Arrow-batched sum of squares (the norm² fold) — vectorized twin
-    of ``aggregate(transform(v, x -> x*x), 0.0, +)`` with the identical
-    sequential fold order; see :func:`pair_dot_udf`."""
-
-    @F.pandas_udf("double")
-    def _self(a):
-        import numpy as np
-        import pandas as _pd
-
-        n = len(a)
-        if not n:
-            return _pd.Series([], dtype="float64")
-        mask = a.notna().to_numpy()
-        if mask.all():
-            A = np.stack(a.to_numpy()).astype(np.float64)
-            acc = np.zeros(n, dtype=np.float64)
-            for j in range(A.shape[1]):
-                acc += A[:, j] * A[:, j]
-            return _pd.Series(acc)
-        out = np.empty(n, dtype=object)
-        if mask.any():
-            A = np.stack(a[mask].to_numpy()).astype(np.float64)
-            acc = np.zeros(A.shape[0], dtype=np.float64)
-            for j in range(A.shape[1]):
-                acc += A[:, j] * A[:, j]
-            out[np.nonzero(mask)[0]] = acc
-        return _pd.Series(out)
-
-    return _self
+    """Arrow-batched dot product over two vector columns (float or
+    double elements) — the vectorized twin of :func:`dot`, with the
+    same fold order (:func:`_dot`). NULL in either input gives NULL."""
+    return _vector_udf(_dot, "double")
 
 
 def _as_double_vec(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
@@ -130,14 +126,28 @@ def _as_double_vec(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
         F.col("vec_id").alias(id_alias), v.alias(vec_alias)
     ).withColumn(
         f"{vec_alias}_nrm",
-        # JVM HOF fold, NOT self_dot_udf: the norm column chains into
-        # the pair_dot_udf projection downstream, and a second
+        # JVM HOF fold, not an Arrow kernel: the norm column chains
+        # into the pair_dot_udf projection downstream, and a second
         # ArrowEvalPython stage on the same rows measurably loses to
         # the interpreted fold (A/B min-of-3 at sf0.1, bruteforce:
         # arrow-dot+HOF-norm 0.54s, arrow-dot+arrow-norm 0.80s —
-        # stage-chaining overhead exceeds the fold cost; a standalone
-        # corpus-wide norm pass is where self_dot_udf wins instead).
+        # stage-chaining overhead exceeds the fold cost).
         F.sqrt(_dsum(F.transform(F.col(vec_alias), lambda x: x * x))),
+    )
+
+
+def per_query_topk(pairs: DataFrame, score: Column, neighbor: str, k: int) -> DataFrame:
+    """``(query_id, neighbor_id, rank)``: each query's ``k`` best
+    ``neighbor`` rows in ``score`` order (e.g. ``F.col("cos").desc()``),
+    ties to the lower neighbor id — the ``row_number() OVER (PARTITION
+    BY query_id ORDER BY <score>, neighbor_id)`` every top-k oracle
+    replays. ``rank <= k`` becomes a per-partition group limit below
+    the window's sort."""
+    w = Window.partitionBy("query_id").orderBy(score, F.col(neighbor))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w).cast("integer"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", F.col(neighbor).alias("neighbor_id"), "rank")
     )
 
 
@@ -153,14 +163,7 @@ def cosine_topk_bruteforce(
     pairs = base.join(
         F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
     ).withColumn("cos", pair_dot_udf()(F.col("va"), F.col("vb")) / (F.col("va_nrm") * F.col("vb_nrm")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return per_query_topk(pairs, F.col("cos").desc(), "neighbor_id", k)
 
 
 def _hyperplanes(dim: int, nbits: int) -> list[list[float]]:
@@ -230,10 +233,37 @@ def lsh_bucket_expr(
 N_LSH_TABLES = 8
 
 
+def _buckets(
+    E: np.ndarray, planes: list[list[float]], nbits: int, n_tables: int
+) -> np.ndarray:
+    """``(m, n_tables)`` int32 sign-LSH bucket ids: bit i of table t is
+    the sign of the dot product with ``planes[t*nbits + i]``,
+    accumulated as a SEQUENTIAL left-associated ± chain over dims in
+    float64 — the order of the SQL chain in :func:`lsh_bucket_expr` /
+    :func:`bucket_sql`. Starting the fold at 0.0 instead of ±x₀
+    differs only on ±0.0 intermediates, which can never flip the
+    final ``> 0`` sign test."""
+    m = E.shape[0]
+    buckets = np.zeros((m, n_tables), dtype=np.int32)
+    for t in range(n_tables):
+        bits = np.zeros(m, dtype=np.int32)
+        for i in range(nbits):
+            acc = np.zeros(m, dtype=np.float64)
+            for j, sign in enumerate(planes[t * nbits + i]):
+                if sign > 0.0:
+                    acc += E[:, j]
+                else:
+                    acc -= E[:, j]
+            bits |= (acc > 0.0).astype(np.int32) << i
+        buckets[:, t] = bits
+    return buckets
+
+
 def lsh_signatures_udf(dim: int, nbits: int, n_tables: int):
     """Arrow-batched vectorized kernel computing ALL ``n_tables`` sign-
     LSH bucket ids per vector in one pass: returns a pandas_udf mapping
-    an array<float> column to ``array<int>`` of length ``n_tables``.
+    an array<float> column to ``array<int>`` of length ``n_tables``
+    (:func:`_buckets`; NULL for a NULL vector).
 
     Why a Pandas UDF here, against this repo's JVM-first rule: the pure
     expression form (:func:`lsh_bucket_expr` per table) inlines
@@ -249,51 +279,13 @@ def lsh_signatures_udf(dim: int, nbits: int, n_tables: int):
     numpy whole-batch vector ops — vectorized across rows, sequential
     across dims.
 
-    Bit-exactness contract (the DuckDB oracle reproduces the exact
-    bucket ids): the accumulation is a SEQUENTIAL left-associated ±
-    chain over dims in float64, the same order as the SQL chain in
-    :func:`lsh_bucket_expr` / :func:`bucket_sql`. Starting the fold at
-    0.0 instead of ±x₀ differs only on ±0.0 intermediates, which can
-    never flip the final ``> 0`` sign test. float32→float64 is exact.
-    A production deployment that doesn't need cross-engine bit parity
+    The DuckDB oracle reproduces the exact bucket ids, because the
+    fold order matches the SQL chain and float32→float64 is exact. A
+    production deployment that doesn't need cross-engine bit parity
     can swap the dim loop for one ``E @ P.T`` matmul (BLAS reorders
-    the sums).
-
-    The closure captures only plain Python data (the ±1 plane lists)
-    and imports numpy/pandas inside the worker function, so cloudpickle
-    ships it BY VALUE — executors don't need this package installed."""
+    the sums)."""
     planes = _hyperplanes(dim, nbits * n_tables)
-
-    @F.pandas_udf("array<int>")
-    def _buckets(vecs):  # pd.Series of np.ndarray -> pd.Series of arrays
-        import numpy as np
-        import pandas as _pd
-
-        n = len(vecs)
-        out = np.empty(n, dtype=object)
-        if n:
-            mask = vecs.notna().to_numpy()
-            if mask.any():
-                E = np.stack(vecs[mask].to_numpy()).astype(np.float64)
-                m = E.shape[0]
-                buckets = np.zeros((m, n_tables), dtype=np.int32)
-                for t in range(n_tables):
-                    bits = np.zeros(m, dtype=np.int32)
-                    for i in range(nbits):
-                        plane = planes[t * nbits + i]
-                        acc = np.zeros(m, dtype=np.float64)
-                        for j in range(dim):
-                            if plane[j] > 0.0:
-                                acc += E[:, j]
-                            else:
-                                acc -= E[:, j]
-                        bits |= (acc > 0.0).astype(np.int32) << i
-                    buckets[:, t] = bits
-                for r, row in zip(np.nonzero(mask)[0], buckets):
-                    out[r] = row
-        return _pd.Series(out)
-
-    return _buckets
+    return _vector_udf(_buckets, "array<int>", planes, nbits, n_tables)
 
 
 def lsh_banded(
@@ -428,14 +420,7 @@ def cosine_topk_lsh(
             "cos", pair_dot_udf()(F.col("va"), F.col("vb")) / (F.col("va_nrm") * F.col("vb_nrm"))
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return per_query_topk(pairs, F.col("cos").desc(), "neighbor_id", k)
 
 
 KNN_GRAPH_K = 5
@@ -661,48 +646,39 @@ def mutual_knn_clusters_oracle_sql(
         """
 
 
+def _ranks(
+    V: np.ndarray, vn: np.ndarray, cids: np.ndarray, C: np.ndarray, cn: np.ndarray
+) -> np.ndarray:
+    """``(m, n_centroids)`` centroid ids per vector, ordered by (cosine
+    desc, cid asc). Per (vector, centroid) the dot product accumulates
+    sequentially over dims — the IEEE op sequence of
+    ``pair_dot / (v_nrm * c_nrm)`` (see :func:`_dot`)."""
+    acc = np.zeros((V.shape[0], C.shape[0]), dtype=np.float64)
+    for j in range(V.shape[1]):
+        acc += V[:, j : j + 1] * C[None, :, j]
+    cos = acc / (vn[:, None] * cn[None, :])
+    # argsort by (-cos, cid): ids are pre-sorted ascending so the
+    # stable secondary order is the cid tie-break
+    return cids[np.argsort(-cos, axis=1, kind="stable")]
+
+
 def cell_ranks_udf(cids: list[int], cmat: list[list[float]], cnrm: list[float]):
-    """Arrow-batched centroid ranking: for each vector, the centroid ids
-    ordered by (cosine desc, cid asc). The centroid set is closed over
-    BY VALUE (plain lists — cloudpickle ships them with the function, no
-    worker package import needed), which is the IVF-correct shape: the
-    coarse codebook is always metadata-sized, so baking it into one map
-    stage beats a ×n_centroids row expansion 16-fold on Arrow transfer
-    volume and eliminates the re-grouping shuffle entirely.
-
-    Per (vector, centroid) the cosine is accumulated sequentially over
-    dimensions — the exact IEEE op sequence of
-    ``pair_dot / (v_nrm * c_nrm)`` (see :func:`pair_dot_udf`), so cell
-    assignments and tie-breaks are bit-identical to the expansion form
-    and to the DuckDB oracle."""
-
-    @F.pandas_udf("array<bigint>")
-    def _ranks(v, vn):
-        import numpy as np
-        import pandas as _pd
-
-        n = len(v)
-        out = np.empty(n, dtype=object)
-        if n:
-            mask = (v.notna() & vn.notna()).to_numpy()
-            if mask.any():
-                V = np.stack(v[mask].to_numpy()).astype(np.float64)
-                C = np.asarray(cmat, dtype=np.float64)
-                ids = np.asarray(cids, dtype=np.int64)
-                nr = np.asarray(cnrm, dtype=np.float64)
-                acc = np.zeros((V.shape[0], C.shape[0]), dtype=np.float64)
-                for j in range(V.shape[1]):
-                    acc += V[:, j : j + 1] * C[None, :, j]
-                nrm = vn[mask].to_numpy().astype(np.float64)
-                cos = acc / (nrm[:, None] * nr[None, :])
-                # argsort by (-cos, cid): ids are pre-sorted ascending
-                # so the stable secondary order is the cid tie-break
-                order = np.argsort(-cos, axis=1, kind="stable")
-                for r, row in zip(np.nonzero(mask)[0], order):
-                    out[r] = ids[row].tolist()
-        return _pd.Series(out)
-
-    return _ranks
+    """Arrow-batched centroid ranking of ``(vector, norm)`` columns:
+    for each vector, the centroid ids ordered by (cosine desc, cid
+    asc) (:func:`_ranks`; NULL when either input is NULL). The
+    centroid set travels inside the UDF, which is the IVF-correct
+    shape: the coarse codebook is always metadata-sized, so baking it
+    into one map stage beats a ×n_centroids row expansion 16-fold on
+    Arrow transfer volume and eliminates the re-grouping shuffle
+    entirely. Cell assignments and tie-breaks are bit-identical to the
+    expansion form and to the DuckDB oracle."""
+    return _vector_udf(
+        _ranks,
+        "array<bigint>",
+        np.asarray(cids, dtype=np.int64),
+        np.asarray(cmat, dtype=np.float64),
+        np.asarray(cnrm, dtype=np.float64),
+    )
 
 
 def ivf_codebook(emb: DataFrame, n_centroids: int = 16):
@@ -758,8 +734,6 @@ def ivf_codebook_trained(
 
     Returns the same ``(cids, vectors, norms)`` triple as
     :func:`ivf_codebook` (cids are 0..k-1)."""
-    import numpy as np
-
     sample = (
         emb.filter(F.col("embedding").isNotNull())
         .select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
@@ -863,12 +837,7 @@ def ivf_topk(
             "cos", pair_dot_udf()(F.col("qv"), F.col("v")) / (F.col("q_nrm") * F.col("v_nrm"))
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(wr).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
+    return per_query_topk(cand, F.col("cos").desc(), "vec_id", k)
 
 
 def pq_codebook(emb: DataFrame, m: int = 16, ksub: int = 16):
@@ -913,8 +882,6 @@ def pq_codebook_trained(
     deterministic init (first k sample subvectors in hash order),
     empty-cluster carry-over. Same ``cb[j][c][d]`` shape as
     :func:`pq_codebook`."""
-    import numpy as np
-
     sample = (
         emb.filter(F.col("embedding").isNotNull())
         .select(
@@ -941,44 +908,31 @@ def pq_codebook_trained(
     return cb
 
 
+def _codes(V: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """``(m, n_subspaces)`` int32 PQ codes: per subspace j, the argmin
+    over ``C[j]``'s centroids of the squared L2 distance, which
+    accumulates LEFT-FOLDED over the subspace dims (``acc +=
+    (V[:,d]-C[:,d])²`` ascending d) — the IEEE op sequence of the
+    oracle's ``list_sum(list_transform(range(1,dsub+1), d ->
+    (sv[d]-cv[d])²))`` chain. ``np.argmin`` returns the FIRST minimum =
+    lowest cid, the oracle's ``ORDER BY dist, cid`` tie-break."""
+    m, ksub, dsub = C.shape
+    codes = np.empty((V.shape[0], m), dtype=np.int32)
+    for j in range(m):
+        acc = np.zeros((V.shape[0], ksub), dtype=np.float64)
+        for d in range(dsub):
+            diff = V[:, j * dsub + d, None] - C[j, None, :, d]
+            acc += diff * diff
+        codes[:, j] = np.argmin(acc, axis=1)
+    return codes
+
+
 def pq_codes_udf(cb):
-    """Arrow-batched PQ encoder: each vector → ``m`` centroid codes
-    (argmin squared-L2 per subspace, lowest-cid tie-break). Per (row
-    batch, subspace): the distance accumulates LEFT-FOLDED over the
-    subspace dims (``acc += (V[:,d]-C[:,d])²`` ascending d) — the
-    exact IEEE op sequence of the oracle's
-    ``list_sum(list_transform(range(1,dsub+1), d -> (sv[d]-cv[d])²))``
-    chain, so the argmin comparisons see bit-identical doubles on both
-    engines. ``np.argmin`` returns the FIRST minimum = lowest cid, the
-    oracle's ``ORDER BY dist, cid`` tie-break. The closure captures
-    the codebook by value (plain lists), so cloudpickle ships it
-    without needing this package on executors."""
-
-    @F.pandas_udf("array<int>")
-    def _codes(v):
-        import numpy as np
-        import pandas as _pd
-
-        n = len(v)
-        out = np.empty(n, dtype=object)
-        if n:
-            mask = v.notna().to_numpy()
-            if mask.any():
-                V = np.stack(v[mask].to_numpy()).astype(np.float64)
-                C = np.asarray(cb, dtype=np.float64)  # (m, ksub, dsub)
-                m, ksub, dsub = C.shape
-                codes = np.empty((V.shape[0], m), dtype=np.int64)
-                for j in range(m):
-                    acc = np.zeros((V.shape[0], ksub), dtype=np.float64)
-                    for d in range(dsub):
-                        diff = V[:, j * dsub + d, None] - C[j, None, :, d]
-                        acc += diff * diff
-                    codes[:, j] = np.argmin(acc, axis=1)
-                for r, row in zip(np.nonzero(mask)[0], codes):
-                    out[r] = [int(x) for x in row]
-        return _pd.Series(out)
-
-    return _codes
+    """Arrow-batched PQ encoder over the codebook ``cb[j][c][d]``: each
+    vector → ``m`` centroid codes (:func:`_codes`; NULL for a NULL
+    vector). The argmin comparisons see bit-identical doubles on both
+    engines, so the codes match the DuckDB oracle exactly."""
+    return _vector_udf(_codes, "array<int>", np.asarray(cb, dtype=np.float64))
 
 
 def adc_table_rows(cb, qvecs: dict, metric: str = "l2") -> dict:
@@ -993,8 +947,6 @@ def adc_table_rows(cb, qvecs: dict, metric: str = "l2") -> dict:
     ``qvecs``: {query_id: vector-as-list}; ``metric``: "l2" (squared
     distance terms) or "ip" (inner-product terms). Returns
     {query_id: flat list of m×ksub doubles, j-major}."""
-    import numpy as np
-
     C = np.asarray(cb, dtype=np.float64)
     m, ksub, dsub = C.shape
     out = {}
@@ -1068,15 +1020,12 @@ def pq_topk(
     score = F.expr(
         f"aggregate(sequence(0, {m - 1}), 0D, (acc, j) -> acc + t[j * {ksub} + codes[j]])"
     )
-    wr = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("vec_id"))
-    return (
+    scored = (
         codes.crossJoin(F.broadcast(tdf))
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("score", score)
-        .withColumn("rank", F.row_number().over(wr).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
     )
+    return per_query_topk(scored, F.col("score").asc(), "vec_id", k)
 
 
 def ivfpq_topk(
@@ -1103,7 +1052,7 @@ def ivfpq_topk(
     bytes + one norm — the relation a stored IVF-PQ index materializes,
     cell-partitioned (the existing IVF store layout) with codes instead
     of vectors. Plan: two map stages over the corpus (assign, encode;
-    both Arrow kernels over by-value codebooks), a broadcast probe
+    both Arrow kernels, each carrying its codebook), a broadcast probe
     join pruned to the probed cells, the pure-JVM ADC fold, one
     top-k window. Residual encoding (PQ over v − centroid, FAISS's
     refinement) is the production next step; it changes only the
@@ -1147,16 +1096,13 @@ def ivfpq_topk(
     ip = F.expr(
         f"aggregate(sequence(0, {m - 1}), 0D, (acc, j) -> acc + t[j * {ksub} + codes[j]])"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id"))
-    return (
+    scored = (
         codes.join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(F.broadcast(tdf), "query_id")
         .withColumn("score", ip / (F.col("q_nrm") * F.col("v_nrm")))
-        .withColumn("rank", F.row_number().over(w).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
     )
+    return per_query_topk(scored, F.col("score").desc(), "vec_id", k)
 
 
 RP_DIM = 16
@@ -1252,14 +1198,9 @@ def rp_topk(
     cand = proj.join(
         F.broadcast(qproj), F.col("query_id") != F.col("neighbor_id")
     ).withColumn("proj_score", F.expr(rp_score_chain("qp", "p")))
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("proj_score").desc(), F.col("neighbor_id")
-    )
-    pool_df = (
-        cand.withColumn("prank", F.row_number().over(w1))
-        .filter(F.col("prank") <= pool)
-        .select("query_id", "neighbor_id")
-    )
+    pool_df = per_query_topk(
+        cand, F.col("proj_score").desc(), "neighbor_id", pool
+    ).select("query_id", "neighbor_id")
     base = _as_double_vec(emb, "neighbor_id", "vb")
     q = _as_double_vec(
         emb.filter(F.col("vec_id").isin(query_ids)), "query_id", "va"
@@ -1273,14 +1214,7 @@ def rp_topk(
             / (F.col("va_nrm") * F.col("vb_nrm")),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w2).cast("integer"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return per_query_topk(pairs, F.col("cos").desc(), "neighbor_id", k)
 
 
 def rp_oracle_sql(k: int = 10, pool: int = RP_POOL) -> str:
@@ -1584,8 +1518,6 @@ def _pca_power_components(C, n_components: int = 2):
     driver-side, metadata-sized. Deterministic for fixed inputs: a
     constant start vector, a fixed iteration count (no convergence
     test), and deflation by the Rayleigh quotient."""
-    import numpy as np
-
     d = C.shape[0]
     comps = []
     work = C.copy()
@@ -1662,8 +1594,6 @@ def pca_project(emb: DataFrame, n_components: int = 2) -> DataFrame:
         .agg(F.sum("g").alias("g"))
         .collect()
     )
-    import numpy as np
-
     d = max(r.j for r in parts) + 1
     G = np.zeros((d, d), dtype=np.int64)
     S = np.zeros(d, dtype=np.int64)

@@ -17,17 +17,20 @@ ways:
 - every other plug-in runs as an Arrow-batched ``mapInPandas``
   flat-map: the transformer sees one pandas row at a time
   (``transform(row) -> iterable of (key, value)``) while Spark moves
-  data in vectorized batches. Plug-in modules are registered with
-  cloudpickle *by value*, so executors never need the plug-in
-  installed — the closure ships the code.
+  data in vectorized batches. The plug-in module is registered with
+  PySpark's cloudpickle *by value*, so the closure carries the
+  plug-in's own code and executors need not import its module. Code it
+  imports from other modules (this package's ``Transformer`` base, for
+  one) still travels by reference, so this package must be importable
+  on the executors (``session.ensure_shipped``).
 """
 
 from __future__ import annotations
 
 import importlib
-import sys
 from collections.abc import Iterable
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -66,8 +69,9 @@ class Identity(Transformer):
 def load_transformer(spec: str | None):
     """Load ``"package.module:ClassName"`` (reference CLI flag
     main.py:69-72; dynamic import kafka_client.py:199-205). ``None`` →
-    Identity. The plug-in module is registered for by-value pickling so
-    the instance can ship inside UDF closures without the module being
+    Identity. The plug-in module is registered for by-value pickling
+    with ``pyspark.cloudpickle`` — the copy PySpark pickles UDFs with —
+    so the instance ships inside UDF closures without the module being
     importable on executors."""
     if spec is None:
         return Identity()
@@ -77,12 +81,7 @@ def load_transformer(spec: str | None):
             f"transformer spec must be 'module:Class', got {spec!r}"
         )
     module = importlib.import_module(module_name)
-    try:
-        import cloudpickle
-
-        cloudpickle.register_pickle_by_value(module)
-    except Exception:  # pragma: no cover - best effort; plain stdlib pickle path
-        pass
+    cloudpickle.register_pickle_by_value(module)
     cls = getattr(module, class_name)
     return cls()
 

@@ -99,7 +99,7 @@ def test_lsh_signature_kernel_bit_parity(spark):
 
 
 def test_dot_kernel_bit_parity(spark):
-    """pair_dot_udf/self_dot_udf (Arrow production path) must equal the
+    """pair_dot_udf (Arrow production path) must equal the
     HOF reference fold `dot()` bit-for-bit — the cosine oracles and
     rank tie-breaks ride on exact equality, not approximate."""
     from pyspark.sql import functions as F
@@ -116,13 +116,10 @@ def test_dot_kernel_bit_parity(spark):
         "ib",
         similarity.dot(F.col("va"), F.col("vb")).alias("ref"),
         similarity.pair_dot_udf()(F.col("va"), F.col("vb")).alias("got"),
-        similarity.dot(F.col("va"), F.col("va")).alias("self_ref"),
-        similarity.self_dot_udf()(F.col("va")).alias("self_got"),
     ).collect()
     assert both, "empty parity sample"
     for r in both:
         assert r.ref == r.got, (r.ia, r.ib, r.ref, r.got)
-        assert r.self_ref == r.self_got, (r.ia, r.self_ref, r.self_got)
 
 
 def test_ivf_trained_codebook_recall_and_balance(spark):
@@ -184,9 +181,12 @@ def test_ivf_trained_codebook_recall_and_balance(spark):
 
 
 def test_dot_kernels_null_safe(spark):
-    """A NULL embedding must yield NULL — not crash the Arrow stage —
+    """A NULL input must yield NULL — not crash the Arrow stage —
     matching the HOF fold the kernels replace (ADVICE r5: np.stack over
-    None raised before the notna() masks)."""
+    None raised before the notna() masks). One envelope owns this for
+    every kernel: the other rows are unaffected, and all-NULL and empty
+    inputs run too."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
@@ -198,21 +198,64 @@ def test_dot_kernels_null_safe(spark):
         for r in df.select(
             "id",
             similarity.pair_dot_udf()(F.col("a"), F.col("b")).alias("d"),
-            similarity.self_dot_udf()(F.col("a")).alias("s"),
         ).collect()
     }
-    assert rows[0].d == 11.0 and rows[0].s == 5.0
-    assert rows[1].d is None and rows[1].s is None
-    assert rows[2].d is None and rows[2].s == 61.0
+    assert rows[0].d == 11.0
+    assert rows[1].d is None
+    assert rows[2].d is None
     # cell_ranks_udf: null vector → null rank list, others unaffected
     ranks = similarity.cell_ranks_udf([0, 1], [[1.0, 0.0], [0.0, 1.0]], [1.0, 1.0])
+    norm = F.sqrt(similarity.dot(F.col("a"), F.col("a")))
     got = {
         r.id: r.rk
-        for r in df.select(
-            "id", ranks(F.col("a"), similarity.self_dot_udf()(F.col("a"))).alias("rk")
-        ).collect()
+        for r in df.select("id", ranks(F.col("a"), norm).alias("rk")).collect()
     }
     assert got[1] is None and got[0] is not None and len(got[0]) == 2
+    # lsh_signatures_udf and pq_codes_udf: same contract; the valid rows
+    # match the SQL bucket spec and the hand-computed codes (subspace
+    # ties go to the lower cid)
+    sig = similarity.lsh_signatures_udf(2, 2, 3)
+    codes = similarity.pq_codes_udf([[[0.0], [4.0]], [[0.0], [4.0]]])
+    got = {
+        r.id: r
+        for r in df.select(
+            "id",
+            sig(F.col("a")).alias("sig"),
+            codes(F.col("a")).alias("code"),
+            *[
+                similarity.lsh_bucket_expr("a", 2, 2, table=t).alias(f"b{t}")
+                for t in range(3)
+            ],
+        ).collect()
+    }
+    assert got[1].sig is None and got[1].code is None
+    for i in (0, 2):
+        assert got[i].sig == [got[i].b0, got[i].b1, got[i].b2]
+    assert got[0].code == [0, 0] and got[2].code == [1, 1]
+
+    def run_all(frame):
+        return [
+            tuple(r)
+            for r in frame.select(
+                similarity.pair_dot_udf()(F.col("a"), F.col("b")),
+                sig(F.col("a")),
+                ranks(F.col("a"), norm),
+                codes(F.col("a")),
+            ).collect()
+        ]
+
+    nulls = spark.createDataFrame(
+        [(3, None, None), (4, None, None)], "id long, a array<double>, b array<double>"
+    )
+    assert run_all(nulls) == [(None, None, None, None)] * 2
+    assert run_all(df.filter(F.col("id") < 0)) == []
+    # the empty batch, called directly: an empty frame need not send
+    # one to the worker
+    empty = pd.Series([], dtype=object)
+    for udf, n_inputs in (
+        (similarity.pair_dot_udf(), 2), (sig, 1), (ranks, 2), (codes, 1)
+    ):
+        assert len(udf.func(*[empty] * n_inputs)) == 0
 
 
 import numpy as np

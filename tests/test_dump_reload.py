@@ -7,6 +7,7 @@ idempotent hot-reload skip — the reference's three entry points
 from __future__ import annotations
 
 import glob
+import json
 import os
 import subprocess
 import sys
@@ -468,6 +469,48 @@ def test_cli_path_imports_no_pandas():
     )
     assert done.returncode == 0, done.stderr
     assert done.stdout.strip() == "False"
+
+
+_PLUGIN_RELOAD_DRIVER = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from kafka_topic_dumper_spark import cli
+from pyspark.sql import SparkSession
+
+archive, dumps, sink = sys.argv[2:5]
+base = ["--records-parquet", archive, "-t", "test", "--output", dumps]
+codes = [
+    cli.main(["generate", *base[:4], "-n", "120", "--partitions", "3"]),
+    cli.main(["dump", *base, "-n", "60", "-p", "20260816000001"]),
+    cli.main(["reload", *base, "--reload-output", sink,
+              "-f", "tests.plugin_transformers:Explode"]),
+]
+spark = SparkSession.getActiveSession()
+print(json.dumps({"codes": codes, "rows": spark.read.parquet(sink).count()}))
+spark.stop()
+"""
+
+
+def test_cli_row_path_plugin_runs_where_workers_cannot_import_it(tmp_path):
+    """A row-path plug-in runs on Python workers that cannot import its
+    module: the driver starts outside the repo with the repo on its own
+    sys.path only, so ``tests.plugin_transformers`` must travel by value
+    inside the UDF (registered with PySpark's cloudpickle)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    done = subprocess.run(
+        [
+            sys.executable, "-c", _PLUGIN_RELOAD_DRIVER, repo,
+            str(tmp_path / "archive.parquet"), str(tmp_path / "dumps"),
+            str(tmp_path / "produced"),
+        ],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    result = json.loads(done.stdout.strip().splitlines()[-1])
+    # Explode emits every dumped record twice
+    assert result == {"codes": [0, 0, 0], "rows": 120}
 
 
 def test_load_transformer_rejects_bad_spec():

@@ -476,3 +476,41 @@ def test_ivf_probe_leg_ranks_udf_stays_deterministic(spark, query):
     plan = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
     ranks = sorted(det for name, det in _python_udfs(plan, []) if name == "_ranks")
     assert ranks == [False, True]
+
+
+# Every row whose final plan runs a similarity vector kernel: the
+# ArrowEvalPython node count of the executed plan and the
+# (name, deterministic) multiset of PythonUDFs in the optimized plan.
+# A persisted relation's plan is counted at each of its references.
+# The nondeterministic ``_buckets``/``_ranks`` instances are the r18/r19
+# fixes that stop Catalyst from evaluating a kernel twice; a second
+# ArrowEvalPython node over the same kernel shows up here first.
+@pytest.mark.parametrize(
+    "query, arrow_evals, udfs",
+    [
+        ("similarity_topk_bruteforce", 1, {("_dot", True): 1}),
+        ("similarity_topk_rp", 1, {("_dot", True): 1}),
+        ("similarity_topk_lsh", 3, {("_buckets", False): 4, ("_dot", True): 1}),
+        ("similarity_topk_lsh_stored", 1, {("_dot", True): 1}),
+        ("similarity_knn_graph", 3, {("_buckets", False): 4, ("_dot", True): 1}),
+        ("similarity_recall_eval", 9, {("_buckets", False): 12, ("_dot", True): 10}),
+        ("similarity_topk_ivf", 3, {("_dot", True): 1, ("_ranks", False): 1, ("_ranks", True): 1}),
+        ("similarity_topk_ivf_trained", 3, {("_dot", True): 1, ("_ranks", False): 1, ("_ranks", True): 1}),
+        ("similarity_topk_ivf_stored", 1, {("_dot", True): 1}),
+        ("similarity_topk_pq", 1, {("_codes", True): 1}),
+        ("similarity_topk_pq_trained", 1, {("_codes", True): 1}),
+        ("similarity_topk_ivfpq", 3, {("_codes", True): 1, ("_ranks", False): 1, ("_ranks", True): 1}),
+        ("dedup_embedding_cosine", 3, {("_buckets", False): 4, ("_dot", True): 1}),
+        ("dedup_semantic", 1, {("_keep", True): 1, ("_ranks", True): 1}),
+        ("dedup_semantic_trained", 1, {("_keep", True): 1, ("_ranks", True): 1}),
+        ("retrieval_hybrid_rrf", 1, {("_dot", True): 1}),
+    ],
+)
+def test_vector_kernel_rows_keep_their_python_stages(spark, query, arrow_evals, udfs):
+    import json
+    from collections import Counter
+
+    qe = registry.QUERIES[query](spark, SF)._jdf.queryExecution()
+    assert count_in(qe.executedPlan().toString(), "ArrowEvalPython") == arrow_evals
+    plan = json.loads(qe.optimizedPlan().toJSON())
+    assert Counter(_python_udfs(plan, [])) == udfs

@@ -1,9 +1,11 @@
-"""The codec rows must run for a caller that knows nothing about this
-package's shipping: a foreign process, started outside the repo, with a
-vanilla SparkSession (no ``get_session``, no ``ensure_shipped``). Its
-Python workers can import the package only if the operators ship it, so
-a codec kernel pickled by reference without shipping dies there with
-ModuleNotFoundError even though every in-repo test passes."""
+"""The codec and similarity-kernel rows must run for a caller that
+knows nothing about this package's shipping: a foreign process, started
+outside the repo, with a vanilla SparkSession (no ``get_session``, no
+``ensure_shipped``). Its Python workers can import the package only if
+the operators ship it, so a kernel pickled by reference without
+shipping dies there with ModuleNotFoundError even though every in-repo
+test passes. Each family runs in its own process, so one family's
+shipping cannot cover for the other's."""
 
 from __future__ import annotations
 
@@ -27,6 +29,14 @@ CODEC_ROWS = [
     "multimodal_phash_dct",
 ]
 
+SIMILARITY_ROWS = [
+    "similarity_topk_bruteforce",
+    "similarity_topk_lsh",
+    "similarity_topk_ivf",
+    "similarity_topk_pq",
+    "similarity_topk_ivfpq",
+]
+
 _DRIVER = """
 import json, math, sys
 sys.path.insert(0, sys.argv[1])
@@ -39,7 +49,8 @@ spark = SparkSession.builder.master("local[2]").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 oracles = registry.resolve_oracles(sf)
 con = duckdb.connect()
-con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+for table in ("documents", "embeddings"):
+    con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{sf}/{table}.parquet'")
 
 def rows(rs):
     norm = lambda v: round(v, 6) if isinstance(v, float) and not math.isnan(v) else v
@@ -56,10 +67,10 @@ print(json.dumps({"mismatches": bad}))
 """
 
 
-def test_codec_rows_match_oracles_from_a_foreign_cwd(tmp_path):
+def _mismatches_from_a_foreign_cwd(tmp_path, rows: list[str]) -> dict:
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
-        [sys.executable, "-c", _DRIVER, REPO, SF_SMOKE, *CODEC_ROWS],
+        [sys.executable, "-c", _DRIVER, REPO, SF_SMOKE, *rows],
         cwd=tmp_path,
         env=env,
         capture_output=True,
@@ -67,5 +78,14 @@ def test_codec_rows_match_oracles_from_a_foreign_cwd(tmp_path):
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    result = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert result == {"mismatches": []}
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_codec_rows_match_oracles_from_a_foreign_cwd(tmp_path):
+    assert _mismatches_from_a_foreign_cwd(tmp_path, CODEC_ROWS) == {"mismatches": []}
+
+
+def test_similarity_rows_match_oracles_from_a_foreign_cwd(tmp_path):
+    assert _mismatches_from_a_foreign_cwd(tmp_path, SIMILARITY_ROWS) == {
+        "mismatches": []
+    }
