@@ -5,16 +5,17 @@ Prints ONE JSON line:
 ``{"metric": ..., "value": <total sec>, "value_cold": <sec>,
    "unit": "sec", "queries": {name: sec, ...}, "sf": ...}``
 
-Every benched row, its protocol, its checkpoint window and its
-recording key come from one table, :data:`SUITES`, timed by one loop,
-:func:`time_row`; the tools under ``tools/`` import both. Each query is
-forced end-to-end with the noop sink (full computation, no driver
-collect — measures the engine, not py4j transfer).
+Every benched row, its protocol and its recording key come from one
+table, :data:`SUITES`, timed by one loop, :func:`time_row`; the tools
+under ``tools/`` import both. Each timed call records its wall seconds
+and the CPU-seconds of the whole process tree (driver, JVM, Python
+workers). Each query is forced end-to-end with the noop sink (full
+computation, no driver collect — measures the engine, not py4j
+transfer).
 """
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import shutil
@@ -28,6 +29,7 @@ from kafka_topic_dumper_spark import registry
 from kafka_topic_dumper_spark.functions.caching import operator_caches
 from kafka_topic_dumper_spark.session import get_session
 from kafka_topic_dumper_spark.sources.tables import load_table
+from perfbench.host import CLK_TCK, host_facts, tree
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -52,9 +54,10 @@ N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 RUN_TIMES: dict[str, list[float]] = {}
 
 
-def _record_run(name: str, dt: float) -> float:
-    """Append one repetition's wall time to RUN_TIMES; returns dt."""
-    RUN_TIMES.setdefault(name, []).append(round(dt, 3))
+def _record_run(name: str, dt: float,
+                runs: dict[str, list[float]] = RUN_TIMES) -> float:
+    """Append one repetition's seconds to ``runs``; returns dt."""
+    runs.setdefault(name, []).append(round(dt, 3))
     return dt
 
 
@@ -87,17 +90,10 @@ class Row:
 @dataclass(frozen=True)
 class Suite:
     """Rows timed back to back and recorded under ``key`` in
-    BENCH_DETAIL.json (``queries`` is also the stdout headline dict).
-    ``tag`` names the checkpoint closing the window the rows are timed
-    in; consecutive suites with one tag share a window, and TAIL is
-    closed by the post-control instead of a checkpoint."""
+    BENCH_DETAIL.json (``queries`` is also the stdout headline dict)."""
 
-    tag: str
     key: str
     rows: tuple[Row, ...]
-
-
-PRE, TAIL = "PRE", "TAIL"
 
 
 def _force(df) -> None:
@@ -193,8 +189,8 @@ def _dump_pipeline(spark):
     )
 
 
-def _suite(tag: str, key: str, *rows: str | Row) -> Suite:
-    return Suite(tag, key, tuple(r if isinstance(r, Row) else Row(r) for r in rows))
+def _suite(key: str, *rows: str | Row) -> Suite:
+    return Suite(key, tuple(r if isinstance(r, Row) else Row(r) for r in rows))
 
 
 # Every benched row, in timing order. Suites were added round by round
@@ -203,7 +199,7 @@ def _suite(tag: str, key: str, *rows: str | Row) -> Suite:
 SUITES: tuple[Suite, ...] = (
     # the frozen round-1 headline set, comparable across every round
     _suite(
-        "after_headline", "queries",
+        "queries",
         "q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
         "flagship_latest_event_per_user", "events_hourly_rollup",
         "o2_tail_k_per_partition", "dedup_exact", "dedup_ngram_jaccard",
@@ -217,7 +213,7 @@ SUITES: tuple[Suite, ...] = (
     # portable=False); the headline row keeps md5 for oracle parity.
     # Own key: it duplicates that row's plan with a cheaper hash.
     _suite(
-        "after_realvocab", "queries_prod",
+        "queries_prod",
         Row("dedup_minhash_lsh_prod", prepare=_minhash_prod),
     ),
     # The plain editdist join stays unbenched: the synthetic corpus's
@@ -226,7 +222,7 @@ SUITES: tuple[Suite, ...] = (
     # the filter sees a real crawl's diversity. Own key, so value_prod
     # stays comparable round over round.
     _suite(
-        "after_realvocab", "queries_editdist_realvocab",
+        "queries_editdist_realvocab",
         "dedup_editdist_join_realvocab",
     ),
     # Stored-index rows price two things: the registry row is the
@@ -235,32 +231,32 @@ SUITES: tuple[Suite, ...] = (
     # column is warm by design), and each _build row prices one full
     # index build + partitioned write into a fresh directory.
     _suite(
-        "after_editdist", "queries_editdist_prefix_stored",
+        "queries_editdist_prefix_stored",
         Row("dedup_editdist_prefix_stored", WARM_FIRST),
         Row("dedup_editdist_prefix_stored_build", FRESH_DIR,
             _editdist_prefix_build),
     ),
     _suite(
-        "after_v2", "queries_v2",
+        "queries_v2",
         "pack_training_sequences", "sample_domain_mixture",
         "pipeline_clean_dedup_pack", "dedup_incremental",
         "timeseries_gap_fill", "cohort_retention", "multimodal_phash_neardup",
     ),
     _suite(
-        "after_v3", "queries_v3",
+        "queries_v3",
         "similarity_topk_lsh_stored", "similarity_topk_ivf_stored",
         "text_bigram_lm_quality", "embedding_quantize_int8",
         "pipeline_quality_dedup_pack",
     ),
     _suite(
-        "after_v4", "queries_v4",
+        "queries_v4",
         "similarity_topk_pq", "similarity_topk_ivfpq", "dedup_semantic",
         "dedup_duplicate_spans", "dedup_remove_spans",
         "dedup_minhash_clusters", "chunk_documents_sliding",
         "epoch_shuffle_order", "sample_stratified_per_group",
     ),
     _suite(
-        "after_v5", "queries_v5",
+        "queries_v5",
         "text_bm25_topk", "text_quality_classifier", "text_bpe_pair_counts",
         "similarity_knn_graph", "layout_zorder_events",
         "sample_domain_temperature", "pipeline_tokenize_pack_ids",
@@ -269,13 +265,13 @@ SUITES: tuple[Suite, ...] = (
     ),
     # the real-codec rows price the mapInPandas encode+decode round trip
     _suite(
-        "after_v6", "queries_v6",
+        "queries_v6",
         "multimodal_decode_png", "multimodal_decode_gif",
         "multimodal_wav_features", "multimodal_avi_frames",
         "text_quality_calibrated_rank", "sample_token_budget",
     ),
     _suite(
-        "after_v7", "queries_v7",
+        "queries_v7",
         "multimodal_decode_jpeg", "similarity_topk_rp",
         "graph_pagerank_supplier_network", "dedup_ngram_containment",
         "text_unicode_normalize", "dedup_setsim_prefix_join",
@@ -286,7 +282,7 @@ SUITES: tuple[Suite, ...] = (
     # Streaming rows are never benched: the memory-sink drain prices
     # the harness, not the engine.
     _suite(
-        "after_v8", "queries_v8",
+        "queries_v8",
         "multimodal_decode_mjpeg", "sample_weighted_priority", "graph_kcore",
         "asof_join_tolerance", "stats_rolling_anomaly",
         "layout_hilbert_events", "embedding_pca_project",
@@ -295,7 +291,7 @@ SUITES: tuple[Suite, ...] = (
         "text_kneser_ney_quality",
     ),
     _suite(
-        "after_v9", "queries_v9",
+        "queries_v9",
         "stats_mad_by_type", "graph_cotrading_projection",
         "multimodal_wav_spectral", "stats_benford_profile",
         "text_source_entropy", "text_source_snapshot_jsd",
@@ -304,64 +300,92 @@ SUITES: tuple[Suite, ...] = (
     ),
     # the build side of the two v3 stored-index probes
     _suite(
-        "after_stored_builds", "queries_v3",
+        "queries_v3",
         Row("similarity_topk_lsh_stored_build", FRESH_DIR, _lsh_stored_build),
         Row("similarity_topk_ivf_stored_build", FRESH_DIR, _ivf_stored_build),
     ),
-    _suite(TAIL, "queries", Row("dump_pipeline", SINGLE, _dump_pipeline)),
+    _suite("queries", Row("dump_pipeline", SINGLE, _dump_pipeline)),
 )
 
 ROWS: dict[str, Row] = {r.name: r for s in SUITES for r in s.rows}
 
-# The host-quietness probe bracketing every window.
-CONTROL = Row("q1_pricing_summary")
+
+# Thread names (/proc comm, cut at 15 chars) of the JVM's JIT compilers.
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
 
 
-def windows() -> dict[str, tuple[str, list[Suite]]]:
-    """tag -> (opener, suites) for each window, in timing order. A
-    window opens at the previous window's closing probe; the first at
-    the pre-control (PRE)."""
-    out: dict[str, tuple[str, list[Suite]]] = {}
-    opener = PRE
-    for tag, group in itertools.groupby(SUITES, key=lambda s: s.tag):
-        out[tag] = (opener, list(group))
-        opener = tag
+def _stat(path: str) -> tuple[str, list[str]]:
+    """(comm, fields after comm) of a /proc stat file; ("", []) once
+    the process or thread is gone."""
+    try:
+        with open(path) as f:
+            text = f.read()
+    except FileNotFoundError:
+        return "", []
+    head, tail = text.rsplit(")", 1)
+    return head.split("(", 1)[1], tail.split()
+
+
+def tree_cpu() -> dict:
+    """Cumulative CPU-seconds of each live process of this tree (the
+    driver, the Spark JVM and its Python workers) by pid, and of each
+    JIT compiler thread of the JVM, negated, by (pid, tid).
+
+    Two readings subtract key by key, so a process that exits in
+    between adds nothing and a new one all its time: ``pyspark.daemon``
+    ignores SIGCHLD, so an exiting worker's time reaches no parent and
+    a summed reading fell by its lifetime (-22.9 CPU-s on one call).
+    The negated threads net JIT compilation out: it is warm-up billed
+    to whichever row runs (43% of the JVM's CPU early in a session),
+    and with it a row's min-of-3 CPU moved 1.67x between two readings
+    of the same code."""
+    out: dict = {}
+    for pid, role in tree():
+        _comm, fields = _stat(f"/proc/{pid}/stat")
+        if not fields:
+            continue
+        # utime, stime, cutime, cstime (stat fields 14-17)
+        out[pid] = sum(int(x) for x in fields[11:15]) / CLK_TCK
+        if role == "jvm":
+            for tid in os.listdir(f"/proc/{pid}/task"):
+                comm, fields = _stat(f"/proc/{pid}/task/{tid}/stat")
+                if comm.startswith(JIT_THREADS):
+                    out[pid, tid] = -sum(int(x) for x in fields[11:13]) / CLK_TCK
     return out
 
 
 def time_row(spark, row: Row,
-             clock: Callable[[], float] = time.perf_counter) -> list[float]:
-    """Wall seconds of each timed call of ``row``, in run order.
+             clock: Callable[[], float] = time.perf_counter,
+             cpu: Callable[[], dict] = tree_cpu,
+             ) -> tuple[list[float], list[float]]:
+    """(wall seconds, process-tree CPU-seconds) of each timed call of
+    ``row``, in run order. The CPU reading brackets the wall one, so
+    reading ``/proc`` is never billed as wall time.
 
     One operator_caches scope per ROW, not per run: runs 2..N hit the
     persists (banded LSH indexes etc.) that run 1 pinned, so the min
     is the steady state of a session whose index is already built —
     the rounds 1-2 protocol, kept for baseline comparability — while
     a ~100-row session never accumulates dead cached partitions."""
-    times = []
+    walls: list[float] = []
+    cpus: list[float] = []
+    fresh = row.protocol in (FRESH_DIR, SINGLE)
     with operator_caches():
         call = (row.prepare or _query(row.name))(spark)
         if row.protocol == WARM_FIRST:
             call()
         for _ in range(1 if row.protocol == SINGLE else N_RUNS):
-            if row.protocol not in (FRESH_DIR, SINGLE):
-                t0 = clock()
-                call()
-                times.append(clock() - t0)
-                continue
-            d = tempfile.mkdtemp(prefix="bench_")
+            d = tempfile.mkdtemp(prefix="bench_") if fresh else None
             try:
+                c0 = cpu()
                 t0 = clock()
-                call(os.path.join(d, "out"))
-                times.append(clock() - t0)
+                call(os.path.join(d, "out")) if fresh else call()
+                walls.append(clock() - t0)
+                cpus.append(sum(s - c0.get(k, 0.0) for k, s in cpu().items()))
             finally:
-                shutil.rmtree(d, ignore_errors=True)
-    return times
-
-
-def time_control(spark) -> float:
-    """min-of-N q1 — the host-quietness probe."""
-    return round(min(time_row(spark, CONTROL)), 3)
+                if fresh:
+                    shutil.rmtree(d, ignore_errors=True)
+    return walls, cpus
 
 
 def _int_or_raw(value: str) -> int | str:
@@ -373,75 +397,31 @@ def _int_or_raw(value: str) -> int | str:
         return value
 
 
-def steal_mark() -> tuple[int, int]:
-    """(steal, total) jiffies from /proc/stat's aggregate cpu line.
-
-    This container is a hypervisor guest, and the r16/r17 acceptance
-    campaigns' "roaming spikes" are invisible to in-guest ps/loadavg
-    attribution (the r17 spike-triggered ps sampler saw ONLY the bench
-    itself during flagged windows). Steal time is the mechanical
-    instrument: it counts cycles the hypervisor withheld from this
-    guest's runnable vCPUs, which no in-guest process can cause — so a
-    per-suite-window steal%% directly measures how much external
-    contention the rows timed in that window suffered, instead of
-    inferring it from an instantaneous q1 probe that a short spike can
-    dodge."""
-    vals = [int(x) for x in open("/proc/stat").readline().split()[1:]]
-    steal = vals[7] if len(vals) > 7 else 0
-    return steal, sum(vals[:8])
-
-
-def steal_pct(since: tuple[int, int], now: tuple[int, int]) -> float:
-    """Steal % of total CPU time between two steal_mark() readings."""
-    ds, dt = now[0] - since[0], now[1] - since[1]
-    return round(100.0 * ds / dt, 2) if dt > 0 else 0.0
-
-
 def load_pins() -> dict:
     with open(os.path.join(REPO, "BENCH_PINS.json")) as fh:
         return json.load(fh)
 
 
-def quiet_ceiling(pins_doc: dict, bound: str) -> float:
-    """The q1 ceiling of the probe at ``bound`` (PRE, a checkpoint tag,
-    or TAIL for the post-control). Position-aware (r16 calibration,
-    BENCH_BASELINE.md): on a quiet host the probe reads faster the
-    deeper the session, so the pre-control, the early checkpoints, the
-    later checkpoints and the post-control each have their own ceiling.
-    Read only from the pins doc; a missing ceiling raises KeyError."""
-    if bound == PRE:
-        return float(pins_doc["control_q1_pre_quiet_hi"])
-    if bound == TAIL:
-        return float(pins_doc["control_q1_quiet"][1])
-    later = pins_doc["checkpoint_q1_quiet_hi"]
-    return float(pins_doc["checkpoint_early_quiet_hi"].get(bound, later))
+def _sf() -> float | str:
+    """The scale factor named by SF_DIR (``.../sf0.1`` -> 0.1)."""
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
 
 
-def probe_quiet(detail: dict, pins_doc: dict, bound: str) -> bool:
-    """Whether a reading has the probe at ``bound`` and it read quiet."""
-    hi = quiet_ceiling(pins_doc, bound)
-    if bound == PRE:
-        q1 = detail.get("control_q1_pre")
-    elif bound == TAIL:
-        q1 = detail.get("control_q1_post")
-    else:
-        q1 = ((detail.get("suite_checkpoints") or {}).get(bound) or {}).get("q1")
-    return q1 is not None and q1 <= hi
+def host_record(spark) -> dict:
+    """The host a reading was taken on: cores, RAM, Spark's default
+    parallelism and the scale factor. :func:`host_key` of it picks the
+    reading's entry in BENCH_PINS.json."""
+    return {**host_facts(),
+            "parallelism": spark.sparkContext.defaultParallelism,
+            "sf": _sf()}
 
 
-def quiet_windows(detail: dict, pins_doc: dict) -> dict[str, dict]:
-    """tag -> {steal, opener_ok, closer_ok} for each window of a reading:
-    its steal % and whether both bounding probes read quiet."""
-    cps = detail.get("suite_checkpoints") or {}
-    return {
-        tag: {
-            "steal": (detail.get("steal_pct_tail") if tag == TAIL
-                      else (cps.get(tag) or {}).get("steal_pct")),
-            "opener_ok": probe_quiet(detail, pins_doc, opener),
-            "closer_ok": probe_quiet(detail, pins_doc, tag),
-        }
-        for tag, (opener, _) in windows().items()
-    }
+def host_key(host: dict) -> str:
+    """``nproc4-par4-ram16g-sf0.1``: readings compare only against pins
+    taken on the same cores, parallelism, RAM and scale factor."""
+    return (f"nproc{host['nproc']}-par{host['parallelism']}-"
+            f"ram{round(host['ram_gb'])}g-sf{host['sf']}")
 
 
 def rows_by_key() -> dict[str, list[str]]:
@@ -515,75 +495,18 @@ def warm_up(spark) -> None:
 
 def main() -> int:
     spark = get_session("kafka_topic_dumper_spark-bench")
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     warm_up(spark)
 
-    # Bracketing controls (r7 verdict item 3): a single post-suite
-    # control cannot detect mid-suite transient contention (the r7
-    # knn_graph ambiguity: 3.0 s mid-suite, 0.467 s control AFTER).
-    # Running the SAME probe before and after bounds the window: both
-    # ~0.6 s → the host was quiet throughout; pre quiet + post inflated
-    # (or vice versa) → contention arrived mid-suite and per-row
-    # outliers should be discounted before calling them regressions.
-    run_mark = steal_mark()
-    control_q1_pre = time_control(spark)
-    window_mark = steal_mark()
-
-    # Opt-in early abort for acceptance attempts (r17): a pre-control
-    # above the quiet ceiling already dooms the reading's acceptance
-    # (the gate requires BOTH brackets quiet), yet the suite would
-    # still burn ~11 minutes — attempts 1 and 5 of the r17 campaign
-    # lost exactly that way. tools/bench_accept.py sets the env var;
-    # the driver's per-round readings (which must complete regardless
-    # of load) never do.
-    if os.environ.get("SPARK_GRAFT_BENCH_ABORT_ON_LOADED_PRE"):
-        pre_hi = quiet_ceiling(load_pins(), PRE)
-        if control_q1_pre > pre_hi:
-            print(json.dumps({
-                "metric": "aborted_loaded_pre_control",
-                "control_q1_pre": control_q1_pre,
-                "pre_quiet_hi": pre_hi,
-            }))
-            return 3
-
-    # Per-window contamination checkpoints (r15): a q1 probe plus a
-    # loadavg snapshot after each window, so a triage can discount
-    # exactly the windows whose bounding checkpoints are inflated and
-    # trust the rest (one external spike used to void a whole ~12-minute
-    # reading). The probe is time_control() itself — the SAME protocol
-    # the quiet ceilings in BENCH_PINS.json were calibrated against.
-    # The steal % is read BEFORE the probe so it integrates exactly the
-    # window the checkpoint bounds (r17: a short hypervisor spike can
-    # dodge the q1 probe; steal cannot be dodged). Detail only — the
-    # stdout line is size-capped.
     recorded: dict[str, dict[str, float]] = {}
-    suite_checkpoints: dict[str, dict] = {}
-    for tag, (_, suites) in windows().items():
-        for suite in suites:
-            timings = recorded.setdefault(suite.key, {})
-            for row in suite.rows:
-                times = [_record_run(row.name, dt) for dt in time_row(spark, row)]
-                timings[row.name] = round(min(times), 3)
-        if tag == TAIL:
-            continue
-        now = steal_mark()
-        steal, window_mark = steal_pct(window_mark, now), now
-        q1 = time_control(spark)
-        load1, load5 = open("/proc/loadavg").read().split()[:2]
-        suite_checkpoints[tag] = {
-            "q1": q1, "load1": float(load1), "load5": float(load5),
-            "steal_pct": steal,
-        }
-
-    # Post-suite control (r6 verdict item 8; bracketed since r8 by
-    # control_q1_pre above). BENCH_BASELINE.md's convention: ~0.6 s
-    # means the host was quiet; a 1.3-1.6x inflation flags the
-    # documented concurrent-load band, telling the reader to discount
-    # a uniform slowdown across unrelated rows before calling it a
-    # regression.
-    steal_pct_tail = steal_pct(window_mark, steal_mark())
-    control_q1 = time_control(spark)
-    steal_pct_run = steal_pct(run_mark, steal_mark())
+    cpu_runs: dict[str, list[float]] = {}
+    for suite in SUITES:
+        timings = recorded.setdefault(suite.key, {})
+        for row in suite.rows:
+            walls, cpus = time_row(spark, row)
+            for wall, cpu in zip(walls, cpus):
+                _record_run(row.name, wall)
+                _record_run(row.name, cpu, cpu_runs)
+            timings[row.name] = round(min(walls), 3)
 
     # The driver keeps only the LAST 2000 chars of stdout and parses
     # the final line as JSON (BENCH_r07/r09 were recorded unparsed when
@@ -597,11 +520,8 @@ def main() -> int:
         "value_cold": _cold_total(timings, RUN_TIMES),
         "unit": "sec",
         "queries": timings,
-        "control_q1": round(control_q1, 3),
-        "control_q1_pre": control_q1_pre,
-        "control_q1_post": round(control_q1, 3),
         "n_runs": N_RUNS,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": _sf(),
         "detail": "BENCH_DETAIL.json",
         # Scaling legibility (r18 verdict item 2, suspect_cpus_ignored):
         # the EFFECTIVE parallelism this run executed with, printed in
@@ -617,27 +537,23 @@ def main() -> int:
         summary["value_" + key[len("queries_"):]] = round(sum(t.values()), 3)
     detail = dict(summary)
     detail.update(recorded)
-    detail["suite_checkpoints"] = suite_checkpoints
     # Per-run and cold columns (r18 verdict items 2-3): every benched
     # row's [run1..runN] in run order, plus the derived first-run
     # column — prices persist-based wins honestly (cold vs warm min)
     # and explains flat low-core ratios (runs 2..N are cache-backed).
     detail["query_runs"] = RUN_TIMES
     detail["queries_cold"] = _cold_column(RUN_TIMES)
-    # Steal accounting (r17, detail-only to respect the stdout size
-    # cap): per-window steal%% lives in each checkpoint entry;
-    # steal_pct_tail covers dump_pipeline after the last checkpoint
-    # (the r16 loop-4 blind spot — a late spike AFTER the last
-    # checkpoint that only the post-control caught); steal_pct_run is
-    # the whole-run integral.
-    detail["steal_pct_tail"] = steal_pct_tail
-    detail["steal_pct_run"] = steal_pct_run
+    # The CPU side of the same runs, and the host the pins are keyed by
+    # (tools/bench_compare.py gates each row on both).
+    detail["query_cpu_runs"] = cpu_runs
+    detail["query_cpu"] = {n: min(c) for n, c in cpu_runs.items()}
+    detail["host"] = host_record(spark)
     write_json(os.path.join(REPO, "BENCH_DETAIL.json"), detail)
     line = json.dumps(summary)
     # Belt and braces: if the line would still overflow the driver's
     # capture, drop the per-query dict; if the per-suite totals alone
     # still overflow (one value_vN key accrues per round), fall back to
-    # the bare metric/control keys — every dropped number is already in
+    # the bare metric keys — every dropped number is already in
     # BENCH_DETAIL.json.
     if len(line) > 1900:
         summary.pop("queries")
@@ -646,9 +562,8 @@ def main() -> int:
         summary = {
             k: summary[k]
             for k in (
-                "metric", "value", "value_cold", "unit", "control_q1_pre",
-                "control_q1_post", "n_runs", "sf", "detail",
-                "master", "parallelism", "shuffle_partitions",
+                "metric", "value", "value_cold", "unit", "n_runs", "sf",
+                "detail", "master", "parallelism", "shuffle_partitions",
             )
         }
         line = json.dumps(summary)

@@ -452,7 +452,11 @@ def main(argv: list[str] | None = None) -> int:
 
     # reload
     transformer = load_transformer(opts.transformer)
-    dump_id = opts.prefix or reload_mod.find_latest_dump_id(spark, opts.output)
+    try:
+        dump_id = opts.prefix or reload_mod.find_latest_dump_id(spark, opts.output)
+    except FileNotFoundError as exc:
+        log.error("nothing to reload: %s", exc)
+        return 2
     # End offsets are snapshotted only on a cold reload, inside
     # reload_dump and before anything is produced (kafka_client.py:378);
     # a hot skip never reads the archive or asks the broker.

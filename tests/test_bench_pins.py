@@ -4,16 +4,16 @@ lockstep with what bench.py actually times.
 The round-14 compare misclassified two at-pin rows as 1.2-1.5x band
 residents because the ad-hoc compare read stale first-table pins from
 the BENCH_BASELINE.md prose. BENCH_PINS.json is the single source of
-truth from round 14 on; these tests keep it complete (every benched
-row pinned, no orphan pins) and sane, so tools/bench_compare.py can
-never silently compare against a stale or missing pin.
+truth; it holds one entry per host key (cores, parallelism, RAM, scale
+factor), each row pinned at a wall and a CPU value. These tests keep
+every entry complete (every benched row pinned, no orphan pins) and
+sane, so tools/bench_compare.py can never silently compare against a
+stale, missing or foreign-host pin.
 
-Artifact split (round 15, r14 verdict item 1): BENCH_DETAIL.json is
-the RAW latest full-suite reading — the driver overwrites it with a
-loaded-host reading every round, so nothing here asserts on it.
-BENCH_ACCEPTED.json is the builder's accepted quiet reading — written
-only when the bracketing controls confirm a quiet host — and is what
-the no-trips invariant asserts on.
+Artifact split: BENCH_DETAIL.json is the RAW latest full-suite reading,
+overwritten by every bench run, so nothing here asserts on it.
+BENCH_ACCEPTED.json is the reading the current pins were taken from,
+and is what the no-trips invariant asserts on.
 
 Pure-JSON tests — no SparkSession.
 """
@@ -28,87 +28,76 @@ from tests.bench_modules import REPO, load
 bench = load("bench")
 
 
-def _load_pins() -> dict:
-    with open(os.path.join(REPO, "BENCH_PINS.json")) as f:
-        return json.load(f)
-
-
-def _bench_row_names() -> set[str]:
-    """Every query name bench.py times: the rows of its SUITES table."""
-    return {r.name for s in bench.SUITES for r in s.rows}
+def _entries() -> dict[str, dict]:
+    return bench.load_pins()["hosts"]
 
 
 def test_every_benched_row_has_a_pin():
-    pins = set(_load_pins()["pins"])
-    benched = _bench_row_names()
-    missing = benched - pins
-    assert not missing, (
-        f"bench.py times rows with no accepted pin in BENCH_PINS.json: "
-        f"{sorted(missing)} — add the pin in the same commit that "
-        f"accepts the first quiet reading"
-    )
+    benched = set(bench.ROWS)
+    for key, entry in _entries().items():
+        missing = benched - set(entry["pins"])
+        assert not missing, (
+            f"{key}: bench.py times rows with no pin in BENCH_PINS.json: "
+            f"{sorted(missing)} — pin them from a full reading on that host"
+        )
 
 
 def test_no_orphan_pins():
-    pins = set(_load_pins()["pins"])
-    benched = _bench_row_names()
-    orphans = pins - benched
-    assert not orphans, (
-        f"BENCH_PINS.json pins rows bench.py no longer times: "
-        f"{sorted(orphans)} — remove the pin (and record why in "
-        f"BENCH_BASELINE.md) when a row leaves the bench"
-    )
+    benched = set(bench.ROWS)
+    for key, entry in _entries().items():
+        orphans = set(entry["pins"]) - benched
+        assert not orphans, (
+            f"{key}: BENCH_PINS.json pins rows bench.py no longer times: "
+            f"{sorted(orphans)} — remove the pin (and record why in "
+            f"BENCH_BASELINE.md) when a row leaves the bench"
+        )
 
 
 def test_pins_are_sane():
-    doc = _load_pins()
+    doc = bench.load_pins()
     assert 1.0 < doc["band_low"] < doc["tripwire"]
-    for name, entry in doc["pins"].items():
-        assert isinstance(entry["pin"], (int, float)) and entry["pin"] > 0, name
-        # pins are seconds at sf0.1 on local[32]; nothing legitimately
-        # pins at over a minute (realvocab, the slowest, is ~23 s)
-        assert entry["pin"] < 60, name
-        assert entry["round"].startswith("r"), name
+    assert doc["hosts"]
+    for key, entry in doc["hosts"].items():
+        assert bench.host_key(entry["host"]) == key
+        for name, pin in entry["pins"].items():
+            assert set(pin) == {"wall", "cpu"}, name
+            # seconds at the entry's scale factor: nothing legitimately
+            # pins at zero or at over five minutes of wall
+            assert 0 < pin["wall"] < 300 and pin["cpu"] > 0, name
 
 
 def test_bench_accepted_matches_pin_coverage():
-    """The accepted reading's rows are exactly the pinned set.
+    """The accepted reading's rows are exactly its host's pinned set.
 
-    Asserts on BENCH_ACCEPTED.json — the builder-only accepted quiet
-    reading — NOT on BENCH_DETAIL.json, which the driver overwrites
-    with a loaded-host reading every round (the r14 version of this
-    test asserted on BENCH_DETAIL.json and went red on every
-    post-driver tree; r14 verdict item 1).
+    Asserts on BENCH_ACCEPTED.json, the reading the pins came from,
+    NOT on BENCH_DETAIL.json, which every bench run overwrites (the
+    r14 version of this test asserted on BENCH_DETAIL.json and went
+    red on every later tree; r14 verdict item 1).
     """
     with open(os.path.join(REPO, "BENCH_ACCEPTED.json")) as f:
         detail = json.load(f)
-    benched: set[str] = set()
-    for key, val in detail.items():
-        if key.startswith("queries") and isinstance(val, dict):
-            benched |= {k for k, v in val.items() if isinstance(v, (int, float))}
-    pins = set(_load_pins()["pins"])
+    benched = set(bench.load_timings(detail))
+    pins = set(_entries()[bench.host_key(detail["host"])]["pins"])
     assert benched == pins, (
         f"benched-without-pin: {sorted(benched - pins)}; "
         f"pin-without-bench: {sorted(pins - benched)}"
     )
 
 
-def test_compare_tool_runs_clean_on_accepted_reading():
-    """The accepted quiet reading has zero >tripwire rows, by definition
-    of 'accepted' — a trip here means someone updated BENCH_ACCEPTED.json
-    with a reading that the drift convention says needs triage first.
+def test_compare_tool_runs_clean_on_accepted_reading(capsys):
+    """The accepted reading has zero >tripwire rows against its own
+    host's pins — a trip here means BENCH_ACCEPTED.json and the pins
+    came apart.
 
     Deliberately does NOT assert on the working-tree BENCH_DETAIL.json:
-    that file is the driver's raw latest reading (often from a loaded
-    host) and is report-only — compare it with
+    that file is the raw latest reading (often from a loaded host) and
+    is report-only — compare it with
     ``python tools/bench_compare.py BENCH_DETAIL.json`` when triaging.
     """
-    with open(os.path.join(REPO, "BENCH_ACCEPTED.json")) as f:
-        timings = bench.load_timings(json.load(f))
-    assert len(timings) == len(_load_pins()["pins"])
-    pins = _load_pins()["pins"]
-    trips = [n for n, s in timings.items() if s / pins[n]["pin"] > 1.5]
-    assert not trips, trips
+    compare = load("bench_compare")
+    path = os.path.join(REPO, "BENCH_ACCEPTED.json")
+    assert compare.main(["bench_compare.py", path]) == 0
+    assert f"rows compared: {len(bench.ROWS)}" in capsys.readouterr().out
 
 
 def test_bench_run_recording_helpers():

@@ -3,8 +3,8 @@ triage tool that reads both — fake thunks and a fake clock, no
 SparkSession.
 
 SUITES is the only place that says which rows are timed, in which
-order, inside which checkpoint window, under which recording key and
-with which protocol; time_row is the only loop that times them.
+order, under which recording key and with which protocol; time_row is
+the only loop that times them, recording wall and CPU per call.
 """
 
 from __future__ import annotations
@@ -45,18 +45,33 @@ def test_min_of_n_records_every_run_in_order():
     calls: list = []
     row = _counting_row(bench.MIN_OF_N, calls)
     times = bench.time_row(None, row,
-                           clock=_clock(0.0, 1.0, 10.0, 10.5, 20.0, 22.0))
-    assert times == [1.0, 0.5, 2.0]
+                           clock=_clock(0.0, 1.0, 10.0, 10.5, 20.0, 22.0),
+                           # run 1: pid 2 exits (adds nothing, not -5)
+                           # and JIT thread (1, 9) used 2 s (netted out);
+                           # run 2: pid 3 starts (adds all its time)
+                           cpu=_clock({1: 0.0, 2: 5.0, (1, 9): -1.0},
+                                      {1: 6.0, (1, 9): -3.0},
+                                      {1: 4.0}, {1: 5.0, 3: 1.0},
+                                      {1: 5.0, 3: 1.0}, {1: 13.0, 3: 1.0}))
+    assert times == ([1.0, 0.5, 2.0], [4.0, 2.0, 8.0])
     assert calls == [(), (), ()]
 
 
 def test_warm_first_makes_n_plus_one_calls_and_times_n():
-    calls: list = []
-    row = _counting_row(bench.WARM_FIRST, calls)
-    times = bench.time_row(None, row,
-                           clock=_clock(0.0, 3.0, 5.0, 6.0, 7.0, 9.0))
-    assert len(calls) == 4
-    assert times == [3.0, 1.0, 2.0]
+    """The untimed warm call reads no clock; each timed call is
+    bracketed by the CPU reading outside the wall one, so reading
+    /proc is never billed as wall time."""
+    events: list = []
+
+    def tick(kind, value):
+        return lambda: events.append(kind) or value(len(events))
+
+    row = bench.Row("fake", bench.WARM_FIRST,
+                    lambda spark: lambda: events.append("call"))
+    times = bench.time_row(None, row, clock=tick("clock", float),
+                           cpu=tick("cpu", lambda n: {1: 10.0 * n}))
+    assert events == ["call"] + ["cpu", "clock", "call", "clock", "cpu"] * 3
+    assert times == ([2.0] * 3, [40.0] * 3)
 
 
 @pytest.mark.parametrize("protocol,runs", [(bench.FRESH_DIR, 3),
@@ -72,8 +87,10 @@ def test_fresh_dir_protocols_get_a_new_directory_per_run(protocol, runs):
         return call
 
     times = bench.time_row(None, bench.Row("fake", protocol, prepare),
-                           clock=_clock(*range(2 * runs)))
-    assert len(times) == len(set(dirs)) == runs
+                           clock=_clock(*range(2 * runs)),
+                           cpu=_clock(*({1: 3.0 * t} for t in range(2 * runs))))
+    assert times == ([1] * runs, [3.0] * runs)
+    assert len(set(dirs)) == runs
     assert not any(os.path.exists(d) for d in dirs)
 
 
@@ -117,32 +134,30 @@ def test_each_row_releases_its_tracked_persists():
     assert len(caching._TRACKED) == mark
 
 
-def _placement() -> dict[str, tuple[str, str, str]]:
-    return {r.name: (s.tag, s.key, r.protocol)
+def _placement() -> dict[str, tuple[str, str]]:
+    return {r.name: (s.key, r.protocol)
             for s in bench.SUITES for r in s.rows}
 
 
 def test_irregular_rows_keep_their_window_key_and_protocol():
     where = _placement()
-    assert where["dump_pipeline"] == ("TAIL", "queries", bench.SINGLE)
+    assert where["dump_pipeline"] == ("queries", bench.SINGLE)
     for build in ("similarity_topk_lsh_stored_build",
                   "similarity_topk_ivf_stored_build"):
-        assert where[build] == ("after_stored_builds", "queries_v3",
-                                bench.FRESH_DIR)
-    assert where["dedup_minhash_lsh_prod"][:2] == ("after_realvocab",
-                                                   "queries_prod")
-    assert where["dedup_editdist_join_realvocab"][:2] == (
-        "after_realvocab", "queries_editdist_realvocab")
+        assert where[build] == ("queries_v3", bench.FRESH_DIR)
+    assert where["dedup_minhash_lsh_prod"][0] == "queries_prod"
+    assert where["dedup_editdist_join_realvocab"][0] == (
+        "queries_editdist_realvocab")
     assert where["dedup_editdist_prefix_stored"] == (
-        "after_editdist", "queries_editdist_prefix_stored", bench.WARM_FIRST)
+        "queries_editdist_prefix_stored", bench.WARM_FIRST)
     assert where["dedup_editdist_prefix_stored_build"] == (
-        "after_editdist", "queries_editdist_prefix_stored", bench.FRESH_DIR)
+        "queries_editdist_prefix_stored", bench.FRESH_DIR)
 
 
 def test_suite_table_is_well_formed():
     """Each row appears once; a row without a thunk is a registry
-    query; each protocol is one time_row knows; the headline window
-    opens the run and dump_pipeline closes it."""
+    query; each protocol is one time_row knows; the headline rows
+    open the run and dump_pipeline closes it."""
     names = [r.name for s in bench.SUITES for r in s.rows]
     assert len(names) == len(set(names)) == len(bench.ROWS)
     protocols = {bench.MIN_OF_N, bench.WARM_FIRST, bench.FRESH_DIR,
@@ -157,27 +172,31 @@ def test_suite_table_is_well_formed():
 
 def test_standalone_accepts_every_pinned_row(monkeypatch, tmp_path, capsys):
     """tools/bench_standalone.py triages any benched row, each timed
-    by time_row with that row's own protocol."""
+    by time_row with that row's own protocol, and judges it against
+    its host's pins."""
     standalone = load("bench_standalone")
-    pinned = sorted(bench.load_pins()["pins"])
+    pins_doc = bench.load_pins()
+    key, entry = next(iter(pins_doc["hosts"].items()))
+    pinned = sorted(entry["pins"])
     timed = []
 
     def fake_time_row(spark, row):
         timed.append(row)
-        return [0.5, 0.25]
+        return [0.5, 0.25], [2.0, 1.5]
 
     monkeypatch.setattr(bench, "SF_DIR", str(tmp_path))
     monkeypatch.setattr(bench, "warm_up", lambda spark: None)
     monkeypatch.setattr(bench, "time_row", fake_time_row)
+    monkeypatch.setattr(bench, "host_record", lambda spark: entry["host"])
     monkeypatch.setattr(standalone, "get_session", lambda name: None)
     assert standalone.main(["bench_standalone.py", *pinned]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert sorted(out["rows"]) == pinned
-    assert all(s == 0.25 for s in out["rows"].values())
-    # the control brackets the rows; every row keeps its protocol
-    assert [r.name for r in timed] == ["q1_pricing_summary", *pinned,
-                                       "q1_pricing_summary"]
-    assert {r.name: r.protocol for r in timed[1:-1]} == {
+    assert out["host_key"] == key and sorted(out["rows"]) == pinned
+    for n, r in out["rows"].items():
+        assert (r["wall"], r["cpu"]) == (0.25, 1.5)
+        assert r["cpu_ratio"] == round(1.5 / entry["pins"][n]["cpu"], 3)
+    # every row keeps its protocol
+    assert {r.name: r.protocol for r in timed} == {
         n: bench.ROWS[n].protocol for n in pinned}
     assert bench.ROWS["dedup_editdist_prefix_stored"].protocol == \
         bench.WARM_FIRST
@@ -193,12 +212,15 @@ def test_standalone_rejects_unbenched_rows():
     "control_q1_pre_quiet_hi", "control_q1_quiet",
     "checkpoint_q1_quiet_hi", "checkpoint_early_quiet_hi",
 ])
-def test_missing_quiet_ceiling_fails_loudly(missing):
-    """The quiet ceilings live only in BENCH_PINS.json: a pins doc
-    without one raises instead of falling back to a stale copy."""
+def test_missing_quiet_ceiling_fails_loudly(missing, capsys):
+    """The quiet ceilings are retired with the steal-era gate: a pins
+    doc that still carries one is outside the host-keyed layout and is
+    refused with exit 2 naming the key, never half-read."""
+    compare = load("bench_compare")
     pins_doc = bench.load_pins()
-    del pins_doc[missing]
+    pins_doc[missing] = 0.6
     with open(os.path.join(bench.REPO, "BENCH_ACCEPTED.json")) as f:
         reading = json.load(f)
-    with pytest.raises(KeyError, match=missing):
-        bench.quiet_windows(reading, pins_doc)
+    with pytest.raises(SystemExit) as exc:
+        compare.evaluate(reading, pins_doc)
+    assert exc.value.code == 2 and missing in capsys.readouterr().err

@@ -948,3 +948,12 @@ def test_cli_hot_skip_runs_no_spark_job(spark, tmp_path):
     assert cli.main(other) == 2
     assert spark.read.parquet(sink).count() == 60
     assert state_mod.read_latest_state(spark, state_root) == before
+
+    # no committed dump to reload: a missing root and an empty one
+    # both refuse with exit 2 before anything is produced
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for root in (empty, tmp_path / "missing"):
+        assert cli.main(["reload", *base[:4], "--output", str(root),
+                         "--reload-output", sink]) == 2
+    assert spark.read.parquet(sink).count() == 60

@@ -6,6 +6,10 @@ timings."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from kafka_topic_dumper_spark import registry
@@ -514,3 +518,17 @@ def test_vector_kernel_rows_keep_their_python_stages(spark, query, arrow_evals, 
     assert count_in(qe.executedPlan().toString(), "ArrowEvalPython") == arrow_evals
     plan = json.loads(qe.optimizedPlan().toJSON())
     assert Counter(_python_udfs(plan, [])) == udfs
+
+
+def test_explain_capture_runs_from_the_repo_root_without_pythonpath():
+    """tools/explain_capture.py imports the package from a plain
+    checkout, and with too few arguments prints its usage and exits 2
+    (before it starts a session)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run([sys.executable, "tools/explain_capture.py"],
+                          cwd=repo, env=env, capture_output=True, text=True,
+                          timeout=120)
+    assert proc.returncode == 2, proc.stderr
+    assert "ModuleNotFoundError" not in proc.stderr
+    assert "Usage" in proc.stdout

@@ -1,36 +1,36 @@
 #!/usr/bin/env python3
-"""Drift-convention bench compare: a bench reading vs the accepted pins.
+"""Bench compare: a bench reading against the pins of the host it was
+taken on.
 
 Usage::
 
     python tools/bench_compare.py [BENCH_JSON]
 
-``BENCH_JSON`` is any bench output carrying per-query timings —
-``BENCH_DETAIL.json`` (the RAW latest full-suite reading, driver-
-overwritten each round; the default), ``BENCH_ACCEPTED.json`` (the
-builder's accepted quiet reading — the blob the test suite asserts
-no-trips on), or a driver ``BENCH_r{N}.json``. Per-query timings are
-taken from the recording keys of ``bench.SUITES`` (``bench.load_timings``).
+``BENCH_JSON`` is a full ``bench.py`` reading: ``BENCH_DETAIL.json``
+(the raw latest reading, overwritten by every run; the default) or
+``BENCH_ACCEPTED.json`` (the reading the current pins were taken
+from). Wall seconds per row come from the recording keys of
+``bench.SUITES`` (``bench.load_timings``), the min process-tree
+CPU-seconds per row from ``query_cpu``, and the host from ``host``.
 
-Pins come from ``BENCH_PINS.json`` — the authoritative latest-accepted
-pin per row. This script exists because the per-round compare was
-previously re-implemented ad hoc against the BENCH_BASELINE.md prose,
-and the round-14 compare silently used two PRE-r12 pins (the stale
-first table entries) and misreported two at-pin rows as 1.2-1.5x band
-residents. One pins file + one script = no stale-pin compares.
+``BENCH_PINS.json`` holds one entry per host key (``bench.host_key``:
+cores, parallelism, RAM, scale factor); each row of an entry is pinned
+at ``{"wall", "cpu"}`` seconds. A reading whose host has no entry, or
+that carries no host/CPU record at all (the headline-only per-round
+readings such as ``BENCH_r19.json``), is refused with exit 2: a 4-core
+reading is never judged against 32-core pins.
 
-Output: per-row ratio table (worst first), the >tripwire trips, the
-band residents, and the median ratio. Exit code 1 if any row trips
-(so the compare can gate automation), 0 otherwise.
+A row trips when its wall or its CPU exceeds its pin by more than the
+tripwire (1.5x). The trip is labelled ``cpu`` when the CPU ratio trips
+(the code got more expensive) and ``wall-only`` when the CPU stayed
+under the tripwire (contention or lost parallelism). Exit 1 if any row
+trips, 0 otherwise. Each row also shows its parallel efficiency,
+CPU / (wall x parallelism).
 
-Convention reminders (BENCH_BASELINE.md):
-- a trip is analyzed, not auto-re-pinned: standalone bracketed
-  min-of-3 on a verified-quiet host FIRST (suite-position inflation is
-  documented for the editdist/mjpeg class), then the
-  old-code-on-today's-host worktree experiment to split regression
-  from host-generation drift;
-- band residents (1.2-1.5x) keep their pins;
-- pins are never lowered on a fast day.
+Conventions (BENCH_BASELINE.md): a trip is analyzed, not auto-re-pinned
+(``tools/bench_standalone.py`` on the tripped rows first); band
+residents (1.2-1.5x) keep their pins; pins are never lowered on a fast
+day.
 """
 
 from __future__ import annotations
@@ -44,156 +44,97 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
-from bench import PRE, TAIL  # noqa: E402
+
+LAYOUT = {"_description", "tripwire", "band_low", "hosts"}
 
 
-def _read(path: str) -> dict:
-    """A bench reading; a per-round BENCH_r{N}.json wraps the stdout line
-    under "parsed" (headline-only "queries")."""
-    with open(path) as fh:
-        doc = json.load(fh)
-    if isinstance(doc.get("parsed"), dict):
-        doc = doc["parsed"]
-    return doc
+def refuse(msg: str):
+    print(msg, file=sys.stderr)
+    raise SystemExit(2)
 
 
-def evaluate(bench_path: str, pins_doc: dict) -> dict:
-    """Machine-readable compare: per-row ratios, trips, flagged
-    checkpoints, and the acceptance verdict (quiet brackets + zero
-    flagged checkpoints + zero trips). Used by main() for display and
-    by tools/bench_accept.py to gate BENCH_ACCEPTED.json refreshes."""
-    pins = pins_doc["pins"]
-    tripwire = float(pins_doc["tripwire"])
-    band_low = float(pins_doc["band_low"])
+def host_pins(pins_doc: dict, host: dict) -> tuple[str, dict]:
+    """(host key, {row: {"wall", "cpu"}}) for a reading's host record;
+    refuses (exit 2) a pins doc outside the host-keyed layout and a
+    host with no entry."""
+    stale = sorted(set(pins_doc) - LAYOUT)
+    if stale:
+        refuse(f"BENCH_PINS.json has keys outside the host-keyed layout: "
+               f"{stale}")
+    key = bench.host_key(host)
+    if key not in pins_doc["hosts"]:
+        refuse(f"no pins for host {key} in BENCH_PINS.json (pinned: "
+               f"{sorted(pins_doc['hosts'])}); pin it from a full reading "
+               f"taken on this host")
+    return key, pins_doc["hosts"][key]["pins"]
 
-    raw_doc = _read(bench_path)
-    timings = bench.load_timings(raw_doc)
-    if not timings:
-        raise SystemExit(
-            f"no per-query timings found in {bench_path} — no 'queries*' "
-            f"dict keys. Is this an unparsed per-round bench file (raw stdout "
-            f"under 'output', like BENCH_r07/r09)? Point this tool at "
-            f"BENCH_DETAIL.json / BENCH_ACCEPTED.json or a parsed "
-            f"BENCH_r{{N}}.json instead."
-        )
+
+def judge(walls: dict[str, float], cpus: dict[str, float], pins: dict,
+          parallelism: int, tripwire: float) -> list[dict]:
+    """One record per pinned row of the reading, worst ratio first."""
     rows = []
-    unpinned = []
-    for name, sec in timings.items():
-        if name in pins:
-            rows.append((sec / pins[name]["pin"], name, sec, pins[name]["pin"]))
-        else:
-            unpinned.append(name)
-    rows.sort(reverse=True)
-    trips = [r for r in rows if r[0] > tripwire]
-    band = [r for r in rows if band_low <= r[0] <= tripwire]
+    for name, wall in walls.items():
+        if name not in pins:
+            continue
+        cpu = cpus[name]
+        wall_ratio = wall / pins[name]["wall"]
+        cpu_ratio = cpu / pins[name]["cpu"]
+        rows.append({
+            "row": name, "wall": wall, "cpu": cpu,
+            "wall_ratio": round(wall_ratio, 3),
+            "cpu_ratio": round(cpu_ratio, 3),
+            "efficiency": round(cpu / (wall * parallelism), 3),
+            "trip": ("cpu" if cpu_ratio > tripwire
+                     else "wall-only" if wall_ratio > tripwire else None),
+        })
+    rows.sort(key=lambda r: max(r["wall_ratio"], r["cpu_ratio"]), reverse=True)
+    return rows
 
-    checkpoints = raw_doc.get("suite_checkpoints") or {}
-    flagged = [tag for tag in checkpoints
-               if not bench.probe_quiet(raw_doc, pins_doc, tag)]
-    pre = raw_doc.get("control_q1_pre")
-    post = raw_doc.get("control_q1_post")
-    brackets_ok = (bool(checkpoints)
-                   and bench.probe_quiet(raw_doc, pins_doc, PRE)
-                   and bench.probe_quiet(raw_doc, pins_doc, TAIL))
+
+def evaluate(doc: dict, pins_doc: dict) -> dict:
+    """The verdict on one reading: per-row records, the trips, the
+    band residents, and the rows only one side has."""
+    if not (doc.get("host") and doc.get("query_cpu")):
+        refuse("the reading has no host/CPU record (a pre-CPU reading "
+               "such as BENCH_r19.json): no host-keyed pins apply")
+    key, pins = host_pins(pins_doc, doc["host"])
+    walls = bench.load_timings(doc)
+    rows = judge(walls, doc["query_cpu"], pins, doc["host"]["parallelism"],
+                 pins_doc["tripwire"])
     return {
+        "key": key,
         "rows": rows,
-        "unpinned": unpinned,
-        "trips": trips,
-        "band": band,
-        "tripwire": tripwire,
-        "band_low": band_low,
-        "checkpoints": checkpoints,
-        "flagged": flagged,
-        "pre": pre,
-        "post": post,
-        "acceptable": brackets_ok and not flagged and not trips,
-        "raw_doc": raw_doc,
+        "trips": [r for r in rows if r["trip"]],
+        "band": [r for r in rows if not r["trip"] and max(
+            r["wall_ratio"], r["cpu_ratio"]) >= pins_doc["band_low"]],
+        "unpinned": sorted(set(walls) - set(pins)),
+        "absent": sorted(set(pins) - set(walls)),
     }
 
 
 def main(argv: list[str]) -> int:
-    bench_path = argv[1] if len(argv) > 1 else os.path.join(REPO, "BENCH_DETAIL.json")
+    path = argv[1] if len(argv) > 1 else os.path.join(REPO, "BENCH_DETAIL.json")
     pins_doc = bench.load_pins()
-    pins = pins_doc["pins"]
-
-    ev = evaluate(bench_path, pins_doc)
-    rows, trips, band = ev["rows"], ev["trips"], ev["band"]
-    unpinned, timings = ev["unpinned"], {r[1]: r[2] for r in ev["rows"]}
-    timings.update({n: None for n in unpinned})
-    tripwire, band_low = ev["tripwire"], ev["band_low"]
-    print(f"bench: {bench_path}")
-    print(f"pinned rows compared: {len(rows)}   median ratio: "
-          f"{statistics.median(r[0] for r in rows):.3f}")
-
-    # Suite checkpoints (r15): if the reading carries per-suite q1 +
-    # loadavg checkpoints, print them with the out-of-quiet-range ones
-    # flagged, so a trip can be attributed to (or cleared of) a
-    # contaminated window before any re-pin discussion.
-    #
-    # Position-aware ceilings (r16 calibration, BENCH_BASELINE.md): the
-    # q1 probe reads as a function of SESSION DEPTH on a quiet host —
-    # ~0.55-0.9 right after warm-up, ~0.56 after one headline pass,
-    # 0.44-0.53 at mid-suite depth, 0.36-0.43 after the full suite —
-    # so the pre-control, the early checkpoints, the mid/late
-    # checkpoints, and the post-control each get their own ceiling.
-    # The single control_q1_quiet band (calibrated on POST-control
-    # depth) false-flagged every historical acceptance attempt.
-    flagged = ev["flagged"]
-    if ev["checkpoints"]:
-        for tag, cp in ev["checkpoints"].items():
-            hi = bench.quiet_ceiling(pins_doc, tag)
-            mark = f"  <-- LOADED (> {hi})" if cp["q1"] > hi else ""
-            # steal_pct (r17): external-contention integral over the
-            # suite window — the mechanical spike attribution the
-            # instantaneous q1 probe can miss
-            steal = (f" steal {cp['steal_pct']:.2f}%"
-                     if "steal_pct" in cp else "")
-            print(f"  checkpoint {tag}: q1 {cp['q1']:.3f} "
-                  f"load {cp['load1']:.2f}/{cp['load5']:.2f}{steal}{mark}")
-        raw = ev["raw_doc"]
-        if "steal_pct_run" in raw:
-            print(f"  steal: tail {raw.get('steal_pct_tail')}% "
-                  f"run {raw.get('steal_pct_run')}%")
-        if flagged:
-            print(f"contaminated windows: {flagged} — discount rows in "
-                  f"the suites those checkpoints bound")
-
-    # Acceptance verdict (only meaningful for a full-suite reading with
-    # bracketing controls): quiet brackets + no flagged checkpoints +
-    # zero trips.
-    pre, post = ev["pre"], ev["post"]
-    if pre is not None and post is not None and ev["checkpoints"]:
-        pre_hi = bench.quiet_ceiling(pins_doc, PRE)
-        post_hi = bench.quiet_ceiling(pins_doc, TAIL)
-        print(f"acceptance gate: pre {pre} (<= {pre_hi}: "
-              f"{'ok' if pre <= pre_hi else 'FAIL'})  post {post} (<= {post_hi}: "
-              f"{'ok' if post <= post_hi else 'FAIL'})  flagged checkpoints "
-              f"{len(flagged)}  trips {len(trips)} -> "
-              f"{'ACCEPTABLE' if ev['acceptable'] else 'NOT ACCEPTABLE'}")
-    if unpinned:
-        print(f"UNPINNED rows in bench output (add to BENCH_PINS.json "
-              f"when first accepted): {sorted(unpinned)}")
-    missing = sorted(set(pins) - set(timings))
-    if missing:
-        # driver BENCH_r{N}.json carries only the 20 headline rows, so
-        # a long absent-list is expected there — summarize it
-        if len(missing) > 10:
-            print(f"pinned rows absent from this bench output: "
-                  f"{len(missing)} (headline-only file; full per-suite "
-                  f"rows live in BENCH_DETAIL.json)")
-        else:
-            print(f"pinned rows absent from this bench output: {missing}")
-
-    print(f"\n>{tripwire}x TRIPS ({len(trips)}) — analyze per the drift "
-          f"convention before re-pinning:")
-    for ratio, name, sec, pin in trips:
-        print(f"  {ratio:5.2f}x  {name}  {sec:.3f} vs pin {pin:.3f}")
-    print(f"\n{band_low}-{tripwire}x band ({len(band)}) — keep pins:")
-    for ratio, name, sec, pin in band:
-        print(f"  {ratio:5.2f}x  {name}  {sec:.3f} vs pin {pin:.3f}")
-    print(f"\nfastest 5 vs pin:")
-    for ratio, name, sec, pin in rows[-5:]:
-        print(f"  {ratio:5.2f}x  {name}  {sec:.3f} vs pin {pin:.3f}")
+    with open(path) as fh:
+        ev = evaluate(json.load(fh), pins_doc)
+    rows, trips = ev["rows"], ev["trips"]
+    print(f"bench: {path}\nhost: {ev['key']}   rows compared: {len(rows)}   "
+          f"median ratio wall "
+          f"{statistics.median(r['wall_ratio'] for r in rows):.3f} cpu "
+          f"{statistics.median(r['cpu_ratio'] for r in rows):.3f}")
+    print(f"\n{'wall x':>7} {'cpu x':>6} {'eff':>5}  {'wall s':>7} "
+          f"{'cpu s':>7}  row")
+    for r in rows:
+        print(f"{r['wall_ratio']:7.2f} {r['cpu_ratio']:6.2f} "
+              f"{r['efficiency']:5.2f}  {r['wall']:7.3f} {r['cpu']:7.3f}  "
+              f"{r['row']}{'  <-- ' + r['trip'] if r['trip'] else ''}")
+    for what in ("unpinned", "absent"):
+        if ev[what]:
+            print(f"{what} rows: {ev[what]}")
+    labels = [r["trip"] for r in trips]
+    print(f"\n>{pins_doc['tripwire']}x trips: {len(trips)} "
+          f"(cpu {labels.count('cpu')}, wall-only {labels.count('wall-only')})"
+          f"   band: {len(ev['band'])}")
     return 1 if trips else 0
 
 

@@ -1,32 +1,28 @@
 #!/usr/bin/env python3
-"""Standalone bracketed min-of-N reading for one or more benched rows —
-the drift convention's trip-triage measurement, productized.
+"""Standalone min-of-N reading for one or more benched rows — the
+drift convention's trip-triage measurement.
 
 Usage::
 
     python tools/bench_standalone.py ROW [ROW ...]
 
 The convention (BENCH_BASELINE.md): when a row trips the 1.5x
-tripwire in a full-suite or driver reading, the FIRST step is a
-standalone bracketed min-of-3 on a verified-quiet host — suite-position
-inflation (heap pressure, position in a 100-row session) is documented
-for several row classes, and the standalone number is the comparable
-one. Re-pin only if the standalone reading is ALSO elevated (then run
-the old-code worktree experiment to split regression from host drift).
+tripwire in a full-suite reading, the FIRST step is a standalone
+min-of-3 — suite-position inflation (heap pressure, position in a
+100-row session) is documented for several row classes, and the
+standalone number is the comparable one.
 
 ROW is any row in ``bench.SUITES``. The reading uses bench.py's own
 mechanics: its session confs (``session.get_session``), sf dir,
 warm-up (``bench.warm_up``) and timing loop (``bench.time_row``, so
 each row keeps its protocol: the untimed warm call, the fresh output
-directory, the single run), and brackets the timed rows with the q1
-host-quietness control. It prints the 1-/5-/15-min load averages
-first: per the r14 finding, a settled 1-min average can mask a
-still-draining host that the 5-min average (and an inflated
-post-control) catches, so readings taken with an elevated 5-min load
-should be discarded, not recorded.
+directory, the single run, and the process-tree CPU-seconds next to
+each wall time).
 
-Output: one JSON line with the controls, per-row min-of-N seconds, and
-the ratio vs the row's BENCH_PINS.json pin (null if unpinned).
+Output: one JSON line with the host key and, per row, the min wall and
+CPU seconds; for a row pinned on this host also the two ratios, the
+parallel efficiency and the trip label (``cpu`` / ``wall-only``) that
+``tools/bench_compare.py`` would give it.
 """
 
 from __future__ import annotations
@@ -39,11 +35,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
+import bench_compare  # noqa: E402
 from kafka_topic_dumper_spark.session import get_session  # noqa: E402
 
 
 def main(argv: list[str]) -> int:
-    names = [a for a in argv[1:] if not a.startswith("-")]
+    names = argv[1:]
     if not names:
         print(__doc__)
         return 2
@@ -53,47 +50,27 @@ def main(argv: list[str]) -> int:
     if not os.path.isdir(bench.SF_DIR):
         raise SystemExit(f"SPARK_GRAFT_SF_DIR dir not found: {bench.SF_DIR}")
 
-    try:
-        load1, load5, load15 = open("/proc/loadavg").read().split()[:3]
-    except OSError as exc:
-        raise SystemExit(
-            f"cannot read /proc/loadavg ({exc}) — the quiet-host "
-            f"precondition is unverifiable here; this tool's readings "
-            f"are only meaningful on the Linux bench host"
-        )
-    print(f"loadavg 1/5/15-min: {load1} {load5} {load15}  "
-          f"(elevated 5-min => discard the reading)", file=sys.stderr)
-
-    pins = bench.load_pins()["pins"]
     spark = get_session("kafka_topic_dumper_spark-standalone")
     bench.warm_up(spark)
+    walls, cpus = {}, {}
+    for n in names:
+        wall, cpu = bench.time_row(spark, bench.ROWS[n])
+        walls[n], cpus[n] = round(min(wall), 3), round(min(cpu), 3)
 
-    # steal accounting (r17, same instrument as bench.py): the
-    # external-contention integral over the timed window — a reading
-    # with quiet q1 brackets AND near-zero steal is certified quiet
-    # against both in-guest load and hypervisor contention
-    mark = bench.steal_mark()
-    pre = bench.time_control(spark)
-    rows = {n: round(min(bench.time_row(spark, bench.ROWS[n])), 3)
-            for n in names}
-    post = bench.time_control(spark)
-    steal_pct = bench.steal_pct(mark, bench.steal_mark())
-
-    out = {
-        "metric": "standalone_bracketed_min_of_n",
+    host = bench.host_record(spark)
+    key = bench.host_key(host)
+    pins_doc = bench.load_pins()
+    entry = pins_doc["hosts"].get(key, {"pins": {}})
+    judged = {r["row"]: r for r in bench_compare.judge(
+        walls, cpus, entry["pins"], host["parallelism"], pins_doc["tripwire"])}
+    print(json.dumps({
+        "metric": "standalone_min_of_n",
         "n_runs": bench.N_RUNS,
         "sf_dir": bench.SF_DIR,
-        "loadavg": [float(load1), float(load5), float(load15)],
-        "control_q1_pre": pre,
-        "control_q1_post": post,
-        "steal_pct": steal_pct,
-        "rows": rows,
-        "ratio_vs_pin": {
-            n: (round(s / pins[n]["pin"], 3) if n in pins else None)
-            for n, s in rows.items()
-        },
-    }
-    print(json.dumps(out))
+        "host_key": key,
+        "rows": {n: judged.get(n, {"row": n, "wall": walls[n], "cpu": cpus[n]})
+                 for n in names},
+    }))
     return 0
 
 

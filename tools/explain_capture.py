@@ -14,13 +14,19 @@ from __future__ import annotations
 import os
 import sys
 
-from kafka_topic_dumper_spark import registry
-from kafka_topic_dumper_spark.session import get_session
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from kafka_topic_dumper_spark import registry  # noqa: E402
+from kafka_topic_dumper_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
+    if len(sys.argv) < 3:
+        print(__doc__)
+        return 2
     outdir = sys.argv[1]
     names = sys.argv[2:]
     os.makedirs(outdir, exist_ok=True)
