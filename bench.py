@@ -310,53 +310,29 @@ SUITES: tuple[Suite, ...] = (
 ROWS: dict[str, Row] = {r.name: r for s in SUITES for r in s.rows}
 
 
-# Thread names (/proc comm, cut at 15 chars) of the JVM's JIT compilers.
-JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
-
-
-def _stat(path: str) -> tuple[str, list[str]]:
-    """(comm, fields after comm) of a /proc stat file; ("", []) once
-    the process or thread is gone."""
-    try:
-        with open(path) as f:
-            text = f.read()
-    except FileNotFoundError:
-        return "", []
-    head, tail = text.rsplit(")", 1)
-    return head.split("(", 1)[1], tail.split()
-
-
-def tree_cpu() -> dict:
+def tree_cpu() -> dict[int, float]:
     """Cumulative CPU-seconds of each live process of this tree (the
-    driver, the Spark JVM and its Python workers) by pid, and of each
-    JIT compiler thread of the JVM, negated, by (pid, tid).
+    driver, the Spark JVM and its Python workers), by pid.
 
-    Two readings subtract key by key, so a process that exits in
+    Two readings subtract pid by pid, so a process that exits in
     between adds nothing and a new one all its time: ``pyspark.daemon``
     ignores SIGCHLD, so an exiting worker's time reaches no parent and
-    a summed reading fell by its lifetime (-22.9 CPU-s on one call).
-    The negated threads net JIT compilation out: it is warm-up billed
-    to whichever row runs (43% of the JVM's CPU early in a session),
-    and with it a row's min-of-3 CPU moved 1.67x between two readings
-    of the same code."""
-    out: dict = {}
-    for pid, role in tree():
-        _comm, fields = _stat(f"/proc/{pid}/stat")
-        if not fields:
-            continue
+    a summed reading fell by its lifetime (-22.9 CPU-s on one call)."""
+    out: dict[int, float] = {}
+    for pid, _role in tree():
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except (FileNotFoundError, ProcessLookupError):
+            continue  # exited since tree() listed it
         # utime, stime, cutime, cstime (stat fields 14-17)
         out[pid] = sum(int(x) for x in fields[11:15]) / CLK_TCK
-        if role == "jvm":
-            for tid in os.listdir(f"/proc/{pid}/task"):
-                comm, fields = _stat(f"/proc/{pid}/task/{tid}/stat")
-                if comm.startswith(JIT_THREADS):
-                    out[pid, tid] = -sum(int(x) for x in fields[11:13]) / CLK_TCK
     return out
 
 
 def time_row(spark, row: Row,
              clock: Callable[[], float] = time.perf_counter,
-             cpu: Callable[[], dict] = tree_cpu,
+             cpu: Callable[[], dict[int, float]] = tree_cpu,
              ) -> tuple[list[float], list[float]]:
     """(wall seconds, process-tree CPU-seconds) of each timed call of
     ``row``, in run order. The CPU reading brackets the wall one, so

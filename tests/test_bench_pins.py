@@ -62,8 +62,8 @@ def test_pins_are_sane():
         for name, pin in entry["pins"].items():
             assert set(pin) == {"wall", "cpu"}, name
             # seconds at the entry's scale factor: nothing legitimately
-            # pins at zero or at over five minutes of wall
-            assert 0 < pin["wall"] < 300 and pin["cpu"] > 0, name
+            # pins at zero or at over a minute of wall
+            assert 0 < pin["wall"] < 60 and pin["cpu"] > 0, name
 
 
 def test_bench_accepted_matches_pin_coverage():

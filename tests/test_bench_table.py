@@ -46,11 +46,9 @@ def test_min_of_n_records_every_run_in_order():
     row = _counting_row(bench.MIN_OF_N, calls)
     times = bench.time_row(None, row,
                            clock=_clock(0.0, 1.0, 10.0, 10.5, 20.0, 22.0),
-                           # run 1: pid 2 exits (adds nothing, not -5)
-                           # and JIT thread (1, 9) used 2 s (netted out);
+                           # run 1: pid 2 exits (adds nothing, not -5);
                            # run 2: pid 3 starts (adds all its time)
-                           cpu=_clock({1: 0.0, 2: 5.0, (1, 9): -1.0},
-                                      {1: 6.0, (1, 9): -3.0},
+                           cpu=_clock({1: 0.0, 2: 5.0}, {1: 4.0},
                                       {1: 4.0}, {1: 5.0, 3: 1.0},
                                       {1: 5.0, 3: 1.0}, {1: 13.0, 3: 1.0}))
     assert times == ([1.0, 0.5, 2.0], [4.0, 2.0, 8.0])
@@ -208,19 +206,29 @@ def test_standalone_rejects_unbenched_rows():
         standalone.main(["bench_standalone.py", "no_such_row"])
 
 
+# The ids are those of the retired quiet-ceiling cases, kept so the
+# suite's test ids stay stable; each now names one reading the gate
+# cannot key to pins.
 @pytest.mark.parametrize("missing", [
-    "control_q1_pre_quiet_hi", "control_q1_quiet",
-    "checkpoint_q1_quiet_hi", "checkpoint_early_quiet_hi",
+    pytest.param("host", id="control_q1_pre_quiet_hi"),
+    pytest.param("query_cpu", id="control_q1_quiet"),
+    pytest.param("pins entry", id="checkpoint_q1_quiet_hi"),
+    pytest.param("BENCH_r19.json", id="checkpoint_early_quiet_hi"),
 ])
 def test_missing_quiet_ceiling_fails_loudly(missing, capsys):
-    """The quiet ceilings are retired with the steal-era gate: a pins
-    doc that still carries one is outside the host-keyed layout and is
-    refused with exit 2 naming the key, never half-read."""
+    """A reading with no host record, no per-row CPU or no pins entry
+    for its host, or a committed pre-CPU reading, is refused with exit
+    2 and a message naming what is missing; it is never half-judged."""
     compare = load("bench_compare")
-    pins_doc = bench.load_pins()
-    pins_doc[missing] = 0.6
-    with open(os.path.join(bench.REPO, "BENCH_ACCEPTED.json")) as f:
-        reading = json.load(f)
+    name = missing if missing.endswith(".json") else "BENCH_ACCEPTED.json"
+    with open(os.path.join(bench.REPO, name)) as f:
+        doc = json.load(f)
+    if missing in ("host", "query_cpu"):
+        del doc[missing]
+    elif missing == "pins entry":
+        doc["host"] = dict(doc["host"], nproc=32, parallelism=32)
     with pytest.raises(SystemExit) as exc:
-        compare.evaluate(reading, pins_doc)
-    assert exc.value.code == 2 and missing in capsys.readouterr().err
+        compare.evaluate(doc, bench.load_pins())
+    want = (bench.host_key(doc["host"]) if missing == "pins entry"
+            else "no host/CPU record")
+    assert exc.value.code == 2 and want in capsys.readouterr().err

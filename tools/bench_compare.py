@@ -30,7 +30,9 @@ CPU / (wall x parallelism).
 Conventions (BENCH_BASELINE.md): a trip is analyzed, not auto-re-pinned
 (``tools/bench_standalone.py`` on the tripped rows first); band
 residents (1.2-1.5x) keep their pins; pins are never lowered on a fast
-day.
+day. Exit 1 is advisory until the gate has a contention control: on
+the pinned 4-core host, readings of unchanged code still trip ``cpu``
+on single rows (BENCH_BASELINE.md, "Host-keyed CPU pins").
 """
 
 from __future__ import annotations
@@ -45,8 +47,6 @@ sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
 
-LAYOUT = {"_description", "tripwire", "band_low", "hosts"}
-
 
 def refuse(msg: str):
     print(msg, file=sys.stderr)
@@ -55,12 +55,7 @@ def refuse(msg: str):
 
 def host_pins(pins_doc: dict, host: dict) -> tuple[str, dict]:
     """(host key, {row: {"wall", "cpu"}}) for a reading's host record;
-    refuses (exit 2) a pins doc outside the host-keyed layout and a
-    host with no entry."""
-    stale = sorted(set(pins_doc) - LAYOUT)
-    if stale:
-        refuse(f"BENCH_PINS.json has keys outside the host-keyed layout: "
-               f"{stale}")
+    refuses (exit 2) a host with no entry."""
     key = bench.host_key(host)
     if key not in pins_doc["hosts"]:
         refuse(f"no pins for host {key} in BENCH_PINS.json (pinned: "
