@@ -130,7 +130,12 @@ def ingest_stream(
     appending duplicates — the same idempotent dynamic-overwrite
     pattern as the streaming MERGE maintenance row
     (streaming/queries.py). Readers see the union via
-    ``spark.read.parquet(out_root + "/clean")``."""
+    ``spark.read.parquet(out_root + "/clean")``.
+
+    ``available_now=False`` keeps the query running on the default
+    trigger, as in ``streaming.dump.dump_stream``: a micro-batch per
+    landed file, and a ``spark.sql.streaming.pollingDelay`` wait (100
+    ms under ``session.get_session``) after a poll that found none."""
     import os
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:

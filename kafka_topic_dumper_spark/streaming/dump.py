@@ -136,6 +136,11 @@ def dump_stream(
     offset commits (kafka_client.py:158-166,174). Restart-safe: a
     crashed dump resumes from the checkpoint instead of re-reading.
     Returns the started StreamingQuery (caller awaits termination).
+    ``available_now=False`` runs continuously on the default trigger: a
+    micro-batch as soon as files arrive, and a wait of
+    ``spark.sql.streaming.pollingDelay`` (100 ms under
+    :func:`~kafka_topic_dumper_spark.session.get_session`) after a poll
+    that found none.
 
     ``dump_id``: when given, files land under the catalog layout
     ``<output_root>/dump_id=<id>/`` that find_latest_dump_id/read_dump

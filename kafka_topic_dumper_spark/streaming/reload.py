@@ -108,6 +108,9 @@ def reload_stream(
     in the batch path; in production the sink is Kafka
     (writeStream.format('kafka')), here a file sink for the
     broker-less environment. Returns the started StreamingQuery.
+    ``available_now=False`` runs continuously, as in
+    :func:`.dump.dump_stream`; the source reads the dump's file-sink log
+    when it has one, so it sees only committed dump files.
     """
     records = spark.readStream.schema("key binary, value binary").parquet(
         dump_dir(output_root, dump_id)

@@ -1,9 +1,12 @@
 """Test transformer plug-ins (FIXTURES.md §1.3): Identity is the
 engine default; Explode tests 1→k flat-map semantics; Drop tests 1→0;
 SuffixedIdentity tests that a transform-only subclass of Identity keeps
-the row path. Loaded via the ``module:Class`` plug-in API."""
+the row path; FailOnce injects one transformer failure. Loaded via the
+``module:Class`` plug-in API."""
 
 from __future__ import annotations
+
+import os
 
 from kafka_topic_dumper_spark.transform import Identity, Transformer
 
@@ -41,3 +44,26 @@ class SuffixedIdentity(Identity):
 
     def get_id(self) -> str:
         return "SuffixedIdentity"
+
+
+class FailOnce(Transformer):
+    """Identity on the row path that raises once: the first call to
+    find ``marker`` absent creates it and raises, every later call
+    passes the row through. ``marker`` is set on the instance before
+    the query starts; the exclusive create makes exactly one call fail
+    even when tasks race in separate workers."""
+
+    marker: str = ""
+
+    def transform(self, row):
+        if not os.path.exists(self.marker):
+            try:
+                os.close(os.open(self.marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+            except FileExistsError:
+                pass
+            else:
+                raise RuntimeError("injected transformer failure")
+        yield (row.key, row.value)
+
+    def get_id(self) -> str:
+        return "FailOnce"

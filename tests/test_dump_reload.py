@@ -12,6 +12,7 @@ import os
 import subprocess
 import sys
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -335,6 +336,107 @@ def test_reload_stream_exactly_once(spark, archive, tmp_path):
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(sink).count() == 120
+
+
+def _land(directory, i, n):
+    """Land one archive file of ``n`` (key, value) rows whole: written
+    under a dot-name the file source skips, then renamed into place."""
+    values = [f"f{i}-r{j:04d}".encode() for j in range(n)]
+    table = pa.table(
+        {"key": pa.array([v[:2] for v in values], pa.binary()), "value": pa.array(values, pa.binary())}
+    )
+    tmp = os.path.join(directory, f".part-{i:04d}.parquet")
+    pq.write_table(table, tmp)
+    os.rename(tmp, os.path.join(directory, f"part-{i:04d}.parquet"))
+    return values
+
+
+def test_continuous_chain_delivers_each_row_once(spark, tmp_path):
+    """The continuous chain (``available_now=False``, the only mode
+    ``stream_replay`` benches) under the session's 100 ms poll delay:
+    files landing one at a time reach the reload's sink, every row
+    exactly once, and the dump lands in the catalog layout."""
+    incoming, out, sink = (str(tmp_path / d) for d in ("incoming", "dumps", "sink"))
+    os.makedirs(incoming)
+    os.makedirs(dump_mod.dump_dir(out, "continuous"))
+    records = spark.readStream.schema("key binary, value binary").parquet(incoming)
+    q_dump = q_reload = None
+    try:
+        q_dump = dump_mod.dump_stream(
+            records, out, str(tmp_path / "ckpt-dump"), available_now=False, dump_id="continuous"
+        )
+        q_reload = reload_mod.reload_stream(
+            spark, out, "continuous", Identity(), str(tmp_path / "ckpt-reload"), sink,
+            available_now=False,
+        )
+        expected = []
+        for i in range(3):
+            expected += _land(incoming, i, 50)
+            q_dump.processAllAvailable()
+            q_reload.processAllAvailable()
+            got = [r.value for r in spark.read.parquet(sink).select("value").collect()]
+            assert sorted(got) == sorted(expected)
+        assert q_dump.isActive and q_reload.isActive
+    finally:
+        for q in (q_dump, q_reload):
+            if q is not None:
+                q.stop()
+    assert reload_mod.find_latest_dump_id(spark, out) == "continuous"
+
+
+def test_checkpoint_manager_is_fork_free_and_refuses_overwrite(spark, tmp_path):
+    """The session posture picks the FileSystem-based checkpoint file
+    manager (no ``readlink`` fork per rename), and it keeps the
+    contract every WAL write relies on: a second no-overwrite write of
+    an existing entry raises FileAlreadyExistsException and leaves the
+    first entry's bytes as they were."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    path = jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}/offsets/0")
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = checkpointing.CheckpointFileManager.create(path.getParent(), hadoop_conf)
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    )
+
+    manager.mkdirs(path.getParent())  # as the metadata logs do before writing
+
+    def write(data: bytes):
+        stream = manager.createAtomic(path, False)
+        stream.write(bytearray(data))
+        stream.close()
+
+    write(b"first")
+    with pytest.raises(Py4JJavaError) as err:
+        write(b"second")
+    exists_error = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists_error.isInstance(err.value.java_exception)
+    assert (tmp_path / "offsets" / "0").read_bytes() == b"first"
+
+
+def test_reload_stream_resumes_after_transformer_failure(spark, archive, tmp_path):
+    """A transformer that fails once mid-replay fails the streaming
+    reload after its offsets entry is in the WAL but before the batch
+    is committed; a restart on the same checkpoint re-runs that batch
+    and the sink holds every dumped row exactly once."""
+    out, sink, ckpt = str(tmp_path / "dumps"), str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    _dump_60(spark, archive, out, "20260901000000")
+    dumped = sorted(r.value for r in reload_mod.read_dump(spark, out, "20260901000000").collect())
+    failing = load_transformer("tests.plugin_transformers:FailOnce")
+    failing.marker = str(tmp_path / "failed-once")
+
+    q = reload_mod.reload_stream(spark, out, "20260901000000", failing, ckpt, sink)
+    with pytest.raises(Exception, match="injected transformer failure"):
+        q.awaitTermination(120)
+    assert os.path.exists(failing.marker)
+    assert os.path.exists(os.path.join(ckpt, "offsets", "0"))
+    assert not os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+    q2 = reload_mod.reload_stream(spark, out, "20260901000000", failing, ckpt, sink)
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+    assert sorted(r.value for r in spark.read.parquet(sink).collect()) == dumped
 
 
 PYTHON_NODES = ("MapInPandas", "MapInArrow", "PythonUDF", "BatchEvalPython", "ArrowEvalPython")
