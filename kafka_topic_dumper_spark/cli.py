@@ -321,16 +321,17 @@ def main(argv: list[str] | None = None) -> int:
                     write_ranged_replay_files,
                 )
 
-                replay = os.path.join(
-                    tempfile.mkdtemp(prefix="prep_neardup_"), "replay"
-                )
-                write_ranged_replay_files(
-                    survivors.select("doc_id", "text"),
-                    replay,
-                    4,
-                    ("doc_id",),
-                )
-                admitted = run_minhash_stream_filter(spark, replay)
+                # the replay copy of the corpus is only read by the
+                # filter's stream; `admitted` reads the filter's own root
+                with tempfile.TemporaryDirectory(prefix="prep_neardup_") as d:
+                    replay = os.path.join(d, "replay")
+                    write_ranged_replay_files(
+                        survivors.select("doc_id", "text"),
+                        replay,
+                        4,
+                        ("doc_id",),
+                    )
+                    admitted = run_minhash_stream_filter(spark, replay)
                 narrowed = survivors.join(
                     admitted, "doc_id", "left_semi"
                 ).persist()

@@ -18,16 +18,30 @@ hammer: it drops caches the CALLER created too.
 At 100 TB the same intermediates would be explicit checkpoints or
 stored indexes with managed lifetimes; in-session pin-and-release is
 the local analogue.
+
+The on-disk twin lives here too. Rows that replay a file source, read
+a stored index or round-trip a format write their input once per
+process through :func:`materialized`; one-shot working directories
+come from :func:`scratch_dir`. Both are removed at interpreter exit,
+when no plan can still be reading them.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+# key → path of what materialized() built. Callers lead each key with a
+# tag (a family name such as "stream" or "index"), so entries of
+# different families cannot collide.
+_MATERIALIZED: dict[tuple, str] = {}
 
 
 def tracked_persist(
@@ -73,3 +87,25 @@ def operator_caches():
         yield
     finally:
         release_persisted(mark)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new temp directory, removed at interpreter exit."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def materialized(
+    key: tuple, build: Callable[[str], None], *, prefix: str, leaf: str
+) -> str:
+    """``<scratch_dir(prefix)>/<leaf>``, written by ``build(path)`` once
+    per process per ``key``. The bench and the oracle harness call a
+    row many times per process; building a corpus-sized input anew on
+    every call leaked /tmp. A build that raises caches nothing, so the next call
+    builds again (its partial directory goes at exit)."""
+    if key not in _MATERIALIZED:
+        path = f"{scratch_dir(prefix)}/{leaf}"
+        build(path)
+        _MATERIALIZED[key] = path
+    return _MATERIALIZED[key]

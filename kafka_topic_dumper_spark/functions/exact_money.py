@@ -31,22 +31,13 @@ from pyspark.sql import functions as F
 # int64 headroom: the 3-factor charge term is ≤ ~10^11 per row
 # (price_cents ~10^7 × 2 percent factors ~10^2 each), so a bigint sum
 # overflows around 10^8 rows in ONE group. The DECIMAL(38,0) switch
-# buys ~10^27 group cardinality at ~20-30% agg cost — flip it (env
-# SPARK_GRAFT_MONEY_DECIMAL=1 or decimal_money_sums(True)) for deploys
-# where a single group can exceed ~10^7 fact rows.
+# buys ~10^27 group cardinality at ~20-30% agg cost — set
+# SPARK_GRAFT_MONEY_DECIMAL=1 for deploys where a single group can
+# exceed ~10^7 fact rows. The switch is read when a plan is built.
 _DECIMAL_ENV = "SPARK_GRAFT_MONEY_DECIMAL"
-_decimal_override: bool | None = None
-
-
-def decimal_money_sums(enabled: bool | None) -> None:
-    """Programmatic switch (None → fall back to the env var)."""
-    global _decimal_override
-    _decimal_override = enabled
 
 
 def use_decimal() -> bool:
-    if _decimal_override is not None:
-        return _decimal_override
     return os.environ.get(_DECIMAL_ENV, "") not in ("", "0", "false")
 
 

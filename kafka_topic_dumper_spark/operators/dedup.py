@@ -1949,11 +1949,9 @@ def register(reg) -> None:
         verify and short-doc enumeration identical to the in-memory
         row. A hash-match against the naive all-pairs oracle proves
         the prefix-filtering principle lossless on this corpus."""
+        from kafka_topic_dumper_spark.functions.caching import materialized
         from kafka_topic_dumper_spark.functions.index_store import (
             write_editdist_prefix_index,
-        )
-        from kafka_topic_dumper_spark.operators.similarity import (
-            _stored_index_path,
         )
 
         docs = resurface_vocabulary(load_table(spark, sf_dir, "documents"))
@@ -1961,7 +1959,12 @@ def register(reg) -> None:
         def _build(path: str) -> None:
             write_editdist_prefix_index(editdist_prefix_index(docs), path)
 
-        path = _stored_index_path("edprefix", sf_dir, "prefix", _build)
+        path = materialized(
+            ("index", "edprefix", sf_dir),
+            _build,
+            prefix="edprefix_index_",
+            leaf="prefix",
+        )
         return editdist_pairs_from_prefix_index(
             docs, spark.read.parquet(path)
         )

@@ -33,16 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Observability for the scale probe: sweep count of the most recent
-# connected_components call (the per-sweep shuffle is the operator's
-# 100 TB cost driver, so SCALE_PROBE.md tracks it across decades).
-LAST_SWEEP_COUNT: int | None = None
-
-
 # Default CC engine; "propagation" (adaptive pointer-jumping min-label
 # propagation) or "contraction" (large-star/small-star). Call sites can
-# override per graph shape via the ``method`` parameter; the scale
-# probe flips this global to A/B the two on identical inputs.
+# override per graph shape via the ``method`` parameter.
 CC_METHOD = "propagation"
 
 
@@ -166,8 +159,6 @@ def connected_components(
         cur_sum = 0 if raw is None else raw
         labels = new_labels
         if cur_sum == prev_sum:
-            global LAST_SWEEP_COUNT
-            LAST_SWEEP_COUNT = sweep + 1
             return labels.select("node", F.col("label").alias("component_id"))
         prev_sum = cur_sum
     raise RuntimeError(
@@ -270,21 +261,15 @@ def connected_components_contraction(
             .distinct()
         )
 
-    converged = False
-    rounds = 0
     for _ in range(max_rounds):
         new_e = _truncate(_small_star(_large_star(e)))
-        rounds += 1
         # exact set equality: both sides are distinct, so equal counts
         # plus an empty one-sided difference prove it
-        if new_e.count() == e.count() and new_e.exceptAll(e).isEmpty():
-            e = new_e
-            converged = True
-            break
+        fixpoint = new_e.count() == e.count() and new_e.exceptAll(e).isEmpty()
         e = new_e
-    global LAST_SWEEP_COUNT
-    LAST_SWEEP_COUNT = rounds
-    if not converged:
+        if fixpoint:
+            break
+    else:
         raise RuntimeError(
             f"connected_components_contraction did not converge in "
             f"{max_rounds} rounds"

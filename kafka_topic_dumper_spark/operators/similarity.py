@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_topic_dumper_spark.functions import trained_oracles
+from kafka_topic_dumper_spark.functions.caching import materialized
 from kafka_topic_dumper_spark.session import ensure_shipped
 from kafka_topic_dumper_spark.sources.tables import load_table
 
@@ -1639,28 +1640,6 @@ def pca_project(emb: DataFrame, n_components: int = 2) -> DataFrame:
     return quant.mapInPandas(project, schema=f"vec_id long, {cols}")
 
 
-# Stored-index build cache: the bench runs each stored-index query
-# N_RUNS+warmup times and the driver re-imports per round — building a
-# fresh corpus-sized index under a new mkdtemp() every call leaked /tmp
-# (ADVICE r5). One build per (kind, sf_dir) per process; the roots are
-# removed at interpreter exit (safe: no plan can still be reading them).
-_STORED_INDEX_CACHE: dict = {}
-
-
-def _stored_index_path(kind: str, sf_dir: str, leaf: str, build) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    key = (kind, sf_dir)
-    if key not in _STORED_INDEX_CACHE:
-        root = tempfile.mkdtemp(prefix=f"{kind}_index_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        build(f"{root}/{leaf}")
-        _STORED_INDEX_CACHE[key] = f"{root}/{leaf}"
-    return _STORED_INDEX_CACHE[key]
-
-
 def register(reg) -> None:
     _BF_ORACLE = """
         WITH v AS (
@@ -1873,7 +1852,9 @@ def register(reg) -> None:
                 path,
             )
 
-        path = _stored_index_path("lsh", sf_dir, "banded", _build)
+        path = materialized(
+            ("index", "lsh", sf_dir), _build, prefix="lsh_index_", leaf="banded"
+        )
         return cosine_topk_lsh_stored(emb, QUERY_IDS, path, 10)
 
     _IVF_ORACLE = ivf_oracle_sql()
@@ -1899,8 +1880,11 @@ def register(reg) -> None:
         )
 
         emb = load_table(spark, sf_dir, "embeddings")
-        path = _stored_index_path(
-            "ivf", sf_dir, "ivf", lambda p: write_ivf_index(ivf_assign(emb), p)
+        path = materialized(
+            ("index", "ivf", sf_dir),
+            lambda p: write_ivf_index(ivf_assign(emb), p),
+            prefix="ivf_index_",
+            leaf="ivf",
         )
         return ivf_topk_stored(emb, QUERY_IDS, path, 10)
 
@@ -1971,7 +1955,9 @@ def register(reg) -> None:
                 path,
             )
 
-        path = _stored_index_path("pq", sf_dir, "pq", _build)
+        path = materialized(
+            ("index", "pq", sf_dir), _build, prefix="pq_index_", leaf="pq"
+        )
         return pq_topk_stored(emb, QUERY_IDS, path, 10)
 
     # IVF-PQ: the oracle composes the IVF assignment/probe CTE chain
@@ -2084,7 +2070,9 @@ def register(reg) -> None:
                 path,
             )
 
-        path = _stored_index_path("ivfpq", sf_dir, "ivfpq", _build)
+        path = materialized(
+            ("index", "ivfpq", sf_dir), _build, prefix="ivfpq_index_", leaf="ivfpq"
+        )
         return ivfpq_topk_stored(emb, QUERY_IDS, path, 10)
 
     # Literal-injected oracle (r6 verdict item 2): per-subspace Lloyd's

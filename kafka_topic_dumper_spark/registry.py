@@ -442,8 +442,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     q10). l_quantity is integral, so its double sum is already exact.
     At extreme per-group cardinality (~10^8 rows per group) the
     charge product sum approaches int64 range — set
-    SPARK_GRAFT_MONEY_DECIMAL=1 (or exact_money.decimal_money_sums)
-    to aggregate in DECIMAL(38,0) instead; proven at adversarial scale
+    SPARK_GRAFT_MONEY_DECIMAL=1 (read when the plan is built) to
+    aggregate in DECIMAL(38,0) instead; proven at adversarial scale
     in test_operator_edges.py::test_decimal_money_flag_survives_int64_overflow_scale."""
     li = load_table(spark, sf_dir, "lineitem")
     ep_cents = cents(F.col("l_extendedprice"))

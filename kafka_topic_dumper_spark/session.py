@@ -32,6 +32,14 @@ One place to encode the engine's execution posture:
 
 A harness that builds its own vanilla session gets neither streaming
 line: its continuous queries run slower, with the same results.
+
+Every streaming query start would log ``ResolveWriteToStream:
+spark.sql.adaptive.enabled is not supported in streaming``. Spark
+4.1.2 warns whenever AQE is on, and it is on by default too, so
+dropping the AQE line would not silence it. The session raises that
+one logger to ERROR instead, so the warning does not bury real ones.
+Its other warning, that a query without a checkpoint location got a
+temporary one, goes with it.
 """
 
 from __future__ import annotations
@@ -43,6 +51,10 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _SHIPPED_SESSIONS: set[int] = set()
+# the logger that warns at every streaming query start that AQE is on
+AQE_STREAM_WARN_LOGGER = (
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream"
+)
 
 
 def hadoop_fs(spark: SparkSession, uri: str):
@@ -149,4 +161,6 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    log4j = spark._jvm.org.apache.logging.log4j  # noqa: SLF001
+    log4j.core.config.Configurator.setLevel(AQE_STREAM_WARN_LOGGER, log4j.Level.ERROR)
     return spark

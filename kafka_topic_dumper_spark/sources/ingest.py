@@ -24,7 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_topic_dumper_spark.functions.caching import materialized
 from kafka_topic_dumper_spark.session import hadoop_fs
+from kafka_topic_dumper_spark.sources.tables import load_table
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -187,9 +189,6 @@ def read_quarantine(spark: SparkSession, out_root: str) -> DataFrame:
     return spark.read.parquet(out_root.rstrip("/") + "/quarantine")
 
 
-_ORC_CACHE: dict = {}
-
-
 def write_orc(df, path: str) -> None:
     """Columnar ORC sink — Spark's built-in native ORC writer (no
     external connector; orc-core ships in the distribution). Snappy
@@ -204,53 +203,24 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def orc_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents table round-tripped through ORC — materialized
-    once per (process, sf_dir) like the stream-input cache — proving
-    the second columnar format preserves the corpus byte-exactly
-    (the registry row compares it against the PARQUET-backed
-    oracle)."""
-    key = ("documents_orc", sf_dir)
-    if key not in _ORC_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="orc_roundtrip_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = f"{root}/documents_orc"
-        from kafka_topic_dumper_spark.sources.tables import load_table
-
-        write_orc(load_table(spark, sf_dir, "documents"), path)
-        _ORC_CACHE[key] = path
-    return read_orc(spark, _ORC_CACHE[key])
-
-
 def _roundtrip_cache(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     """documents materialized once per (process, sf_dir, fmt) in the
-    given text format, then read back through the PERMISSIVE quarantine
+    given format, then read back through the PERMISSIVE quarantine
     reader (jsonl/csv) or the native reader (orc)."""
-    key = (f"documents_{fmt}", sf_dir)
-    if key not in _ORC_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix=f"{fmt}_roundtrip_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = f"{root}/documents_{fmt}"
-        from kafka_topic_dumper_spark.sources.tables import load_table
-
-        docs = load_table(spark, sf_dir, "documents")
-        if fmt == "jsonl":
-            docs.write.mode("overwrite").json(path)
-        elif fmt == "csv":
-            docs.write.mode("overwrite").option("header", "true").csv(path)
-        else:
-            raise ValueError(fmt)
-        _ORC_CACHE[key] = path
-    path = _ORC_CACHE[key]
-    reader = read_jsonl if fmt == "jsonl" else read_csv
+    writer, reader = {
+        "jsonl": (lambda df, p: df.write.mode("overwrite").json(p), read_jsonl),
+        "csv": (
+            lambda df, p: df.write.mode("overwrite").option("header", "true").csv(p),
+            read_csv,
+        ),
+        "orc": (write_orc, read_orc),
+    }[fmt]
+    path = materialized(
+        ("roundtrip", fmt, sf_dir),
+        lambda p: writer(load_table(spark, sf_dir, "documents"), p),
+        prefix=f"{fmt}_roundtrip_",
+        leaf=f"documents_{fmt}",
+    )
     return reader(spark, path)
 
 
@@ -301,10 +271,4 @@ def register(reg) -> None:
         beside parquet, verified byte-exact against the PARQUET-backed
         oracle (md5 of every text plus all metadata columns), so a
         user can land or consume the corpus in either format."""
-        return orc_documents(spark, sf_dir).select(
-            "doc_id",
-            F.md5("text").alias("text_md5"),
-            "lang",
-            "source",
-            F.col("n_chars").cast("bigint").alias("n_chars"),
-        )
+        return _emit(_roundtrip_cache(spark, sf_dir, "orc"))

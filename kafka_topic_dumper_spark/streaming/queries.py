@@ -18,12 +18,9 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_topic_dumper_spark.functions.caching import materialized, scratch_dir
 from kafka_topic_dumper_spark.sources.tables import load_table
 
-# One materialized stream-input directory per (process, sf_dir) — same
-# rationale as the stored-index cache in operators/similarity.py: the
-# bench and driver invoke a query callable many times per process.
-_STREAM_INPUT_CACHE: dict = {}
 _SINK_SEQ = itertools.count()
 
 # Every document gets a deterministic event time inside ONE wall-clock
@@ -36,15 +33,7 @@ _MARKER_ID = 10**9
 
 
 def _lm_stream_input(spark: SparkSession, sf_dir: str) -> str:
-    key = ("lm_docs", sf_dir)
-    if key not in _STREAM_INPUT_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="stream_input_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = f"{root}/docs"
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text", F.expr(_DOC_TS).alias("ts")
         )
@@ -54,8 +43,10 @@ def _lm_stream_input(spark: SparkSession, sf_dir: str) -> str:
             " TIMESTAMP_NTZ '2024-01-01 12:00:00' AS ts"
         )
         docs.union(marker).coalesce(1).write.parquet(path)
-        _STREAM_INPUT_CACHE[key] = path
-    return _STREAM_INPUT_CACHE[key]
+
+    return materialized(
+        ("stream", "lm_docs", sf_dir), build, prefix="stream_input_", leaf="docs"
+    )
 
 
 def _events_stream_input(spark: SparkSession, sf_dir: str) -> str:
@@ -64,27 +55,22 @@ def _events_stream_input(spark: SparkSession, sf_dir: str) -> str:
     already-advanced watermark mid-replay, so append-mode output is a
     pure function of the data (the final no-data batch emits every
     window whose end the terminal watermark passed)."""
-    key = ("events", sf_dir)
-    if key not in _STREAM_INPUT_CACHE:
-        import atexit
-        import shutil
-        import tempfile
 
-        root = tempfile.mkdtemp(prefix="stream_input_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = f"{root}/events"
+    def build(path: str) -> None:
         load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value", "ts"
         ).coalesce(1).write.parquet(path)
-        _STREAM_INPUT_CACHE[key] = path
-    return _STREAM_INPUT_CACHE[key]
+
+    return materialized(
+        ("stream", "events", sf_dir), build, prefix="stream_input_", leaf="events"
+    )
 
 
 # last sink temp-view per logical query, so each re-invocation (bench
 # N_RUNS, driver rounds, differential tests) drops its predecessor's
 # full-result memory table instead of accumulating them on the driver
-# heap for the session's lifetime — the same per-call leak class the
-# stored-index mkdtemp fix closed for /tmp (ADVICE r5).
+# heap for the session's lifetime — the same per-call leak class that
+# caching.materialized closes for /tmp (ADVICE r5).
 _LAST_SINK: dict = {}
 
 
@@ -121,8 +107,8 @@ def write_ranged_replay_files(
     order. The mtime bump is load-bearing — ordered-replay semantics
     (watermark monotonicity, the streaming filter's smaller-id-first
     precedence) depend on it — so this is the ONE copy of the trick,
-    shared by the stream-input cache below and scale_probe.py
-    (code-review r7)."""
+    shared by the stream-input cache below and ``cli prep --near-dup
+    minhash`` (code-review r7)."""
     import glob
     import os
 
@@ -161,22 +147,16 @@ def _split_stream_input(
     # one would read files missing its columns (found by the r8 suite
     # when the 3-col HLL split landed on the cached 2-col docs split —
     # schema-on-read silently yielded NULL source for every row)
-    key = (table, sf_dir, n_files, range_cols, cols)
-    if key not in _STREAM_INPUT_CACHE:
-        import atexit
-        import shutil
-        import tempfile
+    key = ("stream_split", table, sf_dir, n_files, range_cols, cols)
 
-        root = tempfile.mkdtemp(prefix="stream_input_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = f"{root}/{table}_split"
+    def build(path: str) -> None:
         df = load_table(spark, sf_dir, table).select(*cols)
         if range_cols:
             write_ranged_replay_files(df, path, n_files, range_cols)
         else:
             df.repartition(n_files).write.parquet(path)
-        _STREAM_INPUT_CACHE[key] = path
-    return _STREAM_INPUT_CACHE[key]
+
+    return materialized(key, build, prefix="stream_input_", leaf=f"{table}_split")
 
 
 def _docs_split_stream_input(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
@@ -227,19 +207,14 @@ def run_minhash_stream_filter(
     files at ``input_path`` (replayed one file per micro-batch, which
     must be in ascending doc_id order — see
     :func:`_docs_range_split_stream_input`) and return the admitted
-    ``doc_id`` rows. Shared by the registry row and the scale probe so
-    both measure the same implementation."""
-    import atexit
-    import shutil
-    import tempfile
-
+    ``doc_id`` rows. Shared by the registry row and ``cli prep
+    --near-dup minhash`` so both run the same implementation."""
     from kafka_topic_dumper_spark.operators.dedup import (
         minhash_band_keys,
         minhash_signatures,
     )
 
-    root = tempfile.mkdtemp(prefix="stream_minhash_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_dir("stream_minhash_")
     index_path = f"{root}/band_index"
     kept_path = f"{root}/kept"
     state = {"initialized": False, "n_batches": 0}
@@ -670,15 +645,9 @@ def register(reg) -> None:
         foreachBatch-merged into a parquet state table by the argmax
         rule — the streaming twin of flagship_latest_event_per_user
         through the MERGE maintenance path instead of a stateful agg."""
-        import atexit
-        import shutil
-        import tempfile
-
         from pyspark.sql import Window as W
 
-        root = tempfile.mkdtemp(prefix="merge_state_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        target = f"{root}/state"
+        target = f"{scratch_dir('merge_state_')}/state"
         state = {"initialized": False, "n_batches": 0}
 
         def merge_batch(batch_df, batch_id: int):

@@ -59,12 +59,15 @@ def test_prep_dry_run(spark, tmp_path):
     assert not os.path.exists(out)
 
 
-def test_prep_near_dup_minhash_matches_batch_rule(spark, tmp_path):
+def test_prep_near_dup_minhash_matches_batch_rule(spark, tmp_path, monkeypatch):
     """`prep --near-dup=minhash` must admit EXACTLY the set the
     registry row's oracle rule defines over the exact-dedup survivors:
     a doc is dropped iff a smaller-id survivor shares any MinHash-LSH
     band key. The CLI runs the ONLINE streaming filter; the
-    expectation here is the independent batch computation."""
+    expectation here is the independent batch computation. The replay
+    copy of the corpus is removed when the command returns."""
+    import tempfile
+
     from pyspark.sql import functions as F
 
     from kafka_topic_dumper_spark.operators.dedup import (
@@ -75,6 +78,9 @@ def test_prep_near_dup_minhash_matches_batch_rule(spark, tmp_path):
     from kafka_topic_dumper_spark.operators.text import quality_classifier
 
     out = str(tmp_path / "prep_neardup_out")
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
     rc = cli.main(
         [
             "prep",
@@ -91,6 +97,7 @@ def test_prep_near_dup_minhash_matches_batch_rule(spark, tmp_path):
         ]
     )
     assert rc == 0
+    assert not list(scratch.glob("prep_neardup_*"))
     got = {r.doc_id for r in spark.read.parquet(out + "/kept_docs").collect()}
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")

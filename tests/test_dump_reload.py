@@ -414,6 +414,16 @@ def test_checkpoint_manager_is_fork_free_and_refuses_overwrite(spark, tmp_path):
     assert (tmp_path / "offsets" / "0").read_bytes() == b"first"
 
 
+def test_session_silences_the_streaming_aqe_warning(spark):
+    """``get_session`` raises the logger that warns about AQE at every
+    streaming query start to ERROR; the root logger stays at WARN."""
+    from kafka_topic_dumper_spark.session import AQE_STREAM_WARN_LOGGER
+
+    log_manager = spark._jvm.org.apache.logging.log4j.LogManager
+    assert log_manager.getLogger(AQE_STREAM_WARN_LOGGER).getLevel().toString() == "ERROR"
+    assert log_manager.getRootLogger().getLevel().toString() == "WARN"
+
+
 def test_reload_stream_resumes_after_transformer_failure(spark, archive, tmp_path):
     """A transformer that fails once mid-replay fails the streaming
     reload after its offsets entry is in the WAL but before the batch

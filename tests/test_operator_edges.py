@@ -117,7 +117,7 @@ def test_salted_join_empty_sides(spark):
     assert salted_join(empty.selectExpr("k2 as k", "w as v"), big.selectExpr("k as k2", "v as w"), "k", "k2").count() == 0
 
 
-def test_decimal_money_flag_survives_int64_overflow_scale(spark):
+def test_decimal_money_flag_survives_int64_overflow_scale(spark, monkeypatch):
     """q1's docstring promise made airtight: at ~10^8 rows per group
     the 3-factor charge sum exceeds int64; the DECIMAL(38) switch must
     aggregate it exactly. Adversarial stand-in: 100k max-price rows in
@@ -135,19 +135,16 @@ def test_decimal_money_flag_survives_int64_overflow_scale(spark):
     expected = per_row * 100_000
     assert expected > 2**63 - 1  # the scenario actually overflows int64
 
-    exact_money.decimal_money_sums(True)
-    try:
-        got = (
-            df.agg(
-                F.sum(
-                    exact_money.cents(F.col("price"))
-                    * exact_money.pct_units(1 - F.col("disc"))
-                    * exact_money.pct_units(1 + F.col("tax"))
-                ).alias("s")
-            ).collect()[0]["s"]
-        )
-    finally:
-        exact_money.decimal_money_sums(None)
+    monkeypatch.setenv("SPARK_GRAFT_MONEY_DECIMAL", "1")
+    got = (
+        df.agg(
+            F.sum(
+                exact_money.cents(F.col("price"))
+                * exact_money.pct_units(1 - F.col("disc"))
+                * exact_money.pct_units(1 + F.col("tax"))
+            ).alias("s")
+        ).collect()[0]["s"]
+    )
     assert int(got) == expected
 
 
