@@ -230,6 +230,7 @@ def main(argv: list[str] | None = None) -> int:
         # raw corpus → typed parquet + quarantine, no row silently lost
         import os
 
+        from kafka_topic_dumper_spark.functions.caching import operator_caches
         from kafka_topic_dumper_spark.sources.ingest import (
             read_csv,
             read_jsonl,
@@ -244,11 +245,10 @@ def main(argv: list[str] | None = None) -> int:
         if opts.dry_run:
             log.info("dry run — would ingest %s into %s", opts.input, opts.output)
             return 0
-        # persist the parsed source: clean/bad writes plus both counts
-        # would otherwise re-read and re-parse the corpus four times
-        # (and could disagree if the input path mutates mid-run)
-        src = src.persist()
-        try:
+        # split_quarantine persists the parsed source, so the clean/bad
+        # writes and both counts parse the corpus once; the scope
+        # releases it when the block exits
+        with operator_caches():
             clean, bad = split_quarantine(src)
             clean.write.mode("overwrite").parquet(os.path.join(opts.output, "clean"))
             n_bad = bad.count()
@@ -257,8 +257,6 @@ def main(argv: list[str] | None = None) -> int:
                     os.path.join(opts.output, "quarantine")
                 )
             log.info("ingested %d rows, quarantined %d", clean.count(), n_bad)
-        finally:
-            src.unpersist()
         return 0
 
     if opts.action == "prep":

@@ -54,6 +54,6 @@ def spread_input(df: DataFrame) -> DataFrame:
     if narrow is None:
         narrow = df.rdd.getNumPartitions() < n
         if len(_PROBE_MEMO) >= _PROBE_MEMO_CAP:
-            _PROBE_MEMO.clear()
+            del _PROBE_MEMO[next(iter(_PROBE_MEMO))]  # the oldest entry
         _PROBE_MEMO[key] = narrow
     return df.repartition(n) if narrow else df

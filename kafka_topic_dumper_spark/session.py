@@ -50,7 +50,6 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-_SHIPPED_SESSIONS: set[int] = set()
 # the logger that warns at every streaming query start that AQE is on
 AQE_STREAM_WARN_LOGGER = (
     "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream"
@@ -78,13 +77,15 @@ def ensure_shipped(spark: SparkSession) -> None:
     ``addPyFile`` once per session. Idempotent and cheap (the package
     is a few tens of KB).
 
-    Idempotence keys on the Spark APPLICATION id, not ``id(spark)``:
-    CPython reuses object addresses after GC, so a restarted session at
-    a recycled address would silently skip shipping and every
-    by-reference UDF would die on executors with ModuleNotFoundError
-    (code-review r6)."""
-    key = spark.sparkContext.applicationId
-    if key in _SHIPPED_SESSIONS:
+    Whether it already shipped is read from the context's own file
+    list, so a restarted context, whose list is empty, ships again."""
+    sc = spark.sparkContext
+    # the JVM's list as one string in one gateway call: the public
+    # ``sc.listFiles`` resolves a Scala converter class by reflection
+    # on every call (about 20 ms, 400 ms the first time), and plan
+    # construction and every ``cli.main`` call come through here
+    added = sc._jsc.sc().listFiles().mkString("\n")  # noqa: SLF001
+    if any(os.path.basename(f).startswith("ktds_pkg_") for f in added.split("\n")):
         return
     import atexit
     import tempfile
@@ -101,11 +102,10 @@ def ensure_shipped(spark: SparkSession) -> None:
                     full = os.path.join(root, f)
                     rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                     zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    sc.addPyFile(zip_path)
     # the context holds its own copy after addPyFile; reclaim ours at
     # interpreter exit (one leaked temp zip per shipped session before)
     atexit.register(os.unlink, zip_path)
-    _SHIPPED_SESSIONS.add(key)
 
 
 def get_session(

@@ -24,7 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafka_topic_dumper_spark.functions.caching import materialized
+from kafka_topic_dumper_spark.functions.caching import (
+    materialized,
+    operator_caches,
+    tracked_persist,
+)
 from kafka_topic_dumper_spark.session import hadoop_fs
 from kafka_topic_dumper_spark.sources.tables import load_table
 
@@ -86,8 +90,6 @@ def split_quarantine(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     only queries over an unparsed file scan (the column exists only
     during parsing), and operationally you want to PARSE ONCE and
     split twice rather than re-read the raw corpus per side."""
-    from kafka_topic_dumper_spark.functions.caching import tracked_persist
-
     raw = tracked_persist(raw)
     clean = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(F.col(CORRUPT_COL).alias("raw_line"))
@@ -141,17 +143,10 @@ def ingest_stream(
     import os
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # LOCAL persist with per-batch lifecycle — NOT split_quarantine's
-        # tracked_persist: inside a long-running foreachBatch there is
-        # no operator_caches() scope to drain the global registry, so
-        # the tracked form would pin one cached batch per micro-batch
-        # forever (review r6: unbounded cache growth in continuous mode)
-        raw = batch_df.persist()
-        try:
-            clean = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-            bad = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(
-                F.col(CORRUPT_COL).alias("raw_line")
-            )
+        # the scope releases this batch's persist when the batch ends: a
+        # long-running query must not pin one cached batch per trigger
+        with operator_caches():
+            clean, bad = split_quarantine(batch_df)
             clean.write.mode("overwrite").parquet(
                 os.path.join(out_root, "clean", f"ingest_batch={batch_id}")
             )
@@ -159,8 +154,6 @@ def ingest_stream(
                 bad.write.mode("overwrite").parquet(
                     os.path.join(out_root, "quarantine", f"ingest_batch={batch_id}")
                 )
-        finally:
-            raw.unpersist()
 
     stream = read_jsonl_stream(spark, in_path, schema)
     writer = (

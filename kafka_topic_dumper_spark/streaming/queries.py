@@ -9,19 +9,31 @@ the driver differentially verifies streaming SEMANTICS, not just the
 batch plans. The pattern is the same bounded-drain shape the reference's
 dump loop uses (kafka_client.py:168-176): drain everything available,
 then stop.
+
+Every row goes through the same three steps. :func:`_replay` opens its
+input files as a stream, one file per micro-batch. :func:`_drain` runs
+the stream into a memory sink named after the row and returns the sink
+as a table; the two ``foreachBatch`` rows run their writer through the
+same :func:`_run_to_end`, which fails loudly on a timeout.
+
+Output lifetime. A memory sink's view is created or replaced under the
+row's name, so a session holds one view per row, and a DataFrame an
+earlier call returned keeps reading that call's rows. The two
+``foreachBatch`` rows write into one working directory per row per
+process (:func:`_work_dir`), emptied at the start of each call: a
+row's previous result stops being readable when the row runs again.
 """
 
 from __future__ import annotations
 
-import itertools
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-from kafka_topic_dumper_spark.functions.caching import materialized, scratch_dir
+from kafka_topic_dumper_spark.functions.caching import materialized
 from kafka_topic_dumper_spark.sources.tables import load_table
-
-_SINK_SEQ = itertools.count()
 
 # Every document gets a deterministic event time inside ONE wall-clock
 # hour; the marker row sits hours later so the watermark (2 h default)
@@ -30,6 +42,7 @@ _SINK_SEQ = itertools.count()
 # scheme tests/test_streaming_windows.py established.
 _DOC_TS = "timestampadd(MINUTE, CAST(doc_id % 60 AS INT), TIMESTAMP_NTZ '2024-01-01 00:00:00')"
 _MARKER_ID = 10**9
+_EVENT_COLS = ("event_id", "user_id", "event_type", "value", "ts")
 
 
 def _lm_stream_input(spark: SparkSession, sf_dir: str) -> str:
@@ -49,53 +62,53 @@ def _lm_stream_input(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _events_stream_input(spark: SparkSession, sf_dir: str) -> str:
-    """Events re-materialized as ONE parquet file: a single source file
-    ⇒ a single data micro-batch ⇒ no event can arrive behind an
-    already-advanced watermark mid-replay, so append-mode output is a
-    pure function of the data (the final no-data batch emits every
-    window whose end the terminal watermark passed)."""
-
-    def build(path: str) -> None:
-        load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value", "ts"
-        ).coalesce(1).write.parquet(path)
-
-    return materialized(
-        ("stream", "events", sf_dir), build, prefix="stream_input_", leaf="events"
+def _replay(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet files at ``path`` as a file-source stream, one file
+    per micro-batch, with the schema the files carry."""
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
     )
 
 
-# last sink temp-view per logical query, so each re-invocation (bench
-# N_RUNS, driver rounds, differential tests) drops its predecessor's
-# full-result memory table instead of accumulating them on the driver
-# heap for the session's lifetime — the same per-call leak class that
-# caching.materialized closes for /tmp (ADVICE r5).
-_LAST_SINK: dict = {}
-
-
-def _drain(stream_df: DataFrame, name: str, output_mode: str = "append"):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination(timeout) returns False on timeout WITHOUT
-    # raising — reading the sink then would silently return a partial
-    # result while the query races on. Fail loudly instead.
-    if not q.awaitTermination(300):
+def _run_to_end(writer: DataStreamWriter, name: str, timeout: int = 300) -> None:
+    """Start ``writer`` as query ``name`` under Trigger.AvailableNow and
+    wait until it has drained its input."""
+    q = writer.queryName(name).trigger(availableNow=True).start()
+    # a timed-out wait returns False WITHOUT raising — reading the sink
+    # then would silently return a partial result while the query
+    # races on. Fail loudly instead.
+    if not q.awaitTermination(timeout):
         q.stop()
-        raise RuntimeError(f"streaming drain of {name!r} exceeded 300 s")
-    base = name.rsplit("_", 1)[0]
-    prev = _LAST_SINK.get(base)
-    # prev == name happens when a FIXED sink name is drained twice in
-    # one session (twin tests) — dropping it would delete the view
-    # that was just written
-    if prev is not None and prev != name:
-        stream_df.sparkSession.catalog.dropTempView(prev)
-    _LAST_SINK[base] = name
+        raise RuntimeError(f"streaming replay {name!r} exceeded {timeout} s")
+
+
+def _drain(stream_df: DataFrame, name: str, output_mode: str = "append") -> DataFrame:
+    """Drain ``stream_df`` into the memory sink ``name`` and return it.
+    The sink replaces any earlier view of that name, so draining a row
+    again keeps one view, not one per call."""
+    _run_to_end(
+        stream_df.writeStream.format("memory").outputMode(output_mode), name
+    )
+    return stream_df.sparkSession.table(name)
+
+
+def _work_dir(name: str) -> str:
+    """The one working directory of ``foreachBatch`` row ``name`` in
+    this process, emptied. The rows append to and overwrite files
+    there, so anything an earlier call left would change the result.
+
+    Contract: the DataFrame a row returns reads this directory lazily,
+    so it stops being readable when the row runs again. No caller holds
+    two results of one row at once: ``cli prep --near-dup minhash`` runs
+    the filter once per process, and the oracle tests collect each
+    result at once."""
+    path = materialized(
+        ("stream_work", name), lambda _: None, prefix=f"{name}_", leaf="work"
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def write_ranged_replay_files(
@@ -130,7 +143,11 @@ def _split_stream_input(
     """Materialize ``table`` as ``n_files`` parquet files for
     ``maxFilesPerTrigger=1`` replay — n_files separate micro-batches,
     so every streaming row exercises the state-merge path rather than
-    a single-batch degenerate run.
+    a single-batch degenerate run. ``n_files=1`` is the opposite on
+    purpose: one data micro-batch, so no event can arrive behind an
+    already-advanced watermark mid-replay and append-mode output is a
+    pure function of the data (the final no-data batch emits every
+    window whose end the terminal watermark passed).
 
     ``range_cols=None``: random ``repartition`` split (order-free
     state, e.g. set-union dedup). ``range_cols=(...)``: a
@@ -159,44 +176,6 @@ def _split_stream_input(
     return materialized(key, build, prefix="stream_input_", leaf=f"{table}_split")
 
 
-def _docs_split_stream_input(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    return _split_stream_input(spark, sf_dir, "documents", ("doc_id", "text"), n_files)
-
-
-def _docs_source_split_stream_input(
-    spark: SparkSession, sf_dir: str, n_files: int = 4
-) -> str:
-    return _split_stream_input(
-        spark, sf_dir, "documents", ("doc_id", "text", "source"), n_files
-    )
-
-
-def _docs_range_split_stream_input(
-    spark: SparkSession, sf_dir: str, n_files: int = 4
-) -> str:
-    return _split_stream_input(
-        spark, sf_dir, "documents", ("doc_id", "text"), n_files,
-        range_cols=("doc_id",),
-    )
-
-
-def _events_split_stream_input(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    return _split_stream_input(
-        spark, sf_dir, "events",
-        ("event_id", "user_id", "event_type", "ts"), n_files,
-    )
-
-
-def _events_range_split_stream_input(
-    spark: SparkSession, sf_dir: str, n_files: int = 4
-) -> str:
-    return _split_stream_input(
-        spark, sf_dir, "events",
-        ("event_id", "user_id", "event_type", "value", "ts"), n_files,
-        range_cols=("ts", "event_id"),
-    )
-
-
 def run_minhash_stream_filter(
     spark: SparkSession,
     input_path: str,
@@ -206,15 +185,16 @@ def run_minhash_stream_filter(
     """Drive the streaming MinHash-LSH ingest filter over the parquet
     files at ``input_path`` (replayed one file per micro-batch, which
     must be in ascending doc_id order — see
-    :func:`_docs_range_split_stream_input`) and return the admitted
+    :func:`write_ranged_replay_files`) and return the admitted
     ``doc_id`` rows. Shared by the registry row and ``cli prep
-    --near-dup minhash`` so both run the same implementation."""
+    --near-dup minhash`` so both run the same implementation. The rows
+    are read from :func:`_work_dir`, so a later call replaces them."""
     from kafka_topic_dumper_spark.operators.dedup import (
         minhash_band_keys,
         minhash_signatures,
     )
 
-    root = scratch_dir("stream_minhash_")
+    root = _work_dir("stream_minhash")
     index_path = f"{root}/band_index"
     kept_path = f"{root}/kept"
     state = {"initialized": False, "n_batches": 0}
@@ -269,24 +249,15 @@ def run_minhash_stream_filter(
         finally:
             banded.unpersist()
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_path)
+    _run_to_end(
+        _replay(spark, input_path).writeStream.foreachBatch(filter_batch),
+        "stream_minhash",
+        timeout,
     )
-    q = (
-        stream.writeStream.foreachBatch(filter_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise RuntimeError(f"streaming minhash replay exceeded {timeout} s")
     assert state["n_batches"] >= min_batches, (
         "replay must exercise cross-batch state"
     )
     return spark.read.parquet(kept_path)
-
 
 
 def register(reg) -> None:
@@ -337,12 +308,11 @@ def register(reg) -> None:
         replayed through a real file stream (watermark 2 h, append
         mode, Trigger.AvailableNow) — proves watermark-gated window
         finalization against the batch rollup under the same cutoff."""
-        stream = spark.readStream.schema(
-            "event_id long, event_type string, value double, ts timestamp_ntz"
-        ).parquet(_events_stream_input(spark, sf_dir))
-        name = f"streaming_hourly_rollup_sink_{next(_SINK_SEQ)}"
-        _drain(hourly_rollup_stream(stream), name)
-        return spark.table(name).withColumn(
+        path = _split_stream_input(spark, sf_dir, "events", _EVENT_COLS, n_files=1)
+        stream = _replay(spark, path)
+        return _drain(
+            hourly_rollup_stream(stream), "streaming_hourly_rollup"
+        ).withColumn(
             "window_start", F.col("window_start").cast("timestamp_ntz")
         )
 
@@ -366,17 +336,11 @@ def register(reg) -> None:
             rolling_anomaly_stream,
         )
 
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string,"
-                " value double, ts timestamp_ntz"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_events_range_split_stream_input(spark, sf_dir))
+        path = _split_stream_input(
+            spark, sf_dir, "events", _EVENT_COLS, range_cols=("ts", "event_id")
         )
-        name = f"streaming_rolling_anomaly_sink_{next(_SINK_SEQ)}"
-        _drain(rolling_anomaly_stream(stream), name)
-        return spark.table(name)
+        stream = _replay(spark, path)
+        return _drain(rolling_anomaly_stream(stream), "streaming_rolling_anomaly")
 
     # Hopping-window twin: each event lands in exactly TWO overlapping
     # windows (1 h length / 30 min slide), which the oracle replays by
@@ -419,12 +383,11 @@ def register(reg) -> None:
             hopping_rollup_stream,
         )
 
-        stream = spark.readStream.schema(
-            "event_id long, event_type string, value double, ts timestamp_ntz"
-        ).parquet(_events_stream_input(spark, sf_dir))
-        name = f"streaming_hopping_rollup_sink_{next(_SINK_SEQ)}"
-        _drain(hopping_rollup_stream(stream), name)
-        return spark.table(name).withColumn(
+        path = _split_stream_input(spark, sf_dir, "events", _EVENT_COLS, n_files=1)
+        stream = _replay(spark, path)
+        return _drain(
+            hopping_rollup_stream(stream), "streaming_hopping_rollup"
+        ).withColumn(
             "window_start", F.col("window_start").cast("timestamp_ntz")
         ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
 
@@ -452,12 +415,11 @@ def register(reg) -> None:
             load_table(spark, sf_dir, "documents")
         )
         v = int(vocab.collect()[0]["v"])
-        stream = spark.readStream.schema(
-            "doc_id long, text string, ts timestamp_ntz"
-        ).parquet(_lm_stream_input(spark, sf_dir))
-        name = f"streaming_lm_quality_sink_{next(_SINK_SEQ)}"
-        _drain(score_stream_against_model(stream, pair_counts, ctx_counts, v), name)
-        return spark.table(name).select("doc_id", "n_bigrams", "bits_per_bigram")
+        stream = _replay(spark, _lm_stream_input(spark, sf_dir))
+        return _drain(
+            score_stream_against_model(stream, pair_counts, ctx_counts, v),
+            "streaming_lm_quality",
+        ).select("doc_id", "n_bigrams", "bits_per_bigram")
 
     # Streaming exact dedup: an unbounded global aggregation (no
     # watermark, complete mode) — the streaming-state twin of
@@ -481,18 +443,13 @@ def register(reg) -> None:
         aggregation: documents replayed one file per micro-batch,
         digest-keyed state merged across batches, complete-mode memory
         sink drained with Trigger.AvailableNow."""
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_docs_split_stream_input(spark, sf_dir))
-        )
+        path = _split_stream_input(spark, sf_dir, "documents", ("doc_id", "text"))
+        stream = _replay(spark, path)
         agg = stream.groupBy(F.md5("text").alias("digest")).agg(
             F.min("doc_id").alias("keep_doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
-        name = f"streaming_dedup_exact_sink_{next(_SINK_SEQ)}"
-        _drain(agg, name, output_mode="complete")
-        return spark.table(name)
+        return _drain(agg, "streaming_dedup_exact", output_mode="complete")
 
     # Streaming count-min sketch: the sketch counters ARE streaming
     # state — an unbounded complete-mode groupBy on (row, bucket)
@@ -513,16 +470,15 @@ def register(reg) -> None:
         4-micro-batch document stream (round 8): stream → stateless
         bigram/bucket projection → complete-mode counter aggregation →
         drain → batch top-k estimate from the streamed sketch."""
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_docs_split_stream_input(spark, sf_dir))
+        path = _split_stream_input(spark, sf_dir, "documents", ("doc_id", "text"))
+        stream = _replay(spark, path)
+        counters = _drain(
+            cms_counters(cms_bigram_occurrences(stream)),
+            "streaming_cms_heavy_hitters",
+            output_mode="complete",
         )
-        counters = cms_counters(cms_bigram_occurrences(stream))
-        name = f"streaming_cms_sink_{next(_SINK_SEQ)}"
-        _drain(counters, name, output_mode="complete")
         occ = cms_bigram_occurrences(load_table(spark, sf_dir, "documents"))
-        return cms_topk(occ, spark.table(name))
+        return cms_topk(occ, counters)
 
     # Streaming HyperLogLog: like the CMS row, the REGISTER TABLE is
     # the streaming state — groups×64 rows forever, merged by MAX
@@ -538,20 +494,21 @@ def register(reg) -> None:
         4-micro-batch document stream (round 8): stream → stateless
         (source, bucket, rho) projection → complete-mode register MAX →
         drain → batch estimate from the streamed registers."""
-        stream = (
-            spark.readStream.schema("doc_id long, text string, source string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_docs_source_split_stream_input(spark, sf_dir))
+        path = _split_stream_input(
+            spark, sf_dir, "documents", ("doc_id", "text", "source")
         )
-        regs = hll_registers(hll_projection(stream))
-        name = f"streaming_hll_sink_{next(_SINK_SEQ)}"
-        _drain(regs, name, output_mode="complete")
+        stream = _replay(spark, path)
+        regs = _drain(
+            hll_registers(hll_projection(stream)),
+            "streaming_hll_cardinality",
+            output_mode="complete",
+        )
         exact = (
             hll_projection(load_table(spark, sf_dir, "documents"))
             .groupBy("source")
             .agg(F.countDistinct("x").alias("n_exact"))
         )
-        return hll_estimate_from_registers(spark.table(name), exact)
+        return hll_estimate_from_registers(regs, exact)
 
     # Streaming Bloom filter — the third streaming sketch beside CMS
     # and HLL, completing the trio: the SET-BIT TABLE is the streaming
@@ -577,20 +534,17 @@ def register(reg) -> None:
         fingerprint/bit projection → complete-mode distinct-bit state →
         drain → batch-side admission verdicts from the streamed
         filter."""
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_docs_split_stream_input(spark, sf_dir))
-        )
-        corpus_bits = (
+        path = _split_stream_input(spark, sf_dir, "documents", ("doc_id", "text"))
+        stream = _replay(spark, path)
+        corpus_bits = _drain(
             bloom_fingerprints(stream)
             .filter(F.col("doc_id") % INCR_BATCH_MOD != 0)
             .select(F.explode(bloom_positions()).alias("bit"))
             .groupBy("bit")
-            .agg(F.count("*").alias("n"))
+            .agg(F.count("*").alias("n")),
+            "streaming_bloom_admission",
+            output_mode="complete",
         )
-        name = f"streaming_bloom_sink_{next(_SINK_SEQ)}"
-        _drain(corpus_bits, name, output_mode="complete")
         f = bloom_fingerprints(load_table(spark, sf_dir, "documents"))
         batch = f.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
         known = (
@@ -598,7 +552,7 @@ def register(reg) -> None:
             .select("x")
             .distinct()
         )
-        return bloom_admit(batch, spark.table(name).select("bit"), known)
+        return bloom_admit(batch, corpus_bits.select("bit"), known)
 
     # Streaming session windows: gap-based sessionization through the
     # REAL session_window operator with merge-on-overlap state. The
@@ -647,7 +601,7 @@ def register(reg) -> None:
         through the MERGE maintenance path instead of a stateful agg."""
         from pyspark.sql import Window as W
 
-        target = f"{scratch_dir('merge_state_')}/state"
+        target = f"{_work_dir('streaming_merge_latest_state')}/state"
         state = {"initialized": False, "n_batches": 0}
 
         def merge_batch(batch_df, batch_id: int):
@@ -691,21 +645,14 @@ def register(reg) -> None:
             state["initialized"] = True
             state["n_batches"] += 1
 
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, ts timestamp_ntz"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_events_split_stream_input(spark, sf_dir))
+        path = _split_stream_input(
+            spark, sf_dir, "events", ("event_id", "user_id", "event_type", "ts")
         )
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .start()
+        stream = _replay(spark, path)
+        _run_to_end(
+            stream.writeStream.foreachBatch(merge_batch),
+            "streaming_merge_latest_state",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("streaming merge replay exceeded 300 s")
         assert state["n_batches"] >= 2, "replay must exercise >1 merge"
         return spark.read.parquet(target).select(
             "user_id", "ts", "event_id", "event_type"
@@ -752,12 +699,9 @@ def register(reg) -> None:
             user_sessions_stream,
         )
 
-        stream = spark.readStream.schema(
-            "event_id long, user_id long, value double, ts timestamp_ntz"
-        ).parquet(_events_stream_input(spark, sf_dir))
-        name = f"streaming_user_sessions_sink_{next(_SINK_SEQ)}"
-        _drain(user_sessions_stream(stream), name)
-        return spark.table(name).select(
+        path = _split_stream_input(spark, sf_dir, "events", _EVENT_COLS, n_files=1)
+        stream = _replay(spark, path)
+        return _drain(user_sessions_stream(stream), "streaming_user_sessions").select(
             F.col("session_start").cast("timestamp_ntz").alias("session_start"),
             F.col("session_end").cast("timestamp_ntz").alias("session_end"),
             "user_id",
@@ -830,17 +774,14 @@ def register(reg) -> None:
             sessionize_stream,
         )
 
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string,"
-                " value double, ts timestamp_ntz"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_events_range_split_stream_input(spark, sf_dir))
+        path = _split_stream_input(
+            spark, sf_dir, "events", _EVENT_COLS, range_cols=("ts", "event_id")
         )
-        name = f"streaming_sessionize_state_sink_{next(_SINK_SEQ)}"
-        _drain(sessionize_stream(stream, flush_timeout=True), name)
-        return spark.table(name).select(
+        stream = _replay(spark, path)
+        return _drain(
+            sessionize_stream(stream, flush_timeout=True),
+            "streaming_sessionize_state",
+        ).select(
             "user_id",
             "session_id",
             F.col("session_start").cast("timestamp_ntz").alias("session_start"),
@@ -887,10 +828,8 @@ def register(reg) -> None:
             interval_join_stream,
         )
 
-        path = _events_range_split_stream_input(spark, sf_dir)
-        schema = (
-            "event_id long, user_id long, event_type string,"
-            " value double, ts timestamp_ntz"
+        path = _split_stream_input(
+            spark, sf_dir, "events", _EVENT_COLS, range_cols=("ts", "event_id")
         )
 
         def side(event_type: str, id_alias: str, ts_alias: str) -> DataFrame:
@@ -906,9 +845,7 @@ def register(reg) -> None:
             # µs differences below are bit-identical under any session
             # timezone (the Kiritimati sweep covers it).
             return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
+                _replay(spark, path)
                 .filter(F.col("event_type") == event_type)
                 .select(
                     F.col("event_id").alias(id_alias),
@@ -937,9 +874,7 @@ def register(reg) -> None:
                 "us_to_purchase"
             ),
         )
-        name = f"streaming_interval_join_sink_{next(_SINK_SEQ)}"
-        _drain(out, name)
-        return spark.table(name)
+        return _drain(out, "streaming_interval_join")
 
     # Streaming near-dup ingest filter (foreachBatch): the online form
     # of MinHash-LSH dedup a training-data ingest actually runs — each
@@ -959,8 +894,8 @@ def register(reg) -> None:
     # bucket it occupies (bucket co-membership criterion, the
     # SlimPajama/RefinedWeb-style filter; minhash_cluster_dedup's
     # closure semantics, restricted to direct collisions). This
-    # registry twin runs checkpoint-free into a fresh tempdir (each
-    # call is a complete bounded replay); a restartable production
+    # registry twin runs checkpoint-free into its emptied work dir
+    # (each call is a complete bounded replay); a restartable production
     # deployment would add a checkpointLocation and make both appends
     # idempotent under batch retry by writing them into
     # ``ingest_batch=<batch_id>`` overwrite dirs, exactly the scheme
@@ -989,5 +924,9 @@ def register(reg) -> None:
         and bucket-prune-probed across batches
         (:func:`run_minhash_stream_filter`)."""
         return run_minhash_stream_filter(
-            spark, _docs_range_split_stream_input(spark, sf_dir)
+            spark,
+            _split_stream_input(
+                spark, sf_dir, "documents", ("doc_id", "text"),
+                range_cols=("doc_id",),
+            ),
         )

@@ -728,7 +728,7 @@ def test_mad_robustness_vs_stddev(spark):
     assert statistics.pstdev(vc) > 100 * r.mad_c  # ...while stddev exploded
 
 
-def test_spread_input_widens_narrow_memoizes_and_noops_wide(spark):
+def test_spread_input_widens_narrow_memoizes_and_noops_wide(spark, monkeypatch):
     """r19 (r18 advice): spread_input widens a narrow input to
     defaultParallelism, no-ops on an already-wide one, and memoizes
     the width probe per (session, plan) so repeated plan construction
@@ -752,3 +752,12 @@ def test_spread_input_widens_narrow_memoizes_and_noops_wide(spark):
     again = spark.range(0, 1000, 1, 1)
     p.spread_input(again)
     assert len(p._PROBE_MEMO) == 2  # no new probe entry
+
+    # at the cap the memo evicts its oldest entry, not every entry
+    monkeypatch.setattr(p, "_PROBE_MEMO_CAP", 2)
+    p._PROBE_MEMO.clear()
+    plans = [spark.range(0, end, 1, 1) for end in (10, 20, 30)]
+    for df in plans:
+        p.spread_input(df)
+    app = spark.sparkContext.applicationId
+    assert list(p._PROBE_MEMO) == [(app, df.semanticHash(), n) for df in plans[1:]]

@@ -35,7 +35,7 @@ def test_sessionize_stream_matches_batch(spark, events_stream_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {
         (r.user_id, r.session_id): (
             r.session_start,
@@ -91,7 +91,7 @@ def test_sessionize_stream_timeout_flushes_trailing(spark, events_stream_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {
         (r.user_id, r.session_id): (r.session_start, r.session_end, r.n_events)
         for r in spark.table("sessions_flush").collect()

@@ -32,7 +32,7 @@ def _run_stream(spark, stream_df, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     return spark.table(name)
 
 
@@ -332,7 +332,7 @@ def test_streaming_dedup_state_merges_across_micro_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     n_data_batches = sum(
         1 for p in q.recentProgress if p["numInputRows"] > 0
     )
@@ -413,6 +413,49 @@ def test_streaming_merge_latest_state_matches_batch_argmax(spark):
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "name", ["streaming_dedup_minhash", "streaming_merge_latest_state"]
+)
+def test_foreach_batch_rows_reuse_one_work_dir(spark, name):
+    """Called three times in one session, a foreachBatch row returns the
+    same rows each time from one working directory: every call empties
+    the row's directory and writes there again, instead of taking a new
+    temp directory that lives until the process exits."""
+    import os
+    import tempfile
+    from urllib.parse import urlparse
+
+    from kafka_topic_dumper_spark.registry import QUERIES
+
+    results, roots = [], set()
+    for _ in range(3):
+        df = QUERIES[name](spark, SF)
+        for f in df.inputFiles():
+            rel = os.path.relpath(urlparse(f).path, tempfile.gettempdir())
+            roots.add(rel.split(os.sep)[0])
+        results.append(sorted(tuple(r) for r in df.collect()))
+    assert len(roots) == 1, roots
+    assert results[0] and results[0] == results[1] == results[2]
+
+
+def test_memory_sink_row_keeps_one_view(spark):
+    """A memory-sink row drained three times leaves one temp view, named
+    after the row, and each returned DataFrame still reads its own
+    call's rows."""
+    from kafka_topic_dumper_spark.registry import QUERIES
+
+    name = "streaming_dedup_exact"
+    results = [QUERIES[name](spark, SF) for _ in range(3)]
+    views = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.isTemporary and name in t.name
+    ]
+    assert views == [name]
+    rows = [sorted(tuple(r) for r in df.collect()) for df in results]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
+
+
 def test_streaming_dedup_minhash_matches_batch_rule(spark):
     """The streaming MinHash ingest filter must admit exactly the docs
     the batch rule keeps (min doc_id in every LSH bucket the doc
@@ -464,24 +507,21 @@ def test_streaming_cms_counters_equal_batch(spark):
     )
     from kafka_topic_dumper_spark.sources.tables import load_table
     from kafka_topic_dumper_spark.streaming.queries import (
-        _docs_split_stream_input,
         _drain,
+        _replay,
+        _split_stream_input,
     )
 
     sf = "/root/testdata/sf0.001"
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_docs_split_stream_input(spark, sf))
+    stream = _replay(
+        spark, _split_stream_input(spark, sf, "documents", ("doc_id", "text"))
     )
-    _drain(
+    sink = _drain(
         cms_counters(cms_bigram_occurrences(stream)),
         "cms_counter_twin_sink",
         output_mode="complete",
     )
-    got = {
-        (r.r, r.bkt): r.c for r in spark.table("cms_counter_twin_sink").collect()
-    }
+    got = {(r.r, r.bkt): r.c for r in sink.collect()}
     want = {
         (r.r, r.bkt): r.c
         for r in cms_counters(
@@ -502,25 +542,22 @@ def test_streaming_hll_registers_equal_batch(spark):
     )
     from kafka_topic_dumper_spark.sources.tables import load_table
     from kafka_topic_dumper_spark.streaming.queries import (
-        _docs_source_split_stream_input,
         _drain,
+        _replay,
+        _split_stream_input,
     )
 
     sf = "/root/testdata/sf0.001"
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_docs_source_split_stream_input(spark, sf))
+    stream = _replay(
+        spark,
+        _split_stream_input(spark, sf, "documents", ("doc_id", "text", "source")),
     )
-    _drain(
+    sink = _drain(
         hll_registers(hll_projection(stream)),
         "hll_register_twin_sink",
         output_mode="complete",
     )
-    got = {
-        (r.source, r.bucket): r.mreg
-        for r in spark.table("hll_register_twin_sink").collect()
-    }
+    got = {(r.source, r.bucket): r.mreg for r in sink.collect()}
     want = {
         (r.source, r.bucket): r.mreg
         for r in hll_registers(
@@ -547,17 +584,16 @@ def test_streaming_bloom_bits_equal_batch(spark):
     )
     from kafka_topic_dumper_spark.sources.tables import load_table
     from kafka_topic_dumper_spark.streaming.queries import (
-        _docs_split_stream_input,
         _drain,
+        _replay,
+        _split_stream_input,
     )
 
     sf = "/root/testdata/sf0.001"
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_docs_split_stream_input(spark, sf))
+    stream = _replay(
+        spark, _split_stream_input(spark, sf, "documents", ("doc_id", "text"))
     )
-    _drain(
+    sink = _drain(
         bloom_fingerprints(stream)
         .filter(F.col("doc_id") % INCR_BATCH_MOD != 0)
         .select(F.explode(bloom_positions()).alias("bit"))
@@ -566,7 +602,7 @@ def test_streaming_bloom_bits_equal_batch(spark):
         "bloom_bits_twin_sink",
         output_mode="complete",
     )
-    got = {r.bit for r in spark.table("bloom_bits_twin_sink").collect()}
+    got = {r.bit for r in sink.collect()}
     want = {
         r.bit
         for r in bloom_fingerprints(load_table(spark, sf, "documents"))

@@ -89,3 +89,18 @@ def test_similarity_rows_match_oracles_from_a_foreign_cwd(tmp_path):
     assert _mismatches_from_a_foreign_cwd(tmp_path, SIMILARITY_ROWS) == {
         "mismatches": []
     }
+
+
+def test_ensure_shipped_ships_once_per_context(spark):
+    """Whether the package shipped is read from the context's own file
+    list, so a second call on the same context adds no second zip."""
+    from kafka_topic_dumper_spark.session import ensure_shipped
+
+    ensure_shipped(spark)
+    ensure_shipped(spark)
+    shipped = [
+        f
+        for f in spark.sparkContext.listFiles
+        if os.path.basename(f).startswith("ktds_pkg_")
+    ]
+    assert len(shipped) == 1, shipped
