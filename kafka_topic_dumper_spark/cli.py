@@ -178,6 +178,10 @@ def main(argv: list[str] | None = None) -> int:
     logging.basicConfig(level=logging.INFO, format="%(asctime)s %(levelname)s %(message)s")
     opts = parse_args(argv)
 
+    from kafka_topic_dumper_spark.functions.caching import (
+        operator_caches,
+        tracked_persist,
+    )
     from kafka_topic_dumper_spark.plans.offsets import plan_tail_dump
     from kafka_topic_dumper_spark.session import get_session
     from kafka_topic_dumper_spark.streaming import dump as dump_mod
@@ -196,14 +200,6 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     spark = get_session("kafka-topic-dumper-spark-cli")
-    # a row-path reload plug-in (one without transform_frame; Identity
-    # has one and runs on the JVM) ships to Python workers, and its
-    # base class transform.Transformer is cloudpickled BY REFERENCE —
-    # workers must be able to import the package even when the driver
-    # wasn't launched from the repo root
-    from kafka_topic_dumper_spark.session import ensure_shipped
-
-    ensure_shipped(spark)
 
     if opts.action == "generate":
         if not opts.records_parquet:
@@ -230,7 +226,6 @@ def main(argv: list[str] | None = None) -> int:
         # raw corpus → typed parquet + quarantine, no row silently lost
         import os
 
-        from kafka_topic_dumper_spark.functions.caching import operator_caches
         from kafka_topic_dumper_spark.sources.ingest import (
             read_csv,
             read_jsonl,
@@ -284,25 +279,28 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 0
         docs = spark.read.parquet(opts.input)
-        kept = docs.join(
-            quality_classifier(docs).filter(F.col("keep")).select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
-        # persist BOTH stages: kept feeds the dedup window AND the
-        # survivor semi-join (classifier would run twice without it);
+        # pin each stage: kept feeds the dedup window AND the survivor
+        # semi-join (the classifier would run twice without it);
         # survivors feeds the vocab pass, the placement pass, and the
-        # summary count (the dedup window would run three times)
-        kept = kept.persist()
-        survivors = None
-        try:
-            survivors = kept.join(
-                canonical_mapping(kept)
-                .filter(F.col("is_dup") == 0)
-                .select("doc_id"),
-                "doc_id",
-                "left_semi",
-            ).persist()
+        # summary count (the dedup window would run three times). The
+        # scope releases every pin when the block exits.
+        with operator_caches():
+            kept = tracked_persist(
+                docs.join(
+                    quality_classifier(docs).filter(F.col("keep")).select("doc_id"),
+                    "doc_id",
+                    "left_semi",
+                )
+            )
+            survivors = tracked_persist(
+                kept.join(
+                    canonical_mapping(kept)
+                    .filter(F.col("is_dup") == 0)
+                    .select("doc_id"),
+                    "doc_id",
+                    "left_semi",
+                )
+            )
             if opts.near_dup == "minhash":
                 # online near-dup admission (r7 verdict item 7): the
                 # exact-dedup survivors replay through the streaming
@@ -330,11 +328,9 @@ def main(argv: list[str] | None = None) -> int:
                         ("doc_id",),
                     )
                     admitted = run_minhash_stream_filter(spark, replay)
-                narrowed = survivors.join(
-                    admitted, "doc_id", "left_semi"
-                ).persist()
-                survivors.unpersist()
-                survivors = narrowed
+                survivors = tracked_persist(
+                    survivors.join(admitted, "doc_id", "left_semi")
+                )
             elif opts.near_dup == "setsim":
                 # EXACT near-dup admission (round 8): same smaller-id-
                 # survives precedence as the minhash path, but the
@@ -353,11 +349,9 @@ def main(argv: list[str] | None = None) -> int:
                     .select(F.col("doc_b").alias("doc_id"))
                     .distinct()
                 )
-                narrowed = survivors.join(
-                    drops, "doc_id", "left_anti"
-                ).persist()
-                survivors.unpersist()
-                survivors = narrowed
+                survivors = tracked_persist(
+                    survivors.join(drops, "doc_id", "left_anti")
+                )
             if opts.token_budget > 0:
                 # budget-capped curation (round 9): keep the highest-
                 # quality survivors until the global token budget is
@@ -371,11 +365,9 @@ def main(argv: list[str] | None = None) -> int:
                 chosen = token_budget_selection(
                     survivors, opts.token_budget
                 ).select("doc_id")
-                narrowed = survivors.join(
-                    chosen, "doc_id", "left_semi"
-                ).persist()
-                survivors.unpersist()
-                survivors = narrowed
+                survivors = tracked_persist(
+                    survivors.join(chosen, "doc_id", "left_semi")
+                )
             # admitted-set manifest: which doc_ids survived quality +
             # exact dedup (+ optional near-dup admission) — the
             # lineage record a downstream auditor or resumable
@@ -402,10 +394,6 @@ def main(argv: list[str] | None = None) -> int:
                 "of %d tokens at %s",
                 docs.count(), survivors.count(), n_seq, opts.seq_len, opts.output,
             )
-        finally:
-            if survivors is not None:
-                survivors.unpersist()
-            kept.unpersist()
         return 0
 
     if opts.action == "dump":

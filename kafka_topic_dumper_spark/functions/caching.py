@@ -49,7 +49,13 @@ def tracked_persist(
 ) -> DataFrame:
     """persist() and register for release by the enclosing
     :func:`operator_caches` scope (or a manual
-    :func:`release_persisted`)."""
+    :func:`release_persisted`).
+
+    A frame whose plan is already cached (by the caller, say) is
+    returned as it is and not registered: Spark matches caches by plan,
+    so releasing it here would drop the other owner's cache."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     out = df.persist(level)
     _TRACKED.append(out)
     return out

@@ -1,7 +1,8 @@
 """Connected components over a pair/edge DataFrame — the cluster-
 assignment stage of a dedup pipeline (MinHash/SimHash emit near-dup
 PAIRS; training-data dedup needs CLUSTERS, then one canonical doc per
-cluster).
+cluster) — plus the other iterative graph engines (PageRank, HITS,
+label propagation, k-core).
 
 Spark-first shape: iterative min-label propagation expressed as stock
 DataFrame joins/aggregations — the same hash-partitioned equi-join
@@ -16,27 +17,49 @@ large-star/small-star contraction (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SoCC'14), which remains the
 swap-in for adversarial O(log n) worst cases.
 
-Scale notes: every sweep is two shuffles (message join on the edge
-source, min-agg on the destination) over edge-count-sized data; each
-sweep's labels are eagerly localCheckpoint()ed — persist() is NOT
-enough for iterative plans, because the logical tree doubles per sweep
-(union of a join of the previous tree) and Catalyst chokes on the
-exponential plan long before the data is big; checkpointing truncates
-the lineage to the materialized blocks. The convergence test is a
-driver-side scalar count — metadata-plane, like GraphX/GraphFrames'
-own CC. Checkpoint blocks from superseded sweeps are freed by Spark's
-ContextCleaner once unreferenced (for resilient multi-hour jobs, use
-reliable checkpoint() to a cluster store instead)."""
+Every iterative engine here follows one discipline:
+
+- Lineage truncation goes through :func:`_truncate`, once per sweep.
+  persist() is NOT enough for iterative plans: the logical tree
+  doubles per sweep (union of a join of the previous tree) and
+  Catalyst chokes on the exponential plan long before the data is
+  big. With a checkpoint dir configured the sweep is written there
+  (reliable: it survives executor loss on a cluster); without one it
+  is local-checkpointed into executor memory, which is fine locally
+  and avoids the disk round-trip. Checkpoint blocks from superseded
+  sweeps are freed by Spark's ContextCleaner once unreferenced.
+- An iteration-invariant input is pinned with ``tracked_persist``
+  inside the engine's own ``operator_caches()`` scope, so the pin is
+  released when the engine returns or raises. The pinned frame is
+  one the engine derives itself, never the caller's object (whose
+  own cache would otherwise be dropped). Every returned frame is
+  already checkpointed, so the release changes no result.
+
+The convergence tests are driver-side scalars — metadata-plane, like
+GraphX/GraphFrames' own CC."""
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Default CC engine; "propagation" (adaptive pointer-jumping min-label
-# propagation) or "contraction" (large-star/small-star). Call sites can
-# override per graph shape via the ``method`` parameter.
-CC_METHOD = "propagation"
+from kafka_topic_dumper_spark.functions.caching import (
+    operator_caches,
+    tracked_persist,
+)
+
+# PageRank, HITS and LPA rescan their pins every sweep; a deserialized
+# pin (DataFrame.persist's default level) costs no decoding per scan
+_DESER = StorageLevel.MEMORY_AND_DISK_DESER
+
+
+def _truncate(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage: a reliable
+    checkpoint when the context has a checkpoint dir, else a local one."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def connected_components(
@@ -44,7 +67,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    method: str | None = None,
+    method: str = "propagation",
 ) -> DataFrame:
     """Undirected connected components. ``edges`` holds one row per
     edge (either direction); returns ``(node, component_id)`` for every
@@ -53,8 +76,7 @@ def connected_components(
     labeling (both methods produce the identical output; tested
     against each other on chain/star/random graphs).
 
-    ``method``: None → the module default ``CC_METHOD``;
-    "propagation" → min-label propagation with adaptive
+    ``method``: "propagation" → min-label propagation with adaptive
     pointer-jumping (shallow star graphs: fewest shuffles);
     "contraction" → large-star/small-star contraction
     (:func:`connected_components_contraction` — deep/chained graphs,
@@ -63,104 +85,94 @@ def connected_components(
     fixpoint (propagation is monotone: labels only ever decrease, so
     non-convergence means the diameter exceeds the budget, not a
     cycle)."""
-    chosen = method or CC_METHOD
-    if chosen == "contraction":
+    if method == "contraction":
         return connected_components_contraction(edges, src, dst, max_iter)
-    if chosen != "propagation":
+    if method != "propagation":
         raise ValueError(
-            f"unknown connected-components method {chosen!r}; "
+            f"unknown connected-components method {method!r}; "
             "expected 'propagation' or 'contraction'"
         )
-    from kafka_topic_dumper_spark.functions.caching import tracked_persist
-
-    # The symmetric edge list is the ITERATION-INVARIANT input: every
-    # sweep joins against it, and without a persist each sweep (plus
-    # its convergence count) re-derives the whole upstream pipeline —
-    # for minhash-cluster dedup that is the full shingle→signature→
-    # banding chain, re-executed per iteration (measured 15.8 s → 6.3 s
-    # at the R=1 probe from this one persist). Edge-count-sized, the
-    # same thing GraphX materializes for iteration.
-    sym = tracked_persist(
-        edges.select(F.col(src).alias("es"), F.col(dst).alias("ed")).union(
-            edges.select(F.col(dst).alias("es"), F.col(src).alias("ed"))
-        )
-    )
-
-    labels = (
-        sym.select(F.col("es").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    prev_sum: object = object()  # sentinel: never equals a real sum
-    for sweep in range(max_iter):
-        # each neighbor offers its current label to the other endpoint;
-        # a node keeps the min of its own label and all offers
-        offers = sym.join(
-            labels, sym["es"] == labels["node"], "inner"
-        ).select(F.col("ed").alias("node"), F.col("label"))
-        new_labels = (
-            labels.union(offers)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        # ADAPTIVE pointer-jumping shortcut (path compression): relabel
-        # every node through its label's OWN label — label(n) ←
-        # min(label(n), label(label(n))). Labels are node ids and only
-        # ever decrease, so the jump is monotone and the fixpoint is
-        # unchanged. Adaptive because the cost profile is measured, not
-        # assumed (sf0.1): star-shaped dedup graphs converge in ≤4
-        # sweeps and an unconditional jump is pure per-sweep overhead
-        # (dedup_minhash_clusters 2.43 s → 3.13 s); chain-shaped graphs
-        # (mutual-kNN clusters) need 16 plain sweeps but 10 with the
-        # jump. So the jump switches on only once sweep 4 proves the
-        # graph has depth — shallow graphs never pay it, deep graphs
-        # get the compression exactly where sweep count (a full
-        # edge-list shuffle each) is the 100 TB cost that matters.
-        if sweep >= 3:
-            lab2 = new_labels.select(
-                F.col("node").alias("ln"), F.col("label").alias("ll")
+    with operator_caches():
+        # The symmetric edge list is the ITERATION-INVARIANT input:
+        # every sweep joins against it, and without a persist each
+        # sweep (plus its convergence count) re-derives the whole
+        # upstream pipeline — for minhash-cluster dedup that is the full
+        # shingle→signature→banding chain, re-executed per iteration
+        # (measured 15.8 s → 6.3 s at the R=1 probe from this one
+        # persist). Edge-count-sized, the same thing GraphX materializes
+        # for iteration.
+        sym = tracked_persist(
+            edges.select(F.col(src).alias("es"), F.col(dst).alias("ed")).union(
+                edges.select(F.col(dst).alias("es"), F.col(src).alias("ed"))
             )
+        )
+
+        labels = (
+            sym.select(F.col("es").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
+        )
+        prev_sum: object = object()  # sentinel: never equals a real sum
+        for sweep in range(max_iter):
+            # each neighbor offers its current label to the other
+            # endpoint; a node keeps the min of its own label and all
+            # offers
+            offers = sym.join(
+                labels, sym["es"] == labels["node"], "inner"
+            ).select(F.col("ed").alias("node"), F.col("label"))
             new_labels = (
-                new_labels.join(lab2, new_labels["label"] == lab2["ln"], "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("ll"), F.col("label"))
-                    ).alias("label"),
-                )
+                labels.union(offers)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
             )
-        # Truncate lineage each sweep or the plan doubles per iteration.
-        # Prefer RELIABLE checkpoint when a checkpoint dir is configured:
-        # localCheckpoint pins blocks in executor memory, so on a real
-        # cluster one executor loss mid-iteration kills the job (r4
-        # verdict item 4). Locally (no dir set) localCheckpoint is fine
-        # and avoids the disk round-trip.
-        sc = edges.sparkSession.sparkContext
-        if sc.getCheckpointDir() is not None:
-            new_labels = new_labels.checkpoint(eager=True)
-        else:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        # Convergence check via the label-sum invariant: propagation is
-        # monotone (labels only ever DECREASE), so the sum over all
-        # nodes strictly decreases until the fixpoint and is equal iff
-        # no label moved. One single-stage aggregation over the
-        # just-checkpointed relation — replaces the old per-sweep
-        # new-vs-old equi-join + count, which cost a second
-        # label-sized shuffle per iteration. decimal(38,0) keeps the
-        # sum exact far beyond any realistic node-count × id range.
-        # sum() over an empty relation is NULL — normalize to 0 so the
-        # empty-graph case (no near-duplicates anywhere) converges on
-        # sweep 2 instead of burning max_iter sweeps and raising (the
-        # old changed==0 check handled this; the sentinel init plus
-        # the normalization restores it for the sum invariant).
-        raw = new_labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).first()[0]
-        cur_sum = 0 if raw is None else raw
-        labels = new_labels
-        if cur_sum == prev_sum:
-            return labels.select("node", F.col("label").alias("component_id"))
-        prev_sum = cur_sum
+            # ADAPTIVE pointer-jumping shortcut (path compression):
+            # relabel every node through its label's OWN label —
+            # label(n) ← min(label(n), label(label(n))). Labels are node
+            # ids and only ever decrease, so the jump is monotone and
+            # the fixpoint is unchanged. Adaptive because the cost
+            # profile is measured, not assumed (sf0.1): star-shaped
+            # dedup graphs converge in ≤4 sweeps and an unconditional
+            # jump is pure per-sweep overhead (dedup_minhash_clusters
+            # 2.43 s → 3.13 s); chain-shaped graphs (mutual-kNN
+            # clusters) need 16 plain sweeps but 10 with the jump. So
+            # the jump switches on only once sweep 4 proves the graph
+            # has depth — shallow graphs never pay it, deep graphs get
+            # the compression exactly where sweep count (a full
+            # edge-list shuffle each) is the 100 TB cost that matters.
+            if sweep >= 3:
+                lab2 = new_labels.select(
+                    F.col("node").alias("ln"), F.col("label").alias("ll")
+                )
+                new_labels = (
+                    new_labels.join(
+                        lab2, new_labels["label"] == lab2["ln"], "left"
+                    ).select(
+                        "node",
+                        F.least(
+                            F.col("label"),
+                            F.coalesce(F.col("ll"), F.col("label")),
+                        ).alias("label"),
+                    )
+                )
+            labels = _truncate(new_labels)
+            # Convergence check via the label-sum invariant: propagation
+            # is monotone (labels only ever DECREASE), so the sum over
+            # all nodes strictly decreases until the fixpoint and is
+            # equal iff no label moved. One single-stage aggregation
+            # over the just-checkpointed relation — no second
+            # label-sized shuffle per iteration. decimal(38,0) keeps the
+            # sum exact far beyond any realistic node-count × id range.
+            # sum() over an empty relation is NULL — normalized to 0 so
+            # the empty-graph case (no near-duplicates anywhere)
+            # converges on sweep 2 instead of burning max_iter sweeps
+            # and raising.
+            raw = labels.agg(
+                F.sum(F.col("label").cast("decimal(38,0)"))
+            ).first()[0]
+            cur_sum = 0 if raw is None else raw
+            if cur_sum == prev_sum:
+                return labels.select("node", F.col("label").alias("component_id"))
+            prev_sum = cur_sum
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} sweeps"
     )
@@ -207,13 +219,6 @@ def connected_components_contraction(
     (count equality + exceptAll empty on DISTINCT edge sets), not by a
     hashable signature, and each round's output is lineage-truncated
     like the propagation loop."""
-    sc = edges.sparkSession.sparkContext
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        if sc.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     # Materialize the (possibly expensive) upstream edge derivation
     # ONCE, self-loops included, then derive both the node universe and
     # the working edge set from the truncated blocks: nodes must come
@@ -308,14 +313,19 @@ def pagerank_fixed_point(
     Mass lost to the floors is deterministic and identical in the
     DuckDB replay.
 
+    An edge frame with a ``w`` column is WEIGHTED: rank mass flows in
+    proportion to edge weight instead of uniformly, per-edge
+    contribution ``(w·r(u)) div W(u)`` with W(u) the total out-weight,
+    floors at the identical points. With all weights 1 the two
+    recurrences coincide. int64 headroom: w·r tops out ~10^16 at this
+    SF; at ~10^6+ nodes with heavy weights move the product to DECIMAL
+    (the exact_money rationale).
+
     Spark-first shape: each iteration is ONE edge-sized equi-join
     (ranks are node-sized, joined on the edge source) plus ONE
     dst-keyed integer sum — the same two shuffles per sweep as the CC
-    propagation engine, edge-linear at 100 TB. Ranks are eagerly
-    ``localCheckpoint``ed per iteration: the logical plan would
-    otherwise nest one join tree per sweep and Catalyst chokes on the
-    exponential lineage long before the data is big (the CC lesson,
-    see the module docstring).
+    propagation engine, edge-linear at 100 TB. Ranks are truncated
+    per iteration (see the module docstring).
 
     ``redistribute_dangling=True`` adds the standard dangling-mass
     term for general DIRECTED graphs: nodes with no out-edges (sinks)
@@ -328,119 +338,89 @@ def pagerank_fixed_point(
     replay stays bit-exact. Default False preserves the historical
     behavior for the symmetrized callers (every node has out-edges by
     construction, dm ≡ 0)."""
-    # The edge list is the ITERATION-INVARIANT input and is scanned
-    # once each for nodes (twice via the union), deg, and ed — without
-    # a persist every one of those re-executes the caller's upstream
-    # derivation (for the trading-graph callers: lineitem⋈orders +
-    # distinct, re-run up to 4×; measured 10.4 s → 7.9 s at sf0.1 on
-    # the directed dangling caller — the same lesson
-    # connected_components records for its sym relation. The
-    # symmetrized callers see less: AQE's ReusedExchange already
-    # dedups their union's twin subtrees). Plain persist, NOT
-    # tracked_persist: the eager per-sweep localCheckpoint means the
-    # returned plan no longer references edges, so this function
-    # releases it on its own exit path — routing it through the
-    # tracked registry too would double-release and retain a stale
-    # reference outside an operator_caches scope. try/finally so an
-    # exception mid-sweep can't leak the persisted blocks.
-    edges = edges.persist()
-    nodes = ed = nodes_f = None
-    try:
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .persist()
+    weighted = "w" in edges.columns
+    with operator_caches():
+        # The edge list is the ITERATION-INVARIANT input and is scanned
+        # once each for nodes (twice via the union), out-degree, and ed
+        # — without a pin every one of those re-executes the caller's
+        # upstream derivation (for the trading-graph callers:
+        # lineitem⋈orders + distinct, re-run up to 4×; measured
+        # 10.4 s → 7.9 s at sf0.1 on the directed dangling caller).
+        e = tracked_persist(
+            edges.select("src", "dst", *(["w"] if weighted else [])), _DESER
         )
-        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        ed = edges.join(deg, "src").persist()
+        nodes = tracked_persist(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct(),
+            _DESER,
+        )
+        if weighted:
+            out = e.groupBy("src").agg(F.sum("w").alias("wtot"))
+            flow = "(w * r) div wtot"
+        else:
+            out = e.groupBy("src").agg(F.count("*").alias("deg"))
+            flow = "r div deg"
+        ed = tracked_persist(e.join(out, "src"), _DESER)
         teleport = PR_SCALE * (100 - damping_pct) // 100
+        mass, flag, no_flag = "s", [], []
         if redistribute_dangling:
             # Sink flag rides INSIDE the ranks relation (one left join
-            # against the degree table, once): each sweep's dangling mass
-            # is then a plain filtered 1-row aggregate over ranks — no
-            # per-sweep sink-set join. n is one scalar per graph, a
-            # metadata-sized driver value that constant-folds into the
-            # update expression.
-            nodes_f = (
+            # against the out-degree table, once): each sweep's dangling
+            # mass is then a plain filtered 1-row aggregate over ranks —
+            # no per-sweep sink-set join. Contributions carry a NULL
+            # flag, which the per-node max ignores. n is one scalar per
+            # graph, a metadata-sized driver value that constant-folds
+            # into the update expression.
+            nodes = tracked_persist(
                 nodes.join(
-                    deg.select(
+                    out.select(
                         F.col("src").alias("node"), F.lit(True).alias("has_out")
                     ),
                     "node",
                     "left",
-                )
-                .select("node", F.col("has_out").isNull().alias("is_sink"))
-                .persist()
+                ).select("node", F.col("has_out").isNull().alias("is_sink")),
+                _DESER,
             )
-            n_nodes = nodes_f.count()
-            ranks = nodes_f.select(
-                "node", F.lit(PR_SCALE).cast("long").alias("r"), "is_sink"
-            )
-        else:
-            ranks = nodes.select("node", F.lit(PR_SCALE).cast("long").alias("r"))
-        # The per-sweep update UNIONS a zero-contribution row per node into
-        # the aggregation instead of left-joining the node set afterwards:
-        # every node then gets its row from the same groupBy shuffle the
-        # edge contributions already pay (node-sized extra input, no new
-        # exchange), and the per-sweep broadcast-join stage disappears —
-        # results bit-identical (sum gains a 0; absent-key coalesce(0)
-        # becomes a present 0), measured ~5-10% per query at sf0.1 and one
-        # fewer stage per sweep at any scale.
-        if redistribute_dangling:
-            zero = nodes_f.select(
-                "node", F.lit(0).cast("long").alias("c"), "is_sink"
-            )
-        else:
-            zero = nodes.select("node", F.lit(0).cast("long").alias("c"))
+            mass = f"(s + dm div {nodes.count()})"
+            flag = ["is_sink"]
+            no_flag = [F.lit(None).cast("boolean").alias("is_sink")]
+        ranks = nodes.select("node", F.lit(PR_SCALE).cast("long").alias("r"), *flag)
+        # The per-sweep update UNIONS a zero-contribution row per node
+        # into the aggregation instead of left-joining the node set
+        # afterwards: every node then gets its row from the same
+        # groupBy shuffle the edge contributions already pay (node-sized
+        # extra input, no new exchange), and the per-sweep
+        # broadcast-join stage disappears — results bit-identical (sum
+        # gains a 0; absent-key coalesce(0) becomes a present 0),
+        # measured ~5-10% per query at sf0.1 and one fewer stage per
+        # sweep at any scale.
+        zero = nodes.select("node", F.lit(0).cast("long").alias("c"), *flag)
         for _ in range(iters):
+            contrib = ed.join(ranks, ed.src == ranks.node).select(
+                F.col("dst").alias("node"), F.expr(flow).alias("c"), *no_flag
+            )
+            s = (
+                contrib.union(zero)
+                .groupBy("node")
+                .agg(F.sum("c").alias("s"), *[F.max(c).alias(c) for c in flag])
+            )
             if redistribute_dangling:
-                contrib = ed.join(ranks, ed.src == ranks.node).select(
-                    F.col("dst").alias("node"),
-                    F.expr("r div deg").alias("c"),
-                    F.lit(None).cast("boolean").alias("is_sink"),
-                )
                 dm = ranks.filter("is_sink").agg(
                     F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm")
                 )
-                s = (
-                    contrib.union(zero)
-                    .groupBy("node")
-                    # max ignores the contrib rows' NULLs: the flag comes
-                    # from each node's single zero row
-                    .agg(F.sum("c").alias("s"), F.max("is_sink").alias("is_sink"))
-                )
-                ranks = s.crossJoin(F.broadcast(dm)).select(
+                s = s.crossJoin(F.broadcast(dm))
+            ranks = _truncate(
+                s.select(
                     "node",
                     (
                         F.lit(teleport)
-                        + F.expr(
-                            f"({damping_pct} * (s + dm div {n_nodes})) div 100"
-                        )
+                        + F.expr(f"({damping_pct} * {mass}) div 100")
                     ).cast("long").alias("r"),
-                    "is_sink",
+                    *flag,
                 )
-            else:
-                contrib = ed.join(ranks, ed.src == ranks.node).select(
-                    F.col("dst").alias("node"), F.expr("r div deg").alias("c")
-                )
-                s = contrib.union(zero).groupBy("node").agg(F.sum("c").alias("s"))
-                ranks = s.select(
-                    "node",
-                    (
-                        F.lit(teleport)
-                        + F.expr(f"({damping_pct} * s) div 100")
-                    ).cast("long").alias("r"),
-                )
-            ranks = ranks.localCheckpoint(eager=True)
-        if redistribute_dangling:
-            return ranks.select("node", "r")
-        return ranks
-    finally:
-        for df in (nodes, ed, nodes_f):
-            if df is not None:
-                df.unpersist()
-        edges.unpersist()
+            )
+    return ranks.select("node", "r")
 
 
 def triangle_counts(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
@@ -557,29 +537,28 @@ def label_propagation(
     Per sweep: one edge-sized join (labels are node-sized, joined on
     the symmetrized edge source) + one (node,label) count + one
     per-node top-1 window — edge-linear, and the label table is
-    localCheckpointed per sweep to truncate the exponential lineage
-    (the CC/PageRank lesson)."""
+    truncated per sweep (see the module docstring)."""
     edges = pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
-    sym = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    labels = sym.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    for _ in range(sweeps):
-        votes = (
-            sym.join(labels, sym.u == labels.node)
-            .groupBy(F.col("v").alias("nd"), "lbl")
-            .agg(F.count("*").alias("c"))
+    with operator_caches():
+        sym = tracked_persist(
+            edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+            _DESER,
         )
-        w = Window.partitionBy("nd").orderBy(F.col("c").desc(), F.col("lbl"))
-        labels = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("nd").alias("node"), "lbl")
-            .localCheckpoint(eager=True)
+        labels = sym.select(F.col("u").alias("node")).distinct().select(
+            "node", F.col("node").alias("lbl")
         )
-    sym.unpersist()
+        for _ in range(sweeps):
+            votes = (
+                sym.join(labels, sym.u == labels.node)
+                .groupBy(F.col("v").alias("nd"), "lbl")
+                .agg(F.count("*").alias("c"))
+            )
+            w = Window.partitionBy("nd").orderBy(F.col("c").desc(), F.col("lbl"))
+            labels = _truncate(
+                votes.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .select(F.col("nd").alias("node"), "lbl")
+            )
     return labels.select("node", F.col("lbl").alias("community_id"))
 
 
@@ -647,8 +626,6 @@ def cotrading_projection(
     of twice (r18; the before-plan shows the full chain duplicated).
     ``kept`` is ≤ |suppliers|·top_k rows — supplier-linear, the
     bounded projection artifact you would store at scale."""
-    from kafka_topic_dumper_spark.functions.caching import tracked_persist
-
     strength = (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .groupBy(
@@ -725,8 +702,8 @@ def kcore_membership(
     cliques (every member ≥ k neighbors) survive.
 
     Per round: two edge×survivor semi-joins + one count — edge-linear,
-    shuffle only on node ids; survivor tables are node-sized and
-    localCheckpointed to truncate iterative lineage. Emits each
+    shuffle only on node ids; the edge set is truncated per round (see
+    the module docstring). Emits each
     surviving node with its degree inside the SURVIVOR-induced
     subgraph."""
     base = pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
@@ -734,18 +711,17 @@ def kcore_membership(
     # semi-joins run against the survivor-induced edges of the
     # previous round (edge sets only shrink under peeling), and the
     # final survivor degree is a plain count over the last edge set —
-    # no extra induction pass. localCheckpoint doubles as the
-    # iterative-lineage truncation (the CC/PageRank lesson).
-    edges = base.union(
-        base.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    # no extra induction pass. The truncation doubles as the
+    # materialization of each round's edge set.
+    edges = _truncate(
+        base.union(base.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
     for _ in range(rounds):
         deg = edges.groupBy("u").agg(F.count("*").alias("c"))
         alive = deg.filter(F.col("c") >= k).select("u")
-        edges = (
+        edges = _truncate(
             edges.join(alive, "u", "left_semi")
             .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
-            .localCheckpoint(eager=True)
         )
     return edges.groupBy("u").agg(F.count("*").alias("c")).select(
         F.col("u").alias("node"), F.col("c").cast("bigint").alias("core_degree")
@@ -901,65 +877,11 @@ def pagerank_dangling_oracle_sql(
         """
 
 
-def pagerank_weighted(
-    edges: DataFrame,
-    iters: int = PR_ITERS,
-    damping_pct: int = PR_DAMPING_PCT,
-) -> DataFrame:
-    """WEIGHTED fixed-point PageRank over (src, dst, w) edges — rank
-    mass flows proportionally to edge weight instead of uniformly:
-    per-edge contribution ``(w·r(u)) div W(u)`` with W(u) the total
-    out-weight, floors applied at the identical points as the
-    unweighted engine (:func:`pagerank_fixed_point`), so the DuckDB
-    unrolled-CTE replay is bit-exact. Same two shuffles per sweep +
-    localCheckpoint lineage truncation. int64 headroom: w·r tops out
-    ~10^16 at this SF; at ~10^6+ nodes with heavy weights move the
-    product to DECIMAL (the exact_money rationale)."""
-    # Same iteration-invariant persist as pagerank_fixed_point (plain,
-    # not tracked — this function unpersists on its own exit path;
-    # try/finally so an exception mid-sweep can't leak the blocks).
-    edges = edges.persist()
-    nodes = ed = None
-    try:
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .persist()
-        )
-        wout = edges.groupBy("src").agg(F.sum("w").alias("wtot"))
-        ed = edges.join(wout, "src").persist()
-        teleport = PR_SCALE * (100 - damping_pct) // 100
-        ranks = nodes.select("node", F.lit(PR_SCALE).cast("long").alias("r"))
-        # zero-row union instead of a per-sweep left join — see
-        # pagerank_fixed_point
-        zero = nodes.select("node", F.lit(0).cast("long").alias("c"))
-        for _ in range(iters):
-            contrib = ed.join(ranks, ed.src == ranks.node).select(
-                F.col("dst").alias("node"),
-                F.expr("(w * r) div wtot").alias("c"),
-            )
-            s = contrib.union(zero).groupBy("node").agg(F.sum("c").alias("s"))
-            ranks = s.select(
-                "node",
-                (
-                    F.lit(teleport) + F.expr(f"({damping_pct} * s) div 100")
-                ).cast("long").alias("r"),
-            )
-            ranks = ranks.localCheckpoint(eager=True)
-        return ranks
-    finally:
-        for df in (nodes, ed):
-            if df is not None:
-                df.unpersist()
-        edges.unpersist()
-
-
 def pagerank_weighted_oracle_sql(
     edges_cte: str, iters: int = PR_ITERS, damping_pct: int = PR_DAMPING_PCT
 ) -> str:
-    """Unrolled DuckDB replay of :func:`pagerank_weighted` over an
-    ``edges(src, dst, w)`` CTE — per-edge floor ``(w·r) // W`` exactly
+    """Unrolled DuckDB replay of :func:`pagerank_fixed_point` over a
+    weighted ``edges(src, dst, w)`` CTE — per-edge floor ``(w·r) // W`` exactly
     as the Spark expression."""
     teleport = PR_SCALE * (100 - damping_pct) // 100
     steps = [
@@ -1015,50 +937,51 @@ def hits_scores(
 
     Plan: per sweep, one edge-sized join + dst-keyed sum, the max as a
     1-row broadcast crossJoin (in-plan, metadata-sized — no driver
-    collect), then the mirrored pass for hubs; per-sweep
-    localCheckpoint truncates the lineage like the PageRank/CC
-    engines. Output: one row per node with its role-appropriate score
-    (hub for sources, authority for destinations)."""
-    edges = edges.persist()
-    h = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.lit(HITS_SCALE).cast("long").alias("x"))
-    )
-    a = None
-    for _ in range(iters):
-        # the scalar maxima travel the metadata plane (a 1-row first()
-        # off a checkpointed table, embedded as a literal) — the same
-        # discipline as ordered_prefix_sum's bucket bases; a broadcast
-        # crossJoin of the aggregate would re-plan the whole lineage
-        # inside each broadcast-exchange thread
-        raw_a = (
-            edges.join(h, edges.src == h.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("x").alias("raw"))
-            .localCheckpoint(eager=True)
+    collect), then the mirrored pass for hubs; per-sweep truncation
+    like the PageRank/CC engines. Output: one row per node with its
+    role-appropriate score (hub for sources, authority for
+    destinations); an empty edge list gives an empty frame."""
+    with operator_caches():
+        e = tracked_persist(edges.select("src", "dst"), _DESER)
+        h = (
+            e.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.lit(HITS_SCALE).cast("long").alias("x"))
         )
-        amx = raw_a.agg(F.max("raw")).first()[0]
-        a = raw_a.select(
-            "node", F.expr(f"(raw * {HITS_SCALE}) div {amx}").alias("x")
-        )
-        raw_h = (
-            edges.join(a, edges.dst == a.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("x").alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        hmx = raw_h.agg(F.max("raw")).first()[0]
-        h = raw_h.select(
-            "node", F.expr(f"(raw * {HITS_SCALE}) div {hmx}").alias("x")
-        )
-    out = h.select(
+        a = None
+        for _ in range(iters):
+            # the scalar maxima travel the metadata plane (a 1-row
+            # first() off a checkpointed table, embedded as a literal) —
+            # the same discipline as ordered_prefix_sum's bucket bases; a
+            # broadcast crossJoin of the aggregate would re-plan the
+            # whole lineage inside each broadcast-exchange thread
+            raw_a = _truncate(
+                e.join(h, e.src == h.node)
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("x").alias("raw"))
+            )
+            amx = raw_a.agg(F.max("raw")).first()[0]
+            if amx is None:  # no edges: the max of an empty aggregate
+                return raw_a.select(
+                    "node", F.lit("hub").alias("role"), F.col("raw").alias("score")
+                )
+            a = raw_a.select(
+                "node", F.expr(f"(raw * {HITS_SCALE}) div {amx}").alias("x")
+            )
+            raw_h = _truncate(
+                e.join(a, e.dst == a.node)
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.sum("x").alias("raw"))
+            )
+            hmx = raw_h.agg(F.max("raw")).first()[0]
+            h = raw_h.select(
+                "node", F.expr(f"(raw * {HITS_SCALE}) div {hmx}").alias("x")
+            )
+    return h.select(
         "node", F.lit("hub").alias("role"), F.col("x").alias("score")
     ).union(
         a.select("node", F.lit("authority").alias("role"), F.col("x").alias("score"))
     )
-    edges.unpersist()
-    return out
 
 
 def hits_oracle_sql(edges_cte: str, iters: int = HITS_ITERS) -> str:
@@ -1277,7 +1200,7 @@ def register(reg) -> None:
         ).union(
             pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
         )
-        return pagerank_weighted(edges)
+        return pagerank_fixed_point(edges)
 
     hits_edges_cte = """edges AS (
             SELECT DISTINCT o.o_custkey * 2 AS src,

@@ -314,21 +314,6 @@ def xy2d_hilbert(x: int, y: int, bits: int = Z_BITS) -> int:
     return d
 
 
-def write_hilbert(events: DataFrame, path: str, n_files: int = 16) -> None:
-    """The Hilbert twin of :func:`write_zordered`: range-cluster the
-    write by ``hval`` — same one-extra-exchange cost, tighter per-file
-    2-D envelopes (no Morton seams)."""
-    keyed = hilbert_key(events).select("event_id", "hval")
-    (
-        events.join(keyed, "event_id")
-        .repartitionByRange(n_files, "hval")
-        .sortWithinPartitions("hval")
-        .drop("hval")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def register(reg) -> None:
     from kafka_topic_dumper_spark.sources.tables import load_table
 

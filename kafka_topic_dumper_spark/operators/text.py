@@ -831,10 +831,9 @@ def mean_token_df(docs: DataFrame) -> DataFrame:
 
 # BM25 retrieval (Robertson/Sparck-Jones with the Lucene +1 idf floor)
 # — the lexical-retrieval primitive behind decontamination lookups and
-# quality-by-query corpus probes. Constants are the classic defaults.
+# quality-by-query corpus probes. The classic defaults k1 = 1.2 and
+# b = 0.75 are folded into :func:`_bm25_contrib_sql` as literals.
 BM25_QUERY = ["spark", "join", "stream", "window"]
-BM25_K1 = 1.2
-BM25_B = 0.75
 
 
 def _bm25_contrib_sql() -> str:

@@ -57,24 +57,6 @@ def bounded_read_options(bootstrap_servers: str, plan: DumpPlan) -> dict[str, st
     }
 
 
-def stream_read_options(
-    bootstrap_servers: str,
-    plan: DumpPlan,
-    max_offsets_per_trigger: int | None = None,
-) -> dict[str, str]:
-    """Streaming Kafka read options. ``maxOffsetsPerTrigger`` bounds
-    each micro-batch — the reference's fixed-size batching B1
-    (kafka_client.py:238-255) expressed as a rate limit."""
-    opts = {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "subscribe": plan.topic,
-        "startingOffsets": plan.starting_offsets_json(),
-    }
-    if max_offsets_per_trigger is not None:
-        opts["maxOffsetsPerTrigger"] = str(max_offsets_per_trigger)
-    return opts
-
-
 def read_kafka_batch(
     spark: SparkSession, bootstrap_servers: str, plan: DumpPlan
 ) -> DataFrame:

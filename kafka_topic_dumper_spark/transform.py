@@ -21,8 +21,8 @@ ways:
   PySpark's cloudpickle *by value*, so the closure carries the
   plug-in's own code and executors need not import its module. Code it
   imports from other modules (this package's ``Transformer`` base, for
-  one) still travels by reference, so this package must be importable
-  on the executors (``session.ensure_shipped``).
+  one) still travels by reference, so :func:`apply_transformer` ships
+  this package to the executors (``session.ensure_shipped``).
 """
 
 from __future__ import annotations
@@ -33,6 +33,8 @@ from collections.abc import Iterable
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_topic_dumper_spark.session import ensure_shipped
 
 
 class Transformer:
@@ -158,4 +160,6 @@ def apply_transformer(records: DataFrame, transformer) -> DataFrame:
                     values.append(out[1])
             yield pd.DataFrame({"key": keys, "value": values}, dtype=object)
 
+    # the plug-in's Transformer base class is pickled by reference
+    ensure_shipped(records.sparkSession)
     return records.mapInPandas(run, schema=TRANSFORM_OUTPUT_SCHEMA)

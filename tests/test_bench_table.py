@@ -102,6 +102,8 @@ def test_fresh_dir_is_removed_when_the_call_raises():
 
 
 class _FakeFrame:
+    storageLevel = caching.StorageLevel.NONE  # not cached by anyone else
+
     def __init__(self):
         self.persisted = False
 

@@ -134,10 +134,8 @@ def test_contraction_cc_equals_propagation_cc(spark):
 
 
 def test_cc_method_dispatch(spark):
-    """connected_components(method=...) and the CC_METHOD module
-    default both route to the contraction engine."""
-    from kafka_topic_dumper_spark.operators import graph as G
-
+    """connected_components(method=...) routes to the contraction
+    engine."""
     edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
     want = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     got = {
@@ -145,16 +143,6 @@ def test_cc_method_dispatch(spark):
         for r in connected_components(edges, method="contraction").collect()
     }
     assert got == want
-    prev = G.CC_METHOD
-    G.CC_METHOD = "contraction"
-    try:
-        got2 = {
-            (r.node, r.component_id)
-            for r in connected_components(edges).collect()
-        }
-    finally:
-        G.CC_METHOD = prev
-    assert got2 == want
 
 
 def test_cc_self_loop_nodes_and_unknown_method(spark):
@@ -416,20 +404,18 @@ def test_label_propagation_splits_bridged_cliques(spark):
 
 
 def test_weighted_pagerank_reduces_and_shifts(spark):
-    """With all weights 1 the weighted recurrence is IDENTICAL to the
-    unweighted engine (wtot = deg, (1*r) div wtot = r div deg); making
-    one edge heavy shifts rank toward its target."""
-    from kafka_topic_dumper_spark.operators.graph import (
-        pagerank_fixed_point,
-        pagerank_weighted,
-    )
+    """With all weights 1 the weighted recurrence (an edge frame with a
+    ``w`` column) is IDENTICAL to the unweighted one (wtot = deg,
+    (1*r) div wtot = r div deg); making one edge heavy shifts rank
+    toward its target."""
+    from kafka_topic_dumper_spark.operators.graph import pagerank_fixed_point
 
     base = [(1, 2), (2, 1), (1, 3), (3, 1), (2, 3), (3, 2)]
     ew = spark.createDataFrame(
         [(s, d, 1) for s, d in base], "src long, dst long, w long"
     )
     eu = spark.createDataFrame(base, "src long, dst long")
-    got_w = {r.node: r.r for r in pagerank_weighted(ew).collect()}
+    got_w = {r.node: r.r for r in pagerank_fixed_point(ew).collect()}
     got_u = {r.node: r.r for r in pagerank_fixed_point(eu).collect()}
     assert got_w == got_u
 
@@ -437,7 +423,7 @@ def test_weighted_pagerank_reduces_and_shifts(spark):
         [(s, d, 10 if (s, d) == (1, 2) else 1) for s, d in base],
         "src long, dst long, w long",
     )
-    got_h = {r.node: r.r for r in pagerank_weighted(heavy).collect()}
+    got_h = {r.node: r.r for r in pagerank_fixed_point(heavy).collect()}
     assert got_h[2] > got_w[2] and got_h[3] < got_w[3]
 
 

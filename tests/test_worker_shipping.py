@@ -1,5 +1,5 @@
-"""The codec and similarity-kernel rows must run for a caller that
-knows nothing about this package's shipping: a foreign process, started
+"""The codec and similarity-kernel rows, and a row-path transformer,
+must run for a caller that knows nothing about this package's shipping: a foreign process, started
 outside the repo, with a vanilla SparkSession (no ``get_session``, no
 ``ensure_shipped``). Its Python workers can import the package only if
 the operators ship it, so a kernel pickled by reference without
@@ -104,3 +104,45 @@ def test_ensure_shipped_ships_once_per_context(spark):
         if os.path.basename(f).startswith("ktds_pkg_")
     ]
     assert len(shipped) == 1, shipped
+
+
+_TRANSFORMER_DRIVER = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from kafka_topic_dumper_spark.transform import Transformer, apply_transformer
+
+class Twice(Transformer):
+    def transform(self, row):
+        yield (row.key, row.value)
+        yield (row.key, row.value + b"-2")
+
+    def get_id(self):
+        return "Twice"
+
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+spark.sparkContext.setLogLevel("ERROR")
+records = spark.createDataFrame(
+    [(b"k%d" % i, b"v%d" % i) for i in range(10)], "key binary, value binary"
+)
+out = apply_transformer(records, Twice()).collect()
+spark.stop()
+print(json.dumps({"rows": len(out)}))
+"""
+
+
+def test_row_path_transformer_runs_from_a_foreign_cwd(tmp_path):
+    """A ``Transformer`` subclass on the row path pickles its base class
+    by reference, so ``apply_transformer`` itself must ship the package
+    to workers that cannot import it."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _TRANSFORMER_DRIVER, REPO],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == {"rows": 20}
